@@ -1353,15 +1353,36 @@ object SchemaCompiler {
       case Some((m, ctx2)) =>
         val st = StructType(df.schema.fields
           .filterNot(f => (exclude + outCol)(f.name)))
-        if (structMapDepth(m, st)(ctx2) > DeepNestErrorsThreshold)
+        if (structMapDepth(m, st)(ctx2) > DeepNestErrorsThreshold) {
+          requireUtcForHatch(df, st)
           df.withColumn(outCol, deepErrorsUdf(m, st, ctx2))
-        else
+        } else
           df.withColumn(outCol, errorStructFields(m.entries, m.closed,
             m.rest, st, F.col, "", F.lit(""))(ctx2))
       case None =>
         val (row, st) = rowStruct(df, exclude + outCol)
         df.withColumn(outCol, errors(ir, row, st, "", F.lit("")))
     }
+
+  /** The hatch renders timestamp values in UTC (`RowEval.JsonTsFmt`),
+    * while the Column tier's `to_json` follows the session zone: under
+    * any other zone the two tiers would disagree on violation values, so
+    * a timestamp-bearing input fails fast instead. */
+  private def requireUtcForHatch(df: DataFrame, st: StructType): Unit = {
+    def hasTs(dt: DataType): Boolean = dt match {
+      case TimestampType => true
+      case s: StructType => s.fields.exists(f => hasTs(f.dataType))
+      case ArrayType(e, _) => hasTs(e)
+      case MapType(k, v, _) => hasTs(k) || hasTs(v)
+      case _ => false
+    }
+    val conf = "spark.sql.session.timeZone"
+    lazy val tz = df.sparkSession.conf.get(conf)
+    require(!hasTs(st) || org.apache.spark.sql.catalyst.util.DateTimeUtils
+        .getZoneId(tz).normalized() == java.time.ZoneOffset.UTC,
+      s"deep-nest errors over a timestamp column render values in UTC; " +
+        s"set $conf=UTC (it is '$tz')")
+  }
 
   /** Peel validation-transparent wrappers down to a top-level `:map`,
     * threading registry scopes into the ctx — the shapes eligible for

@@ -89,8 +89,9 @@ object ShingleKernel {
 
 /** Portable MinHash signature straight from text: k affine minima over
   * the md5-h32 shingle hashes — BIT-IDENTICAL to
-  * `AffineMinHash(transform(array_distinct(shingles(text,n)), h32), k)`
-  * (minima are multiset-invariant, so distinctness is immaterial), in one
+  * `AffineMinHash(transform(array_distinct(shingles(text,n)), h32), k)`,
+  * the specs' reference formulation (minima are multiset-invariant, so
+  * distinctness is immaterial), in one
   * pass with no intermediate strings. Non-codegen `eval` (the md5 calls
   * dominate; codegen would only remove interpreter dispatch). */
 case class ShingleMinHash(child: Expression, n: Int, k: Int)

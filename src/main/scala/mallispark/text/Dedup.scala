@@ -53,10 +53,9 @@ object Dedup {
   val MinhashP: Long = 2305843009213693951L
 
   // The affine family (h * (2s+1) + 99991 s) mod P lives in
-  // expressions.ShingleMinHash (text input) / expressions.AffineMinHash
-  // (pre-hashed array input) — ONE md5 per shingle total, k per-seed
-  // integer mixes in a tight loop. Bit-parity between the two is
-  // asserted in TextOpsSpec.
+  // expressions.ShingleMinHash — ONE md5 per shingle total, k per-seed
+  // integer mixes in a tight loop. Bit-parity with the Column
+  // formulation is asserted in TextOpsSpec.
 
   /** MinHash+LSH candidate pairs: signature → `bands` bands of `k/bands`
     * rows each → band bucket key → ids sharing a bucket.
@@ -141,34 +140,10 @@ object Dedup {
         memberIds(id, maxMembers).as("doc_ids"))
       .where(F.col("dup_cnt") > 1)
 
-  /** Pack per-bit votes (array of 32 longs) into a 32-bit key: bit i set
-    * iff votes[i] > 0. Kept as the Column reference formulation — the
-    * SimHashPortable kernel is asserted bit-identical to it in
-    * TextOpsSpec. */
-  def packBits(votes: Column): Column =
-    F.aggregate(
-      F.zip_with(votes, F.sequence(F.lit(0), F.lit(31)), (v, i) =>
-        F.when(v > 0,
-          F.pow(F.lit(2.0), i.cast(DoubleType)).cast(LongType))
-          .otherwise(F.lit(0L))),
-      F.lit(0L), (acc, x) => acc + x)
-
-  /** Per-bit ±1 vote sums folded over an array of base hashes. Bit
-    * extraction via floor(h / 2^i) % 2. */
-  def voteBits(hs: Column): Column =
-    F.aggregate(
-      hs,
-      F.array_repeat(F.lit(0L), 32),
-      (acc, h) =>
-        F.zip_with(acc, F.sequence(F.lit(0), F.lit(31)), (a, i) =>
-          a + F.when(
-            F.floor(h.cast(DoubleType) /
-              F.pow(F.lit(2.0), i.cast(DoubleType))).cast(LongType) % 2 === 1,
-            1L).otherwise(-1L)))
-
   /** Scale-path MinHash+LSH using the native codegen'd
-    * `MinHashSignature` expression (one xxhash64 state per shingle×seed in
-    * a tight generated loop — no md5, no interpreted HOFs). Same banding
+    * `MinHashFromText` expression (xxhash64 minima straight from the
+    * text, one pass, no intermediate shingle strings — no md5, no
+    * interpreted HOFs). Same banding
     * and bucket-join downstream; NOT DuckDB-portable (use `minhashLSH`
     * for the oracle-checked path). */
   def minhashLSHFast(df: DataFrame, id: String, text: String,

@@ -123,6 +123,12 @@ object Similarity {
   def nearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, planes: Int, tables: Int,
                    dims: Int, maxBucket: Int = 4096): DataFrame = {
+    // ids must be INTEGRAL: the bounded member heap is a long heap, and a
+    // cast string id would turn every non-numeric id into one NULL key
+    val idType = df.schema(idCol).dataType
+    require(Set[DataType](ByteType, ShortType, IntegerType, LongType)(idType),
+      s"nearDupPairs: id column '$idCol' must be integral, got " +
+        idType.simpleString)
     val b = bucketed(df, idCol, vecCol, planes, tables, dims)
     // HOT-BUCKET CAP: a pathological (tbl, bucket) cell (e.g. a corpus of
     // near-identical embeddings collapsing into one signature) would
@@ -133,8 +139,6 @@ object Similarity {
     // explode, the same shape as the Jaccard path) instead of a
     // cell-size pre-join feeding a self-join — one exchange of
     // (tbl, bucket, id), no second shuffle of the banded rows, no join.
-    // Ids must be INTEGRAL (the bounded heap is a long heap), same
-    // restriction the dedup member lists carry.
     val buckets = b.groupBy("tbl", "bucket")
       .agg(mallispark.expressions.BoundedCollectMin(
           F.col(idCol).cast(LongType), maxBucket + 1).as("ids"),

@@ -1,6 +1,6 @@
 package mallispark
 
-import org.apache.spark.sql.{functions => F, Row}
+import org.apache.spark.sql.{functions => F, DataFrame, Row}
 import org.apache.spark.sql.types._
 import mallispark.ir.{S, SchemaIR}
 import mallispark.ir.SchemaIR._
@@ -8,6 +8,39 @@ import mallispark.compile.SchemaCompiler
 
 class DeepNestSpec extends SparkSuite {
   implicit val ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()
+  // depth-D closed-innermost chain whose innermost level carries a stray
+  // BINARY field and a struct-valued stray with a NULL field, a date and
+  // a timestamp — the hatch's value stringifier must match to_json
+  // exactly (base64 binaries, null struct fields dropped, dates quoted ISO)
+  private def strayFixture(D: Int): (SMap, StructType, DataFrame) = {
+    import scala.jdk.CollectionConverters._
+    def bsch(d: Int): SchemaIR =
+      if (d == 0) S.mapE(true, S.req("leaf", S.int(0L, 100L)))
+      else S.mapE(false, S.req("leaf", S.int(0L, 100L)),
+        S.req("kid", bsch(d - 1)))
+    def bdt(d: Int): DataType =
+      if (d == 0) StructType(Seq(StructField("leaf", LongType),
+        StructField("stray", BinaryType),
+        StructField("strayrec", StructType(Seq(
+          StructField("a", LongType, nullable = true),
+          StructField("d", DateType),
+          StructField("t", TimestampType))))))
+      else StructType(Seq(StructField("leaf", LongType),
+        StructField("kid", bdt(d - 1))))
+    def bv(d: Int, x: Long): Any =
+      if (d == 0) Row(x, Array[Byte](1, 2, (x % 100).toByte),
+        Row(null, java.sql.Date.valueOf("2024-03-05"),
+          java.sql.Timestamp.from(
+            java.time.Instant.parse("2024-03-05T12:34:56.250Z"))))
+      else Row(x, bv(d - 1, x))
+    val top = S.mapE(false, S.req("root", bsch(D))).asInstanceOf[SMap]
+    val st = StructType(Seq(StructField("root", bdt(D))))
+    val rows = (0 until 30).map(i =>
+      Row(bv(D, (i * 7) % 130).asInstanceOf[Row]))
+    (top, st, spark.createDataFrame(
+      new java.util.ArrayList[Row](rows.asJava), st))
+  }
+
   test("30-level nested struct validates via the interpreter escape hatch") {
     import scala.jdk.CollectionConverters._
     def sch(d: Int): SchemaIR =
@@ -98,35 +131,7 @@ class DeepNestSpec extends SparkSuite {
     // BINARY field under a closed innermost map pins value-string parity
     // (base64 on both tiers — not a JVM array identity hash)
     locally {
-      def bsch(d: Int): SchemaIR =
-        if (d == 0) S.mapE(true, S.req("leaf", S.int(0L, 100L)))
-        else S.mapE(false, S.req("leaf", S.int(0L, 100L)),
-          S.req("kid", bsch(d - 1)))
-      // strayrec: a struct-valued stray field with a NULL field and a
-      // date — the hatch's value stringifier must match to_json exactly
-      // (null struct fields dropped, dates quoted ISO)
-      def bdt(d: Int): DataType =
-        if (d == 0) StructType(Seq(StructField("leaf", LongType),
-          StructField("stray", BinaryType),
-          StructField("strayrec", StructType(Seq(
-            StructField("a", LongType, nullable = true),
-            StructField("d", DateType),
-            StructField("t", TimestampType))))))
-        else StructType(Seq(StructField("leaf", LongType),
-          StructField("kid", bdt(d - 1))))
-      def bv(d: Int, x: Long): Any =
-        if (d == 0) Row(x, Array[Byte](1, 2, (x % 100).toByte),
-          Row(null, java.sql.Date.valueOf("2024-03-05"),
-            java.sql.Timestamp.from(
-              java.time.Instant.parse("2024-03-05T12:34:56.250Z"))))
-        else Row(x, bv(d - 1, x))
-      val D = 11
-      val top = S.mapE(false, S.req("root", bsch(D))).asInstanceOf[SMap]
-      val st = StructType(Seq(StructField("root", bdt(D))))
-      val rows = (0 until 30).map(i =>
-        Row(bv(D, (i * 7) % 130).asInstanceOf[Row]))
-      val df = spark.createDataFrame(
-        new java.util.ArrayList[Row](rows.asJava), st)
+      val (top, st, df) = strayFixture(11)
       def errSet(r: Row) = r.getSeq[Row](0)
         .map(e => (e.getString(0), e.getString(1), e.getString(2),
           e.getString(3))).toSet
@@ -159,6 +164,23 @@ class DeepNestSpec extends SparkSuite {
         assert(errSet(h) === errSet(g), s"row $i errors diverge")
       }
     }
+  }
+
+  // the hatch renders timestamps in UTC while to_json follows the session
+  // zone: under any other zone the hatch refuses instead of diverging
+  test("deep-nest errors over a timestamp fail fast off a UTC session zone") {
+    val (top, _, df) = strayFixture(11)
+    val conf = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(conf)
+    try {
+      spark.conf.set(conf, "America/New_York")
+      val e = intercept[IllegalArgumentException] {
+        SchemaCompiler.explainDF(top, df, "e")
+      }
+      assert(e.getMessage.contains(conf), e.getMessage)
+      spark.conf.set(conf, "Etc/UTC") // an alias of UTC is accepted
+      SchemaCompiler.explainDF(top, df, "e")
+    } finally spark.conf.set(conf, prev)
   }
 
   // a ref whose TARGET is a deep struct chain must count its

@@ -1,23 +1,53 @@
-package mallispark.expressions
+package mallispark
 
 import org.apache.spark.sql.{Column, MallisparkBridge}
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+/** Reference formulations the portable hash kernels are checked
+  * against. None runs in the engine: `ShingleMinHash` and
+  * `SimHashPortable` compute the same values in one pass, and the specs
+  * assert the bit-parity. */
+object HashRefs {
+
+  /** Pack per-bit votes (array of 32 longs) into a 32-bit key: bit i set
+    * iff votes[i] > 0 — the Column formulation `SimHashPortable` is
+    * asserted bit-identical to. */
+  def packBits(votes: Column): Column =
+    F.aggregate(
+      F.zip_with(votes, F.sequence(F.lit(0), F.lit(31)), (v, i) =>
+        F.when(v > 0,
+          F.pow(F.lit(2.0), i.cast(DoubleType)).cast(LongType))
+          .otherwise(F.lit(0L))),
+      F.lit(0L), (acc, x) => acc + x)
+
+  /** Per-bit ±1 vote sums folded over an array of base hashes. Bit
+    * extraction via floor(h / 2^i) % 2. */
+  def voteBits(hs: Column): Column =
+    F.aggregate(
+      hs,
+      F.array_repeat(F.lit(0L), 32),
+      (acc, h) =>
+        F.zip_with(acc, F.sequence(F.lit(0), F.lit(31)), (a, i) =>
+          a + F.when(
+            F.floor(h.cast(DoubleType) /
+              F.pow(F.lit(2.0), i.cast(DoubleType))).cast(LongType) % 2 === 1,
+            1L).otherwise(-1L)))
+}
+
 /** k per-seed affine-MinHash minima over an array of base hashes —
   * BIT-IDENTICAL to the Column formulation
   * `array_min(transform(hs, h → (h·(2s+1) + 99991·s) mod P))` repeated
-  * for s = 0..k-1 (mallispark.text.Dedup.mix), but in ONE generated loop
-  * instead of k interpreted higher-order-function passes.
-  *
-  * This keeps the PORTABLE md5-based MinHash family (the DuckDB oracle
-  * reproduces the same minima from the same base hashes) while removing
-  * the interpreted-lambda cost, which dominates the portable LSH path at
-  * scale. Base hashes are < 2^32 and multipliers < 2^10, so products
-  * never overflow a signed 64-bit long (P = 2^61 - 1). */
+  * for s = 0..k-1, but in ONE generated loop instead of k interpreted
+  * higher-order-function passes. Over
+  * `transform(array_distinct(shingles(text, n)), h32)` it is the
+  * reference `ShingleMinHash` is asserted bit-identical to. Base hashes
+  * are < 2^32 and multipliers < 2^10, so products never overflow a
+  * signed 64-bit long (P = 2^61 - 1). */
 case class AffineMinHash(child: Expression, k: Int) extends UnaryExpression {
 
   require(k > 0 && k <= 512, s"k out of range: $k")

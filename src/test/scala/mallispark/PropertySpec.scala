@@ -58,8 +58,8 @@ class PropertySpec extends SparkSuite {
   }
 
   test("hash kernels are bit-identical to the Column md5 path on random text") {
-    import mallispark.expressions.{AffineMinHash, ShingleH60Set, ShingleMinHash, SimHashPortable}
-    import mallispark.text.{Dedup, TextOps}
+    import mallispark.expressions.{ShingleH60Set, ShingleMinHash, SimHashPortable}
+    import mallispark.text.TextOps
     // adversarial token soup: whitespace runs, tabs/newlines, empty-ish
     // strings, unicode uppercase, punctuation
     val word = Gen.oneOf(
@@ -87,9 +87,9 @@ class PropertySpec extends SparkSuite {
         F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast(LongType))))
         .as("ch"),
       ShingleH60Set(F.col("text"), 3).as("kh"),
-      Dedup.packBits(Dedup.voteBits(
+      HashRefs.packBits(HashRefs.voteBits(
         F.transform(toks, x => TextOps.h32(F.lit("hi"), x)))).as("chi"),
-      Dedup.packBits(Dedup.voteBits(
+      HashRefs.packBits(HashRefs.voteBits(
         F.transform(toks, x => TextOps.h32(F.lit("lo"), x)))).as("clo"),
       SimHashPortable(F.col("text")).as("ksim")).collect()
     got.zipWithIndex.foreach { case (r, i) =>

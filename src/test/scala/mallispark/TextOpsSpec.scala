@@ -84,22 +84,16 @@ class TextOpsSpec extends SparkSuite {
       .count() === 0L)
   }
 
-  test("native MinHashSignature: codegen == interpreted; dups collide") {
-    import mallispark.expressions.MinHashSignature
-    // interpreted eval (via a non-codegen path: eval on literal rows
-    // through collect with codegen off) vs whole-stage codegen
-    val sigDf = d.select(F.col("id"),
-      MinHashSignature(TextOps.shingles(F.col("text"), 2), 16).as("sig"))
-    val withCodegen = sigDf.collect().map(r =>
-      r.getLong(0) -> r.getSeq[Long](1)).toMap
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    val interpreted = try sigDf.collect().map(r =>
-      r.getLong(0) -> r.getSeq[Long](1)).toMap
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    assert(withCodegen === interpreted)
-    assert(withCodegen(1L) === withCodegen(2L)) // exact dups: same signature
-    assert(withCodegen(1L) !== withCodegen(4L))
-    assert(withCodegen(1L).length === 16)
+  test("native minhashLSHFast: MinHashFromText signatures; dups collide") {
+    import mallispark.expressions.MinHashFromText
+    // the signature minhashLSHFast bands at k = 16, n = 2 (its codegen ≡
+    // interpreted check is the MinHashFromText test below)
+    val sig = d.select(F.col("id"),
+        MinHashFromText(F.col("text"), 2, 16).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(sig(1L) === sig(2L)) // exact dups: same signature
+    assert(sig(1L) !== sig(4L))
+    assert(sig(1L).length === 16)
     // end-to-end fast LSH: dup pair co-bucketed in all bands
     val cand = Dedup.minhashLSHFast(d, "id", "text", k = 16, bands = 8, n = 2)
       .collect().map(_.getSeq[Long](3).toSet)
@@ -160,7 +154,7 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("ShingleMinHash/H60Set kernels are BIT-identical to the Column md5 path") {
-    import mallispark.expressions.{AffineMinHash, ShingleH60Set, ShingleMinHash}
+    import mallispark.expressions.{ShingleH60Set, ShingleMinHash}
     // edge cases the kernel must mirror exactly: leading whitespace
     // (split emits a leading empty token), whitespace runs, uppercase
     // (incl. non-ASCII È → è via UTF8String.toLowerCase), short docs
@@ -205,9 +199,9 @@ class TextOpsSpec extends SparkSuite {
     val t = df(rows, StructType(Seq(StructField("id", LongType),
       StructField("text", StringType))))
     val toks = F.array_distinct(TextOps.tokens(F.col("text")))
-    val colHi = Dedup.packBits(Dedup.voteBits(
+    val colHi = HashRefs.packBits(HashRefs.voteBits(
       F.transform(toks, x => TextOps.h32(F.lit("hi"), x))))
-    val colLo = Dedup.packBits(Dedup.voteBits(
+    val colLo = HashRefs.packBits(HashRefs.voteBits(
       F.transform(toks, x => TextOps.h32(F.lit("lo"), x))))
     val got = t.select(F.col("id"), colHi.as("chi"), colLo.as("clo"),
       SimHashPortable(F.col("text")).as("k")).collect()
@@ -372,6 +366,16 @@ class TextOpsSpec extends SparkSuite {
     val open = Similarity.nearDupPairs(emb.toDF(), "id", "v",
       threshold = 0.9, planes = 2, tables = 2, dims = 8, maxBucket = 100)
     assert(open.count() === 20L * 19 / 2)
+  }
+
+  test("embedding near-dup pairs reject a non-integral id column") {
+    val emb = spark.range(3).select(F.col("id").cast("string").as("sid"),
+      F.array_repeat(F.lit(1.0f), 8).as("v"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.nearDupPairs(emb, "sid", "v",
+        threshold = 0.9, planes = 2, tables = 2, dims = 8)
+    }
+    assert(e.getMessage.contains("'sid'"), e.getMessage)
   }
 
   test("dupClustersStar refuses to label from a non-converged forest") {
