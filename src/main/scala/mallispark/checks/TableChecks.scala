@@ -144,9 +144,9 @@ object TableChecks {
     * table snapshots): classify every key as added / removed / modified
     * between two snapshots of the same table. Each side is projected to
     * (key, digest) BEFORE the join, so at 10^12 rows only the key plus a
-    * 64-hex digest shuffle — payloads never move. The join hash-partitions
-    * both sides on the key (sort-merge, AQE skew splitting); unchanged keys
-    * drop out in the post-join filter. Assumes `key` is unique per snapshot
+    * 32-byte binary SHA-256 shuffle — payloads never move. The join
+    * hash-partitions both sides on the key (sort-merge, AQE skew
+    * splitting); unchanged keys drop out in the post-join filter. Assumes `key` is unique per snapshot
     * (run `duplicates` first otherwise). */
   def snapshotDiff(curr: DataFrame, prev: DataFrame, key: String,
                    payload: Column): DataFrame = {
@@ -156,11 +156,12 @@ object TableChecks {
     val isBinary = curr.select(payload).schema.head.dataType == BinaryType
     val bytes =
       if (isBinary) payload else payload.cast(StringType).cast(BinaryType)
-    // null payloads digest to a non-hex sentinel (sha2 output is 64 hex
-    // chars, so no value can collide with it) — bare sha2(NULL) is NULL
+    // the raw 32-byte digest, not sha2's 64-char hex: half the shuffle.
+    // Null payloads digest to the empty binary (a SHA-256 is always 32
+    // bytes, so no value can collide with it) — bare sha2(NULL) is NULL
     // and would misclassify a present-but-null row as added/removed
-    val digest = F.when(payload.isNull, F.lit("__NULL__"))
-      .otherwise(F.sha2(bytes, 256))
+    val digest = F.when(payload.isNull, F.lit(Array.emptyByteArray))
+      .otherwise(F.unhex(F.sha2(bytes, 256)))
     val c = curr.select(F.col(key), digest.as("curr_sha"))
     val p = prev.select(F.col(key), digest.as("prev_sha"))
     c.join(p, Seq(key), "full_outer")

@@ -69,7 +69,7 @@ object SchemaCompiler {
     * runtime map key) be re-rooted after the fact. */
   private def prependPath(viols: Column, prefix: Column): Column =
     F.transform(viols, e => F.struct(
-      F.when(F.length(e.getField("path")) === 0, prefix)
+      F.when(F.octet_length(e.getField("path")) === 0, prefix)
         .otherwise(F.concat(prefix, F.lit("/"), e.getField("path")))
         .as("path"),
       e.getField("in").as("in"),
@@ -82,7 +82,7 @@ object SchemaCompiler {
 
   /** Value-path join (runtime — array indices are data). */
   private def jin(in: Column, seg: Column): Column =
-    F.when(F.length(in) === 0, seg.cast(StringType))
+    F.when(F.octet_length(in) === 0, seg.cast(StringType))
       .otherwise(F.concat(in, F.lit("/"), seg.cast(StringType)))
 
   private def jin(in: Column, seg: String): Column = jin(in, F.lit(seg))
@@ -294,8 +294,7 @@ object SchemaCompiler {
       case SSome => col.isNotNull
 
       case s: SString if !typeOk(s, dt) => F.lit(false)
-      case SString(mn, mx) =>
-        col.isNotNull && between(F.length(col), mn.map(_.toLong), mx.map(_.toLong))
+      case SString(mn, mx) => col.isNotNull && codePointsBetween(col, mn, mx)
 
       case s: SInt if !typeOk(s, dt) => F.lit(false)
       case SInt(mn, mx) => col.isNotNull && between(col, mn, mx)
@@ -341,7 +340,7 @@ object SchemaCompiler {
                 .getOrElse(col.rlike(z))
           // :char — exactly one code point (Spark length() counts code
           // points, as does DuckDB's; RowEval mirrors via codePointCount)
-          case None => col.isNotNull && F.length(col) === 1
+          case None => col.isNotNull && codePointsBetween(col, Some(1), Some(1))
         })
 
       case s: STimestamp if !typeOk(s, dt) => F.lit(false)
@@ -857,6 +856,41 @@ object SchemaCompiler {
     case _ => false
   }
 
+  /** Code-point length bounds on a string, decided from the byte length
+    * `b = octet_length(col)` wherever that settles them. Spark's `length`
+    * (`UTF8String.numChars`) steps through the bytes by the width its lead
+    * byte announces, 1–4, and by 1 on an invalid lead byte, so ANY string
+    * — valid UTF-8 or not — holds between ceil(b/4) and b code points.
+    * Hence `:min a` holds when b >= 4a-3 and fails when b < a, and `:max c`
+    * holds when b <= c and fails when b > 4c; only a row in between counts
+    * code points. Catalyst's `&&`/`||` short-circuit, so `length` (a read
+    * of every byte) runs on those rows alone and `{:min 1}` never runs it:
+    * a cheap lossy code settles most rows and the base data is read only
+    * for the rest (Column Sketches, SIGMOD 2018). With two undecided
+    * bounds the count sits in one CASE branch: subexpression elimination
+    * would hoist a `length` shared by both conjuncts out of the short
+    * circuit and run it on every row. Null in → null out; callers guard
+    * with `isNotNull`. */
+  private def codePointsBetween(col: Column, mn: Option[Int],
+                                mx: Option[Int]): Column = {
+    val b = F.octet_length(col)
+    val n = F.length(col)
+    def atLeast(a: Long) =
+      if (a <= 1) b >= a else b >= a && (b >= 4 * a - 3 || n >= a)
+    def atMost(c: Long) =
+      if (c <= 0) b <= c else b <= c || (b <= 4 * c && n <= c)
+    (mn.map(_.toLong), mx.map(_.toLong)) match {
+      case (None, None) => F.lit(true)
+      case (Some(a), None) => atLeast(a)
+      case (None, Some(c)) => atMost(c)
+      case (Some(a), Some(c)) if a <= 1 || c <= 0 => atLeast(a) && atMost(c)
+      case (Some(a), Some(c)) =>
+        F.when(b < a || b > 4 * c, false)
+          .when(b >= 4 * a - 3 && b <= c, true)
+          .otherwise(n >= a && n <= c)
+    }
+  }
+
   private def between(c: Column, mn: Option[Any], mx: Option[Any]): Column =
     (mn, mx) match {
       case (None, None) => F.lit(true)
@@ -914,7 +948,7 @@ object SchemaCompiler {
         F.transform(errsUdf(col), e => F.struct(
           F.lit(path).as("path"),
           F.coalesce(
-            F.when(F.coalesce(F.length(e.getField("_1")), F.lit(0)) === 0,
+            F.when(F.coalesce(F.octet_length(e.getField("_1")), F.lit(0)) === 0,
                 F.coalesce(in, F.lit("")))
               .otherwise(jin(F.coalesce(in, F.lit("")), e.getField("_1"))),
             F.lit("")).as("in"),

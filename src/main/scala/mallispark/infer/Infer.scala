@@ -76,9 +76,11 @@ object Infer {
          else Seq.empty) ++
         (f.dataType match {
           case StringType if opts.narrowStrings =>
-            // length(c) = 36 gate: codegen's && short-circuits, so long
-            // non-uuid strings (document bodies) never enter the regex
-            Seq(F.count(F.when(F.length(c) === 36 && c.rlike(UuidRe), 1))
+            // 36-byte gate: codegen's && short-circuits, so long non-uuid
+            // strings (document bodies) never enter the regex. UuidRe is
+            // ASCII-only, so a match is 36 bytes (and "<uuid>\n", which
+            // `$` accepts, is 37) — no code-point count needed
+            Seq(F.count(F.when(F.octet_length(c) === 36 && c.rlike(UuidRe), 1))
               .as(s"${f.name}__uuid"))
           case _: ArrayType =>
             Seq(F.min(F.size(c)).as(s"${f.name}__szmin"),

@@ -121,12 +121,15 @@ object Dedup {
     // InferFiltersFromGenerate add a size(<band transform>) Filter below
     // the projection, re-running the per-band key folds (and, when the
     // signature is computed in the same projection, the text kernel) a
-    // second time per row
-    sig.where(F.element_at(F.col("sig"), 1) =!= Long.MaxValue)
-      .select(F.col(id), F.explode_outer(
-        F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), b =>
-          F.struct(b.as("band"),
-            bandKey(slice(b)).as("band_key")))).as("bk"))
+    // second time per row. The empty-text sentinel nulls the band array
+    // and the filter drops the generated null row: a filter on `sig`
+    // itself is pushed below that projection the same way
+    sig.select(F.col(id), F.explode_outer(
+        F.when(F.element_at(F.col("sig"), 1) =!= Long.MaxValue,
+          F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), b =>
+            F.struct(b.as("band"),
+              bandKey(slice(b)).as("band_key"))))).as("bk"))
+      .where(F.col("bk").isNotNull)
       .select(F.col(id), F.col("bk.band").as("band"),
         F.col("bk.band_key").as("band_key"))
   }
@@ -371,7 +374,7 @@ object Dedup {
           mallispark.expressions.MinHashFromText(F.col(text), n, k))
           .as("sig"),
         mallispark.expressions.ShingleH60Set(F.col(text), n).as("hs0")) ++
-      (if (wantScaled) Seq((F.length(F.col(text)) > 0).as("len_ok"))
+      (if (wantScaled) Seq((F.octet_length(F.col(text)) > 0).as("len_ok"))
        else Nil)
     val baseSel = df.select(baseCols: _*)
     val base0 = obsOpt.map(o => baseSel.observe(o,
@@ -384,7 +387,7 @@ object Dedup {
           obsOpt.get.get("n").asInstanceOf[Long] / div).toInt
       case Some((floor, div)) => // unmaterialized: pay the explicit count
         math.max(floor.toLong,
-          df.where(F.length(F.col(text)) > 0).count() / div).toInt
+          df.where(F.octet_length(F.col(text)) > 0).count() / div).toInt
       case None => maxShingleDf
     }
     val bd = bandsFromSig(base.select(F.col("doc"), F.col("sig")), "doc",
@@ -417,15 +420,20 @@ object Dedup {
     //    count, never by corpus content.
     // Either way no aggregation buffer grows with corpus content.
     // Intersections are array_intersect on the candidate pair rows:
-    // shingle rows never join against each other.
+    // shingle rows never join against each other. Docs with an empty set
+    // are dropped where the pair's Jaccard is computed, never by a size()
+    // filter here: the optimizer pushes such a filter below the kernel
+    // projection, which then runs twice per row when `base` is not
+    // materialized (the outer explode + null filter keeps the inferred
+    // generate filter off it for the same reason).
     val hs60 = base.select(F.col("doc"), F.col("hs0"))
-      .where(F.size(F.col("hs0")) > 0)
     val docsets =
       if (effMaxShingleDf <= 0)
         hs60.select(F.col("doc"), F.col("hs0").as("hs"))
       else {
         val exploded = hs60.select(F.col("doc"),
-          F.explode(F.col("hs0")).as("h"))
+          F.explode_outer(F.col("hs0")).as("h"))
+          .where(F.col("h").isNotNull)
         // one pass over the exploded rows; what survives is small
         val hot = exploded.groupBy("h").agg(F.count(F.lit(1)).as("df"))
           .where(F.col("df") > effMaxShingleDf)
@@ -440,7 +448,6 @@ object Dedup {
           hs60.crossJoin(F.broadcast(hotArr))
             .select(F.col("doc"),
               F.array_except(F.col("hs0"), F.col("hot_arr")).as("hs"))
-            .where(F.size(F.col("hs")) > 0)
         } else {
           // re-collect each doc's surviving shingles through the k-capped
           // heap, never collect_list (the repo-wide bounded-group-state
@@ -450,7 +457,7 @@ object Dedup {
           // docs degrade gracefully instead of one agg buffer absorbing
           // the whole document. BoundedCollectMin emits ascending order
           // (the kernel's set order) by construction; docs whose every
-          // shingle is hot vanish, matching the size(hs)>0 filter above
+          // shingle is hot vanish, as empty sets do at the pair step
           exploded.join(hot, Seq("h"), "left_anti")
             .groupBy("doc")
             .agg(mallispark.expressions.BoundedCollectMin(
@@ -467,9 +474,11 @@ object Dedup {
           .cast(LongType).as("inter"),
         F.size(F.col("hs_a")).cast(LongType).as("sz_a"),
         F.size(F.col("hs_b")).cast(LongType).as("sz_b"))
+    // an empty side has no Jaccard (and two would divide by zero)
     pairs.withColumn("jaccard",
-        F.col("inter").cast(DoubleType) /
-          (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+        F.when(F.col("sz_a") > 0 && F.col("sz_b") > 0,
+          F.col("inter").cast(DoubleType) /
+            (F.col("sz_a") + F.col("sz_b") - F.col("inter"))))
       .where(F.col("jaccard") >= threshold)
       .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
   }

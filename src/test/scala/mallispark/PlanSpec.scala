@@ -1,6 +1,8 @@
 package mallispark
 
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Length, Size}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.FileSourceScanExec
 import mallispark.ir.S
 import mallispark.compile.SchemaCompiler
@@ -108,6 +110,64 @@ class PlanSpec extends SparkSuite {
     assert(plan.contains("*(1)"), s"no codegen span:\n$plan")
     // no UDFs / interpreted escapes in the core validation path
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
+  }
+
+  test("string bounds decide from the byte length: no Length in the flagship plan") {
+    val pages = WebPages.derive(spark.read.parquet(s"$sf/documents.parquet"))
+    val lengths = (df: org.apache.spark.sql.DataFrame) =>
+      df.queryExecution.optimizedPlan.flatMap(
+        _.expressions.flatMap(_.collect { case l: Length => l }))
+    // [:string {:min 1}] and every other flagship leaf settle on
+    // octet_length alone, on the valid and the errors path
+    val valid = SchemaCompiler.validateDF(WebPages.schema, pages, "valid")
+    assert(lengths(valid).isEmpty,
+      s"Length in the flagship plan:\n${valid.queryExecution.optimizedPlan}")
+    val viols = SchemaCompiler.violationsDF(WebPages.schema, pages, Seq("doc_id"))
+    assert(lengths(viols).isEmpty,
+      s"Length in the violations plan:\n${viols.queryExecution.optimizedPlan}")
+    // a bound with an ambiguous byte band still counts code points there
+    val bounded = SchemaCompiler.validateDF(S.map("text" -> S.string(3, 5)),
+      pages.select("text"), "valid")
+    assert(lengths(bounded).nonEmpty, "bounded :string lost its length()")
+  }
+
+  /** Filter conditions that re-evaluate a computed array: a size() of a
+    * non-attribute, or a text kernel itself. Either is pushed below the
+    * projection that computes the array and runs the kernel twice a row. */
+  private def kernelFilters(df: org.apache.spark.sql.DataFrame): Seq[Expression] =
+    df.queryExecution.optimizedPlan.collect {
+      case f: Filter if f.condition.exists {
+        case Size(c, _) => !c.isInstanceOf[Attribute]
+        case e => Set("shingle_h60_set", "minhash_from_text", "shingle_minhash")
+          .contains(e.prettyName)
+      } => f.condition
+    }
+
+  test("text kernels run once per row: no filter re-evaluates a kernel array") {
+    // every docsets branch of the unmaterialized Jaccard path (no hot
+    // cap, broadcast hot set, anti-join re-collect) filters on attributes
+    // only and gives the materialized output
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    def jac(maxShingleDf: Int, maxHot: Int, materialize: Boolean) =
+      mallispark.text.Dedup.ngramJaccardWithinBuckets(docs, "doc_id", "text",
+        threshold = 0.5, maxShingleDf = maxShingleDf,
+        maxHotBroadcast = maxHot, materialize = materialize)
+    for ((df, hot) <- Seq((0, 1 << 20), (1, 1 << 20), (1, 0))) {
+      val lazyJac = jac(df, hot, materialize = false)
+      val bad = kernelFilters(lazyJac)
+      assert(bad.isEmpty, s"filter re-evaluates a kernel array " +
+        s"(maxShingleDf=$df, maxHotBroadcast=$hot): $bad")
+      val rows = (d: org.apache.spark.sql.DataFrame) =>
+        d.collect().map(_.toSeq).toSet
+      assert(rows(lazyJac) === rows(jac(df, hot, materialize = true)),
+        s"materialize changes the output (maxShingleDf=$df, maxHotBroadcast=$hot)")
+    }
+    // the banding of both MinHash families
+    val queries = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnlyQueries
+    for (q <- Seq("dedup_minhash_lsh", "dedup_minhash_fast")) {
+      val bad = kernelFilters(queries(q)(spark, sf))
+      assert(bad.isEmpty, s"$q: filter re-evaluates a kernel array: $bad")
+    }
   }
 
   test("verdict aggregation is partial+final (map-side combine)") {

@@ -1,6 +1,6 @@
 package mallispark
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -320,6 +320,73 @@ class PropertySpec extends SparkSuite {
         (e.path.mkString("/"), e.in.mkString("/"), e.key)).toSet
       assert(re === errs, s"errors mismatch on $r")
     }
+  }
+
+  test("string length bounds: byte-length sketch ≡ length() on random and invalid UTF-8") {
+    // code points of every UTF-8 width, plus raw random bytes (invalid
+    // lead/continuation bytes, truncated sequences) cast binary → string,
+    // so Spark's numChars walks strings no decoder would accept
+    val widths = Seq(Gen.chooseNum(0x20, 0x7e), Gen.chooseNum(0x80, 0x7ff),
+      Gen.chooseNum(0x800, 0xd7ff), Gen.chooseNum(0x10000, 0x10ffff))
+    val cp: Gen[Int] = Gen.frequency(widths.zip(Seq(4, 2, 2, 2)).map(_.swap): _*)
+    def encode(cs: List[Int]) =
+      new String(cs.toArray, 0, cs.length).getBytes("UTF-8")
+    val mixed: Gen[Array[Byte]] = Gen.chooseNum(0, 45)
+      .flatMap(n => Gen.listOfN(n, cp)).map(encode)
+    // one width per string puts b = w·n on the edges of the byte band
+    val uniform: Gen[Array[Byte]] = for {
+      w <- Gen.oneOf(widths)
+      n <- Gen.chooseNum(0, 10)
+      cs <- Gen.listOfN(n, w)
+    } yield encode(cs)
+    val utf8 = Gen.oneOf(mixed, uniform)
+    val raw: Gen[Array[Byte]] = Gen.chooseNum(0, 60)
+      .flatMap(n => Gen.listOfN(n, Gen.chooseNum(-128, 127).map(_.toByte)))
+      .map(_.toArray)
+    val genBytes = Gen.frequency(5 -> utf8, 3 -> raw,
+      1 -> Gen.zip(utf8, raw).map { case (a, b) => a ++ b },
+      1 -> Gen.const(null: Array[Byte]))
+    val rows = seeded(Gen.listOfN(500, genBytes), 106L)
+    val local = spark.createDataFrame(
+        new java.util.ArrayList[Row](rows.map(b => Row(b)).asJava),
+        StructType(Seq(StructField("b", BinaryType))))
+      .select(F.col("b").cast(StringType).as("s"))
+    val bounds = Seq(None, Some(0), Some(1), Some(2), Some(3), Some(5),
+      Some(8), Some(40))
+    val cases: Seq[(SchemaIR, Column)] = {
+      val s = F.col("s")
+      def ref(mn: Option[Int], mx: Option[Int]) = s.isNotNull &&
+        mn.fold(F.lit(true))(F.length(s) >= _) &&
+        mx.fold(F.lit(true))(F.length(s) <= _)
+      (SIdent("char"), ref(Some(1), Some(1))) +:
+        (for (mn <- bounds; mx <- bounds) yield (SString(mn, mx), ref(mn, mx)))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("strlen_prop").toString
+    try {
+      // LocalRelation (interpreted, folded while planning) and parquet
+      // (whole-stage codegen) evaluate the same columns
+      local.write.mode("overwrite").parquet(dir)
+      for (df <- Seq(local, spark.read.parquet(dir))) {
+        val out = df.select(F.col("s") +: F.expr("is_valid_utf8(s)") +:
+            cases.flatMap { case (ir, r) =>
+              Seq(SchemaCompiler.valid(ir, F.col("s"), StringType), r)
+            }: _*).collect()
+        assert(out.count(r => !r.isNullAt(1) && !r.getBoolean(1)) > 50,
+          "too few invalid UTF-8 rows to exercise numChars")
+        out.foreach { r =>
+          cases.zipWithIndex.foreach { case ((ir, _), i) =>
+            val got = r.getBoolean(2 + 2 * i)
+            assert(got === r.getBoolean(3 + 2 * i),
+              s"$ir sketch != length() on ${r.getString(0)}")
+            // RowEval decodes to a JVM string: invalid UTF-8 becomes
+            // replacement chars, so it is a twin on valid strings only
+            if (r.isNullAt(1) || r.getBoolean(1))
+              assert(RowEval.validate(ir, r.getString(0)) === got,
+                s"$ir RowEval mismatch on ${r.getString(0)}")
+          }
+        }
+      }
+    } finally rmTree(dir)
   }
 
   test("decode duality: Column null-on-failure ⟺ value keep-original") {

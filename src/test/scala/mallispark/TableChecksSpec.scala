@@ -77,6 +77,24 @@ class TableChecksSpec extends SparkSuite {
     assert(diff.length === 1 && diff(0).getString(1) === "modified")
   }
 
+  test("snapshotDiff: null <-> empty payload is modified (null sentinel never collides)") {
+    // the null sentinel is the empty binary; sha2 of an empty payload is
+    // still 32 bytes, so null and "" must digest apart, both directions
+    // and for string and binary payloads alike
+    val prev = df(Seq(Row(1L, null), Row(2L, ""), Row(3L, null)), kv)
+    val curr = df(Seq(Row(1L, ""), Row(2L, null), Row(3L, null)), kv)
+    val diff = TableChecks.snapshotDiff(curr, prev, "k", F.col("v"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(diff === Map(1L -> "modified", 2L -> "modified"))
+    val bin = StructType(Seq(
+      StructField("k", LongType), StructField("v", BinaryType)))
+    val prevB = df(Seq(Row(1L, null), Row(2L, Array.emptyByteArray)), bin)
+    val currB = df(Seq(Row(1L, Array.emptyByteArray), Row(2L, null)), bin)
+    val diffB = TableChecks.snapshotDiff(currB, prevB, "k", F.col("v"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(diffB === Map(1L -> "modified", 2L -> "modified"))
+  }
+
   test("chiSquare: shifted distribution flags, identical passes") {
     val a = df((1L to 300L).map(i => Row(i, if (i % 3 == 0) "x" else "y")), kv)
     val same = df((1L to 300L).map(i => Row(i, if (i % 3 == 0) "x" else "y")), kv)
