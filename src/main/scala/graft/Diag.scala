@@ -33,7 +33,7 @@ import mallispark.text.{Dedup, Similarity}
   *
   * Env: SPARK_GRAFT_CPUS (local cores, default 32); `time`/`explain`:
   * SPARK_GRAFT_SF_DIR (the testdata scale-factor directory, required),
-  * SPARK_GRAFT_REPEAT (K, default 3) — the streaming trio is sampled at
+  * SPARK_GRAFT_REPEAT (K, default 3) — `smallSf` queries are sampled at
   * the sibling sf0.01 exactly as Bench does; `probe`: SPARK_GRAFT_PROBE_N (N, default 8);
   * `dedup-scale`: SPARK_GRAFT_SCALE_N (docs, default 1e6). */
 object Diag {
@@ -79,11 +79,17 @@ object Diag {
       throw new IllegalArgumentException(s"Diag $mode needs SPARK_GRAFT_SF_DIR"))
     mode match {
       case "time" =>
+        val names = timeNames(args.tail)
         val dir = sfDir
-        withSession(cpus)(time(_, dir, args.tail))
+        withSession(cpus)(time(_, dir, names))
       case "explain" =>
+        if (args.length < 3)
+          throw new IllegalArgumentException(
+            "Diag explain needs out_dir and suffix before the query names")
+        val Array(outDir, suffix) = args.slice(1, 3)
+        val names = known(args.drop(3).toSeq)
         val dir = sfDir
-        withSession(cpus)(explain(_, dir, args.tail))
+        withSession(cpus)(explain(_, dir, outDir, suffix, names))
       case "probe" => probe(env("SPARK_GRAFT_PROBE_N", "8").toInt)
       case "regex-ab" => withSession(cpus)(regexAB)
       case "dedup-scale" => withSession(cpus)(
@@ -91,13 +97,28 @@ object Diag {
     }
   }
 
-  private lazy val allQueries =
-    SparkEntry.queries ++ SparkEntry.benchOnlyQueries
-  private val streamingTrio =
-    Set("streaming_violations", "streaming_windowed", "streaming_dedup")
+  private lazy val specs: Map[String, QuerySpec] =
+    SparkEntry.registry.map(q => q.name -> q).toMap
 
-  /** Builds registry queries over `sfDir` as Bench does: the streaming
-    * trio reads the sibling sf0.01 directory when there is one. */
+  /** `names`, checked against the registry before any session starts: a
+    * typo must fail, not time or explain nothing and exit 0. */
+  private def known(names: Seq[String]): Seq[String] = {
+    val unknown = names.filterNot(specs.contains)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown query ${unknown.mkString(", ")}; see SparkEntry.registry")
+    names
+  }
+
+  /** `time`'s names: none or `all` means every query. */
+  private def timeNames(args: Array[String]): Seq[String] = {
+    val names = known(args.toSeq.filterNot(_ == "all"))
+    if (args.isEmpty || args.contains("all")) specs.keys.toSeq.sorted
+    else names
+  }
+
+  /** Builds registry queries over `sfDir` as Bench does: `smallSf`
+    * queries read the sibling sf0.01 directory when there is one. */
   private def builder(spark: SparkSession,
                       sfDir: String): String => DataFrame = {
     val parent = java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent
@@ -105,15 +126,14 @@ object Diag {
     val smallSfDir =
       if (cand != null && java.nio.file.Files.isDirectory(cand)) cand.toString
       else sfDir
-    q => allQueries(q)(spark, if (streamingTrio(q)) smallSfDir else sfDir)
+    q => specs(q).build(spark, if (specs(q).smallSf) smallSfDir else sfDir)
   }
 
-  private def explain(spark: SparkSession, sfDir: String,
-                      args: Array[String]): Unit = {
-    val outDir = args(0); val suffix = args(1)
+  private def explain(spark: SparkSession, sfDir: String, outDir: String,
+                      suffix: String, names: Seq[String]): Unit = {
     val build = builder(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (q <- args.drop(2).toSeq if allQueries.contains(q)) {
+    for (q <- names) {
       val txt = build(q).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
@@ -123,11 +143,8 @@ object Diag {
   }
 
   private def time(spark: SparkSession, sfDir: String,
-                   args: Array[String]): Unit = {
+                   names: Seq[String]): Unit = {
     val build = builder(spark, sfDir)
-    val names =
-      if (args.isEmpty || args.contains("all")) allQueries.keys.toSeq.sorted
-      else args.toSeq.filter(allQueries.contains)
     // same warm-up as Bench
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(F.sum(F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1000L))))

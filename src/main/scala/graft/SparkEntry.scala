@@ -1,20 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.types._
-import mallispark.ir.S
-import mallispark.ir.SchemaIR
-import mallispark.ir.SchemaIR.ValidateErr
-import mallispark.compile.{SchemaCompiler, Transform}
-import mallispark.checks.TableChecks
-import mallispark.run.{NestedDocs, SnapshotTable, ValidationJob, WebPages}
-import mallispark.text.{Dedup, Multimodal, Similarity, TextOps}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import mallispark.run.WebPages
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + FIXTURES.md §4.
+/** Driver contract — see SURVEY.md §7 + FIXTURES.md §4.
   *
-  * Every SQL-expressible operator gets BOTH a `queries` entry (the engine)
-  * and an `oracleSql` entry (DuckDB ground truth on the same parquet).
+  * Every query is one `QuerySpec` in a per-family file beside it
+  * (`WebQueries`, `ValidationQueries`, …): the Spark builder (the engine)
+  * next to its DuckDB oracle SQL (ground truth on the same parquet) and
+  * the fixtures both read. `queries`, `benchOnlyQueries` and `oracleSql`
+  * are views of `registry`.
   * Cross-engine determinism rules used throughout:
   *  - hashes are md5-derived (never engine-private hash functions)
   *  - aggregates are exact integers, or doubles rounded to 4-6 dp
@@ -23,10 +18,14 @@ import mallispark.text.{Dedup, Multimodal, Similarity, TextOps}
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  // ------------------------------------------------------------------
+  // shared by the query families
+  // ------------------------------------------------------------------
+
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  private def deleteRecursively(path: String): Unit = {
+  private[graft] def deleteRecursively(path: String): Unit = {
     import java.nio.file.{Files, Paths}
     val p = Paths.get(path)
     if (Files.exists(p)) {
@@ -35,4243 +34,50 @@ object SparkEntry {
     }
   }
 
-  private def pages(s: SparkSession, dir: String): DataFrame =
+  private[graft] def pages(s: SparkSession, dir: String): DataFrame =
     WebPages.derive(t(s, dir, "documents"))
 
-  // Corpus-scaled ubiquitous-shingle cap for the Jaccard family: a FIXED
-  // df cap stops meaning "ubiquitous" as the corpus grows (at web scale
-  // nearly every distinct shingle exceeds df 20, and the hot set itself
-  // grows with corpus content), so the cap tracks corpus size: a shingle
-  // is hot only past 1% of the shingled-document count, floor 20 — the
-  // `scaledShingleDf = Some((20, 100L))` argument the Jaccard builders
-  // pass. The count rides the pipeline's base materialization as an
-  // observe metric (no separate corpus scan); the SQL oracle computes
-  // the identical value as greatest(20, (SELECT count(*) FROM toks)//100)
-  // over the same length(text)>0 population.
+  private[graft] val P = WebPages.OracleCte // WITH base AS (...), pages AS (...)
 
-  /** Portable logical partition: md5-derived hash of url, mod 32. */
-  private def partId(url: Column): Column = TextOps.h32(url) % 32
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * the streaming-state partition count (default 8, env
-    * SPARK_GRAFT_STREAM_STATE_PARTS). A stateful stream spawns one state
-    * store per shuffle partition per micro-batch (delta + snapshot files,
-    * task per partition) — the gate streams carry sf0.01-sized state, so
-    * the session-wide 32 buys nothing but 4× the state-store commit I/O
-    * (guide §2.2: fewer, larger partitions). At production scale set the
-    * env to match key-cardinality/executor count; the value is pinned
-    * into the checkpoint by the first run either way. Results are
-    * partition-count-independent (grouping semantics don't change). */
-  private def withStreamStateParts[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS", "8"))
-    try body finally s.conf.set(key, prev)
-  }
+  /** Portable hash in DuckDB. */
+  private[graft] def dh32(e: String) = s"('0x' || substring(md5($e),1,8))::BIGINT"
 
   // ------------------------------------------------------------------
-  // multimodal test corpus: real BMP/WAV binaries synthesized
-  // deterministically (pixels/samples from md5(text)), plus two
-  // hand-assembled golden files pinning the byte layout to the
-  // published format specs
+  // the registry and its views
   // ------------------------------------------------------------------
 
-  /** 4-byte little-endian hex of an integer Column (for container
-    * headers built in hex-string space, then unhex'd once). */
-  private def u32leHex(c: Column): Column = {
-    val be = F.lpad(F.hex(c), 8, "0")
-    F.concat(F.substring(be, 7, 2), F.substring(be, 5, 2),
-      F.substring(be, 3, 2), F.substring(be, 1, 2))
+  /** Every query, family by family. A new query goes into the family
+    * file of its kind, as one `QuerySpec`. */
+  lazy val registry: Seq[QuerySpec] = distinctNames(
+    WebQueries.specs ++ ValidationQueries.specs ++ StreamingQueries.specs ++
+      TableCheckQueries.specs ++ TransformQueries.specs ++
+      MessageQueries.specs ++ TextQueries.specs ++ AnnQueries.specs ++
+      MultimodalQueries.specs ++ GenInferQueries.specs)
+
+  /** `specs`, after checking that no two share a name: a view keyed by
+    * name would keep only one of them. */
+  private[graft] def distinctNames(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    val dups = specs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    specs
   }
 
-  /** Hand-assembled 2×2 24-bit BMP (70 bytes): pixel rows are 8 bytes
-    * (2 px · 3 B padded to 4-byte boundary). Expected per the spec:
-    * width 2, height 2, sum_b 383, sum_g 319, sum_r 447 — padding bytes
-    * excluded. */
-  private val GoldenBmpHex =
-    "424D460000000000000036000000" + // BITMAPFILEHEADER: 'BM', size 70, off 54
-      "280000000200000002000000010018000000000010000000" + // info: 40,w2,h2,planes1,bpp24,comp0,img16
-      "130B0000130B00000000000000000000" + // 2835 ppm × 2, 0 colors
-      "FF000000FF000000" + // row 0: (B=FF)(G=FF px2) + 2 pad bytes
-      "0000FF8040C00000"   // row 1: (R=FF)(80,40,C0) + 2 pad bytes
+  /** The oracle-gated queries: Verify dumps each for the DuckDB comparison
+    * with its `oracleSql` entry. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.collect { case q if q.oracle.isDefined => q.name -> q.build }
+      .toMap
 
-  /** Hand-assembled 2×2 truecolor PNG (82 bytes): IHDR(2,2,8,2) + one
-    * IDAT holding a zlib stream with a single STORED deflate block
-    * (hand-derivable — no compressor needed) of the filtered scanlines
-    * `[0, (10,20,30),(40,50,60)] [2(Up), +100×6]` + IEND. Recon pixels
-    * (10,20,30),(40,50,60),(110,120,130),(140,150,160) → means
-    * r 75, g 85, b 95 over 4 px. */
-  private val GoldenPngHex =
-    "89504E470D0A1A0A" + // signature
-      "0000000D4948445200000002000000020802000000FDD49A73" + // IHDR + crc
-      "0000001949444154" + // IDAT len 25
-      "7801010E00F1FF" + // zlib hdr + stored-block framing (len 14)
-      "000A141E28323C02646464646464" + // filtered scanlines
-      "103E032D" + "F9247B34" + // adler32 + chunk crc
-      "0000000049454E44AE426082" // IEND
+  /** The bench-only queries (`oracle = None`): timed by Bench, not gated. */
+  lazy val benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.collect { case q if q.oracle.isEmpty => q.name -> q.build }.toMap
 
-  /** doc_id + real container binary: BMP for even ids (w = 1 + id%3,
-    * h = 2, pixels from md5(text) repeated), WAV PCM16 for odd ids
-    * (8 samples = the 16 md5 bytes, 16 kHz), plus the two goldens. */
-  private def mediaCorpus(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val id = F.col("doc_id")
-    val m = F.md5(F.col("text")) // 32 hex chars = 16 bytes
-    // BMP: header fields computed, rows taken from repeat(md5, 2)
-    val w = F.lit(1L) + id % 3
-    val rowSz = (F.floor((w * 3L + 3L) / 4L) * 4L).cast(LongType)
-    val padHex = F.lit("000000").substr(F.lit(1L), (rowSz - w * 3L) * 2L)
-    val pixSrc = F.concat(m, m)
-    def rowHex(y: Int): Column =
-      F.concat(pixSrc.substr(F.lit(y) * w * 6L + 1L, w * 6L), padHex)
-    val bmpHex = F.concat(
-      F.lit("424D"), u32leHex(F.lit(54L) + rowSz * 2L), F.lit("00000000"),
-      u32leHex(F.lit(54L)), u32leHex(F.lit(40L)), u32leHex(w),
-      u32leHex(F.lit(2L)), F.lit("0100"), F.lit("1800"),
-      u32leHex(F.lit(0L)), u32leHex(rowSz * 2L),
-      u32leHex(F.lit(2835L)), u32leHex(F.lit(2835L)),
-      u32leHex(F.lit(0L)), u32leHex(F.lit(0L)),
-      rowHex(0), rowHex(1))
-    // WAV: canonical 44-byte header + 16 data bytes (8 s16le samples)
-    val wavHex = F.concat(
-      F.lit("52494646"), u32leHex(F.lit(36L + 16L)), F.lit("57415645"),
-      F.lit("666D7420"), u32leHex(F.lit(16L)), F.lit("0100"), F.lit("0100"),
-      u32leHex(F.lit(16000L)), u32leHex(F.lit(32000L)),
-      F.lit("0200"), F.lit("1000"),
-      F.lit("64617461"), u32leHex(F.lit(16L)), m)
-    val synth = t(s, dir, "documents")
-      .select(id, F.unhex(F.when(id % 2 === 0, bmpHex).otherwise(wavHex))
-        .as("bin"))
-    // golden ids sit far outside any documents id range (1e9+) so no
-    // scale factor can collide them with synthesized rows
-    val golden = Seq(
-      (1000000001L, GoldenBmpHex),
-      (1000000002L, "524946462C00000057415645" +
-        "666D7420100000000100010040" + "1F0000803E000002001000" +
-        "6461746108000000" + "E80330F8FF7F0080"))
-      .toDF("doc_id", "fh")
-      .select(F.col("doc_id"), F.unhex(F.col("fh")).as("bin"))
-    synth.unionByName(golden)
-  }
-
-  implicit private val ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
   /** Flagship: per-partition pass/fail verdicts of the web-pages
     * validation on sf=0.001. */
   def entry(spark: SparkSession): DataFrame =
     queries("web_verdicts")(spark, "/root/testdata/sf0.001")
-
-  // ------------------------------------------------------------------
-  // dirty variants with deterministic violation injections (identical
-  // CASE logic lives in the oracle SQL)
-  // ------------------------------------------------------------------
-
-  private def dirtyLineitem(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val k = F.col("l_orderkey")
-    li.withColumn("l_quantity",
-        F.when(k % 97 === 5, -F.col("l_quantity")).otherwise(F.col("l_quantity")))
-      .withColumn("l_returnflag",
-        F.when(k % 89 === 7, F.lit("X")).otherwise(F.col("l_returnflag")))
-      .withColumn("l_shipdate",
-        F.when(k % 101 === 11, F.lit(java.sql.Timestamp.valueOf("2031-01-01 00:00:00")))
-          .otherwise(F.col("l_shipdate")))
-  }
-
-  private val lineitemSchema: SchemaIR = S.map(
-    "l_orderkey" -> S.intMin(1L),
-    "l_quantity" -> S.double(1.0, 50.0),
-    "l_returnflag" -> S.enum_("A", "N", "R"),
-    "l_linestatus" -> S.enum_("O", "F"),
-    "l_shipdate" -> S.instant(
-      min = Some(java.time.Instant.parse("1990-01-01T00:00:00Z")),
-      max = Some(java.time.Instant.parse("2010-01-01T00:00:00Z"))))
-
-  private def dirtyEvents(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val k = F.col("event_id")
-    ev.withColumn("event_type",
-        F.when(k % 101 === 13, F.lit("bogus")).otherwise(F.col("event_type")))
-      .withColumn("value",
-        F.when(k % 103 === 17, F.lit(-1.0)).otherwise(F.col("value")))
-      .withColumn("ts",
-        F.when(k % 107 === 19, F.lit(java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
-          .otherwise(F.col("ts")))
-  }
-
-  private val eventsSchema: SchemaIR = S.map(
-    "event_id" -> S.intMin(0L),
-    "ts" -> S.instant(
-      min = Some(java.time.Instant.parse("2024-01-01T00:00:00Z")),
-      max = Some(java.time.Instant.parse("2024-02-01T00:00:00Z"))),
-    "event_type" -> S.enum_("view", "click", "signup", "purchase", "error"),
-    "value" -> S.double(0.0, 1e9))
-
-  // ANN-LSH parameters shared by the Spark queries and the oracle SQL.
-  // Sized for recall ≥ 0.9 on the driver's embeddings (measured 0.92-0.96
-  // at sf0.001/sf0.01): the synthetic vectors are near-uniform (top-5
-  // neighbor cosine ≈ 0.32), the hardest case for hyperplane LSH — real
-  // web embeddings cluster, so the same machinery prunes far harder
-  // there; planes should grow ≈ log2(N/bucket) with corpus size.
-  /** One boilerplate body, injected 10^5 times by the degenerate-corpus
-    * dedup gate (shared verbatim with its DuckDB oracle literal). */
-  private val DegenerateText =
-    "click here to accept cookies and continue to the requested page"
-
-  private val AnnPlanes = 3
-  private val AnnTables = 10
-  private val AnnDims = 64
-
-  /** Near-dup LSH uses FINER buckets than ANN top-k: a 0.98-cosine pair
-    * still co-buckets in ≥1 of the 10 OR-tables with P ≈ 1-5e-5 at 6
-    * planes (miss prob per plane ≈ acos(0.98)/π ≈ 0.064), while the
-    * candidate-pair count drops ~8× vs planes=3 (cells shrink from
-    * n/8 to n/64 per table; pair cost is Σ|cell|²). The oracle replays
-    * the SAME plane count, so the gate stays exact. */
-  private val NearDupPlanes = 6
-
-  /** Hot-bucket cap shared VERBATIM by the engine call and the oracle's
-    * bucket-size HAVING clause — the cap is part of the operator's
-    * semantics, so the SQL must replay it at any scale (gate corpora
-    * sit far below it; an adversarial cell would be dropped by BOTH
-    * engines identically). */
-  private val NearDupMaxBucket = 4096
-  // IVF params sized for recall ≥ 0.9 on the near-uniform test vectors
-  // (measured 0.94/0.96 at the two gate scales): like the LSH path, the
-  // worst-case data needs a high candidate fraction (nprobe/nCentroids ≈
-  // 0.8 here); clustered real embeddings probe far fewer cells, and the
-  // pruning ratio improves with nCentroids at corpus scale
-  private val IvfCentroids = 16
-  private val IvfProbe = 13
-  // seeded Lloyd iterations for the IVF coarse quantizer — unrolled
-  // iteration-for-iteration in the oracle CTEs (annIvfCtes)
-  private val IvfIters = 2
-
-  // ------------------------------------------------------------------
-  // nested/collection schemas over NestedDocs.derive (lockstep CTE)
-  // ------------------------------------------------------------------
-
-  /** Collection compiler paths: vector element+limits, set uniqueness,
-    * tuple size+elements, map-of limits+values (reference fixtures
-    * core_test.cljc:3113/3164). */
-  private val nestedSchema: SchemaIR = S.mapE(false,
-    S.req("doc_id", S.int),
-    S.req("nums", S.vector(S.int(0L, 99L), min = Some(1), max = Some(8))),
-    S.req("tags", S.set(S.string(min = 1))),
-    S.req("pair", S.tuple(S.string(min = 1), S.enum_(NestedDocs.Langs: _*))),
-    S.req("kvs", S.mapOf(S.string(min = 1), S.int(0L, 50L), min = Some(1))))
-
-  /** Bounded :every — only the first max(min, max+1, limit)=2 elements are
-    * examined (core.cljc:745-751): the beyond-window injection at index 3
-    * must NOT be reported. */
-  private val everySchema: SchemaIR = S.mapE(false,
-    S.req("doc_id", S.int),
-    S.req("nums2", S.every(S.intMin(0L), limit = 2)))
-
-  // ------------------------------------------------------------------
-  // queries
-  // ------------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- web-pages validation core (malli validate/explain) ----
-    "web_verdicts" -> ((s, dir) => {
-      val p = SchemaCompiler.validateDF(WebPages.schema, pages(s, dir), "valid")
-        .withColumn("part_id", partId(F.col("url")))
-      p.groupBy("part_id").agg(
-          F.count(F.lit(1)).as("n_rows"),
-          F.sum(F.when(F.col("valid"), 1L).otherwise(0L)).as("valid_rows"))
-        .withColumn("pass", F.col("n_rows") === F.col("valid_rows"))
-        .orderBy("part_id")
-    }),
-
-    "web_violations" -> ((s, dir) =>
-      SchemaCompiler.violationsDF(WebPages.schema, pages(s, dir),
-          Seq("doc_id", "url"))
-        .select("doc_id", "url", "schema_path", "error_key")
-        .orderBy("doc_id", "schema_path")),
-
-    // ---- value masking (error.cljc:232-244 dual): violation sinks must
-    //      not replicate document payloads — the value column carries a
-    //      mask wherever a value was captured ----
-    "web_violations_masked" -> ((s, dir) =>
-      SchemaCompiler.violationsDF(WebPages.schema, pages(s, dir),
-          Seq("doc_id"), maskValue = Some("***"))
-        .select("doc_id", "schema_path", "error_key", "value")
-        .orderBy("doc_id", "schema_path")),
-
-    // ---- manifest-resumable job end-to-end: two passes over the same
-    //      input; the second sees every partition committed and appends
-    //      NOTHING (a re-append would double n_rows and fail the oracle).
-    //      Portable md5 part key so DuckDB reproduces the manifest ----
-    "resumable_verdicts" -> ((s, dir) => {
-      val p = pages(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("resume_gate")
-      val part = F.pmod(TextOps.h32(F.col("url")), F.lit(64L))
-      def pass() = ValidationJob.runResumable(s, p, WebPages.schema,
-        Seq("doc_id", "url"), tmp.toString, "gate", nParts = 64,
-        partIdOf = Some(part))
-      pass()
-      val manifest = pass() // idempotent resume: no new rows
-      val res = manifest.select(F.col("part_id"),
-          F.col("rows").as("n_rows"), F.col("valid_rows"), F.col("pass"))
-        .orderBy("part_id")
-      val rows = res.collect().toIndexedSeq
-      deleteRecursively(tmp.toString)
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-    }),
-
-    "web_unique_url" -> ((s, dir) =>
-      TableChecks.duplicates(pages(s, dir), "url").orderBy("url")),
-
-    "web_dup_rows" -> ((s, dir) =>
-      TableChecks.duplicateRows(pages(s, dir), "url", "warc_ts")
-        .select("doc_id", "url").orderBy("doc_id")),
-
-    "web_ref_orphans" -> ((s, dir) => {
-      val p = pages(s, dir)
-      val prev = p.where(F.col("doc_id") % 97 =!= 3)
-      TableChecks.orphans(p, "url", prev, "url")
-        .select("doc_id", "url").orderBy("doc_id")
-    }),
-
-    "web_byte_identity" -> ((s, dir) => {
-      val p = pages(s, dir)
-      val prev = p.withColumn("text",
-        F.when(F.col("doc_id") % 97 === 5, F.concat(F.col("text"), F.lit("X")))
-          .otherwise(F.col("text")))
-      TableChecks.byteIdentityViolations(p, prev, "doc_id", "text")
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // ---- cross-snapshot referential diff (added/removed/modified keys
-    //      between two snapshots of the pages table; only key+digest
-    //      shuffle — the oracle compares text directly, so the gate does
-    //      not depend on the engine-side hash choice) ----
-    "snapshot_diff" -> ((s, dir) => {
-      val p = pages(s, dir)
-      // deterministic divergences: %97==3 only in curr (added), %89==7
-      // only in prev (removed), %101==11 text modified between snapshots
-      val prev = p.where(F.col("doc_id") % 97 =!= 3)
-        .withColumn("text",
-          F.when(F.col("doc_id") % 101 === 11,
-            F.concat(F.col("text"), F.lit("~old"))).otherwise(F.col("text")))
-      val curr = p.where(F.col("doc_id") % 89 =!= 7)
-      TableChecks.snapshotDiff(curr, prev, "doc_id", F.col("text"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- snapshot diff over a BINARY payload: the modified rows differ
-    //      only in an invalid-UTF-8 tail byte (0xFE vs 0xFF) — a
-    //      string-cast digest would collapse both to the replacement
-    //      char and miss them; the byte-exact digest must not ----
-    "snapshot_diff_binary" -> ((s, dir) => {
-      val p = pages(s, dir)
-      val id = F.col("doc_id")
-      def tail(hex: String) = F.when(id % 101 === 11,
-        F.concat(F.col("html"), F.unhex(F.lit(hex)))).otherwise(F.col("html"))
-      val prev = p.where(id % 97 =!= 3).withColumn("payload", tail("FE"))
-      val curr = p.where(id % 89 =!= 7).withColumn("payload", tail("FF"))
-      TableChecks.snapshotDiff(curr, prev, "doc_id", F.col("payload"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- the per-snapshot validation report: verdicts + violation
-    //      counts + snapshot diff + frequency table in ONE composed run
-    //      (the job a scheduler appends alongside each snapshot commit) ----
-    "snapshot_report" -> ((s, dir) => {
-      val p = pages(s, dir)
-      val prev = p.where(F.col("doc_id") % 97 =!= 3)
-        .withColumn("text",
-          F.when(F.col("doc_id") % 101 === 11,
-            F.concat(F.col("text"), F.lit("~old"))).otherwise(F.col("text")))
-      val curr = p.where(F.col("doc_id") % 89 =!= 7)
-      ValidationJob.snapshotReport(curr, prev, WebPages.schema,
-          "doc_id", F.col("text"), "lang")
-        .orderBy("metric")
-    }),
-
-    // ---- REAL table-format surface: the from-scratch snapshot-log
-    //      format (SnapshotTable — parquet data files + atomic text
-    //      manifests). commit → logical-replace commit → diff on ACTUAL
-    //      snapshot ids, replacing the synthetic prev/curr pair: the
-    //      gate proves snapshot-isolated time travel (snapshot 1 reads
-    //      unchanged after commit 2) feeding the key+digest diff ----
-    "snapshot_table_diff" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("mallispark_snaptab_").toString
-      try {
-        val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
-        val s1 = SnapshotTable.commit(
-          docs.where(F.col("doc_id") % 3 =!= 0), tmp)
-        val curr = docs.withColumn("text",
-          F.when(F.col("doc_id") % 7 === 0,
-            F.concat(F.col("text"), F.lit("~v2"))).otherwise(F.col("text")))
-        val s2 = SnapshotTable.commit(curr, tmp, SnapshotTable.Overwrite)
-        val d = SnapshotTable.diff(s, tmp, s1, s2, "doc_id", F.col("text"))
-          .orderBy("doc_id")
-        // materialize before deleting the table dir the plan reads from
-        val rows = d.collect().toIndexedSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), d.schema)
-      } finally deleteRecursively(tmp)
-    }),
-
-    // ---- per-commit lineage + metrics manifest (parent id, mode, rows
-    //      added, running total, file count) — the resumability /
-    //      audit surface written alongside every snapshot commit ----
-    "snapshot_table_lineage" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("mallispark_snaplin_").toString
-      try {
-        val docs = t(s, dir, "documents").select("doc_id", "text")
-        SnapshotTable.commit(docs.where(F.col("doc_id") % 3 =!= 0), tmp)
-        SnapshotTable.commit(docs.where(F.col("doc_id") % 3 === 0), tmp)
-        // lineage is driver-built (manifests only) — safe to delete after
-        SnapshotTable.lineage(s, tmp)
-          .select(F.col("snapshot_id"), F.col("parent_id"), F.col("mode"),
-            F.col("rows_added"), F.col("total_rows"))
-          .orderBy("snapshot_id")
-      } finally deleteRecursively(tmp)
-    }),
-
-    // ---- collection / nested validation (vector/set/tuple/map-of) ----
-    "v_nested_violations" -> ((s, dir) =>
-      SchemaCompiler.violationsDF(nestedSchema,
-          NestedDocs.derive(t(s, dir, "documents")), Seq("doc_id"))
-        .select("doc_id", "schema_path", "in_path", "error_key")
-        .orderBy("doc_id", "schema_path", "in_path")),
-
-    // ---- bounded :every window semantics ----
-    "v_every_window" -> ((s, dir) =>
-      SchemaCompiler.violationsDF(everySchema,
-          NestedDocs.derive(t(s, dir, "documents")), Seq("doc_id"))
-        .select("doc_id", "schema_path", "in_path", "error_key")
-        .orderBy("doc_id", "in_path")),
-
-    // ---- :seqable — the nil-tolerant collection (core_test.cljc:3482):
-    //      a NULL array is a VALID empty seqable ((seqable? nil) is
-    //      true, nil seqs empty) — only a :min bound reports on it;
-    //      non-null arrays element-check like :vector. Injections
-    //      (d = doc_id): d%7=1 → xs NULL (no violation — the point);
-    //      d%12=5 → xs[1] = -3 (element error); d%10=2 → need NULL
-    //      (violates {:min 1} → ::limits) ----
-    "v_seqable_violations" -> ((s, dir) => {
-      val id = F.col("doc_id")
-      val xs = F.when(id % 7 === 1,
-          F.lit(null).cast(ArrayType(LongType)))
-        .otherwise(F.transform(
-          F.sequence(F.lit(1), (id % 4 + 1).cast(IntegerType)), i =>
-            F.when(id % 12 === 5 && i === 2, F.lit(-3L))
-              .otherwise((id * 11 + i.cast(LongType)) % 40)))
-      val need = F.when(id % 10 === 2,
-          F.lit(null).cast(ArrayType(LongType)))
-        .otherwise(F.array(id % 9))
-      val base = t(s, dir, "documents")
-        .select(id.as("doc_id"), xs.as("xs"), need.as("need"))
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("xs", S.seqable(S.intMin(0L))),
-        S.req("need", S.seqable(S.intMin(0L), min = Some(1))))
-      SchemaCompiler.violationsDF(sch, base, Seq("doc_id"))
-        .select("doc_id", "schema_path", "in_path", "error_key")
-        .orderBy("doc_id", "in_path")
-    }),
-
-    // ---- fixed-key :map over a PHYSICAL MapType column: missing-key /
-    //      child errors on declared keys, ::m/default rest-entry over the
-    //      runtime stray key (its name lands in the schema path) ----
-    "v_map_fixed" -> ((s, dir) => {
-      val n = NestedDocs.derive(t(s, dir, "documents"))
-        .select("doc_id", "kvs")
-      val inner = S.mapRest(S.int(0L, 9L),
-        S.req("k0", S.int(0L, 49L)), S.req("k1", S.int(0L, 50L)))
-      val sch = S.mapE(false, S.req("doc_id", S.int), S.req("kvs", inner))
-      SchemaCompiler.violationsDF(sch, n, Seq("doc_id"))
-        .select("doc_id", "schema_path", "in_path", "error_key")
-        .orderBy("doc_id", "schema_path")
-    }),
-
-    // ---- recursive :ref schema over a fixed-depth comment tree
-    //      (knot-tying semantics core.cljc:1994-2008; depth-bounded SRef
-    //      expansion — the oracle unrolls the three levels). The schema
-    //      is SELF-CONTAINED: the node definition travels in a :schema
-    //      wrapper's local {:registry ...} property (-property-registry,
-    //      core.cljc:322-324) instead of an ambient compile Ctx ----
-    "v_recursive_ref" -> ((s, dir) => {
-      val sch = S.scoped("node" -> S.mapE(false,
-          S.req("v", S.intMin(0L)),
-          S.opt("kids", S.vector(S.ref("node")))))(
-        S.mapE(false, S.req("doc_id", S.int),
-          S.req("tree", S.ref("node"))))
-      SchemaCompiler.violationsDF(sch,
-          NestedDocs.deriveTree(t(s, dir, "documents")), Seq("doc_id"))
-        .select("doc_id", "schema_path", "in_path", "error_key")
-        .orderBy("doc_id", "in_path")
-    }),
-
-    // ---- ident/char predicate leaves (:keyword/:qualified-keyword/
-    //      :symbol/:char — string-form validation, injections mirrored
-    //      in the oracle's regexes) ----
-    "v_ident_violations" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val src = d.select(F.col("doc_id"),
-        F.when(F.col("doc_id") % 97 === 3, F.lit("no colon"))
-          .otherwise(F.concat(F.lit(":"), F.col("lang"))).as("kw"),
-        F.when(F.col("doc_id") % 89 === 7, F.lit(":noslash"))
-          .otherwise(F.concat(F.lit(":lang/"), F.col("lang"))).as("qkw"),
-        F.when(F.col("doc_id") % 101 === 11, F.lit(":lead"))
-          .otherwise(F.concat(F.lit("sym"),
-            (F.col("doc_id") % 50).cast(StringType))).as("sym"),
-        F.when(F.col("doc_id") % 103 === 13, F.lit("xx"))
-          .otherwise(F.substring(F.col("lang"), 1, 1)).as("ch"),
-        // {:namespace :user} property (core.cljc:753-755): shape-valid
-        // qualified keywords under the WRONG namespace must also fail
-        F.when(F.col("doc_id") % 91 === 5,
-            F.concat(F.lit(":other/"), F.col("lang")))
-          .otherwise(F.concat(F.lit(":user/"), F.col("lang"))).as("nskw"))
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("kw", S.keyword), S.req("qkw", S.qualifiedKeyword),
-        S.req("sym", S.symbol), S.req("ch", S.char),
-        S.req("nskw",
-          mallispark.ir.SchemaIR.SIdent("qualified-keyword", Some("user"))))
-      SchemaCompiler.violationsDF(sch, src, Seq("doc_id"))
-        .select("doc_id", "schema_path", "error_key")
-        .orderBy("doc_id", "schema_path")
-    }),
-
-    // ---- seq-regex tiers 1-3 (tier 3 through the RowEval UDF) ----
-    "seq_regex_valid" -> ((s, dir) => {
-      val n = NestedDocs.derive(t(s, dir, "documents"))
-      val at = ArrayType(StringType)
-      val t1s = S.cat(S.re("^a"), S.enum_(NestedDocs.Langs: _*), S.eq_("z"))
-      val t2s = S.star(S.re("^[a-z]+$"))
-      val t3s = S.star(S.cat(S.re("^k"), S.re("^v"))) // nested → tier 3
-      n.select(F.col("doc_id"),
-          SchemaCompiler.valid(t1s, F.col("seq1"), at).as("t1"),
-          SchemaCompiler.valid(t2s, F.col("toks"), at).as("t2"),
-          SchemaCompiler.valid(t3s, F.col("seq3"), at).as("t3"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- tier-3 positional explain as violation rows: the general-form
-    //      [:* [:cat re re]] on seq3 — the trailing 'k9' injection parses
-    //      one element past the last pair and runs out of input ----
-    "v_seq3_violations" -> ((s, dir) => {
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("seq3", S.star(S.cat(S.re("^k"), S.re("^v")))))
-      val n = NestedDocs.derive(t(s, dir, "documents"))
-        .select("doc_id", "seq3")
-      SchemaCompiler.violationsDF(sch, n, Seq("doc_id"))
-        .select("doc_id", "schema_path", "in_path", "error_key")
-        .orderBy("doc_id", "schema_path")
-    }),
-
-    // ---- sequential→set transformer (transform.cljc:211-233) gated:
-    //      decode through [:set :string] = distinct; sorted csv output ----
-    "transform_seq_set" -> ((s, dir) => {
-      val n = NestedDocs.derive(t(s, dir, "documents"))
-      val setCol = Transform.decode(S.set(S.string), F.col("toks"),
-        ArrayType(StringType), Transform.JsonMode)
-      n.select(F.col("doc_id"),
-          F.array_join(F.sort_array(setCol), ",").as("tok_set"),
-          F.size(setCol).cast(LongType).as("n_distinct"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- custom leaf type (-simple-schema extension point,
-    //      core.cljc:765-818): a named Column-builder leaf — stays inside
-    //      whole-stage codegen, unlike the :fn UDF escape hatch ----
-    "v_custom_violations" -> ((s, dir) => {
-      val even = S.custom(":user/even",
-        (c, _) => c.cast(LongType) % 2 === 0,
-        { case n: Long => n % 2 == 0
-          case n: Int => n % 2 == 0
-          case _ => false })
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("n_chars", even))
-      SchemaCompiler.violationsDF(sch,
-          t(s, dir, "documents").select("doc_id", "n_chars"), Seq("doc_id"))
-        .select("doc_id", "schema_path", "error_key")
-        .orderBy("doc_id")
-    }),
-
-    // ---- :validate — error-RETURNING fn (experimental/validate.cljc):
-    //      each returned error carries its own type and in-suffix; one
-    //      call can emit several errors (notaurl rows whose doc number
-    //      is divisible by 3 produce BOTH) ----
-    "v_validate_violations" -> ((s, dir) => {
-      val urlChecks = S.validate(":url/checks") { x =>
-        val u = String.valueOf(x)
-        val scheme =
-          if (!u.startsWith("http"))
-            Seq(ValidateErr(Seq("scheme"), ":url/no-scheme", u))
-          else Nil
-        val digits = u.reverse.takeWhile(_.isDigit).reverse
-        val unlucky =
-          if (digits.nonEmpty && digits.toLong % 3 == 0)
-            Seq(ValidateErr(Seq("doc"), ":url/unlucky", digits))
-          else Nil
-        scheme ++ unlucky
-      }
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("url", urlChecks))
-      SchemaCompiler.violationsDF(sch,
-          pages(s, dir).select("doc_id", "url"), Seq("doc_id"))
-        .select("doc_id", "schema_path", "in_path", "error_key", "value")
-        .orderBy("doc_id", "in_path")
-    }),
-
-    // ---- composite explain paths (:and/:or branch indices,
-    //      core_test.cljc:239-250) ----
-    "v_composite_violations" -> ((s, dir) => {
-      val id = F.col("doc_id")
-      val src = t(s, dir, "documents").select(id, (id % 150 - 20).as("v"))
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("v", S.and(S.intMin(0L), S.or(S.intMax(10L), S.intMin(100L)))))
-      SchemaCompiler.violationsDF(sch, src, Seq("doc_id"))
-        .select("doc_id", "schema_path", "error_key")
-        .orderBy("doc_id", "schema_path")
-    }),
-
-    // ---- declarative :merge schema validated end-to-end ----
-    "merge_schema_verdicts" -> ((s, dir) => {
-      val sch = S.mergeOf(
-        S.mapE(false, S.req("url", S.re("^https?://[^\\s]+$")),
-          S.req("lang", S.enum_("en", "de"))),
-        // right side widens lang and adds text — right bias must win
-        S.mapE(false, S.req("lang", S.enum_(WebPages.Langs: _*)),
-          S.req("text", S.string(min = 1))))
-      SchemaCompiler.validateDF(sch, pages(s, dir), "ok")
-        .select("doc_id", "ok").orderBy("doc_id")
-    }),
-
-    // ---- :multi keyword dispatch with ::m/default branch ----
-    // sci-subset string :fn schemas: MiniEval-compiled predicates ship to
-    // executors through the UDF escape hatch and round-trip through EDN
-    // forms — closing §2.3's ":fn escape hatch" row with a value oracle.
-    // Every fn is null-safe by construction so the SQL mirror is a plain
-    // coalesce-to-false conjunction.
-    "fn_string_verdicts" -> ((s, dir) => {
-      val sch = S.mapE(false,
-        S.req("text", S.fnS(
-          "(fn [t] (and (string? t) (> (count t) 120)))")),
-        S.req("lang", S.fnS(
-          "(fn [l] (or (= l \"en\") (= l \"de\") (= l \"fr\")))")),
-        S.req("n_chars", S.fnS(
-          "(fn [n] (and (int? n) (>= n 0) (< (mod n 7) 5)))")))
-      // the schema must survive an EDN round-trip WITH its functions —
-      // validate through the re-read schema, not the original (sci.cljc's
-      // serialized-schema contract)
-      val rt = mallispark.ir.Export.fromForm(SchemaIR.form(sch))
-      val src = t(s, dir, "documents").select("doc_id", "text", "lang",
-        "n_chars")
-      SchemaCompiler.validateDF(rt, src, "ok")
-        .select("doc_id", "ok").orderBy("doc_id")
-    }),
-
-    "multi_key_verdicts" -> ((s, dir) => {
-      val sch = S.multi("event_type",
-        default = Some(S.mapE(false, S.req("value", S.double(0.0, 1e9)))))(
-        "purchase" -> S.mapE(false, S.req("value", S.double(1.0, 1e9))),
-        "error" -> S.mapE(false, S.req("value", S.double(0.0, 0.0))))
-      val src = t(s, dir, "events").select("event_id", "event_type", "value")
-      SchemaCompiler.validateDF(sch, src, "ok")
-        .select("event_id", "ok").orderBy("event_id")
-    }),
-
-    // ---- streaming mode (AvailableNow): same compiled expressions over
-    //      readStream; checkpointed sink read back for the oracle ----
-    "streaming_violations" -> ((s, dir) => {
-      val srcSchema = t(s, dir, "documents").schema
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("lang", S.enum_("en", "de", "fr")),
-        S.req("n_chars", S.int(0L, 400L)))
-      val out = java.nio.file.Files
-        .createTempDirectory("stream_viol").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("stream_ckpt").toString
-      // the streaming file source wants a DIRECTORY; stage the single
-      // parquet file into one (testdata is read-only)
-      val srcStage = java.nio.file.Files.createTempDirectory("stream_src")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/documents.parquet"),
-        srcStage.resolve("documents.parquet"))
-      mallispark.streaming.StreamingValidator.runAvailableNow(
-        s, sch, srcStage.toString, srcSchema,
-        Seq("doc_id"), out, ckpt)
-      val result = s.read.parquet(out)
-        .select("doc_id", "schema_path", "error_key")
-        .orderBy("doc_id", "schema_path")
-      // Bench/Verify invoke this every session on a shared VM — collect the
-      // (small, violations-only) sink and delete the three temp dirs so
-      // /tmp doesn't grow unboundedly across runs
-      val rows = result.collect().toIndexedSeq
-      Seq(out, ckpt, srcStage.toString).foreach(deleteRecursively)
-      s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), result.schema)
-    }),
-
-    // ---- windowed streaming verdicts: the same compiled validation over
-    //      readStream, grouped into 1-hour event-time windows. Complete
-    //      output mode to a memory sink (an AvailableNow append sink
-    //      would emit nothing: the watermark never advances within the
-    //      single catch-up batch); windows emitted as epoch seconds (no
-    //      timestamps in outputs), oracled by DuckDB time_bucket ----
-    "streaming_windowed" -> ((s, dir) => {
-      val ev = dirtyEvents(s, dir)
-        .select("event_id", "ts", "event_type", "value")
-      val stage = java.nio.file.Files.createTempDirectory("stream_ev")
-      // few large files, not one per shuffle partition: the AvailableNow
-      // batch pays per-file listing/open overhead in the streaming source
-      ev.coalesce(4).write.mode("overwrite").parquet(stage.toString)
-      val validated = mallispark.streaming.StreamingValidator
-        .validateStream(s, eventsSchema, stage.toString, ev.schema)
-      val win = mallispark.streaming.StreamingValidator
-        .windowedVerdicts(validated, "ts")
-      val qn = s"win_verdicts_${System.nanoTime}"
-      withStreamStateParts(s) {
-        val q = win.writeStream.format("memory").queryName(qn)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val res = s.table(qn)
-        .select(
-          F.unix_timestamp(F.col("window.start")).cast(LongType)
-            .as("win_start"),
-          F.col("rows").cast(LongType).as("n_rows"),
-          F.col("valid_rows").cast(LongType).as("valid_rows"))
-        .orderBy("win_start")
-      val rows = res.collect().toIndexedSeq
-      deleteRecursively(stage.toString)
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-    }),
-
-    // ---- :time/* string decode (experimental/time/transform.cljc):
-    //      ISO duration/period/local-date-time strings into native
-    //      intervals/NTZ, emitted as seconds/months/formatted text ----
-    "decode_time" -> ((s, dir) => {
-      val id = F.col("doc_id")
-      val src = t(s, dir, "documents").select(id,
-        F.when(id % 97 === 3, F.lit("nope")).otherwise(
-          F.concat(F.lit("PT"), (id % 5).cast(StringType), F.lit("H"),
-            (id % 60).cast(StringType), F.lit("M"))).as("dur"),
-        F.when(id % 89 === 7, F.lit("P1W")).otherwise(
-          F.concat(F.lit("P"), (id % 3).cast(StringType), F.lit("Y"),
-            (id % 12).cast(StringType), F.lit("M"))).as("per"),
-        F.when(id % 101 === 11, F.lit("not-a-date")).otherwise(
-          F.concat(F.lit("2024-03-"),
-            F.lpad(((id % 28) + 1).cast(StringType), 2, "0"),
-            F.lit("T"), F.lpad((id % 24).cast(StringType), 2, "0"),
-            F.lit(":30:00"))).as("ldt"))
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("dur", S.duration()), S.req("per", S.period()),
-        S.req("ldt", S.localDateTime()))
-      Transform.decodeDF(sch.asInstanceOf[SchemaIR.SMap], src,
-          Transform.StringMode)
-        .select(id,
-          F.col("dur").cast(LongType).as("dur_secs"),
-          F.col("per").cast(IntegerType).cast(LongType).as("per_months"),
-          F.date_format(F.col("ldt"), "yyyy-MM-dd HH:mm:ss").as("ldt_str"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- STATEFUL streaming dedup: flatMapGroupsWithState per-key state
-    //      across TWO AvailableNow catch-up passes — the second pass reads
-    //      only the new file (checkpoint) and its checkpointed state
-    //      suppresses keys already emitted in the first ----
-    "streaming_dedup" -> ((s, dir) => {
-      val p = pages(s, dir).select(F.col("url"), F.col("doc_id"))
-        .where(F.col("url").isNotNull)
-      val src = java.nio.file.Files.createTempDirectory("sdedup_src")
-      val sink = java.nio.file.Files.createTempDirectory("sdedup_out")
-      val ckpt = java.nio.file.Files.createTempDirectory("sdedup_ckpt")
-      def pass(batch: DataFrame): Unit = {
-        batch.coalesce(2).write.mode("append").parquet(src.toString)
-        val dd = mallispark.streaming.StreamingValidator.dedupStream(
-          s, src.toString, p.schema, "url", "doc_id")
-        val q = dd.writeStream.format("parquet")
-          .option("path", sink.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // OVERLAPPING batches (doc_id%3 ∈ {0,1} then {1,2}): the %3==1 rows
-      // and the parity-crossing dup-url twins reappear in pass B, so the
-      // checkpointed state MUST suppress them — a broken state store
-      // would re-emit and fail the oracle (disjoint batches would pass
-      // trivially)
-      withStreamStateParts(s) {
-        pass(p.where(F.col("doc_id") % 3 < 2))
-        pass(p.where(F.col("doc_id") % 3 > 0))
-      }
-      val res = s.read.parquet(sink.toString)
-        .select(F.col("url"), F.col("first_id")).orderBy("url")
-      val rows = res.collect().toIndexedSeq
-      Seq(src, sink, ckpt).map(_.toString).foreach(deleteRecursively)
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-    }),
-
-    // ---- :multi with expression dispatch (codegen'd, no UDF) ----
-    "multi_expr_dispatch" -> ((s, dir) => {
-      val src = t(s, dir, "documents").select(F.col("doc_id"),
-        F.col("n_chars").as("n"), F.col("lang"))
-      val sch = S.multiExpr("len_band",
-        c => F.when(c.getField("n") < 200L, F.lit("short"))
-          .otherwise(F.lit("long")),
-        { case r: org.apache.spark.sql.Row =>
-            if (r.getAs[Long]("n") < 200L) "short" else "long"
-          case _ => null })(
-        "short" -> S.mapE(false, S.req("doc_id", S.int),
-          S.req("n", S.int(0L, 199L)), S.req("lang", S.enum_("en", "de"))),
-        "long" -> S.mapE(false, S.req("doc_id", S.int),
-          S.req("n", S.intMin(200L)),
-          S.req("lang", S.enum_(WebPages.Langs: _*))))
-      src.select(F.col("doc_id"),
-          SchemaCompiler.valid(sch,
-            F.struct(src.columns.toIndexedSeq.map(F.col): _*),
-            src.schema).as("ok"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- ::m/default rest-entry schema for open maps ----
-    "map_rest_verdicts" -> ((s, dir) => {
-      val id = F.col("doc_id")
-      val src = t(s, dir, "documents").select(id,
-        F.when(id % 33 === 4, F.lit("")).otherwise(F.col("lang")).as("lang"),
-        F.col("source"))
-      val sch = S.mapRest(S.string(min = 1), S.req("doc_id", S.int))
-      SchemaCompiler.validateDF(sch, src, "ok")
-        .select("doc_id", "ok").orderBy("doc_id")
-    }),
-
-    // ---- :time/* family over derived interval/NTZ/ISO-string columns ----
-    "v_time_violations" -> ((s, dir) => {
-      val id = F.col("doc_id")
-      val lt = F.when(id % 61 === 22, F.lit("25:99:00")).otherwise(F.concat(
-        F.lpad(((id * 7) % 24).cast(StringType), 2, "0"), F.lit(":"),
-        F.lpad((id % 60).cast(StringType), 2, "0"), F.lit(":"),
-        F.lpad((id % 60).cast(StringType), 2, "0")))
-      val zids = F.array(Seq("Europe/Paris", "America/New_York",
-        "Asia/Tokyo", "UTC").map(F.lit): _*)
-      val zoffs = F.array(Seq("+05:30", "Z", "-08:00").map(F.lit): _*)
-      val src = t(s, dir, "documents").select(id,
-        F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0),
-          ((id * 11) % 5000).cast(DecimalType(18, 6))).as("dur"),
-        F.make_ym_interval(F.lit(0), (id % 40).cast(IntegerType)).as("per"),
-        F.timestamp_seconds(F.lit(1704067200L) + (id * 50021L) % 5000000L)
-          .cast(TimestampNTZType).as("ldt"),
-        lt.as("lt"),
-        F.when(id % 67 === 30, F.lit("not a zone"))
-          .otherwise(F.element_at(zids, (id % 4 + 1).cast(IntegerType)))
-          .as("zid"),
-        F.when(id % 71 === 33, F.lit("+19:00"))
-          .otherwise(F.element_at(zoffs, (id % 3 + 1).cast(IntegerType)))
-          .as("zoff"))
-      val sch = S.mapE(false,
-        S.req("doc_id", S.int),
-        S.req("dur", S.duration(Some("PT100S"), Some("PT4000S"))),
-        S.req("per", S.period(Some("P2M"), Some("P30M"))),
-        S.req("ldt", S.localDateTime(Some("2024-01-05T00:00:00"),
-          Some("2024-02-20T00:00:00"))),
-        S.req("lt", S.localTime(Some("06:00:00"), Some("18:00:00"))),
-        S.req("zid", S.zoneId),
-        S.req("zoff", S.zoneOffset))
-      SchemaCompiler.violationsDF(sch, src, Seq("doc_id"))
-        .select("doc_id", "schema_path", "error_key")
-        .orderBy("doc_id", "schema_path")
-    }),
-
-    // ---- row validation over driver tables ----
-    "v_lineitem_violations" -> ((s, dir) =>
-      SchemaCompiler.violationsDF(lineitemSchema, dirtyLineitem(s, dir),
-          Seq("l_orderkey", "l_linenumber"))
-        .select("l_orderkey", "l_linenumber", "schema_path", "error_key")
-        .orderBy("l_orderkey", "l_linenumber", "schema_path")),
-
-    "v_events_violations" -> ((s, dir) =>
-      SchemaCompiler.violationsDF(eventsSchema, dirtyEvents(s, dir),
-          Seq("event_id"))
-        .select("event_id", "schema_path", "error_key")
-        .orderBy("event_id", "schema_path")),
-
-    // ---- column stats / uniqueness / referential on driver tables ----
-    "stats_orders" -> ((s, dir) =>
-      TableChecks.columnStats(t(s, dir, "orders"),
-          Seq("o_orderkey", "o_custkey"))
-        .select("column_name", "cnt", "null_cnt", "min_val", "max_val")
-        .orderBy("column_name")),
-
-    "nulls_lineitem" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      TableChecks.nullCounts(li, li.columns.toSeq).orderBy("column_name")
-    }),
-
-    "unique_orders" -> ((s, dir) =>
-      TableChecks.duplicates(t(s, dir, "orders"), "o_orderkey")
-        .orderBy("o_orderkey")),
-
-    "ref_lineitem_orders" -> ((s, dir) =>
-      TableChecks.orphans(t(s, dir, "lineitem"), "l_orderkey",
-          t(s, dir, "orders"), "o_orderkey", broadcastParent = true)
-        .groupBy("l_orderkey").agg(F.count(F.lit(1)).as("orphan_rows"))
-        .orderBy("l_orderkey")),
-
-    // ---- skew-safe salted aggregation (two-phase: salted partials →
-    //      merge) over the Zipf-skewed lang dimension ----
-    "salted_lang_counts" -> ((s, dir) =>
-      ValidationJob.saltedCounts(pages(s, dir), "lang", salt = 8)
-        .orderBy("lang")),
-
-    // ---- aggregation / join plumbing ----
-    "q1_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(F.sum("l_quantity").as("sum_qty"),
-          F.count(F.lit(1)).as("cnt"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    "join_priority_counts" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .join(F.broadcast(t(s, dir, "orders")),
-          F.col("l_orderkey") === F.col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).as("cnt"))
-        .orderBy("o_orderpriority")),
-
-    // ---- distribution drift ----
-    "drift_lang_freqs" -> ((s, dir) =>
-      t(s, dir, "documents").groupBy("lang").agg(
-          F.sum(F.when(F.col("doc_id") % 2 === 0, 1L).otherwise(0L)).as("ra"),
-          F.sum(F.when(F.col("doc_id") % 2 === 1, 1L).otherwise(0L)).as("rb"))
-        .orderBy("lang")),
-
-    "drift_chisq_lang" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      TableChecks.chiSquare(
-          d.where(F.col("doc_id") % 2 === 0),
-          d.where(F.col("doc_id") % 2 === 1), "lang")
-        .select(F.round(F.col("statistic"), 4).as("statistic"),
-          F.col("dof"), F.col("n_a"), F.col("n_b"))
-    }),
-
-    "drift_ks_value" -> ((s, dir) =>
-      TableChecks.ksExact(t(s, dir, "events"), "value",
-        F.col("event_id") % 2 === 0)),
-
-    // ---- transformers (decode / coerce) ----
-    "decode_strings" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR.{SInt, SBoolean}
-      val id = F.col("doc_id")
-      val src = t(s, dir, "documents").select(
-        id,
-        F.when(id % 10 === 0, F.concat(F.lit("x"), id.cast(StringType)))
-          .otherwise(id.cast(StringType)).as("s_int"),
-        F.when(id % 7 === 0, F.lit("true")).when(id % 7 === 1, F.lit("false"))
-          .otherwise(F.lit("maybe")).as("s_bool"),
-        F.when(id % 5 === 0, F.lit("")).otherwise(F.lit("v")).as("s_str"))
-      src.select(id,
-          Transform.decode(SInt(), F.col("s_int"), StringType,
-            Transform.StringMode).as("d_int"),
-          Transform.decode(SBoolean, F.col("s_bool"), StringType,
-            Transform.StringMode).as("d_bool"),
-          Transform.emptyStringToNull(F.col("s_str")).as("d_str"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- schema-hinted transformation (:decode/<mode> interceptors,
-    //      transform_test.cljc:824-928): enter → node transform → leave,
-    //      compiled to Columns through the FmapColumns kernel ----
-    "decode_hinted" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR._
-      val id = F.col("doc_id")
-      // [:and {:enter pad-2-digit :leave ×10-if-big} :int
-      //       [:any {:enter inc :leave (partial * 2)}]]
-      val andDecode = SProps(NodeProps(decodeHints = Seq("string" -> THint(
-        enter =
-          Some("""(fn [x] (if (re-matches "[0-9]{2}" x) (str x "0") x))"""),
-        leave = Some("(fn [x] (if (>= x 100) (* 10 x) x))")))),
-        SAnd(Seq(SInt(), SProps(NodeProps(decodeHints = Seq("string" ->
-          THint(enter = Some("inc"), leave = Some("(partial * 2)")))),
-          SAny))))
-      // :or picks the first branch whose decoded result VALIDATES
-      val orSel = SOr(Seq(
-        SProps(NodeProps(decodeHints = Seq("string" ->
-          THint(leave = Some("(partial * 2)")))), SInt(Some(1L), None)),
-        SInt()))
-      val upper = SProps(NodeProps(decodeHints =
-        Seq("string" -> THint(enter = Some("str/upper-case")))), SString())
-      // nested struct decode: declared fields coerce in place
-      val nestedSchema = SMap(Seq(
-        Entry("n", SInt()), Entry("kw", SIdent("keyword"))))
-      val src = t(s, dir, "documents").select(id,
-        (id % 137).cast(StringType).as("s_num"),
-        ((id % 23) - 11).cast(StringType).as("s_or"),
-        F.col("lang"),
-        F.struct((id % 50).cast(StringType).as("n"),
-          F.col("lang").as("kw")).as("nested"))
-      val nestedT = src.schema("nested").dataType
-      src.select(id,
-          Transform.decode(andDecode, F.col("s_num"), StringType,
-            Transform.StringMode).as("hinted_and"),
-          Transform.decode(orSel, F.col("s_or"), StringType,
-            Transform.StringMode).as("hinted_or"),
-          Transform.decode(upper, F.col("lang"), StringType,
-            Transform.StringMode).as("lang_up"),
-          Transform.decode(nestedSchema, F.col("nested"), nestedT,
-            Transform.StringMode).as("dec_nested"))
-        .select(F.col("doc_id"), F.col("hinted_and"), F.col("hinted_or"),
-          F.col("lang_up"),
-          F.col("dec_nested.n").as("nested_n"),
-          F.col("dec_nested.kw").as("nested_kw"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- raw JSON-lines ingestion: from_json with the schema's own
-    //      StructType → json-decode → flatten → validate; malformed
-    //      documents surface as null fields and fail validation ----
-    "json_ingest" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR._
-      val d = F.col("doc_id")
-      val raw = t(s, dir, "documents").select(d,
-        F.when(d % 17 === 0, F.lit("{not json"))
-          .otherwise(F.concat(
-            F.lit("{\"id\": "), d.cast(StringType),
-            F.lit(", \"lang\": \""), F.col("lang"), F.lit("\""),
-            F.when(d % 13 === 0, F.lit(", \"score\": 1.5"))
-              .otherwise(F.lit(", \"score\": 2")),
-            F.lit("}"))).as("raw"))
-      val sch = SMap(Seq(Entry("id", SInt()), Entry("lang", SString()),
-        Entry("score", SDouble())))
-      val parsed = Transform.fromJsonLines(sch, raw, "raw")
-      // round-trip law IN ONE PROJECTION (no self-join, single scan):
-      // re-parse the exported JSON and compare null-safe per field
-      val st2 = SchemaCompiler.toStructType(sch)
-      val rp = F.from_json(F.to_json(F.struct(
-        F.col("id"), F.col("lang"), F.col("score"))), st2)
-      SchemaCompiler.validateDF(sch, parsed, "ok", exclude = Set("doc_id"))
-        .select(d, F.col("id"), F.col("lang").as("jlang"),
-          F.col("score"), F.col("ok"),
-          (F.col("id") <=> rp.getField("id") &&
-           F.col("lang") <=> rp.getField("lang") &&
-           F.col("score") <=> rp.getField("score")).as("rt_ok"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- ORC source/sink round-trip: write documents as ORC, read
-    //      back, validate, and signature-check the values per lang (the
-    //      md5-derived sig replays in DuckDB over the PARQUET originals,
-    //      so the gate proves the ORC round-trip preserved every field) ----
-    "orc_ingest" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR._
-      val tmp = java.nio.file.Files.createTempDirectory("orc_gate")
-      t(s, dir, "documents").select("doc_id", "lang", "text", "n_chars")
-        .write.mode("overwrite").orc(tmp.toString)
-      val back = s.read.orc(tmp.toString)
-      val sch = SMap(Seq(Entry("doc_id", SInt()), Entry("lang", SString(Some(1))),
-        Entry("text", SString()), Entry("n_chars", SInt(Some(0L)))))
-      val flagged = SchemaCompiler.validateDF(sch, back, "ok")
-      val res = flagged.groupBy("lang").agg(
-          F.count(F.lit(1)).as("n"),
-          F.sum(F.pmod(TextOps.h32(F.concat(
-            F.col("doc_id").cast(StringType), F.lit(":"), F.md5(F.col("text")),
-            F.lit(":"), F.col("n_chars").cast(StringType))),
-            F.lit(1000003L))).as("sig"),
-          F.min(F.col("ok")).as("all_ok"))
-        .orderBy("lang")
-      val rows = res.collect().toIndexedSeq
-      deleteRecursively(tmp.toString)
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-    }),
-
-    // ---- CSV sidecar ingestion: from_csv with the schema's StructType;
-    //      a field failing its type (id "x") goes null and fails
-    //      validation, the rest of the line still parses ----
-    "csv_ingest" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR._
-      val d = F.col("doc_id")
-      val raw = t(s, dir, "documents").select(d,
-        F.concat(
-          F.when(d % 17 === 0, F.lit("x")).otherwise(d.cast(StringType)),
-          F.lit(","), F.col("lang"), F.lit(","),
-          F.when(d % 13 === 0, F.lit("1.5")).otherwise(F.lit("2")))
-          .as("raw"))
-      val sch = SMap(Seq(Entry("id", SInt()), Entry("lang", SString()),
-        Entry("score", SDouble())))
-      val parsed = Transform.fromCsvLines(sch, raw, "raw")
-      SchemaCompiler.validateDF(sch, parsed, "ok", exclude = Set("doc_id"))
-        .select(d, F.col("id"), F.col("lang").as("clang"),
-          F.col("score"), F.col("ok"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- full transformer pipeline: decodeDF → fillDefaults →
-    //      renameKeys → stripExtraKeys → encode (gated end-to-end) ----
-    "transform_pipeline" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR._
-      val id = F.col("doc_id")
-      val src = t(s, dir, "documents").select(id,
-        F.when(id % 9 === 2, F.lit("not-a-uuid")).otherwise(
-          F.concat(F.lit("00000000-0000-4000-a000-"),
-            F.lpad(id.cast(StringType), 12, "0"))).as("s_uuid"),
-        F.concat(F.lit("2024-01-"),
-          F.lpad((id % 28 + 1).cast(StringType), 2, "0")).as("s_date"),
-        F.when(id % 8 === 3, id.cast(DoubleType) + 0.5)
-          .otherwise(id.cast(DoubleType)).as("num"),
-        F.when(id % 6 === 1, F.lit(null).cast(StringType))
-          .otherwise(F.col("lang")).as("lang"))
-      val sch = SMap(Seq(
-        Entry("doc_id", SInt()),
-        Entry("s_uuid", SUuid),
-        Entry("s_date", SDate()),
-        Entry("num", SInt()),
-        Entry("lang", SString(), optional = true, default = Some("und"))))
-      val decoded = Transform.decodeDF(sch, src, Transform.StringMode)
-      val filled = Transform.fillDefaults(sch, decoded)
-      val renamed = Transform.renameKeys(filled, Map("s_uuid" -> "uuid"))
-      val target = SMap(Seq(Entry("doc_id", SInt()), Entry("uuid", SUuid),
-        Entry("s_date", SDate()), Entry("num", SInt()),
-        Entry("lang", SString())))
-      val stripped = Transform.stripExtraKeys(target,
-        renamed.withColumn("junk", F.lit(1)))
-      stripped.select(F.col("doc_id"), F.col("uuid"),
-          Transform.encode(SDate(), F.col("s_date"), DateType).as("d_date"),
-          F.col("num").as("d_long"), F.col("lang"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- coerce = decode → validate → split ----
-    "coerce_split" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR._
-      val id = F.col("doc_id")
-      val src = t(s, dir, "documents").select(id,
-        F.when(id % 10 === 0, F.concat(F.lit("x"), id.cast(StringType)))
-          .otherwise(id.cast(StringType)).as("s_int"))
-      val sch = SMap(Seq(Entry("doc_id", SInt()),
-        Entry("s_int", SInt(Some(0L), None))))
-      val (ok, bad) = Transform.coerce(sch, src, Transform.StringMode)
-      ok.agg(F.count(F.lit(1)).as("accepted"))
-        .crossJoin(bad.agg(F.count(F.lit(1)).as("rejected")))
-    }),
-
-    // ---- parse (tagged unions) as a gated query ----
-    "parse_orn" -> ((s, dir) => {
-      val sch = S.orn("neg" -> S.intMax(-1L), "zero" -> S.eq_(0L),
-        "pos" -> S.intMin(1L))
-      val src = t(s, dir, "documents").select(F.col("doc_id"),
-        (F.col("doc_id") % 7 - 3).as("v"))
-      src.select(F.col("doc_id"),
-          mallispark.compile.Parse.parse(sch, F.col("v"), LongType).as("p"))
-        .select(F.col("doc_id"), F.col("p.tag").as("tag"),
-          F.col("p.value").as("value"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- :or composes child parsers: first accepting child shapes the
-    //      result (core.cljc:1018 ->parser reduce), and the Column-tier
-    //      unparse restores the input ----
-    "parse_or" -> ((s, dir) => {
-      val P = mallispark.compile.Parse
-      val sch = S.or(
-        S.orn("neg" -> S.intMax(-1L), "zero" -> S.eq_(0L)),
-        S.orn("pos" -> S.intMin(1L)))
-      val src = t(s, dir, "documents").select(F.col("doc_id"),
-        (F.col("doc_id") % 7 - 3).as("v"))
-      val parsed = P.parse(sch, F.col("v"), LongType)
-      src.select(F.col("doc_id"), F.col("v"),
-          parsed.getField("tag").as("tag"),
-          parsed.getField("value").as("value"),
-          F.coalesce(P.unparse(sch, parsed, LongType) === F.col("v"),
-            F.lit(false)).as("rt_ok"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- :and parses through its single transforming child
-    //      (core.cljc:879-891; parser_test.cljc:132-180): the :orn child
-    //      shapes the result, the :int sibling just validates; the
-    //      :parse/transforming-child :none prop forces identity; a deep
-    //      nest tags twice ----
-    "parse_and_transforming" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR.{SProps, NodeProps}
-      val P = mallispark.compile.Parse
-      val orn = S.orn("neg" -> S.intMax(-1L), "zero" -> S.eq_(0L),
-        "pos" -> S.intMin(1L))
-      val sch = S.and(orn, S.int(-3L, 3L))
-      val none = SProps(NodeProps(parseTransformingChild = Some(":none")),
-        S.and(orn, S.int(-4L, 2L))) // tighter max: v=3 parses to ::m/invalid
-      val deep = S.and(S.orn("l" -> S.and(orn, S.int)), S.int)
-      val src = t(s, dir, "documents").select(F.col("doc_id"),
-        (F.col("doc_id") % 7 - 3).as("v"))
-      src.select(F.col("doc_id"),
-          P.parse(sch, F.col("v"), LongType).as("p"),
-          P.parse(none, F.col("v"), LongType).as("ident"),
-          P.parse(deep, F.col("v"), LongType).as("d"))
-        .select(F.col("doc_id"),
-          F.col("p.tag").as("tag"), F.col("p.value").as("value"),
-          F.col("ident"),
-          F.col("d.tag").as("deep_tag"),
-          F.col("d.value.tag").as("inner_tag"),
-          F.col("d.value.value").as("inner_value"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- :catn tagged parse + unparse round-trip over derived arrays;
-    //      the middle entry is an :altn so its parse carries a branch TAG
-    //      (Tag records core.cljc:164-183) — the injected 'xx' lang lands
-    //      in the 'other' branch instead of failing the whole parse ----
-    "parse_catn_roundtrip" -> ((s, dir) => {
-      val at = ArrayType(StringType)
-      val sch = S.catn("a" -> S.re("^a"),
-        "pl" -> S.altn("lang" -> S.enum_(NestedDocs.Langs: _*),
-          "other" -> S.re("^x")),
-        "z" -> S.eq_("z"))
-      val n = NestedDocs.derive(t(s, dir, "documents"))
-      val parsed = n.select(F.col("doc_id"), F.col("seq1"),
-        mallispark.compile.Parse.parse(sch, F.col("seq1"), at).as("p"))
-      parsed.select(F.col("doc_id"),
-          F.col("p.a").as("a"),
-          F.col("p.pl.tag").as("pl_tag"),
-          F.col("p.pl.value").as("pl"), F.col("p.z").as("z"),
-          F.coalesce(F.col("p").isNotNull &&
-            mallispark.compile.Parse.unparse(sch, F.col("p"), at) ===
-              F.col("seq1"), F.lit(false)).as("rt_ok"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- tier-3 (general-form) parse/unparse round-trip on seq3:
-    //      [:* [:cat re re]] — reParse builds the iteration tree,
-    //      reUnparse flattens it back; the oracle checks parse success,
-    //      round-trip equality, and the tree arity relationally ----
-    "parse_general_roundtrip" -> ((s, dir) => {
-      val sch = S.star(S.cat(S.re("^k"), S.re("^v")))
-      val n = NestedDocs.derive(t(s, dir, "documents"))
-      val rt = mallispark.compile.GeneralRegex
-        .parseRoundTripStringSeq(sch)(F.col("seq3"))
-      n.select(F.col("doc_id"), rt.as("r"))
-        .select(F.col("doc_id"), F.col("r._1").as("parsed"),
-          F.col("r._2").as("rt_ok"),
-          F.col("r._3").cast(LongType).as("n_pairs"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- spell-check: closest known key by levenshtein (error.cljc
-    //      -most-similar-to), distributed via F.levenshtein ----
-    "spellcheck_suggestions" -> ((s, dir) => {
-      val keys = Seq("doc_id", "html", "lang", "text", "url", "warc_ts")
-      val id = F.col("doc_id")
-      val base = F.element_at(F.array(keys.map(F.lit): _*),
-        (id % 6 + 1).cast(IntegerType))
-      // two deterministic typo shapes: drop last char / swap first two
-      val src0 = t(s, dir, "documents").select(id, base.as("base_k"))
-      val src = src0.withColumn("typo",
-        F.when(id % 2 === 0,
-          F.col("base_k").substr(F.lit(1), F.length(F.col("base_k")) - 1))
-          .otherwise(F.concat(
-            F.substring(F.col("base_k"), 2, 1),
-            F.substring(F.col("base_k"), 1, 1),
-            F.col("base_k").substr(F.lit(3), F.length(F.col("base_k"))))))
-      val dists = keys.map(k => F.levenshtein(F.col("typo"), F.lit(k)))
-      val minD = dists.reduce((a, b) => F.least(a, b))
-      val suggestion = keys.zip(dists).foldRight(
-        F.lit(null).cast(StringType)) { case ((k, d), acc) =>
-        F.when(d === minD, F.lit(k)).otherwise(acc)
-      }
-      // reference tolerance: max(len/3, 1) (error.cljc:249-281)
-      val tol = F.greatest(F.floor(F.length(F.col("typo")) / 3), F.lit(1L))
-      src.select(id, F.col("typo"),
-          F.when(minD <= tol, suggestion).as("suggestion"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- humanized violations (error.cljc message table) ----
-    // ---- distributed humanize over the flagship schema: the message
-    //      lookup chain end-to-end (error.cljc:293-329) — a per-path
-    //      :error/message override (warc_ts) wins over the default
-    //      table, :string/:enum render the reference's SPLICED
-    //      :error/fn strings (bounds baked from the schema, value from
-    //      the row), the rest fall through to the defaults table ----
-    "violations_humanized" -> ((s, dir) => {
-      val viols = SchemaCompiler.violationsDF(WebPages.schema, pages(s, dir),
-        Seq("doc_id", "url"))
-      viols.select(F.col("doc_id"), F.col("error_key"),
-          mallispark.msg.Messages.messageColumn(WebPages.schema,
-            pathOverrides =
-              Map("warc_ts" -> "capture time outside the crawl window"))
-            .as("message"))
-        .orderBy("doc_id", "error_key")
-    }),
-
-    // ---- :error/message + :error/path SCHEMA properties (error.cljc
-    //      218-226, 293-296; the error_test.cljc:623-631 "passwords
-    //      don't match" fixture, distributed): a MiniEval :fn over a
-    //      MapType column carries both props through an SProps wrapper —
-    //      the message resolves from the schema and the violation's IN
-    //      path REDIRECTS to creds/password2, all inside codegen ----
-    "v_error_path" -> ((s, dir) => {
-      import mallispark.ir.SchemaIR.{NodeProps, SProps}
-      val d = F.col("doc_id")
-      val base = t(s, dir, "documents").select(d,
-        F.map_from_arrays(
-          F.array(F.lit("password"), F.lit("password2")),
-          F.array(F.col("lang"),
-            F.when(d % 7 === 0, F.lit("nope")).otherwise(F.col("lang"))))
-          .as("creds"))
-      val credsSchema = S.and(
-        S.mapOf(S.string, S.string),
-        SProps(NodeProps(errorMessage = Some("passwords don't match"),
-          errorPath = Some(Seq("password2"))),
-          S.fnS("(fn [m] (= (:password m) (:password2 m)))")))
-      val sch = S.mapE(false, S.req("doc_id", S.int),
-        S.req("creds", credsSchema))
-      SchemaCompiler.violationsDF(sch, base, Seq("doc_id"))
-        .select(d, F.col("schema_path"),
-          mallispark.msg.Messages.errorPathRedirect(sch,
-            F.col("schema_path"), F.col("in_path")).as("in_redirected"),
-          mallispark.msg.Messages.messageColumn(sch).as("message"))
-        .orderBy("doc_id", "schema_path")
-    }),
-
-    // ---- byte-exact :error/fn splicing for the remaining reference
-    //      closures (error.cljc:47-55,145-172): comparator bounds,
-    //      tuple size actual+expected, collection ::m/limits, :int
-    //      range, := pr-str — all rendered inside codegen from
-    //      (schema_path, error_key, value) ----
-    "violations_spliced" -> ((s, dir) => {
-      val d = F.col("doc_id")
-      val base = t(s, dir, "documents").select(d,
-        F.when(d % 7 === 0, F.pmod(d, F.lit(800L)))
-          .otherwise(F.lit(801L) + F.pmod(d, F.lit(100L))).as("n"),
-        F.when(d % 5 === 0, F.array(F.col("lang"), F.lit("x"), F.lit("y")))
-          .otherwise(F.array(F.col("lang"), F.lit("x"))).as("pair"),
-        F.when(d % 11 === 0, F.sequence(F.lit(1L), F.lit(1L)))
-          .otherwise(F.when(d % 13 === 0, F.sequence(F.lit(1L), F.lit(5L)))
-            .otherwise(F.sequence(F.lit(1L), F.lit(3L)))).as("nums"),
-        F.when(d % 17 === 0, F.lit(5L))
-          .otherwise(F.when(d % 19 === 0, F.lit(95L)).otherwise(F.lit(50L)))
-          .as("score"),
-        F.when(d % 23 === 0, F.lit("bad")).otherwise(F.lit("ok")).as("flag"),
-        F.when(d % 29 === 0, F.lit("en")).otherwise(F.lit("zz")).as("tag"),
-        F.when(d % 31 === 0, F.lit(900L)).otherwise(F.lit(5L)).as("capped"))
-      val sch = S.map(
-        "n" -> S.gt(800L),
-        "pair" -> S.tuple(S.string, S.string),
-        "nums" -> S.vector(S.int, min = Some(2), max = Some(4)),
-        "score" -> S.int(10L, 90L),
-        "flag" -> S.eq_("ok"),
-        // :not humanization: enum negation + comparator forwarding
-        "tag" -> S.not(S.enum_("en", "de")),
-        "capped" -> S.not(S.gt(800L)))
-      SchemaCompiler.violationsDF(sch, base, Seq("doc_id"))
-        .select(F.col("doc_id"), F.col("schema_path"), F.col("error_key"),
-          mallispark.msg.Messages.messageColumn(sch).as("message"))
-        .orderBy("doc_id", "schema_path", "error_key")
-    }),
-
-    // ---- violation summary (explode -> aggregate) ----
-    "violation_counts" -> ((s, dir) =>
-      SchemaCompiler.violationsDF(WebPages.schema, pages(s, dir),
-          Seq("doc_id"))
-        .groupBy("error_key").agg(F.count(F.lit(1)).as("cnt"))
-        .orderBy("error_key")),
-
-    // ---- bounded violation triage: exact counts + k-capped exemplar
-    //      ids per (path, kind) — O(k) agg state however bad the input ----
-    "violations_sampled" -> ((s, dir) =>
-      mallispark.run.ValidationJob.sampledViolations(
-          SchemaCompiler.violationsDF(WebPages.schema, pages(s, dir),
-            Seq("doc_id")), "doc_id", 5)
-        .select(F.col("schema_path"), F.col("error_key"), F.col("n_viol"),
-          F.array_join(F.transform(F.col("exemplars"),
-            _.cast(StringType)), ",").as("exemplars"))
-        .orderBy("schema_path", "error_key")),
-
-    // ---- top-k over hosts: two-stage (TakeOrderedAndProject), never a
-    //      global unpartitioned window sort ----
-    "top_hosts" -> ((s, dir) => {
-      val byHost = pages(s, dir)
-        .select(F.regexp_extract(F.col("url"), "^https?://([^/]+)/", 1)
-          .as("host"))
-        .where(F.col("host") =!= "")
-        .groupBy("host").agg(F.count(F.lit(1)).as("cnt"))
-      TableChecks.topK(byHost, 5, F.col("cnt").desc, F.col("host").asc)
-        .select("host", "cnt", "rank")
-        .orderBy("rank")
-    }),
-
-    // ---- deterministic stratified sampling: hash-gated per-stratum
-    //      rates (downsample dominant langs, keep the tail) — portable
-    //      md5 draw, reproducible at any parallelism ----
-    "sample_stratified" -> ((s, dir) =>
-      TextOps.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
-          Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1)
-        .groupBy("lang").agg(F.count(F.lit(1)).as("n_sampled"))
-        .orderBy("lang")),
-
-    // ---- end-to-end quality funnel: quality thresholds → predicted-lang
-    //      whitelist → exact-dedup (keep min doc_id per md5(text)) —
-    //      the composed pipeline a training-data run actually executes ----
-    "pipeline_survivors" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val filtered = d.select(F.col("doc_id"), F.col("text"),
-          TextOps.langId(F.col("text")).as("lang_pred"),
-          TextOps.qualityFeatures(F.col("text")).as("q"))
-        .where(F.col("q.n_tokens") >= 20 && F.col("q.stop_cnt") >= 1 &&
-          F.col("lang_pred").isin("en", "de", "es"))
-      filtered
-        .groupBy(F.md5(F.col("text")).as("h"))
-        .agg(F.min(F.struct(F.col("doc_id"), F.col("lang_pred"))).as("m"))
-        .groupBy(F.col("m.lang_pred").as("lang_pred"))
-        .agg(F.count(F.lit(1)).as("n_survivors"))
-        .orderBy("lang_pred")
-    }),
-
-    // ---- dedup family over pages ----
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exactDupGroups(pages(s, dir), "doc_id", "text")
-        .select("text_hash", "dup_cnt").orderBy("text_hash")),
-
-    // ---- degenerate-corpus gate: 10^5 injected copies of ONE
-    //      boilerplate text. The group output stays BOUNDED (the
-    //      maxMembers=100 smallest ids + the true dup_cnt) because the
-    //      member collect is a k-capped heap (BoundedCollectMin), never
-    //      a full collect_list — the one shape that would OOM an
-    //      executor at 100 TB on a boilerplate-heavy crawl ----
-    "dedup_degenerate" -> ((s, dir) => {
-      val base = pages(s, dir).select(F.col("doc_id"), F.col("text"))
-      val degen = s.range(100000).select(
-        (F.col("id") + 50000000L).as("doc_id"),
-        F.lit(DegenerateText).as("text"))
-      Dedup.exactDupGroups(base.unionByName(degen), "doc_id", "text",
-          maxMembers = 100)
-        .select(F.col("text_hash"), F.col("dup_cnt"),
-          F.size(F.col("doc_ids")).cast(LongType).as("kept"),
-          F.try_element_at(F.col("doc_ids"), F.lit(1)).as("id_first"),
-          F.try_element_at(F.col("doc_ids"), F.size(F.col("doc_ids")))
-            .as("id_last_kept"))
-        .orderBy("text_hash")
-    }),
-
-    // ---- the SQL surface for the custom kernels (SparkSessionExtensions
-    //      / live registrar): `shingle_minhash` invoked through
-    //      spark.sql must produce the exact md5+affine minima DuckDB
-    //      re-derives — proving the registered-function path end-to-end
-    //      against the oracle, not just SQL ≡ Column (ExtensionsSpec) ----
-    "sql_kernel_minhash" -> ((s, dir) => {
-      mallispark.expressions.MallisparkExtensions.register(s)
-      pages(s, dir).select("doc_id", "text")
-        .where(F.length(F.col("text")) > 0)
-        .createOrReplaceTempView("sqlk_pages")
-      s.sql(
-          "SELECT doc_id, shingle_minhash(text, 3, 4) AS sig FROM sqlk_pages")
-        .where(F.try_element_at(F.col("sig"), F.lit(1)) =!= Long.MaxValue)
-        .select(F.col("doc_id"),
-          F.try_element_at(F.col("sig"), F.lit(1)).as("mh0"),
-          F.try_element_at(F.col("sig"), F.lit(2)).as("mh1"),
-          F.try_element_at(F.col("sig"), F.lit(3)).as("mh2"),
-          F.try_element_at(F.col("sig"), F.lit(4)).as("mh3"))
-        .orderBy("doc_id")
-    }),
-
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLSH(pages(s, dir).where(F.length(F.col("text")) > 0),
-          "doc_id", "text", k = 8, bands = 4, n = 3)
-        .select(F.col("band").cast(LongType).as("band"),
-          F.col("band_key"), F.col("dup_cnt"))
-        .orderBy("band", "band_key")),
-
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashCandidates(
-          pages(s, dir).where(F.length(F.col("text")) > 0), "doc_id", "text")
-        .select("half", "half_key", "dup_cnt")
-        .orderBy("half", "half_key")),
-
-    // scale-sane exact Jaccard: quadratic pair expansion gated to NATIVE
-    // MinHash LSH buckets + ubiquitous-shingle frequency cap; the output
-    // keeps only exactly-verified pairs, so the oracle is the capped full
-    // self-join (LSH miss probability for a 0.9-pair: (1-.9²)^8 ≈ 2e-8).
-    // The hot-bucket cap (maxBucket=4096) is likewise a miss-probability
-    // term rather than an oracle clause — native xxhash bands aren't SQL-
-    // replayable — and cannot fire at gate scale: the largest possible
-    // bucket is the biggest exact-dup text group (≪ 4096 at any sf;
-    // TextOpsSpec covers cap behavior directly)
-    "dedup_jaccard" -> ((s, dir) => {
-      val p = pages(s, dir)
-      Dedup.ngramJaccardWithinBuckets(p, "doc_id", "text",
-          n = 3, threshold = 0.9, k = 16, bands = 8,
-          scaledShingleDf = Some((20, 100L)))
-        .select("id_a", "id_b", "inter", "sz_a", "sz_b")
-        .orderBy("id_a", "id_b")
-    }),
-
-    // near-dup components over the verified jaccard pairs: min-label
-    // propagation to a fixpoint; oracle = DuckDB recursive transitive
-    // closure over the identical pair set
-    "dedup_clusters" -> ((s, dir) => {
-      val p = pages(s, dir)
-      Dedup.dupClusters(
-          Dedup.ngramJaccardWithinBuckets(p, "doc_id", "text",
-            n = 3, threshold = 0.9, k = 16, bands = 8,
-            scaledShingleDf = Some((20, 100L))),
-          "id_a", "id_b")
-        .orderBy("cluster_id")
-    }),
-
-    // same pairs through the O(log d) large-star/small-star contraction —
-    // must agree with the min-label fixpoint exactly
-    "dedup_clusters_star" -> ((s, dir) => {
-      val p = pages(s, dir)
-      Dedup.dupClustersStar(
-          Dedup.ngramJaccardWithinBuckets(p, "doc_id", "text",
-            n = 3, threshold = 0.9, k = 16, bands = 8,
-            scaledShingleDf = Some((20, 100L))),
-          "id_a", "id_b")
-        .orderBy("cluster_id")
-    }),
-
-    // ---- similarity search over embeddings ----
-    "ann_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.where(F.col("vec_id") >= 10)
-      val qs = emb.where(F.col("vec_id") < 10)
-        .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qe"))
-      Similarity.bruteForceTopK(corpus, "vec_id", "embedding",
-          qs, "query_id", "qe", k = 5)
-        .select(F.col("query_id"), F.col("vec_id"),
-          F.col("rank").cast(LongType).as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // LSH-bucketed ANN — scale path, EXACTLY mirrored in DuckDB (literal
-    // hyperplane signs shared by both engines). Params are AnnPlanes=3
-    // (2^3 = 8 buckets/table) × AnnTables=10 OR-tables — sized by the
-    // recall gate (ann_lsh_recall ≥ 0.9 on the near-uniform worst-case
-    // test vectors), not by corpus size; at 10^12 vectors raise
-    // planes ≈ log2(N/bucket_size) and keep tables for recall
-    "ann_lsh_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.where(F.col("vec_id") >= 10)
-      val qs = emb.where(F.col("vec_id") < 10)
-        .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qe"))
-      Similarity.annTopK(corpus, "vec_id", "embedding",
-          qs, "query_id", "qe", k = 5, planes = AnnPlanes,
-          tables = AnnTables, dims = AnnDims)
-        .select(F.col("query_id"), F.col("vec_id"),
-          F.col("rank").cast(LongType).as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- embedding-cosine near-dup dedup (the fifth dedup family the
-    //      pipeline spec names): LSH-bucketed candidate pairs + exact
-    //      cosine refine. Synthetic near-dups injected deterministically
-    //      (exact copy at +10000, first-element-perturbed copy at
-    //      +20000 for vec_id % 50 == 7); oracle replicates the
-    //      hyperplane buckets from the shared literal signs ----
-    "dedup_embedding" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val seeds = emb.where(F.col("vec_id") % 50 === 7)
-      val dup = seeds.select((F.col("vec_id") + 10000L).as("vec_id"),
-        F.col("embedding"))
-      // perturb element 0 in DOUBLE then narrow to float — IEEE-identical
-      // to the oracle's CAST(CAST(e[1] AS DOUBLE) + 0.05 AS REAL)
-      val near = seeds.select((F.col("vec_id") + 20000L).as("vec_id"),
-        F.concat(
-          F.array((F.element_at(F.col("embedding"), 1).cast(DoubleType)
-            + 0.05).cast(FloatType)),
-          F.slice(F.col("embedding"), 2, 1 << 20)).as("embedding"))
-      // gate-scale corpus is tiny — checkpoint it so the 5 downstream
-      // references (bucket sizes, both self-join sides, both vector
-      // re-joins) don't each re-scan parquet + recompute the union
-      // (at production scale the corpus arrives materialized anyway)
-      val corpus = emb.unionByName(dup).unionByName(near)
-        .localCheckpoint(true)
-      Similarity.nearDupPairs(corpus, "vec_id", "embedding",
-          threshold = 0.98, planes = NearDupPlanes, tables = AnnTables,
-          dims = AnnDims, maxBucket = NearDupMaxBucket)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // IVF (inverted-file) ANN — the second scale path the pipeline spec
-    // names: coarse-quantizer cells + nprobe probing; deterministic
-    // centroids make it exactly DuckDB-mirrorable
-    "ann_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.where(F.col("vec_id") >= 10)
-      val qs = emb.where(F.col("vec_id") < 10)
-        .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qe"))
-      Similarity.ivfTopK(corpus, "vec_id", "embedding",
-          qs, "query_id", "qe", k = 5, nCentroids = IvfCentroids,
-          nprobe = IvfProbe, trainIters = IvfIters,
-          centroidCacheKey = Some(dir))
-        .select(F.col("query_id"), F.col("vec_id"),
-          F.col("rank").cast(LongType).as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_ivf_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.where(F.col("vec_id") >= 10)
-      val qs = emb.where(F.col("vec_id") < 10)
-        .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qe"))
-      val exact = Similarity.bruteForceTopK(corpus, "vec_id", "embedding",
-        qs, "query_id", "qe", k = 5).select("query_id", "vec_id")
-      val ivf = Similarity.ivfTopK(corpus, "vec_id", "embedding",
-        qs, "query_id", "qe", k = 5, nCentroids = IvfCentroids,
-        nprobe = IvfProbe, trainIters = IvfIters,
-        centroidCacheKey = Some(dir)).select("query_id", "vec_id")
-      val hits = exact.join(ivf, Seq("query_id", "vec_id"), "left_semi")
-        .agg(F.count(F.lit(1)).as("hits"))
-      val total = exact.agg(F.count(F.lit(1)).as("total"))
-      hits.crossJoin(total).select(F.col("hits"), F.col("total"),
-        F.floor(F.col("hits") * 100L / F.col("total")).as("recall_pct"))
-    }),
-
-    // recall@k of the LSH path vs the exact brute-force top-k — the
-    // quality gate the scale path must hold (recall ≥ 0.9)
-    "ann_lsh_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.where(F.col("vec_id") >= 10)
-      val qs = emb.where(F.col("vec_id") < 10)
-        .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qe"))
-      val exact = Similarity.bruteForceTopK(corpus, "vec_id", "embedding",
-        qs, "query_id", "qe", k = 5).select("query_id", "vec_id")
-      val lsh = Similarity.annTopK(corpus, "vec_id", "embedding",
-        qs, "query_id", "qe", k = 5, planes = AnnPlanes,
-        tables = AnnTables, dims = AnnDims).select("query_id", "vec_id")
-      val hits = exact.join(lsh, Seq("query_id", "vec_id"), "left_semi")
-        .agg(F.count(F.lit(1)).as("hits"))
-      val total = exact.agg(F.count(F.lit(1)).as("total"))
-      hits.crossJoin(total).select(F.col("hits"), F.col("total"),
-        F.floor(F.col("hits") * 100L / F.col("total")).as("recall_pct"))
-    }),
-
-    // ---- text analysis over documents ----
-    "lang_id" -> ((s, dir) =>
-      t(s, dir, "documents").select(F.col("doc_id"),
-          TextOps.langId(F.col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
-
-    "text_quality" -> ((s, dir) =>
-      t(s, dir, "documents").select(F.col("doc_id"),
-          TextOps.qualityFeatures(F.col("text")).as("q"))
-        .select(F.col("doc_id"), F.col("q.n_chars").as("n_chars"),
-          F.col("q.n_tokens").as("n_tokens"),
-          F.col("q.punct_cnt").as("punct_cnt"),
-          F.col("q.stop_cnt").as("stop_cnt"),
-          F.col("q.mean_tok_len_x1000").as("mean_tok_len_x1000"))
-        .orderBy("doc_id")),
-
-    "token_counts" -> ((s, dir) =>
-      t(s, dir, "documents").select(F.col("doc_id"),
-          TextOps.tokenCount(F.col("text")).cast(LongType).as("ws_tokens"),
-          TextOps.bpeTokenCount(F.col("text")).cast(LongType).as("bpe_tokens"))
-        .orderBy("doc_id")),
-
-    "fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents").select(F.col("doc_id"),
-          TextOps.fingerprint(F.col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    // ---- multimodal metadata: magic-byte sniffing IS oracle-checkable
-    //      (binary built with injected jpeg/png/riff prefixes) ----
-    "multimodal_meta" -> ((s, dir) => {
-      val id = F.col("doc_id")
-      val base = F.encode(F.col("text"), "UTF-8")
-      val jpeg = F.lit(Array(0xFF, 0xD8).map(_.toByte))
-      val png = F.lit(Array(0x89, 0x50, 0x4E, 0x47).map(_.toByte))
-      val riff = F.lit(Array(0x52, 0x49, 0x46, 0x46).map(_.toByte))
-      val bin = F.when(id % 4 === 0, F.concat(jpeg, base))
-        .when(id % 4 === 1, F.concat(png, base))
-        .when(id % 4 === 2, F.concat(riff, base))
-        .otherwise(base)
-      t(s, dir, "documents")
-        .select(id, Multimodal.mediaMetadata(bin).as("m"),
-          F.md5(F.hex(bin)).as("content_h"))
-        .select(id, F.col("m.n_bytes").as("n_bytes"),
-          F.col("m.kind").as("kind"), F.col("content_h"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- frame sampling over the binary payload: n evenly-spaced
-    //      fixed-width byte windows (video-keyframe shape), exploded with
-    //      indices; md5 of each window's hex (DuckDB slices the hex
-    //      string — blob substring parity per the md5(hex) route) ----
-    "multimodal_frames" -> ((s, dir) => {
-      val id = F.col("doc_id")
-      val base = F.encode(F.col("text"), "UTF-8")
-      val jpeg = F.lit(Array(0xFF, 0xD8).map(_.toByte))
-      val png = F.lit(Array(0x89, 0x50, 0x4E, 0x47).map(_.toByte))
-      val riff = F.lit(Array(0x52, 0x49, 0x46, 0x46).map(_.toByte))
-      val bin = F.when(id % 4 === 0, F.concat(jpeg, base))
-        .when(id % 4 === 1, F.concat(png, base))
-        .when(id % 4 === 2, F.concat(riff, base))
-        .otherwise(base)
-      t(s, dir, "documents")
-        // posexplode_OUTER: constant-length window array (never empty) —
-        // a plain posexplode lets InferFiltersFromGenerate rebuild the
-        // whole window transform inside a size() Filter (double work)
-        .select(id, F.posexplode_outer(
-          Multimodal.sampleWindows(bin, n = 3, width = 8))
-          .as(Seq("frame_idx", "frame")))
-        .select(id, F.col("frame_idx").cast(LongType).as("frame_idx"),
-          F.md5(F.hex(F.col("frame"))).as("frame_h"))
-        .orderBy("doc_id", "frame_idx")
-    }),
-
-    // ---- multimodal REAL decode, Column path: header-parsed BMP
-    //      pixel sums + WAV PCM16 sum-of-squares/peak over a corpus of
-    //      deterministically synthesized binaries + two hand-assembled
-    //      golden files whose expected values are hardcoded from the
-    //      public format specs (pins the parser to the spec, not to the
-    //      synthesizer) ----
-    "multimodal_decode" -> ((s, dir) => {
-      val d = mediaCorpus(s, dir)
-        // hex(bin) projected ONCE — every byte slice in the decoder
-        // references this column instead of re-hexing the payload
-        .select(F.col("doc_id"), F.hex(F.col("bin")).as("h"),
-          F.length(F.col("bin")).cast(LongType).as("n"))
-      val m = Multimodal.decodeMediaHex(F.col("h"), F.col("n"))
-      // flatten AFTER projecting m — attribute access, not subtree clones
-      d.select(F.col("doc_id"), m.as("m"))
-        .select(F.col("doc_id"), F.col("m.kind").as("kind"),
-          F.col("m.img.width").as("width"),
-          F.col("m.img.height").as("height"),
-          F.col("m.img.sum_b").as("sum_b"),
-          F.col("m.img.sum_g").as("sum_g"),
-          F.col("m.img.sum_r").as("sum_r"),
-          F.col("m.aud.n_samples").as("n_samples"),
-          F.col("m.aud.sample_rate").as("sample_rate"),
-          F.col("m.aud.sum_sq").as("sum_sq"),
-          F.col("m.aud.peak_abs").as("peak_abs"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- multimodal REAL decode, batched-JVM path (the mapInPandas
-    //      analogue / codec slot): per-partition ByteBuffer parse of the
-    //      same corpus, feature vector = [mean_b, mean_g, mean_r, n_px]
-    //      (BMP) / [rms, peak/32768, n, rate] (WAV); floats derived from
-    //      exact integer sums so DuckDB mirrors them bit-for-bit ----
-    "multimodal_features" -> ((s, dir) => {
-      import s.implicits._
-      // + the golden PNG: the first COMPRESSED container through the
-      // codec slot (zlib inflate + de-filtering happen JVM-side only —
-      // no hex-arithmetic dual, so it joins this gate, not mediaCorpus)
-      val d = mediaCorpus(s, dir).unionByName(
-        Seq((1000000003L, GoldenPngHex)).toDF("doc_id", "fh")
-          .select(F.col("doc_id"), F.unhex(F.col("fh")).as("bin")))
-      val feats = Multimodal.extractFeatures(d, "doc_id", "bin").toDF()
-      def f(i: Int) =
-        F.round(F.col("features").getItem(i).cast(DoubleType), 3).as(s"f$i")
-      feats.select(F.col("doc_id"), F.col("kind"), F.col("n_bytes"),
-          f(0), f(1), f(2), f(3))
-        .orderBy("doc_id")
-    }),
-
-    // ---- generation, oracle-gated: the portable md5-seeded Rng makes
-    //      every draw DuckDB-mirrorable, so the oracle recomputes all
-    //      generated values from the same arithmetic; the engine side
-    //      additionally runs the compiled validator over its own output
-    //      (the reference's validate∘generate law, generator_test.cljc)
-    //      and emits the verdict — the oracle expects all-true ----
-    "gen_roundtrip" -> ((s, dir) => {
-      import mallispark.gen.Generate
-      val schema = S.map(
-        "name" -> S.string(3, 10),
-        "age" -> S.int(0, 120),
-        "score" -> S.double(0.0, 1.0),
-        "flag" -> S.boolean,
-        "lang" -> S.enum_("en", "de", "fr"),
-        "tags" -> S.vector(S.enum_("a", "b", "c"), Some(1), Some(3)),
-        "note" -> S.maybe(S.string(2, 6)))
-      implicit val rng: Generate.Rng = Generate.PortableRng
-      val rid = rng.mix(F.col("id"), F.lit(7L))
-      val row = Generate.gen(schema, rid, 1)
-      val gend = s.range(200).select(
-        F.col("id").as("row_id"),
-        row.getField("name").as("name"), row.getField("age").as("age"),
-        row.getField("score").as("score"), row.getField("flag").as("flag"),
-        row.getField("lang").as("lang"), row.getField("tags").as("tags"),
-        row.getField("note").as("note"))
-      SchemaCompiler.validateDF(schema, gend, "ok", exclude = Set("row_id"))
-        .select(F.col("row_id"), F.col("name"), F.col("age"),
-          F.col("score"), F.col("flag"), F.col("lang"),
-          F.array_join(F.col("tags"), ",").as("tags_s"), F.col("note"),
-          F.col("ok"))
-        .orderBy("row_id")
-    }),
-
-    // ---- :gen/... property overrides, oracle-gated (generator.cljc
-    //      455-476 -create precedence + 78-87 -min-max): every draw AND
-    //      every :gen/fmap is pure portable-Rng arithmetic the oracle
-    //      replays — elements via the same element_at index, fmap via its
-    //      SQL twin (concat_ws / arithmetic). The engine also validates
-    //      its own output (ok expected all-true: gen props here are
-    //      chosen INSIDE the child domains). ----
-    "gen_props_roundtrip" -> ((s, dir) => {
-      import mallispark.gen.Generate
-      import mallispark.ir.SchemaIR.{NodeProps, SProps}
-      val schema = S.map(
-        "pick" -> SProps(NodeProps(
-          genElements = Some(Seq("aa", "bb", "cc"))), S.string),
-        "tagged" -> SProps(NodeProps(genElements = Some(Seq(1L, 2L)),
-          genFmap = Some("(partial str \"v_\")")), S.string),
-        "ret" -> SProps(NodeProps(genReturn = Some(42L)), S.int(0, 100)),
-        "bounded" -> SProps(NodeProps(genMin = Some(10.0),
-          genMax = Some(20.0)), S.int(0, 100)),
-        "nested" -> SProps(NodeProps(
-          genSchema = Some(SProps(NodeProps(
-            genElements = Some(Seq(5L, 6L))), S.int)),
-          genFmap = Some("(fn [x] (str x \"!\"))")), S.string),
-        "mapped" -> SProps(NodeProps(genSchema = Some(S.int(0, 9)),
-          genFmap = Some("(fn [x] (+ (* x 2) 1))")), S.int(1, 19)))
-      implicit val rng: Generate.Rng = Generate.PortableRng
-      val rid = rng.mix(F.col("id"), F.lit(7L))
-      val row = Generate.gen(schema, rid, 1)
-      val gend = s.range(200).select(
-        F.col("id").as("row_id"),
-        row.getField("pick").as("pick"),
-        row.getField("tagged").as("tagged"),
-        row.getField("ret").as("ret"),
-        row.getField("bounded").as("bounded"),
-        row.getField("nested").as("nested"),
-        row.getField("mapped").as("mapped"))
-      SchemaCompiler.validateDF(schema, gend, "ok", exclude = Set("row_id"))
-        .select(F.col("row_id"), F.col("pick"), F.col("tagged"),
-          F.col("ret"), F.col("bounded"), F.col("nested"),
-          F.col("mapped"), F.col("ok"))
-        .orderBy("row_id")
-    }),
-
-    // ---- :re + recursive :ref generation, law-gated (generator.cljc
-    //      -re-gen / -ref-gen analogues): regex draws reverse the
-    //      AnchoredScan segment parser; refs unroll with recursion decay.
-    //      Values aren't SQL-replayable (byte-level segment draws), so
-    //      the gate follows the sketch-law pattern: the ENGINE proves
-    //      validate∘generate plus depth/diversity and emits the verdicts
-    //      the oracle pins as literals — deterministic because every
-    //      draw is hash arithmetic. ----
-    "gen_re_recursive_law" -> ((s, dir) => {
-      import mallispark.gen.Generate
-      implicit val rng: Generate.Rng = Generate.PortableRng
-      implicit val ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()
-      val rid = rng.mix(F.col("id"), F.lit(11L))
-      val urlP = "^https?://[^\\s]+$"
-      val uuidP = "^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-" +
-        "[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
-      val tree = S.scoped("node" -> S.mapE(false,
-        S.req("v", S.intMin(0L)),
-        S.opt("kids", S.vector(S.ref("node")))))(S.ref("node"))
-      val df = s.range(300).select(
-        Generate.gen(S.re(urlP), rid, 1).as("u"),
-        Generate.gen(S.re(uuidP), rid, 2).as("q"),
-        Generate.gen(tree, rid, 3).as("n"))
-      import org.apache.spark.sql.types.StringType
-      val uOk = SchemaCompiler.valid(S.re(urlP), F.col("u"), StringType)
-      val qOk = SchemaCompiler.valid(S.re(uuidP), F.col("q"), StringType)
-      val tOk = SchemaCompiler.valid(tree, F.col("n"),
-        df.schema("n").dataType)
-      val gkid = F.get(F.get(F.col("n.kids"), F.lit(0))
-        .getField("kids"), F.lit(0)).getField("v")
-      df.agg(
-        F.count(F.lit(1)).cast(LongType).as("n_rows"),
-        F.every(uOk).as("re_all_valid"),
-        (F.countDistinct(F.col("u")) > 100L).as("re_distinct_ok"),
-        F.every(qOk).as("uuid_all_valid"),
-        F.every(tOk).as("tree_all_valid"),
-        (F.sum(F.when(gkid.isNotNull, 1L).otherwise(0L)) > 0L)
-          .as("tree_has_depth2"))
-    }),
-
-    // ---- generative function checking + shrinking (m/=> + mg/check +
-    //      test.check shrink): law `f(v) <= 100` over identity on
-    //      [:int {:min 0 :max 10000}]. Portable-RNG draws → the oracle
-    //      replays every generated argument in SQL, finds the FIRST
-    //      counterexample in generation order, and knows the law's true
-    //      minimal counterexample (101) — which the greedy step-down
-    //      shrinker must reach exactly. A law-abiding twin (clamp) pins
-    //      check() = None on the same draws. ----
-    "fn_check_shrink" -> ((s, dir) => {
-      import mallispark.gen.{FnSchemas, Generate}
-      import mallispark.ir.SchemaIR.{Entry, SInt, SMap}
-      val sch = FnSchemas.FnSchema(
-        Seq(SInt(Some(0L), Some(10000L))), SInt(None, Some(100L)))
-      val ident: Seq[Any] => Any = _.head
-      val clamp: Seq[Any] => Any =
-        args => math.min(args.head.asInstanceOf[Long], 100L)
-      def run(f: Seq[Any] => Any, shrink: Boolean) =
-        FnSchemas.check(s, sch, f, n = 100, seed = 7L, shrink = shrink,
-          rng = Generate.PortableRng)
-      val cex = run(ident, shrink = false)
-      val shrunk = run(ident, shrink = true)
-      def longOf(r: Option[(Seq[Any], Any)]) = r
-        .map(x => F.lit(x._1.head.asInstanceOf[Long]))
-        .getOrElse(F.lit(null)).cast(LongType)
-      // replay surface: the same 100 portable draws the checker consumed
-      val gen = Generate.dfFromSchema(s,
-        SMap(Seq(Entry("a0", sch.input.head))), 100L, 7L,
-        rng = Generate.PortableRng)
-      gen.agg(F.sum(F.when(F.col("a0") > 100, 1L).otherwise(0L))
-          .cast(LongType).as("n_fail"))
-        .select(F.col("n_fail"),
-          F.lit(cex.isDefined).as("found"),
-          longOf(cex).as("cex"),
-          longOf(shrunk).as("shrunk"),
-          F.lit(run(clamp, shrink = false).isDefined).as("clamped_found"))
-    }),
-
-    // ---- SKETCH LAW GATES: the approx paths can't be value-matched
-    //      cross-engine (sketches are engine-private), but their LAWS
-    //      can — each gate emits an exact component DuckDB re-derives
-    //      PLUS an engine-proved tolerance/agreement verdict the oracle
-    //      expects to be true ----
-
-    // HLL vs exact distinct: exact counts cross-checked; a tight sketch
-    // (rsd 0.01 — the scale path would use the default 0.05) must land
-    // within 5% of them (deterministic hash sketch, no run-to-run noise)
-    "approx_distinct_law" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-          F.countDistinct(F.col("l_orderkey")).as("exact_orders"),
-          F.countDistinct(F.col("l_partkey")).as("exact_parts"),
-          F.approx_count_distinct(F.col("l_orderkey"), 0.01).as("ao"),
-          F.approx_count_distinct(F.col("l_partkey"), 0.01).as("ap"))
-        .select(F.col("exact_orders"), F.col("exact_parts"),
-          (F.abs(F.col("ao") - F.col("exact_orders")).cast(DoubleType)
-            / F.col("exact_orders") <= 0.05 &&
-           F.abs(F.col("ap") - F.col("exact_parts")).cast(DoubleType)
-            / F.col("exact_parts") <= 0.05).as("within_5pct"))),
-
-    // percentile-sketch KS vs the distributed exact KS: the exact D is
-    // cross-checked (same arithmetic as drift_ks_value); the 256-quantile
-    // sketch estimate must track it
-    "ks_sketch_law" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val exact = TableChecks.ksExact(ev, "value",
-          F.col("event_id") % 2 === 0).select(F.col("ks_stat"))
-      val sk = TableChecks.ksStatistic(
-        ev.where(F.col("event_id") % 2 === 0),
-        ev.where(F.col("event_id") % 2 =!= 0), "value")
-      exact.crossJoin(sk).select(F.col("ks_stat"),
-        (F.abs(F.col("ks_statistic") - F.col("ks_stat")) <= 0.05)
-          .as("sketch_close"))
-    }),
-
-    // native (engine-hash) kernels: byte-identical duplicate texts MUST
-    // produce identical native MinHash signatures and SimHash values —
-    // the dup-pair list is cross-checked via md5, the signature equality
-    // is the engine-proved law
-    "native_hash_law" -> ((s, dir) => {
-      import mallispark.expressions.{MinHashFromText, SimHashFromText}
-      // the self-join on md5(text) keeps ONLY duplicate-text pairs — so
-      // compute the expensive 64-seed MinHash/SimHash kernels ONLY for
-      // docs whose text hash recurs (guide §3.2: reduce the side before
-      // the expensive work), not for every doc on both join sides.
-      // NO forced broadcast of the dup-hash set: its size is bounded
-      // only by corpus content (boilerplate-heavy crawls), and the
-      // repo rule is that adversarial corpora degrade, never kill, the
-      // job — the set comes out of an aggregation, so AQE sees its REAL
-      // size at runtime and converts the join to broadcast exactly when
-      // it is small (the gate-scale case).
-      val basep = pages(s, dir).where(F.length(F.col("text")) > 0)
-        .select(F.col("doc_id"), F.col("text"), F.md5(F.col("text")).as("th"))
-      val dups = basep.groupBy("th").agg(F.count(F.lit(1)).as("c"))
-        .where(F.col("c") > 1).select("th")
-      val p = basep.join(dups, "th")
-        .select(F.col("doc_id"), F.col("th"),
-          MinHashFromText(F.col("text"), 3, 64).as("mh"),
-          SimHashFromText(F.col("text")).as("sh"))
-        .localCheckpoint(true)
-      val a = p.select(F.col("doc_id").as("id_a"), F.col("th"),
-        F.col("mh").as("mh_a"), F.col("sh").as("sh_a"))
-      val b = p.select(F.col("doc_id").as("id_b"), F.col("th"),
-        F.col("mh").as("mh_b"), F.col("sh").as("sh_b"))
-      a.join(b, "th").where(F.col("id_a") < F.col("id_b"))
-        .select(F.col("id_a"), F.col("id_b"),
-          (F.col("mh_a") === F.col("mh_b")).as("minhash_equal"),
-          (F.col("sh_a") === F.col("sh_b")).as("simhash_equal"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // HLL-mode inference must reach the SAME schema decisions as the
-    // exact mode on this data (the n^0.7 map-of rule and :enum gating
-    // consume the distinct counts); exact mode is separately oracled
-    "infer_approx_law" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents").select("doc_id", "lang", "text",
-        "n_chars")
-      val ex = mallispark.infer.Infer.infer(d,
-        mallispark.infer.Infer.Options(exact = true))
-      val ap = mallispark.infer.Infer.infer(d,
-        mallispark.infer.Infer.Options(exact = false))
-      val exm = ex.entries.map(e =>
-        e.key -> (inferTag(e.child), e.optional, enumCsv(e.child))).toMap
-      ap.entries.map { e =>
-        (e.key,
-          exm.get(e.key).contains(
-            (inferTag(e.child), e.optional, enumCsv(e.child))))
-      }.toDF("col", "agree").orderBy("col")
-    }),
-
-    // ---- schema inference (malli.provider) — exact-aggregate path; the
-    // derived table exercises every heuristic (:uuid narrowing, :enum,
-    // [:maybe _], :tuple-vs-:vector, :map-vs-:map-of n^0.7 rule) and the
-    // DuckDB oracle COMPUTES the same decisions from the same data ----
-    "infer_schema" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val h = F.md5(F.col("doc_id").cast(StringType))
-      val src = d.select(
-        F.col("doc_id"), F.col("lang"), F.col("text"),
-        F.concat_ws("-", F.substring(h, 1, 8), F.substring(h, 9, 4),
-          F.substring(h, 13, 4), F.substring(h, 17, 4),
-          F.substring(h, 21, 12)).as("uid"),
-        F.when(F.col("doc_id") % 7 === 0, F.lit(null).cast(DoubleType))
-          .otherwise(F.col("n_chars") / 100.0).as("score"),
-        F.array(F.col("n_chars"),
-          F.length(F.col("text")).cast(LongType)).as("pair"),
-        F.split(F.col("text"), " ").as("toks"),
-        F.map(F.lit("len"), F.col("n_chars"),
-          F.lit("band"), F.pmod(F.col("doc_id"), F.lit(5L))).as("meta_fixed"),
-        F.map(F.concat(F.lit("k"), F.col("doc_id").cast(StringType)),
-          F.col("n_chars")).as("meta_wide"))
-      // exact mode is multi-pass (map-key explodes, enum collects) —
-      // persist the derived table so each pass reuses it instead of
-      // re-deriving split/md5 columns from the scan (infer materializes
-      // everything before returning, so unpersist is safe right after)
-      val cached = src.persist()
-      try {
-        val sch = mallispark.infer.Infer.infer(cached,
-          mallispark.infer.Infer.Options(exact = true))
-        sch.entries.map(e =>
-            (e.key, inferTag(e.child), e.optional, enumCsv(e.child)))
-          .toDF("col", "inferred", "optional", "enum_vals").orderBy("col")
-      } finally cached.unpersist(blocking = false)
-    }),
-
-    // ---- golden serialization gate: the flagship schema's vector form,
-    //      AST JSON, and JSON-Schema, plus a scoped recursive schema's
-    //      form — pinned as oracle literals so any drift in the
-    //      serialization surface fails the driver gate ----
-    // ---- programmatic schema algebra, oracle-gated: merge (right-
-    //      biased lang narrowing) → selectKeys → optionalKeys(text) →
-    //      closedSchema, then validate pages through the COMPOSED
-    //      schema; nulls injected into text prove the optionality
-    //      actually took effect (mu/merge, mu/select-keys,
-    //      mu/optional-keys, mu/closed-schema — util.cljc) ----
-    "schema_ops_verdicts" -> ((s, dir) => {
-      import mallispark.ir.SchemaOps
-      val narrowed = SchemaOps.merge(WebPages.schema,
-        S.mapE(false, S.req("lang", S.enum_("en", "de", "fr"))))
-      val composed = SchemaOps.closedSchema(SchemaOps.optionalKeys(
-        SchemaOps.selectKeys(narrowed.asInstanceOf[SchemaIR.SMap],
-          Set("url", "text", "lang")),
-        Some(Set("text"))))
-      val p = pages(s, dir).select(F.col("doc_id"), F.col("url"),
-        F.when(F.col("doc_id") % 53 === 9, F.lit(null).cast(StringType))
-          .otherwise(F.col("text")).as("text"),
-        F.col("lang"))
-      SchemaCompiler.validateDF(composed, p, "ok", exclude = Set("doc_id"))
-        .select("doc_id", "ok").orderBy("doc_id")
-    }),
-
-    // ---- union / renameKeys / dissoc composition: colliding `lang`
-    //      entries become :or (mu/union), `text` is renamed to `body`,
-    //      `url` is dissoc'd (rows validate without it — a stale
-    //      required entry would fail every row as missing-key);
-    //      injected empty bodies prove the kept :string{min 1} bites.
-    //      `lang` is REQUIRED in a but OPTIONAL in b — union's
-    //      merge-required is (and r1 r2) (util.cljc:110), so the unioned
-    //      entry must be optional: injected null langs must PASS ----
-    "schema_ops_union" -> ((s, dir) => {
-      import mallispark.ir.SchemaOps
-      import mallispark.ir.SchemaIR.SMap
-      val a = S.mapE(false,
-        S.req("url", S.re("^https?://[^\\s]+$")),
-        S.req("lang", S.enum_("en", "de")),
-        S.req("text", S.string(1)))
-      val b = S.mapE(false, S.opt("lang", S.enum_("fr", "es")))
-      val composed = SchemaOps.dissoc(
-        SchemaOps.renameKeys(
-          SchemaOps.union(a, b).asInstanceOf[SMap],
-          Map("text" -> "body")),
-        "url")
-      val p = pages(s, dir).select(F.col("doc_id"),
-        F.when(F.col("doc_id") % 37 === 3, F.lit(null).cast(StringType))
-          .otherwise(F.col("lang")).as("lang"),
-        F.when(F.col("doc_id") % 41 === 5, F.lit(""))
-          .otherwise(F.col("text")).as("body"))
-      SchemaCompiler.validateDF(composed, p, "ok", exclude = Set("doc_id"))
-        .select("doc_id", "ok").orderBy("doc_id")
-    }),
-
-    "export_forms" -> ((s, dir) => {
-      import s.implicits._
-      import mallispark.ir.Export
-      val scoped = S.scoped("node" -> S.mapE(false,
-          S.req("v", S.intMin(0L)),
-          S.opt("kids", S.vector(S.ref("node")))))(S.ref("node"))
-      // EDN-form round-trip: parse the flagship's own vector-syntax form
-      // back through fromForm and re-serialize — must be a fixpoint
-      val ednBack = Export.fromForm(SchemaIR.form(WebPages.schema))
-      // StructType DDL dual of the compiled schema
-      val ddl = SchemaCompiler.toStructType(
-        WebPages.schema.asInstanceOf[SchemaIR.SMap]).toDDL
-      // registry modes resolve to the same schemas a compile would see
-      val mut = new SchemaIR.MutableRegistry()
-      mut.register("page", S.mapE(false, S.req("x", S.int)))
-      val lz = new SchemaIR.LazyRegistry(
-        n => if (n == "leaf") Some(S.intMin(0L)) else None)
-      // lite DSL + visual emitters + swagger: rendered here, pinned as
-      // oracle literals (multi-line emitter output travels with \n
-      // rewritten to the 2-char "\\n" so the golden stays one line)
-      val liteForm = SchemaIR.form(mallispark.ir.Lite.obj(
-        "id" -> ":int", "tag" -> mallispark.ir.Lite.optional(":string"),
-        "langs" -> mallispark.ir.Lite.vector(":string")))
-      val pageScoped = S.scoped(
-        "Page" -> S.mapE(false,
-          S.req("url", S.string),
-          S.req("meta", S.mapE(false,
-            S.req("lang", S.enum_("en", "de"))))))(S.ref("Page"))
-      Seq(
-        ("flagship_form", SchemaIR.form(WebPages.schema)),
-        ("flagship_ast", Export.toJson(WebPages.schema)),
-        ("flagship_jsonschema", Export.toJsonSchema(WebPages.schema)),
-        ("flagship_swagger", Export.toSwagger(WebPages.schema)),
-        ("scoped_form", SchemaIR.form(scoped)),
-        // registry refs render as #/definitions pointers with the defs
-        // collected at the document root (json_schema.cljc:17-37)
-        ("scoped_jsonschema", Export.toJsonSchema(scoped)),
-        ("scoped_swagger", Export.toSwagger(scoped)),
-        // swagger-spec: body keeps its $ref (definitions hoist to root),
-        // query/header flatten one parameter per map entry
-        ("swagger_spec", Export.swaggerSpec(
-          parameters = Seq(
-            "body" -> S.scoped("req-body" -> S.mapOf(S.keyword, S.any))(
-              S.ref("req-body")),
-            "query" -> S.mapE(false, S.req("a", S.int),
-              S.req("b", S.string(min = 10))),
-            "header" -> S.mapE(false, S.req("c", S.string))),
-          responses = Seq(
-            (200, Some(S.mapE(false, S.req("bar", S.keyword))), None),
-            (500, None, Some("fail"))))),
-        // value-universe decode/encode (tier-3 dual of Transform):
-        // seqex gate, keep-original-on-failure, heterogeneous :or
-        ("value_decode_cat", {
-          import mallispark.eval.ValueTransform
-          import mallispark.compile.Transform.StringMode
-          // seq-impl-agnostic rendering (varargs Seqs print ArraySeq)
-          def show(v: Any): String = v match {
-            case xs: Seq[_] => xs.map(show).mkString("[", " ", "]")
-            case other => String.valueOf(other)
-          }
-          Seq(
-            ValueTransform.decode(S.cat(S.int, S.keyword),
-              Seq("1", "kikka"), StringMode),
-            ValueTransform.decode(S.int, "abc", StringMode),
-            ValueTransform.decode(S.or(S.posInt, S.keyword), "-1",
-              StringMode),
-            ValueTransform.encode(S.repeat(S.int, 2, 4), Seq(1L)),
-            ValueTransform.encode(S.repeat(S.int, 2, 4), Seq(1L, 2L)))
-            .map(show).mkString("|")
-        }),
-        ("edn_roundtrip", SchemaIR.form(ednBack)),
-        ("struct_ddl", ddl),
-        ("registry_mutable_form", SchemaIR.form(mut.snapshot("page"))),
-        ("registry_lazy_form", SchemaIR.form(lz.force("leaf")("leaf"))),
-        ("lite_form", liteForm),
-        ("dot_page", mallispark.ir.Dot.transform(pageScoped)
-          .replace("\n", "\\n")),
-        ("plantuml_page", mallispark.ir.Dot.plantuml(pageScoped)
-          .replace("\n", "\\n")),
-        // m/walk postwalk fold + mu/subschemas path enumeration
-        ("walk_fold", {
-          val n = SchemaIR.fold(WebPages.schema, 0)((acc, _) => acc + 1)
-          val paths = mallispark.ir.SchemaOps.subschemas(WebPages.schema)
-            .map(_._1.mkString("/")).mkString(",")
-          s"nodes=$n;paths=$paths"
-        }),
-        // mu/get-in lens: top-level entry, nested path, missing path
-        ("lens_get_in", {
-          val nested = S.mapE(false,
-            S.req("a", S.mapE(false, S.req("b", S.int))))
-          SchemaIR.form(SchemaIR.getIn(WebPages.schema, Seq("lang")).get) +
-            "|" + SchemaIR.form(SchemaIR.getIn(nested, Seq("a", "b")).get) +
-            "|" + SchemaIR.getIn(WebPages.schema, Seq("nope")).isEmpty
-        }),
-        ("flagship_describe",
-          mallispark.ir.Describe.describe(WebPages.schema)),
-        // clj-kondo linter config (clj_kondo.cljc accept/linter-config):
-        // flagship type map + a two-fn namespace exercising the
-        // fixed-arity and varargs/:min-arity paths
-        ("kondo_flagship", mallispark.ir.CljKondo.edn(
-          mallispark.ir.CljKondo.transform(WebPages.schema))),
-        ("kondo_config", mallispark.ir.CljKondo.linterConfig(Seq(
-          mallispark.ir.CljKondo.FnDef("graft.pages", "valid-page?",
-            Seq(WebPages.schema), S.boolean),
-          mallispark.ir.CljKondo.FnDef("graft.pages", "merge-texts",
-            Seq(S.string), S.string, rest = Some(S.string))))),
-        // malli.dev.pretty — the rendered Validation Error report for a
-        // fixed invalid value (plain colors; \n escaped for the one-line
-        // golden like dot_page)
-        ("pretty_page", mallispark.dev.Pretty.explain(
-          S.mapE(false,
-            S.req("url", S.string),
-            S.req("count", S.intMin(0L)),
-            S.opt("lang", S.enum_("en", "de"))),
-          Map("url" -> 42L, "count" -> 3L, "lang" -> "xx"))
-          .get.replace("\n", "\\n")),
-        // malli.generator-ast — the recursive formula fixture's generator
-        // as data (generator_ast_test.clj:6-43; rec-gen/scalar-gen fold)
-        ("generator_ast_formula", mallispark.gen.GeneratorAst.generatorAst(
-          S.scoped("formula" -> S.or(
-            S.boolean,
-            S.tuple(S.enum_(":not"), S.boolean),
-            S.tuple(S.enum_(":and"), S.star(S.ref("formula"))),
-            S.tuple(S.enum_(":or"), S.star(S.ref("formula")))))(
-            S.ref("formula")))),
-        // mu/explain-data (util.cljc:209-238): serializable explain —
-        // schema objects replaced by their forms; ::m type keys only on
-        // the special errors (util_test.cljc:1031-1069 fixtures)
-        ("explain_data", {
-          import mallispark.eval.RowEval
-          val sch = Export.fromForm("[:map [:a [:vector [:maybe :string]]]]")
-          def show(r: Option[RowEval.DataExplain]): String = r match {
-            case None => "nil"
-            case Some(d) => d.errors.map(e =>
-              s"path=${e.path.mkString("/")};in=${e.in.mkString("/")}" +
-                s";schema=${e.schema};value=${String.valueOf(e.value)}" +
-                e.errType.map(";type=" + _).getOrElse("")).mkString("|")
-          }
-          Seq(
-            RowEval.explainData(sch, Map("a" -> Seq("kikka"))),
-            RowEval.explainData(sch, Map("a" -> 1L)),
-            RowEval.explainData(sch, Map("a" -> Seq(true))),
-            RowEval.explainData(sch, Map.empty[String, Any]))
-            .map(show).mkString(" ~ ")
-        }),
-        // :-> sugar + m/-function-info view (core.cljc:2382-2391,
-        // 2211-2218): arrow == :=> under fn-schema-info; varargs arity
-        ("fn_arrow_info", {
-          import mallispark.gen.FnSchemas
-          def show(i: FnSchemas.FnInfo): String =
-            s"{:min ${i.min}, :max ${i.max.map(_.toString).getOrElse("nil")}" +
-              s", :arity ${i.arity}, :input ${i.input}" +
-              s", :output ${i.output}, :guard ${i.guard.getOrElse("nil")}}"
-          val arrow = FnSchemas.functionInfo(
-            FnSchemas.arrow(Seq(S.int, S.int, S.int)))
-          val direct = FnSchemas.functionInfo(
-            FnSchemas.FnSchema(Seq(S.int, S.int), S.int))
-          val varargs = FnSchemas.functionInfo(
-            FnSchemas.FnSchema(Seq(S.int), S.int, rest = Some(S.string)))
-          s"eq=${arrow == direct}|${show(arrow)}|${show(varargs)}"
-        }),
-        // malli.destructure — arglist → schema extraction (vanilla,
-        // schematized+options, and the multi-arity function wrapper)
-        ("destructure_vararg", mallispark.ir.Destructure.parse(
-          "[url :- :string, opts [k vs & more] & pages]").schemaForm),
-        ("destructure_map", mallispark.ir.Destructure.parse(
-          "[{:keys [url lang] :or {lang \"en\"} :as page}]",
-          mallispark.ir.Destructure.Options(requiredKeys = true)).schemaForm),
-        ("destructure_fn", mallispark.ir.Destructure.Edn.print(
-          mallispark.ir.Destructure.functionSchema(Seq(
-            "[page :- :string]",
-            "[page :- :string & rest :- [:* :int]]")))))
-        .toDF("name", "text").orderBy("name")
-    })
-  )
-
-  /** Scale-path queries whose RAW outputs are engine-native sketches
-    * (xxhash64 bands, HLL estimates, percentile sketches) and therefore
-    * have no DuckDB value-oracle BY CONSTRUCTION. Each is law-gated in
-    * `queries` instead (native_hash_law, approx_distinct_law,
-    * ks_sketch_law, infer_approx_law — a full oracle re-derives the
-    * EXACT component and expects the engine-proved tolerance/agreement
-    * verdict to hold). Kept OUT of the driver's per-query oracle gate
-    * (no rows-only entries) but IN the Bench suite so the scale paths
-    * stay timed every round. */
-  def benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
-    Map(
-      // native-Expression MinHash (codegen xxhash64) — scale path
-      "dedup_minhash_fast" -> ((s, dir) =>
-        Dedup.minhashLSHFast(pages(s, dir)
-            .where(F.length(F.col("text")) > 0),
-            "doc_id", "text", k = 64, bands = 16, n = 3)
-          .select(F.col("band").cast(LongType).as("band"),
-            F.col("band_key"), F.col("dup_cnt"))
-          .orderBy("band", "band_key")),
-
-      // native-Expression SimHash (codegen xxhash64 votes) — scale path
-      "dedup_simhash_fast" -> ((s, dir) =>
-        Dedup.simhashFastCandidates(
-            pages(s, dir).where(F.length(F.col("text")) > 0),
-            "doc_id", "text")
-          .select(F.col("band").cast(LongType).as("band"),
-            F.col("band_key"), F.col("dup_cnt"))
-          .orderBy("band", "band_key")),
-
-      // HLL distinct sketch (law gate: approx_distinct_law)
-      "stats_approx_distinct" -> ((s, dir) =>
-        t(s, dir, "lineitem").agg(
-            F.approx_count_distinct(F.col("l_orderkey"))
-              .as("approx_orders"),
-            F.approx_count_distinct(F.col("l_partkey")).as("approx_parts"))
-          .select(F.col("approx_orders"), F.col("approx_parts"))),
-
-      // percentile_approx-sketch KS (law gate: ks_sketch_law)
-      "drift_ks_sketch" -> ((s, dir) => {
-        val ev = t(s, dir, "events")
-        TableChecks.ksStatistic(
-          ev.where(F.col("event_id") % 2 === 0),
-          ev.where(F.col("event_id") % 2 =!= 0), "value")
-      }),
-
-      // ONE-PASS approx inference (law gate: infer_approx_law)
-      "infer_schema_approx" -> ((s, dir) => {
-        import s.implicits._
-        val d = t(s, dir, "documents").select("doc_id", "lang", "text",
-          "n_chars")
-        val sch = mallispark.infer.Infer.infer(d,
-          mallispark.infer.Infer.Options(exact = false))
-        sch.entries.map(e =>
-            (e.key, inferTag(e.child), e.optional, enumCsv(e.child)))
-          .toDF("col", "inferred", "optional", "enum_vals").orderBy("col")
-      })
-    )
-
-  /** Compact malli-form tag of an inferred schema node (gate rendering —
-    * enum members travel in their own column, see enumCsv). */
-  private def inferTag(ir: SchemaIR): String = {
-    import mallispark.ir.SchemaIR._
-    ir match {
-      case _: SInt => ":int"
-      case _: SDouble => ":double"
-      case _: SString => ":string"
-      case SUuid => ":uuid"
-      case _: SEnum => ":enum"
-      case SBoolean => ":boolean"
-      case SBinary => ":binary"
-      case _: STimestamp => ":time/instant"
-      case SMaybe(c) => s"[:maybe ${inferTag(c)}]"
-      case STuple(cs) => cs.map(inferTag).mkString("[:tuple ", " ", "]")
-      case SVector(c, _, _) => s"[:vector ${inferTag(c)}]"
-      case SMapOf(k, v, _, _) => s"[:map-of ${inferTag(k)} ${inferTag(v)}]"
-      case _: SMap => ":map"
-      case _ => ":any"
-    }
-  }
-
-  private def enumCsv(ir: SchemaIR): String = {
-    import mallispark.ir.SchemaIR._
-    ir match {
-      case SEnum(vs) => vs.map(_.toString).sorted.mkString(",")
-      case SMaybe(c) => enumCsv(c)
-      case _ => ""
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // DuckDB oracles
-  // ------------------------------------------------------------------
-
-  private val P = WebPages.OracleCte // WITH base AS (...), pages AS (...)
-
-  /** Portable hash in DuckDB. */
-  private def dh32(e: String) = s"('0x' || substring(md5($e),1,8))::BIGINT"
-
-  private val validSql =
-    """regexp_matches(url, '^https?://[^\s]+$')
-      | AND warc_ts >= TIMESTAMP '2025-01-01 00:00:00'
-      | AND warc_ts <= TIMESTAMP '2026-05-01 00:00:00'
-      | AND length(text) >= 1
-      | AND lang IN ('en','de','fr','es','zh')""".stripMargin.replace("\n", "")
-
-  private val shinglesCte =
-    """toks AS (
-      |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w
-      |  FROM pages WHERE length(text) > 0),
-      |sh AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(0, greatest(len(w)-2, 0)),
-      |    i -> array_to_string(w[(i+1):(i+3)], ' ')))) AS s
-      |  FROM toks)""".stripMargin
-
-  private def langIdSql: String = {
-    val scores = TextOps.Markers.map { case (lang, ws) =>
-      val inList = ws.map(w => s"'$w'").mkString(", ")
-      s"len(list_filter(w, t -> t IN ($inList))) AS s_$lang"
-    }.mkString(",\n    ")
-    val maxE = TextOps.Markers.map(m => s"s_${m._1}")
-      .reduce((a, b) => s"greatest($a, $b)")
-    val cases = TextOps.Markers.map { case (lang, _) =>
-      s"WHEN s_$lang = m AND m > 0 THEN '$lang'"
-    }.mkString(" ")
-    s"""WITH scored AS (
-       |  SELECT doc_id,
-       |    $scores
-       |  FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w
-       |        FROM documents)),
-       |m AS (SELECT doc_id, $maxE AS m, * FROM scored)
-       |SELECT doc_id, CASE $cases ELSE 'und' END AS lang_pred
-       |FROM m ORDER BY doc_id""".stripMargin
-  }
-
-  /** Per-table LSH bucket SELECTs with the SAME literal hyperplane signs
-    * the Spark plan inlines (Similarity.planeSigns) — UNION ALL of one
-    * SELECT per table producing (idCol, tbl, bucket). */
-  private def lshBucketSql(src: String, idCol: String, vecCol: String,
-                           planes: Int = AnnPlanes): String =
-    (0 until AnnTables).map { tbl =>
-      val signs = Similarity.planeSigns(tbl, planes, AnnDims)
-      val bits = signs.zipWithIndex.map { case (sv, p) =>
-        val arr = sv.map(v => if (v > 0) "1.0" else "-1.0")
-          .mkString("[", ", ", "]")
-        s"""(CASE WHEN round(list_sum(list_transform(list_zip($vecCol, $arr),
-           |  z -> CAST(z[1] AS DOUBLE) * z[2])), 4) >= 0
-           |  THEN ${1L << p} ELSE 0 END)""".stripMargin
-      }.mkString(" + ")
-      s"SELECT $idCol, $tbl AS tbl, $bits AS bucket FROM $src"
-    }.mkString("\nUNION ALL\n")
-
-  /** Cosine between two list columns, matching Similarity.cosine's
-    * element-order double arithmetic. */
-  private def cosSqlOf(a: String, b: String) =
-    s"""list_sum(list_transform(list_zip($a, $b),
-       |    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |  / (sqrt(list_sum(list_transform($a,
-       |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-       |   * sqrt(list_sum(list_transform($b,
-       |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
-
-  private val cosSql = cosSqlOf("embedding", "qe")
-
-  /** One unrolled Lloyd iteration for the IVF oracle: assign to the
-    * max-cosine centroid of `prev` (ties → lowest cent_id), then the
-    * quantized-integer-sum mean per (cell, dim) — `sum(round(x·10⁴))` is
-    * an exact BIGINT sum, so the division `CAST(s AS DOUBLE)/c/10000.0`
-    * is bit-identical to Similarity.kmeansCentroids' driver-side fold.
-    * Cells with no members keep the previous centroid (LEFT JOIN +
-    * coalesce). */
-  private def kmeansIterSql(i: Int, prev: String): String =
-    s"""asg$i AS (SELECT vec_id, cell FROM (
-       |  SELECT c.vec_id, ct.cent_id AS cell,
-       |    row_number() OVER (PARTITION BY c.vec_id
-       |      ORDER BY ${cosSqlOf("c.embedding", "ct.cvec")} DESC,
-       |        ct.cent_id ASC) AS rk
-       |  FROM corpus c CROSS JOIN $prev ct) WHERE rk = 1),
-       |sums$i AS (SELECT cell, dim,
-       |    sum(CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS s,
-       |    count(*) AS c
-       |  FROM (SELECT a.cell, generate_subscripts(c.embedding, 1) AS dim,
-       |          unnest(c.embedding) AS x
-       |        FROM corpus c JOIN asg$i a USING (vec_id))
-       |  GROUP BY cell, dim),
-       |cents$i AS (SELECT ct.cent_id,
-       |    coalesce(mm.arr, ct.cvec) AS cvec
-       |  FROM $prev ct LEFT JOIN (
-       |    SELECT cell AS cent_id,
-       |      list(CAST(s AS DOUBLE) / c / 10000.0 ORDER BY dim) AS arr
-       |    FROM sums$i GROUP BY cell) mm USING (cent_id))""".stripMargin
-
-  /** Shared CTE chain for the IVF-ANN oracles: seeded k-means centroids
-    * (init = lowest-id vectors quantized to 1e-4, then $IvfIters unrolled
-    * Lloyd iterations), corpus cell assignment, query probes, candidate
-    * refinement. */
-  private def annIvfCtes: String =
-    s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
-       |q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-       |      WHERE vec_id < 10),
-       |cents0 AS (SELECT vec_id AS cent_id,
-       |    list_transform(embedding, x ->
-       |      CAST(CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT) AS DOUBLE)
-       |        / 10000.0) AS cvec
-       |  FROM corpus ORDER BY vec_id LIMIT $IvfCentroids),
-       |${(1 to IvfIters).map(i => kmeansIterSql(i, s"cents${i - 1}"))
-           .mkString(",\n")},
-       |cents AS (SELECT cent_id, cvec FROM cents$IvfIters),
-       |casg AS (SELECT vec_id, cell FROM (
-       |  SELECT c.vec_id, ct.cent_id AS cell,
-       |    row_number() OVER (PARTITION BY c.vec_id
-       |      ORDER BY ${cosSqlOf("c.embedding", "ct.cvec")} DESC,
-       |        ct.cent_id ASC) AS rk
-       |  FROM corpus c CROSS JOIN cents ct) WHERE rk = 1),
-       |qasg AS (SELECT query_id, cell FROM (
-       |  SELECT qq.query_id, ct.cent_id AS cell,
-       |    row_number() OVER (PARTITION BY qq.query_id
-       |      ORDER BY ${cosSqlOf("qq.qe", "ct.cvec")} DESC,
-       |        ct.cent_id ASC) AS rk
-       |  FROM q qq CROSS JOIN cents ct) WHERE rk <= $IvfProbe),
-       |ivf_pairs AS (SELECT DISTINCT qasg.query_id, casg.vec_id
-       |  FROM casg JOIN qasg USING (cell)),
-       |ivf_scored AS (SELECT p.query_id, p.vec_id, $cosSql AS cos
-       |  FROM ivf_pairs p JOIN corpus USING (vec_id) JOIN q USING (query_id)),
-       |ivf_ranked AS (SELECT query_id, vec_id,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
-       |    AS rank FROM ivf_scored)""".stripMargin
-
-  /** Shared CTE chain for the LSH-ANN oracles: corpus/queries, bucketed
-    * sides, candidate pairs, scored + ranked candidates. */
-  private def annLshCtes: String =
-    s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
-       |q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-       |      WHERE vec_id < 10),
-       |cb AS (${lshBucketSql("corpus", "vec_id", "embedding")}),
-       |qb AS (${lshBucketSql("q", "query_id", "qe")}),
-       |pairs AS (SELECT DISTINCT qb.query_id, cb.vec_id
-       |  FROM cb JOIN qb ON cb.tbl = qb.tbl AND cb.bucket = qb.bucket),
-       |scored AS (SELECT p.query_id, p.vec_id,
-       |  $cosSql AS cos
-       |  FROM pairs p JOIN corpus USING (vec_id) JOIN q USING (query_id)),
-       |lsh_ranked AS (SELECT query_id, vec_id,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
-       |    AS rank FROM scored)""".stripMargin
-
-  def oracleSql: Map[String, String] = oracleSqlBase +
-    // the star-contraction variant must produce the SAME clusters as the
-    // min-label algorithm — one oracle serves both gates
-    ("dedup_clusters_star" -> oracleSqlBase("dedup_clusters"))
-
-  private def oracleSqlBase: Map[String, String] = Map(
-
-    "ann_ivf_topk" ->
-      s"""$annIvfCtes
-         |SELECT query_id, vec_id, CAST(rank AS BIGINT) AS rank
-         |FROM ivf_ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "ann_ivf_recall" ->
-      s"""$annIvfCtes,
-         |ex_scored AS (SELECT query_id, vec_id, $cosSql AS cos
-         |  FROM corpus, q),
-         |ex_ranked AS (SELECT query_id, vec_id,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
-         |    AS rank FROM ex_scored),
-         |ex AS (SELECT query_id, vec_id FROM ex_ranked WHERE rank <= 5),
-         |iv AS (SELECT query_id, vec_id FROM ivf_ranked WHERE rank <= 5)
-         |SELECT CAST(count(*) FILTER (WHERE iv.vec_id IS NOT NULL) AS BIGINT) AS hits,
-         |  CAST(count(*) AS BIGINT) AS total,
-         |  CAST(count(*) FILTER (WHERE iv.vec_id IS NOT NULL) * 100
-         |       // count(*) AS BIGINT) AS recall_pct
-         |FROM ex LEFT JOIN iv
-         |  ON ex.query_id = iv.query_id AND ex.vec_id = iv.vec_id""".stripMargin,
-
-    "ann_lsh_topk" ->
-      s"""$annLshCtes
-         |SELECT query_id, vec_id, CAST(rank AS BIGINT) AS rank
-         |FROM lsh_ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "dedup_embedding" ->
-      s"""WITH base AS (SELECT vec_id, embedding FROM embeddings),
-         |seeds AS (SELECT vec_id, embedding FROM base WHERE vec_id % 50 = 7),
-         |dup AS (SELECT vec_id + 10000 AS vec_id, embedding FROM seeds),
-         |near AS (SELECT vec_id + 20000 AS vec_id,
-         |  list_prepend(CAST(CAST(embedding[1] AS DOUBLE) + 0.05 AS REAL),
-         |    embedding[2:]) AS embedding FROM seeds),
-         |corpus2 AS (SELECT * FROM base UNION ALL SELECT * FROM dup
-         |            UNION ALL SELECT * FROM near),
-         |b2 AS (${lshBucketSql("corpus2", "vec_id", "embedding",
-             NearDupPlanes)}),
-         |ok AS (SELECT tbl, bucket FROM b2 GROUP BY 1, 2
-         |       HAVING count(*) <= $NearDupMaxBucket),
-         |b3 AS (SELECT b2.* FROM b2 JOIN ok USING (tbl, bucket)),
-         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM b3 a JOIN b3 b
-         |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |scored AS (SELECT id_a, id_b,
-         |    round(${cosSqlOf("va.embedding", "vb.embedding")}, 4) AS cos
-         |  FROM cand JOIN corpus2 va ON va.vec_id = id_a
-         |            JOIN corpus2 vb ON vb.vec_id = id_b)
-         |SELECT id_a, id_b, cos FROM scored WHERE cos >= 0.98
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "ann_lsh_recall" ->
-      s"""$annLshCtes,
-         |ex_scored AS (SELECT query_id, vec_id, $cosSql AS cos
-         |  FROM corpus, q),
-         |ex_ranked AS (SELECT query_id, vec_id,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
-         |    AS rank FROM ex_scored),
-         |ex AS (SELECT query_id, vec_id FROM ex_ranked WHERE rank <= 5),
-         |ls AS (SELECT query_id, vec_id FROM lsh_ranked WHERE rank <= 5)
-         |SELECT CAST(count(*) FILTER (WHERE ls.vec_id IS NOT NULL) AS BIGINT) AS hits,
-         |  CAST(count(*) AS BIGINT) AS total,
-         |  CAST(count(*) FILTER (WHERE ls.vec_id IS NOT NULL) * 100
-         |       // count(*) AS BIGINT) AS recall_pct
-         |FROM ex LEFT JOIN ls
-         |  ON ex.query_id = ls.query_id AND ex.vec_id = ls.vec_id""".stripMargin,
-
-    "web_verdicts" ->
-      s"""$P
-         |SELECT ${dh32("url")} % 32 AS part_id,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(sum(CASE WHEN $validSql THEN 1 ELSE 0 END) AS BIGINT) AS valid_rows,
-         |  count(*) = sum(CASE WHEN $validSql THEN 1 ELSE 0 END) AS pass
-         |FROM pages GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "web_violations" ->
-      s"""$P
-         |SELECT doc_id, url, 'url' AS schema_path, ':re' AS error_key
-         |  FROM pages WHERE NOT regexp_matches(url, '^https?://[^\\s]+$$')
-         |UNION ALL
-         |SELECT doc_id, url, 'warc_ts', ':time/instant' FROM pages
-         |  WHERE warc_ts < TIMESTAMP '2025-01-01 00:00:00'
-         |     OR warc_ts > TIMESTAMP '2026-05-01 00:00:00'
-         |UNION ALL
-         |SELECT doc_id, url, 'text', ':string' FROM pages WHERE length(text) < 1
-         |UNION ALL
-         |SELECT doc_id, url, 'lang', ':enum' FROM pages
-         |  WHERE lang NOT IN ('en','de','fr','es','zh')
-         |ORDER BY doc_id, schema_path""".stripMargin,
-
-    // masking: every captured (non-null) violation value → '***'
-    "web_violations_masked" ->
-      s"""$P
-         |SELECT doc_id, 'url' AS schema_path, ':re' AS error_key,
-         |    CASE WHEN url IS NOT NULL THEN '***' END AS value
-         |  FROM pages WHERE NOT regexp_matches(url, '^https?://[^\\s]+$$')
-         |UNION ALL
-         |SELECT doc_id, 'warc_ts', ':time/instant',
-         |    CASE WHEN warc_ts IS NOT NULL THEN '***' END FROM pages
-         |  WHERE warc_ts < TIMESTAMP '2025-01-01 00:00:00'
-         |     OR warc_ts > TIMESTAMP '2026-05-01 00:00:00'
-         |UNION ALL
-         |SELECT doc_id, 'text', ':string',
-         |    CASE WHEN text IS NOT NULL THEN '***' END FROM pages
-         |  WHERE length(text) < 1
-         |UNION ALL
-         |SELECT doc_id, 'lang', ':enum',
-         |    CASE WHEN lang IS NOT NULL THEN '***' END FROM pages
-         |  WHERE lang NOT IN ('en','de','fr','es','zh')
-         |ORDER BY doc_id, schema_path""".stripMargin,
-
-    // the manifest after two passes = the single-run verdicts (the second
-    // pass must append nothing); portable md5 part key mod 64
-    "resumable_verdicts" ->
-      s"""$P
-         |SELECT ${dh32("url")} % 64 AS part_id,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(sum(CASE WHEN $validSql THEN 1 ELSE 0 END) AS BIGINT) AS valid_rows,
-         |  count(*) = sum(CASE WHEN $validSql THEN 1 ELSE 0 END) AS pass
-         |FROM pages GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // golden serialization literals — HARD-CODED (not computed from the
-    // same code, which would be tautological): drift in form/AST/
-    // JSON-Schema emission fails this gate
-    // effective schema after the composition: url (re) required, lang
-    // narrowed to en/de/fr required, text string{min 1} OPTIONAL (null
-    // accepted), closed over the three physical columns
-    "schema_ops_verdicts" ->
-      s"""$P
-         |SELECT doc_id,
-         |  regexp_matches(url, '^https?://[^\\s]+$$')
-         |  AND lang IN ('en','de','fr')
-         |  AND (doc_id % 53 = 9 OR length(text) >= 1) AS ok
-         |FROM pages ORDER BY doc_id""".stripMargin,
-
-    // body = '' when doc_id%41=5 (this gate's injection) OR when the
-    // pages CTE itself injected an empty text — both must fail :string{min 1}
-    "approx_distinct_law" ->
-      """SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
-        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-        |  TRUE AS within_5pct
-        |FROM lineitem""".stripMargin,
-
-    // exact-D arithmetic identical to drift_ks_value's oracle
-    "ks_sketch_law" ->
-      """WITH g AS (SELECT value AS v,
-        |    CAST(sum(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS da,
-        |    CAST(sum(CASE WHEN event_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS db
-        |  FROM events GROUP BY value),
-        |tot AS (SELECT CAST(sum(da) AS BIGINT) AS na,
-        |               CAST(sum(db) AS BIGINT) AS nb FROM g),
-        |cum AS (SELECT sum(da) OVER (ORDER BY v) AS ca,
-        |               sum(db) OVER (ORDER BY v) AS cb FROM g)
-        |SELECT round(max(abs(ca * 1.0 / (SELECT na FROM tot)
-        |                   - cb * 1.0 / (SELECT nb FROM tot))), 6) AS ks_stat,
-        |  TRUE AS sketch_close
-        |FROM cum""".stripMargin,
-
-    "native_hash_law" ->
-      s"""$P,
-         |g AS (SELECT md5(text) AS th, doc_id FROM pages
-         |      WHERE length(text) > 0)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  TRUE AS minhash_equal, TRUE AS simhash_equal
-         |FROM g a JOIN g b ON a.th = b.th AND a.doc_id < b.doc_id
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "infer_approx_law" ->
-      """SELECT col, TRUE AS agree FROM (VALUES ('doc_id'), ('lang'),
-        |  ('text'), ('n_chars')) t(col) ORDER BY col""".stripMargin,
-
-    "schema_ops_union" ->
-      s"""$P
-         |SELECT doc_id,
-         |  (doc_id % 37 = 3 OR lang IN ('en','de') OR lang IN ('fr','es'))
-         |  AND doc_id % 41 <> 5 AND length(text) >= 1 AS ok
-         |FROM pages ORDER BY doc_id""".stripMargin,
-
-    "export_forms" -> {
-      val flagshipForm =
-        """[:map {:closed true} [:doc_id {:optional true} :int] [:url [:re "^https?://[^\\s]+$"]] [:warc_ts [:time/instant {:min "2025-01-01T00:00:00Z" :max "2026-05-01T00:00:00Z"}]] [:html :bytes] [:text [:string {:min 1}]] [:lang [:enum "en" "de" "fr" "es" "zh"]]]"""
-      val flagshipAst =
-        """{"type": "map", "closed": true, "entries": [{"key": "doc_id", "optional": true, "schema": {"type": "int"}}, {"key": "url", "optional": false, "schema": {"type": "re", "pattern": "^https?://[^\\s]+$"}}, {"key": "warc_ts", "optional": false, "schema": {"type": "instant", "min": "2025-01-01T00:00:00Z", "max": "2026-05-01T00:00:00Z"}}, {"key": "html", "optional": false, "schema": {"type": "bytes"}}, {"key": "text", "optional": false, "schema": {"type": "string", "min": 1}}, {"key": "lang", "optional": false, "schema": {"type": "enum", "values": [{"t": "string", "v": "en"}, {"t": "string", "v": "de"}, {"t": "string", "v": "fr"}, {"t": "string", "v": "es"}, {"t": "string", "v": "zh"}]}}]}"""
-      val flagshipJs =
-        """{"type": "object", "properties": {"doc_id": {"type": "integer"}, "url": {"type": "string", "pattern": "^https?://[^\\s]+$"}, "warc_ts": {"type": "string", "format": "date-time"}, "html": {"type": "string", "contentEncoding": "base64"}, "text": {"type": "string", "minLength": 1}, "lang": {"type": "string", "enum": ["en", "de", "fr", "es", "zh"]}}, "required": ["url", "warc_ts", "html", "text", "lang"], "additionalProperties": false}"""
-      val scopedForm =
-        """[:schema {:registry {:node [:map [:v [:int {:min 0}]] [:kids {:optional true} [:vector [:ref node]]]]}} [:ref node]]"""
-      val scopedJs =
-        """{"$ref": "#/definitions/node", "definitions": {"node": {"type": "object", "properties": {"v": {"type": "integer", "minimum": 0}, "kids": {"type": "array", "items": {"$ref": "#/definitions/node"}}}, "required": ["v"]}}}"""
-      val scopedSwagger =
-        """{"$ref": "#/definitions/node", "definitions": {"node": {"type": "object", "properties": {"v": {"type": "integer", "format": "int64", "minimum": 0}, "kids": {"type": "array", "items": {"$ref": "#/definitions/node"}}}, "required": ["v"]}}}"""
-      val swaggerSpec =
-        """{"parameters": [{"in": "body", "name": "body", "description": "", "required": true, "schema": {"$ref": "#/definitions/req-body"}}, """ +
-          """{"in": "query", "name": "a", "description": "", "required": true, "type": "integer", "format": "int64"}, """ +
-          """{"in": "query", "name": "b", "description": "", "required": true, "type": "string", "minLength": 10}, """ +
-          """{"in": "header", "name": "c", "description": "", "required": true, "type": "string"}], """ +
-          """"responses": {"200": {"description": "", "schema": {"type": "object", "properties": {"bar": {"type": "string"}}, "required": ["bar"]}}, "500": {"description": "fail"}}, """ +
-          """"definitions": {"req-body": {"type": "object", "additionalProperties": {}}}}"""
-      val structDdl =
-        "doc_id BIGINT,url STRING NOT NULL,warc_ts TIMESTAMP NOT NULL," +
-          "html BINARY NOT NULL,text STRING NOT NULL,lang STRING NOT NULL"
-      val flagshipSwagger =
-        """{"type": "object", "properties": {"doc_id": {"type": "integer", "format": "int64"}, "url": {"type": "string", "pattern": "^https?://[^\\s]+$"}, "warc_ts": {"type": "string", "format": "date-time"}, "html": {"type": "string", "contentEncoding": "base64"}, "text": {"type": "string", "minLength": 1}, "lang": {"type": "string", "enum": ["en", "de", "fr", "es", "zh"]}}, "required": ["url", "warc_ts", "html", "text", "lang"], "additionalProperties": false}"""
-      val liteForm =
-        """[:map [:id :int] [:tag {:optional true} :string] [:langs [:vector :string]]]"""
-      val dotPage =
-        """digraph {\n  node [shape="record", style="filled", color="#000000"]\n  edge [dir="back", arrowtail="none"]\n  \n  "Page" [label="{Page|:url :string\l:meta Page$Meta\l}", fillcolor="#fff0cd"]\n  "Page$Meta" [label="{Page$Meta|:lang [:enum \"en\" \"de\"]\l}", fillcolor="#e6caab"]\n  \n  "Page" -> "Page$Meta" [arrowtail="diamond"]\n}\n"""
-      val umlPage =
-        """@startuml\nentity Page {\n :url :string\n :meta Page$Meta\n}\nabstract Page$Meta {\n :lang [:enum "en" "de"]\n}\nPage *-- Page$Meta\n@enduml\n"""
-      val kondoFlagship =
-        """{:op :keys, :opt {:doc_id :int}, :req {:url :string, :warc_ts :any, :html :char-sequence, :text :string, :lang :string}}"""
-      val kondoConfig =
-        """{:linters {:unresolved-symbol {:exclude [(malli.core/=>)]}, :type-mismatch {:namespaces {graft.pages {valid-page? {:arities {1 {:args [""" +
-          kondoFlagship +
-          """], :ret :boolean}}}, merge-texts {:arities {:varargs {:args [:string {:op :rest, :spec :string}], :ret :string, :min-arity 1}}}}}}}}"""
-      // malli.destructure extraction goldens (reference
-      // destructure.cljc:59-119 fold semantics over the fixture bindings)
-      val destructVararg =
-        "[:cat :string :any [:maybe [:cat [:? :any] [:? :any] [:* :any]]] [:* :any]]"
-      val destructMap =
-        "[:cat [:orn [:map [:map [:url :any] [:lang :any]]]" +
-          " [:args [:schema [:* [:alt [:cat [:= :url] :any]" +
-          " [:cat [:= :lang] :any]" +
-          " [:cat [:not [:enum :url :lang]] :any]]]]]]]"
-      val destructFn =
-        "[:function [:=> [:cat :string] :any] [:=> [:cat :string [:* :int]] :any]]"
-      val prettyPage =
-        """-- Validation Error ----------------------------------------\n\n""" +
-          """Value\n\n  {:count ..., :lang "xx", :url 42}\n\n""" +
-          """Errors\n\n  {:lang ["should be one of the allowed values"],\n""" +
-          """   :url ["should be a string"]}\n\n""" +
-          """Schema\n\n  [:map\n   [:url :string]\n   [:count [:int {:min 0}]]\n""" +
-          """   [:lang {:optional true} [:enum "en" "de"]]]\n\n""" +
-          """More information\n\n  https://cljdoc.org/d/metosin/malli/CURRENT\n\n""" +
-          ("-" * 60)
-      val genAstRecur = "{:op :recur, :target :recur0}"
-      val genAstFormula =
-        "{:op :recursive-gen, :target :recur0, :max-depth 3, " +
-          ":rec-gen {:op :one-of, :generators [" +
-          "{:op :boolean} " +
-          "{:op :tuple, :generators [{:op :return, :value :not} {:op :boolean}]} " +
-          "{:op :tuple, :generators [{:op :return, :value :and} " +
-          s"{:op :vector, :generator $genAstRecur, :max-elements 8}]} " +
-          "{:op :tuple, :generators [{:op :return, :value :or} " +
-          s"{:op :vector, :generator $genAstRecur, :max-elements 8}]}]}, " +
-          ":scalar-gen {:op :one-of, :generators [" +
-          "{:op :boolean} " +
-          "{:op :tuple, :generators [{:op :return, :value :not} {:op :boolean}]}]}}"
-      def lit(x: String) = "'" + x.replace("'", "''") + "'"
-      val explainData =
-        "nil ~ path=a;in=a;schema=[:vector [:maybe :string]];value=1" +
-          ";type=:malli.core/invalid-type" +
-          " ~ path=a/0/0;in=a/0;schema=:string;value=true" +
-          " ~ path=a;in=a;schema=[:map [:a [:vector [:maybe :string]]]]" +
-          ";value=null;type=:malli.core/missing-key"
-      val fnArrowInfo =
-        "eq=true|{:min 2, :max 2, :arity 2, :input [:cat :int :int], " +
-          ":output :int, :guard nil}|{:min 1, :max nil, :arity :varargs, " +
-          ":input [:cat :int [:* :string]], :output :int, :guard nil}"
-      Seq("flagship_ast" -> flagshipAst, "flagship_form" -> flagshipForm,
-        "explain_data" -> explainData,
-        "fn_arrow_info" -> fnArrowInfo,
-        "generator_ast_formula" -> genAstFormula,
-        "kondo_flagship" -> kondoFlagship,
-        "kondo_config" -> kondoConfig,
-        "destructure_vararg" -> destructVararg,
-        "destructure_map" -> destructMap,
-        "destructure_fn" -> destructFn,
-        "pretty_page" -> prettyPage,
-        "flagship_jsonschema" -> flagshipJs,
-        "flagship_swagger" -> flagshipSwagger,
-        "lite_form" -> liteForm,
-        "dot_page" -> dotPage,
-        "plantuml_page" -> umlPage,
-        // flagship = closed map of 6 leaf entries → 7 nodes; subschema
-        // paths = root + one per entry, in declaration order
-        "walk_fold" ->
-          "nodes=7;paths=,doc_id,url,warc_ts,html,text,lang",
-        "lens_get_in" ->
-          """[:enum "en" "de" "fr" "es" "zh"]|:int|true""",
-        "scoped_form" -> scopedForm,
-        "value_decode_cat" -> "[1 :kikka]|abc|:-1|[1]|[1 2]",
-        "scoped_jsonschema" -> scopedJs,
-        "scoped_swagger" -> scopedSwagger,
-        "swagger_spec" -> swaggerSpec,
-        // fromForm∘form fixpoint: the round-trip must land back on the
-        // flagship's own golden form literal
-        "edn_roundtrip" -> flagshipForm,
-        "struct_ddl" -> structDdl,
-        "registry_mutable_form" -> "[:map [:x :int]]",
-        "registry_lazy_form" -> "[:int {:min 0}]",
-        // malli.experimental/describe wording of the flagship schema
-        "flagship_describe" -> ("map where {:doc_id (optional) -> " +
-          "<integer>, :url -> <regex pattern matching " +
-          "\"^https?://[^\\s]+$\">, :warc_ts -> <inst (aka date time)>, " +
-          ":html -> <bytes>, :text -> <string with length >= 1>, " +
-          ":lang -> <enum of en, de, fr, es, zh>} with no other keys"))
-        .map { case (n, v) => s"SELECT '$n' AS name, ${lit(v)} AS text" }
-        .mkString("", "\nUNION ALL\n", "\nORDER BY name")
-    },
-
-    // fixed-key map over MapType kvs: k0=(d*13)%50, k1=99 when d%29=10
-    // else (d*13+1)%50, k2=(d*13+2)%50; empty map when d%31=12
-    "v_map_fixed" ->
-      """WITH viol AS (
-        |  SELECT doc_id, 'kvs/k0' AS schema_path, 'kvs/k0' AS in_path,
-        |    'malli.core/missing-key' AS error_key
-        |  FROM documents WHERE doc_id % 31 = 12
-        |  UNION ALL
-        |  SELECT doc_id, 'kvs/k1', 'kvs/k1', 'malli.core/missing-key'
-        |  FROM documents WHERE doc_id % 31 = 12
-        |  UNION ALL
-        |  SELECT doc_id, 'kvs/k1', 'kvs/k1', ':int'
-        |  FROM documents WHERE doc_id % 31 <> 12 AND doc_id % 29 = 10
-        |  UNION ALL
-        |  SELECT doc_id, 'kvs/malli.core/default/k2', 'kvs/k2', ':int'
-        |  FROM documents WHERE doc_id % 31 <> 12 AND (doc_id * 13 + 2) % 50 > 9)
-        |SELECT * FROM viol ORDER BY doc_id, schema_path""".stripMargin,
-
-    // ident/char leaves: regexes shared verbatim with SchemaCompiler.IdentRes
-    "v_ident_violations" ->
-      s"""WITH src AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 97 = 3 THEN 'no colon'
-         |         ELSE ':' || lang END AS kw,
-         |    CASE WHEN doc_id % 89 = 7 THEN ':noslash'
-         |         ELSE ':lang/' || lang END AS qkw,
-         |    CASE WHEN doc_id % 101 = 11 THEN ':lead'
-         |         ELSE 'sym' || CAST(doc_id % 50 AS VARCHAR) END AS sym,
-         |    CASE WHEN doc_id % 103 = 13 THEN 'xx'
-         |         ELSE substring(lang, 1, 1) END AS ch,
-         |    CASE WHEN doc_id % 91 = 5 THEN ':other/' || lang
-         |         ELSE ':user/' || lang END AS nskw
-         |  FROM documents)
-         |SELECT doc_id, 'kw' AS schema_path, ':keyword' AS error_key FROM src
-         |WHERE kw IS NULL OR NOT regexp_matches(kw, '^:[^\\s/:]+(/[^\\s/:]+)?$$')
-         |UNION ALL
-         |SELECT doc_id, 'qkw', ':qualified-keyword' FROM src
-         |WHERE qkw IS NULL OR NOT regexp_matches(qkw, '^:[^\\s/:]+/[^\\s/:]+$$')
-         |UNION ALL
-         |SELECT doc_id, 'sym', ':symbol' FROM src
-         |WHERE sym IS NULL
-         |   OR NOT regexp_matches(sym, '^[^\\s/:0-9][^\\s/:]*(/[^\\s/:]+)?$$')
-         |UNION ALL
-         |SELECT doc_id, 'ch', ':char' FROM src
-         |WHERE ch IS NULL OR length(ch) <> 1
-         |UNION ALL
-         |SELECT doc_id, 'nskw', ':qualified-keyword' FROM src
-         |WHERE nskw IS NULL
-         |   OR NOT regexp_matches(nskw, '^:user/[^\\s/:]+$$')
-         |ORDER BY doc_id, schema_path""".stripMargin,
-
-    // tier-3 explain: the trailing 'k9' matches the inner :cat's first
-    // element then runs out of input → ::m/end-of-input at the column
-    "v_seq3_violations" -> {
-      val NP = NestedDocs.OracleCte
-      s"""$NP
-         |SELECT doc_id, 'seq3' AS schema_path, 'seq3' AS in_path,
-         |  'malli.core/end-of-input' AS error_key
-         |FROM nested WHERE len(seq3) % 2 = 1
-         |ORDER BY doc_id, schema_path""".stripMargin
-    },
-
-    // sequential→set: distinct-ify, sorted csv + cardinality
-    "transform_seq_set" -> {
-      val NP = NestedDocs.OracleCte
-      s"""$NP
-         |SELECT doc_id,
-         |  array_to_string(list_sort(list_distinct(toks)), ',') AS tok_set,
-         |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-         |FROM nested ORDER BY doc_id""".stripMargin
-    },
-
-    "web_unique_url" ->
-      s"""$P
-         |SELECT url, CAST(count(*) AS BIGINT) AS dup_cnt FROM pages
-         |GROUP BY url HAVING count(*) > 1 ORDER BY url""".stripMargin,
-
-    "web_dup_rows" ->
-      s"""$P,
-         |r AS (SELECT doc_id, url,
-         |  row_number() OVER (PARTITION BY url ORDER BY warc_ts) AS rn
-         |  FROM pages)
-         |SELECT doc_id, url FROM r WHERE rn > 1 ORDER BY doc_id""".stripMargin,
-
-    "web_ref_orphans" ->
-      s"""$P,
-         |prev AS (SELECT * FROM pages WHERE doc_id % 97 <> 3)
-         |SELECT p.doc_id, p.url FROM pages p
-         |WHERE NOT EXISTS (SELECT 1 FROM prev WHERE prev.url = p.url)
-         |ORDER BY p.doc_id""".stripMargin,
-
-    "web_byte_identity" ->
-      s"""$P,
-         |prev AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 97 = 5 THEN text || 'X' ELSE text END AS text
-         |  FROM pages)
-         |SELECT p.doc_id FROM pages p JOIN prev ON p.doc_id = prev.doc_id
-         |WHERE md5(p.text) <> md5(prev.text) ORDER BY p.doc_id""".stripMargin,
-
-    "snapshot_report" ->
-      s"""$P,
-         |curr AS (SELECT * FROM pages WHERE doc_id % 89 <> 7),
-         |prev AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 101 = 11 THEN text || '~old' ELSE text END AS text
-         |  FROM pages WHERE doc_id % 97 <> 3),
-         |viol AS (
-         |  SELECT ':re' AS ek FROM curr
-         |    WHERE NOT regexp_matches(url, '^https?://[^\\s]+$$')
-         |  UNION ALL SELECT ':time/instant' FROM curr
-         |    WHERE warc_ts < TIMESTAMP '2025-01-01 00:00:00'
-         |       OR warc_ts > TIMESTAMP '2026-05-01 00:00:00'
-         |  UNION ALL SELECT ':string' FROM curr WHERE length(text) < 1
-         |  UNION ALL SELECT ':enum' FROM curr
-         |    WHERE lang NOT IN ('en','de','fr','es','zh')),
-         |diffv AS (
-         |  SELECT CASE WHEN pv.doc_id IS NULL THEN 'added'
-         |              WHEN c.doc_id IS NULL THEN 'removed'
-         |              WHEN c.text IS DISTINCT FROM pv.text THEN 'modified' END AS change
-         |  FROM curr c FULL OUTER JOIN prev pv ON c.doc_id = pv.doc_id
-         |  WHERE pv.doc_id IS NULL OR c.doc_id IS NULL OR c.text IS DISTINCT FROM pv.text)
-         |SELECT 'rows_total' AS metric, CAST(count(*) AS BIGINT) AS value
-         |  FROM curr
-         |UNION ALL
-         |SELECT 'rows_valid', CAST(sum(CASE WHEN $validSql
-         |  THEN 1 ELSE 0 END) AS BIGINT) FROM curr
-         |UNION ALL
-         |SELECT 'viol:' || ek, CAST(count(*) AS BIGINT) FROM viol GROUP BY 1
-         |UNION ALL
-         |SELECT 'diff:' || change, CAST(count(*) AS BIGINT) FROM diffv
-         |  GROUP BY 1
-         |UNION ALL
-         |SELECT 'freq:lang:' || lang, CAST(count(*) AS BIGINT) FROM curr
-         |  GROUP BY 1
-         |ORDER BY metric""".stripMargin,
-
-    "snapshot_diff" ->
-      s"""$P,
-         |prev AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 101 = 11 THEN text || '~old' ELSE text END AS text
-         |  FROM pages WHERE doc_id % 97 <> 3),
-         |curr AS (SELECT doc_id, text FROM pages WHERE doc_id % 89 <> 7)
-         |SELECT COALESCE(c.doc_id, pv.doc_id) AS doc_id,
-         |  CASE WHEN pv.doc_id IS NULL THEN 'added'
-         |       WHEN c.doc_id IS NULL THEN 'removed'
-         |       WHEN c.text IS DISTINCT FROM pv.text THEN 'modified' END AS change
-         |FROM curr c FULL OUTER JOIN prev pv ON c.doc_id = pv.doc_id
-         |WHERE pv.doc_id IS NULL OR c.doc_id IS NULL OR c.text IS DISTINCT FROM pv.text
-         |ORDER BY doc_id""".stripMargin,
-
-    // blob-exact mirror: DuckDB compares the payload BLOBs directly
-    // (sha256(BLOB) is unavailable in 1.0; equality of blobs is the same
-    // classification the engine reaches via byte digests)
-    "snapshot_diff_binary" ->
-      s"""$P,
-         |prev AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 101 = 11 THEN encode(text) || '\\xFE'::BLOB
-         |       ELSE encode(text) END AS payload
-         |  FROM pages WHERE doc_id % 97 <> 3),
-         |curr AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 101 = 11 THEN encode(text) || '\\xFF'::BLOB
-         |       ELSE encode(text) END AS payload
-         |  FROM pages WHERE doc_id % 89 <> 7)
-         |SELECT COALESCE(c.doc_id, pv.doc_id) AS doc_id,
-         |  CASE WHEN pv.doc_id IS NULL THEN 'added'
-         |       WHEN c.doc_id IS NULL THEN 'removed'
-         |       WHEN c.payload IS DISTINCT FROM pv.payload THEN 'modified' END AS change
-         |FROM curr c FULL OUTER JOIN prev pv ON c.doc_id = pv.doc_id
-         |WHERE pv.doc_id IS NULL OR c.doc_id IS NULL
-         |   OR c.payload IS DISTINCT FROM pv.payload
-         |ORDER BY doc_id""".stripMargin,
-
-    // snapshot 1 = docs with doc_id%3<>0; snapshot 2 = ALL docs with
-    // %7==0 texts rewritten → added = %3==0, modified = %7==0 ∧ %3<>0
-    // (an appended %3==0 ∧ %7==0 row was absent from snapshot 1: added)
-    "snapshot_table_diff" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'added'
-        |       WHEN doc_id % 7 = 0 THEN 'modified' END AS change
-        |FROM documents
-        |WHERE doc_id % 3 = 0 OR doc_id % 7 = 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "snapshot_table_lineage" ->
-      """WITH c AS (SELECT
-        |    CAST(sum(CASE WHEN doc_id % 3 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS base,
-        |    CAST(sum(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS added
-        |  FROM documents)
-        |SELECT CAST(1 AS BIGINT) AS snapshot_id,
-        |  CAST(NULL AS BIGINT) AS parent_id, 'append' AS mode,
-        |  base AS rows_added, base AS total_rows FROM c
-        |UNION ALL
-        |SELECT 2, 1, 'append', added, base + added FROM c
-        |ORDER BY snapshot_id""".stripMargin,
-
-    "merge_schema_verdicts" ->
-      s"""$P
-         |SELECT doc_id,
-         |  regexp_matches(url, '^https?://[^\\s]+$$')
-         |  AND lang IN ('en','de','fr','es','zh')
-         |  AND length(text) >= 1 AS ok
-         |FROM pages ORDER BY doc_id""".stripMargin,
-
-    "fn_string_verdicts" ->
-      """SELECT doc_id,
-        |  coalesce(length(text) > 120, FALSE)
-        |  AND coalesce(lang IN ('en','de','fr'), FALSE)
-        |  AND coalesce(n_chars >= 0 AND (n_chars % 7) < 5, FALSE) AS ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "multi_key_verdicts" ->
-      """SELECT event_id,
-        |  CASE event_type
-        |    WHEN 'purchase' THEN value >= 1.0 AND value <= 1000000000.0
-        |    WHEN 'error' THEN value = 0.0
-        |    ELSE value >= 0.0 AND value <= 1000000000.0 END AS ok
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "streaming_violations" ->
-      """SELECT doc_id, 'lang' AS schema_path, ':enum' AS error_key
-        |  FROM documents WHERE lang NOT IN ('en','de','fr')
-        |UNION ALL
-        |SELECT doc_id, 'n_chars', ':int' FROM documents
-        |  WHERE n_chars < 0 OR n_chars > 400
-        |ORDER BY doc_id, schema_path""".stripMargin,
-
-    "multi_expr_dispatch" ->
-      """SELECT doc_id,
-        |  CASE WHEN n_chars < 200
-        |       THEN n_chars BETWEEN 0 AND 199 AND lang IN ('en','de')
-        |       ELSE n_chars >= 200
-        |        AND lang IN ('en','de','fr','es','zh') END AS ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "map_rest_verdicts" ->
-      """SELECT doc_id,
-        |  length(CASE WHEN doc_id % 33 = 4 THEN '' ELSE lang END) >= 1
-        |  AND length(source) >= 1 AS ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "v_time_violations" ->
-      """WITH src AS (SELECT doc_id,
-        |  (doc_id * 11) % 5000 AS dur_s,
-        |  doc_id % 40 AS per_m,
-        |  (doc_id * 50021) % 5000000 AS ldt_s,
-        |  CASE WHEN doc_id % 61 = 22 THEN '25:99:00'
-        |       ELSE lpad(CAST((doc_id * 7) % 24 AS VARCHAR), 2, '0') || ':'
-        |         || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') || ':'
-        |         || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') END AS lt
-        |  FROM documents)
-        |SELECT doc_id, 'dur' AS schema_path, ':time/duration' AS error_key
-        |  FROM src WHERE dur_s < 100 OR dur_s > 4000
-        |UNION ALL
-        |SELECT doc_id, 'per', ':time/period' FROM src
-        |  WHERE per_m < 2 OR per_m > 30
-        |UNION ALL
-        |SELECT doc_id, 'ldt', ':time/local-date-time' FROM src
-        |  WHERE ldt_s < 345600 OR ldt_s > 4320000
-        |UNION ALL
-        |SELECT doc_id, 'lt', ':time/local-time' FROM src
-        |  WHERE doc_id % 61 = 22 OR lt < '06:00:00' OR lt > '18:00:00'
-        |UNION ALL
-        |SELECT doc_id, 'zid', ':time/zone-id' FROM src WHERE doc_id % 67 = 30
-        |UNION ALL
-        |SELECT doc_id, 'zoff', ':time/zone-offset' FROM src
-        |  WHERE doc_id % 71 = 33
-        |ORDER BY doc_id, schema_path""".stripMargin,
-
-    "v_recursive_ref" ->
-      s"""${NestedDocs.TreeOracleCte}
-         |SELECT doc_id, 'tree/v' AS schema_path, 'tree/v' AS in_path,
-         |    ':int' AS error_key FROM tr WHERE top_v < 0
-         |UNION ALL
-         |SELECT doc_id, 'tree/kids/0/v', 'tree/kids/0/v', ':int'
-         |  FROM tr WHERE mid1_v < 0
-         |UNION ALL
-         |SELECT doc_id, 'tree/kids/0/kids/0/v', 'tree/kids/0/kids/0/v',
-         |    ':int' FROM tr WHERE leaf1_v < 0
-         |ORDER BY doc_id, in_path""".stripMargin,
-
-    "v_nested_violations" -> {
-      val NP = NestedDocs.OracleCte
-      s"""$NP
-         |SELECT doc_id, 'nums' AS schema_path, 'nums' AS in_path,
-         |       'malli.core/limits' AS error_key
-         |  FROM nested WHERE len(nums) < 1 OR len(nums) > 8
-         |UNION ALL
-         |SELECT doc_id, 'nums/0', 'nums/' || CAST(idx - 1 AS VARCHAR), ':int'
-         |  FROM (SELECT doc_id, unnest(nums) AS x,
-         |               generate_subscripts(nums, 1) AS idx FROM nested)
-         |  WHERE x < 0 OR x > 99
-         |UNION ALL
-         |SELECT doc_id, 'tags', 'tags', 'malli.core/duplicate-keys'
-         |  FROM nested WHERE len(list_distinct(tags)) <> len(tags)
-         |UNION ALL
-         |SELECT doc_id, 'tags/0', 'tags/' || CAST(idx - 1 AS VARCHAR), ':string'
-         |  FROM (SELECT doc_id, unnest(tags) AS x,
-         |               generate_subscripts(tags, 1) AS idx FROM nested)
-         |  WHERE length(x) < 1
-         |UNION ALL
-         |SELECT doc_id, 'pair', 'pair', 'malli.core/tuple-size'
-         |  FROM nested WHERE len(pair) <> 2
-         |UNION ALL
-         |SELECT doc_id, 'pair/0', 'pair/0', ':string'
-         |  FROM nested WHERE len(pair) = 2 AND length(pair[1]) < 1
-         |UNION ALL
-         |SELECT doc_id, 'pair/1', 'pair/1', ':enum'
-         |  FROM nested WHERE len(pair) = 2
-         |    AND pair[2] NOT IN ('en','de','fr','es','zh')
-         |UNION ALL
-         |SELECT doc_id, 'kvs', 'kvs', 'malli.core/limits'
-         |  FROM nested WHERE kv_empty
-         |UNION ALL
-         |SELECT doc_id, 'kvs/1', 'kvs/' || k, ':int'
-         |  FROM (SELECT doc_id, kv_empty, unnest(['k0','k1','k2']) AS k,
-         |               unnest([v0, v1, v2]) AS vv FROM nested)
-         |  WHERE NOT kv_empty AND (vv < 0 OR vv > 50)
-         |ORDER BY doc_id, schema_path, in_path""".stripMargin
-    },
-
-    "v_every_window" -> {
-      val NP = NestedDocs.OracleCte
-      s"""$NP
-         |SELECT doc_id, 'nums2/0' AS schema_path,
-         |       'nums2/' || CAST(idx - 1 AS VARCHAR) AS in_path,
-         |       ':int' AS error_key
-         |FROM (SELECT doc_id, unnest(nums2) AS x,
-         |             generate_subscripts(nums2, 1) AS idx FROM nested)
-         |WHERE idx <= 2 AND x < 0
-         |ORDER BY doc_id, in_path""".stripMargin
-    },
-
-    "v_seqable_violations" ->
-      """SELECT doc_id, 'xs/0' AS schema_path, 'xs/1' AS in_path,
-        |       ':int' AS error_key
-        |FROM documents WHERE doc_id % 12 = 5 AND doc_id % 7 <> 1
-        |UNION ALL
-        |SELECT doc_id, 'need', 'need', 'malli.core/limits'
-        |FROM documents WHERE doc_id % 10 = 2
-        |ORDER BY doc_id, in_path""".stripMargin,
-
-    "seq_regex_valid" -> {
-      val NP = NestedDocs.OracleCte
-      s"""$NP
-         |SELECT doc_id,
-         |  COALESCE(len(seq1) = 3 AND regexp_matches(seq1[1], '^a')
-         |    AND seq1[2] IN ('en','de','fr','es','zh')
-         |    AND seq1[3] = 'z', FALSE) AS t1,
-         |  len(list_filter(toks,
-         |    t -> NOT regexp_matches(t, '^[a-z]+$$'))) = 0 AS t2,
-         |  COALESCE(len(seq3) % 2 = 0
-         |    AND len(list_filter(range(1, len(seq3) + 1),
-         |      i -> CASE WHEN i % 2 = 1 THEN NOT regexp_matches(seq3[i], '^k')
-         |                ELSE NOT regexp_matches(seq3[i], '^v') END)) = 0,
-         |    FALSE) AS t3
-         |FROM nested ORDER BY doc_id""".stripMargin
-    },
-
-    "v_composite_violations" ->
-      """WITH src AS (SELECT doc_id, doc_id % 150 - 20 AS v FROM documents)
-        |SELECT doc_id, 'v/0' AS schema_path, ':int' AS error_key
-        |  FROM src WHERE v < 0
-        |UNION ALL
-        |SELECT doc_id, 'v/1/0', ':int' FROM src
-        |  WHERE NOT (v <= 10 OR v >= 100)
-        |UNION ALL
-        |SELECT doc_id, 'v/1/1', ':int' FROM src
-        |  WHERE NOT (v <= 10 OR v >= 100)
-        |ORDER BY doc_id, schema_path""".stripMargin,
-
-    "v_lineitem_violations" ->
-      s"""WITH dirty AS (
-         |  SELECT l_orderkey, l_linenumber,
-         |    CASE WHEN l_orderkey % 97 = 5 THEN -l_quantity ELSE l_quantity END AS q,
-         |    CASE WHEN l_orderkey % 89 = 7 THEN 'X' ELSE l_returnflag END AS rf,
-         |    l_linestatus AS ls,
-         |    CASE WHEN l_orderkey % 101 = 11 THEN TIMESTAMP '2031-01-01 00:00:00'
-         |         ELSE l_shipdate END AS sd
-         |  FROM lineitem)
-         |SELECT l_orderkey, l_linenumber, 'l_orderkey' AS schema_path,
-         |       ':int' AS error_key FROM dirty WHERE l_orderkey < 1
-         |UNION ALL
-         |SELECT l_orderkey, l_linenumber, 'l_quantity', ':double'
-         |  FROM dirty WHERE q < 1.0 OR q > 50.0
-         |UNION ALL
-         |SELECT l_orderkey, l_linenumber, 'l_returnflag', ':enum' FROM dirty
-         |  WHERE rf NOT IN ('A','N','R')
-         |UNION ALL
-         |SELECT l_orderkey, l_linenumber, 'l_linestatus', ':enum' FROM dirty
-         |  WHERE ls NOT IN ('O','F')
-         |UNION ALL
-         |SELECT l_orderkey, l_linenumber, 'l_shipdate', ':time/instant' FROM dirty
-         |  WHERE sd < TIMESTAMP '1990-01-01 00:00:00'
-         |     OR sd > TIMESTAMP '2010-01-01 00:00:00'
-         |ORDER BY l_orderkey, l_linenumber, schema_path""".stripMargin,
-
-    "v_events_violations" ->
-      s"""WITH dirty AS (
-         |  SELECT event_id,
-         |    CASE WHEN event_id % 101 = 13 THEN 'bogus' ELSE event_type END AS et,
-         |    CASE WHEN event_id % 103 = 17 THEN -1.0 ELSE value END AS v,
-         |    CASE WHEN event_id % 107 = 19 THEN TIMESTAMP '2030-01-01 00:00:00'
-         |         ELSE ts END AS tts
-         |  FROM events)
-         |SELECT event_id, 'event_type' AS schema_path, ':enum' AS error_key
-         |  FROM dirty WHERE et NOT IN ('view','click','signup','purchase','error')
-         |UNION ALL
-         |SELECT event_id, 'value', ':double' FROM dirty
-         |  WHERE v < 0.0 OR v > 1000000000.0
-         |UNION ALL
-         |SELECT event_id, 'ts', ':time/instant' FROM dirty
-         |  WHERE tts < TIMESTAMP '2024-01-01 00:00:00'
-         |     OR tts > TIMESTAMP '2024-02-01 00:00:00'
-         |ORDER BY event_id, schema_path""".stripMargin,
-
-    // same dirty-events derivation; 1-hour event-time windows as epoch
-    // seconds via time_bucket — valid := the full eventsSchema conjunction
-    "streaming_windowed" ->
-      s"""WITH dirty AS (
-         |  SELECT event_id,
-         |    CASE WHEN event_id % 101 = 13 THEN 'bogus' ELSE event_type END AS et,
-         |    CASE WHEN event_id % 103 = 17 THEN -1.0 ELSE value END AS v,
-         |    CASE WHEN event_id % 107 = 19 THEN TIMESTAMP '2030-01-01 00:00:00'
-         |         ELSE ts END AS tts
-         |  FROM events)
-         |SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', tts)) AS BIGINT)
-         |    AS win_start,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(sum(CASE WHEN event_id >= 0
-         |    AND et IN ('view','click','signup','purchase','error')
-         |    AND v >= 0.0 AND v <= 1000000000.0
-         |    AND tts >= TIMESTAMP '2024-01-01 00:00:00'
-         |    AND tts <= TIMESTAMP '2024-02-01 00:00:00'
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS valid_rows
-         |FROM dirty GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // :time string decode — injections mirrored by predicate, ldt via
-    // DuckDB timestamp cast + strftime
-    "decode_time" ->
-      """WITH src AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 101 = 11 THEN 'not-a-date'
-        |         ELSE '2024-03-' || lpad(CAST((doc_id % 28) + 1 AS VARCHAR), 2, '0')
-        |              || 'T' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0')
-        |              || ':30:00' END AS ldt
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 97 = 3 THEN NULL
-        |       ELSE (doc_id % 5) * 3600 + (doc_id % 60) * 60 END AS dur_secs,
-        |  CASE WHEN doc_id % 89 = 7 THEN NULL
-        |       ELSE (doc_id % 3) * 12 + (doc_id % 12) END AS per_months,
-        |  CASE WHEN doc_id % 101 = 11 THEN NULL
-        |       ELSE strftime(CAST(ldt AS TIMESTAMP), '%Y-%m-%d %H:%M:%S')
-        |       END AS ldt_str
-        |FROM src ORDER BY doc_id""".stripMargin,
-
-    // stateful streaming dedup: OVERLAPPING batches A = doc_id%3 in {0,1},
-    // B = {1,2} — keys seen in A are state-suppressed in B; emitted =
-    // min doc_id per url in A, plus min-in-B for urls A never saw
-    // (NOT EXISTS, not NOT IN — a NULL in the subquery would poison NOT IN)
-    "streaming_dedup" ->
-      s"""$P,
-         |a AS (SELECT url, min(doc_id) AS first_id FROM pages
-         |      WHERE url IS NOT NULL AND doc_id % 3 < 2 GROUP BY url),
-         |b AS (SELECT url, min(doc_id) AS first_id FROM pages
-         |      WHERE url IS NOT NULL AND doc_id % 3 > 0 GROUP BY url)
-         |SELECT url, first_id FROM a
-         |UNION ALL
-         |SELECT b.url, b.first_id FROM b
-         |WHERE NOT EXISTS (SELECT 1 FROM a WHERE a.url = b.url)
-         |ORDER BY url""".stripMargin,
-
-    "stats_orders" -> Seq("o_custkey", "o_orderkey").map { c =>
-      s"""SELECT '$c' AS column_name, CAST(count($c) AS BIGINT) AS cnt,
-         |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_cnt,
-         |  CAST(min($c) AS VARCHAR) AS min_val, CAST(max($c) AS VARCHAR) AS max_val
-         |FROM orders""".stripMargin
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY column_name"),
-
-    "nulls_lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
-      "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-      "l_returnflag", "l_linestatus", "l_shipdate").map { c =>
-      s"""SELECT '$c' AS column_name,
-         |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_cnt,
-         |  CAST(count(*) AS BIGINT) AS total FROM lineitem""".stripMargin
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY column_name"),
-
-    "unique_orders" ->
-      """SELECT o_orderkey, CAST(count(*) AS BIGINT) AS dup_cnt FROM orders
-        |GROUP BY 1 HAVING count(*) > 1 ORDER BY 1""".stripMargin,
-
-    "ref_lineitem_orders" ->
-      """SELECT l_orderkey, CAST(count(*) AS BIGINT) AS orphan_rows
-        |FROM lineitem l
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "salted_lang_counts" ->
-      s"""$P
-         |SELECT lang, CAST(count(*) AS BIGINT) AS cnt
-         |FROM pages GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        |  CAST(count(*) AS BIGINT) AS cnt
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "join_priority_counts" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "drift_lang_freqs" ->
-      """SELECT lang,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ra,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS rb
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "drift_chisq_lang" ->
-      """WITH fa AS (SELECT lang, count(*) AS ra FROM documents
-        |            WHERE doc_id % 2 = 0 GROUP BY 1),
-        |fb AS (SELECT lang, count(*) AS rb FROM documents
-        |       WHERE doc_id % 2 = 1 GROUP BY 1),
-        |cells AS (SELECT COALESCE(ra, 0) AS ra, COALESCE(rb, 0) AS rb
-        |          FROM fa FULL OUTER JOIN fb USING(lang)),
-        |tots AS (SELECT CAST(sum(ra) AS BIGINT) AS na,
-        |                CAST(sum(rb) AS BIGINT) AS nb,
-        |                CAST(count(*) AS BIGINT) AS k FROM cells)
-        |SELECT round(sum(pow(sqrt(nb * 1.0 / na) * ra
-        |                   - sqrt(na * 1.0 / nb) * rb, 2) / (ra + rb)), 4)
-        |         AS statistic,
-        |  max(k) - 1 AS dof, max(na) AS n_a, max(nb) AS n_b
-        |FROM cells, tots""".stripMargin,
-
-    "drift_ks_value" ->
-      """WITH g AS (SELECT value AS v,
-        |    CAST(sum(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS da,
-        |    CAST(sum(CASE WHEN event_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS db
-        |  FROM events GROUP BY value),
-        |tot AS (SELECT CAST(sum(da) AS BIGINT) AS na,
-        |               CAST(sum(db) AS BIGINT) AS nb FROM g),
-        |cum AS (SELECT sum(da) OVER (ORDER BY v) AS ca,
-        |               sum(db) OVER (ORDER BY v) AS cb FROM g)
-        |SELECT round(max(abs(ca * 1.0 / (SELECT na FROM tot)
-        |                   - cb * 1.0 / (SELECT nb FROM tot))), 6) AS ks_stat,
-        |  (SELECT na FROM tot) AS n_a, (SELECT nb FROM tot) AS n_b
-        |FROM cum""".stripMargin,
-
-    "decode_strings" ->
-      """WITH src AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 10 = 0 THEN 'x' || CAST(doc_id AS VARCHAR)
-        |       ELSE CAST(doc_id AS VARCHAR) END AS s_int,
-        |  CASE WHEN doc_id % 7 = 0 THEN 'true'
-        |       WHEN doc_id % 7 = 1 THEN 'false' ELSE 'maybe' END AS s_bool,
-        |  CASE WHEN doc_id % 5 = 0 THEN '' ELSE 'v' END AS s_str
-        |  FROM documents)
-        |SELECT doc_id, TRY_CAST(s_int AS BIGINT) AS d_int,
-        |  CASE WHEN s_bool = 'true' THEN true
-        |       WHEN s_bool = 'false' THEN false ELSE NULL END AS d_bool,
-        |  NULLIF(s_str, '') AS d_str
-        |FROM src ORDER BY doc_id""".stripMargin,
-
-    // json ingestion: the oracle rebuilds the parse result from the same
-    // source columns (the JSON text was constructed from them); the
-    // malformed every-17th document yields null fields and fails
-    "json_ingest" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 17 = 0 THEN NULL ELSE doc_id END AS id,
-        |  CASE WHEN doc_id % 17 = 0 THEN NULL ELSE lang END AS jlang,
-        |  CASE WHEN doc_id % 17 = 0 THEN NULL
-        |       WHEN doc_id % 13 = 0 THEN 1.5 ELSE 2.0 END AS score,
-        |  doc_id % 17 <> 0 AS ok,
-        |  true AS rt_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the sig is computed over the ORC-round-tripped values engine-side
-    // and over the parquet ORIGINALS here — equal iff ORC preserved
-    // every field bit-for-bit
-    "orc_ingest" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(('0x'||substring(md5(
-        |      CAST(doc_id AS VARCHAR)||':'||md5(text)||':'||
-        |      CAST(n_chars AS VARCHAR)),1,8))::BIGINT % 1000003)
-        |    AS BIGINT) AS sig,
-        |  TRUE AS all_ok
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "csv_ingest" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 17 = 0 THEN NULL ELSE doc_id END AS id,
-        |  lang AS clang,
-        |  CASE WHEN doc_id % 13 = 0 THEN 1.5 ELSE 2.0 END AS score,
-        |  doc_id % 17 <> 0 AS ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // hinted :and — enter pads 2-digit numbers with a trailing 0, the
-    // int decode + inner (inc, *2) hints run in child order, leave ×10
-    // past 100; hinted :or doubles via branch 1 only when the doubled
-    // value still validates (>= 1)
-    "decode_hinted" ->
-      """WITH src AS (SELECT doc_id,
-        |  CAST(doc_id % 137 AS VARCHAR) AS s_num,
-        |  CAST(doc_id % 23 - 11 AS VARCHAR) AS s_or, lang
-        |  FROM documents),
-        |step AS (SELECT doc_id, s_or, lang,
-        |  (CASE WHEN regexp_full_match(s_num, '[0-9]{2}')
-        |        THEN CAST(s_num || '0' AS BIGINT)
-        |        ELSE CAST(s_num AS BIGINT) END + 1) * 2 AS v2
-        |  FROM src)
-        |SELECT doc_id,
-        |  CASE WHEN v2 >= 100 THEN v2 * 10 ELSE v2 END AS hinted_and,
-        |  CASE WHEN CAST(s_or AS BIGINT) * 2 >= 1
-        |       THEN CAST(s_or AS BIGINT) * 2
-        |       ELSE CAST(s_or AS BIGINT) END AS hinted_or,
-        |  upper(lang) AS lang_up,
-        |  doc_id % 50 AS nested_n,
-        |  ':' || lang AS nested_kw
-        |FROM step ORDER BY doc_id""".stripMargin,
-
-    "transform_pipeline" ->
-      """WITH src AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 9 = 2 THEN 'not-a-uuid'
-        |       ELSE '00000000-0000-4000-a000-'
-        |         || lpad(CAST(doc_id AS VARCHAR), 12, '0') END AS s_uuid,
-        |  '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS s_date,
-        |  CASE WHEN doc_id % 8 = 3 THEN doc_id + 0.5
-        |       ELSE CAST(doc_id AS DOUBLE) END AS num,
-        |  CASE WHEN doc_id % 6 = 1 THEN NULL ELSE lang END AS lang
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN regexp_matches(s_uuid,
-        |    '^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$')
-        |    THEN s_uuid END AS uuid,
-        |  strftime(TRY_CAST(s_date AS DATE), '%Y-%m-%d') AS d_date,
-        |  CASE WHEN num = floor(num) THEN CAST(floor(num) AS BIGINT) END AS d_long,
-        |  COALESCE(lang, 'und') AS lang
-        |FROM src ORDER BY doc_id""".stripMargin,
-
-    "coerce_split" ->
-      """WITH src AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 10 = 0 THEN 'x' || CAST(doc_id AS VARCHAR)
-        |       ELSE CAST(doc_id AS VARCHAR) END AS s_int
-        |  FROM documents),
-        |d AS (SELECT doc_id, TRY_CAST(s_int AS BIGINT) AS v FROM src)
-        |SELECT
-        |  CAST(sum(CASE WHEN v IS NOT NULL AND v >= 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS accepted,
-        |  CAST(sum(CASE WHEN v IS NULL OR v < 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS rejected
-        |FROM d""".stripMargin,
-
-    "parse_orn" ->
-      """SELECT doc_id,
-        |  CASE WHEN v <= -1 THEN 'neg' WHEN v = 0 THEN 'zero'
-        |       WHEN v >= 1 THEN 'pos' END AS tag,
-        |  v AS value
-        |FROM (SELECT doc_id, doc_id % 7 - 3 AS v FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // :or parse = first accepting child (branch 1 covers <= 0, branch 2
-    // the rest); unparse restores v exactly
-    "parse_or" ->
-      """SELECT doc_id, v,
-        |  CASE WHEN v <= -1 THEN 'neg' WHEN v = 0 THEN 'zero'
-        |       ELSE 'pos' END AS tag,
-        |  v AS value, TRUE AS rt_ok
-        |FROM (SELECT doc_id, doc_id % 7 - 3 AS v FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // :and routes parse through the :orn child; the identity variant
-    // nulls where the tightened sibling range rejects; the deep variant
-    // nests Tag('l', Tag(branch, v))
-    "parse_and_transforming" ->
-      """WITH s AS (SELECT doc_id, doc_id % 7 - 3 AS v FROM documents),
-        |tagged AS (SELECT doc_id, v,
-        |  CASE WHEN v <= -1 THEN 'neg' WHEN v = 0 THEN 'zero'
-        |       WHEN v >= 1 THEN 'pos' END AS btag FROM s)
-        |SELECT doc_id, btag AS tag, v AS value,
-        |  CASE WHEN v <= 2 THEN v END AS ident,
-        |  'l' AS deep_tag, btag AS inner_tag, v AS inner_value
-        |FROM tagged ORDER BY doc_id""".stripMargin,
-
-    // the :altn middle entry: first-matching branch names the tag
-    // ('lang' before 'other', same order both engines)
-    "parse_catn_roundtrip" -> {
-      val NP = NestedDocs.OracleCte
-      s"""$NP
-         |SELECT doc_id,
-         |  CASE WHEN ok THEN seq1[1] END AS a,
-         |  CASE WHEN ok THEN
-         |    CASE WHEN seq1[2] IN ('en','de','fr','es','zh') THEN 'lang'
-         |         ELSE 'other' END END AS pl_tag,
-         |  CASE WHEN ok THEN seq1[2] END AS pl,
-         |  CASE WHEN ok THEN seq1[3] END AS z,
-         |  ok AS rt_ok
-         |FROM (SELECT doc_id, seq1,
-         |  COALESCE(len(seq1) = 3 AND regexp_matches(seq1[1], '^a')
-         |    AND (seq1[2] IN ('en','de','fr','es','zh')
-         |         OR regexp_matches(seq1[2], '^x'))
-         |    AND seq1[3] = 'z', FALSE) AS ok FROM nested)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // parse succeeds ⇔ even length AND alternating ^k/^v elements; the
-    // round-trip then holds by construction (flatten ∘ build = id) and
-    // the tree arity is len/2 iterations of the inner :cat
-    "parse_general_roundtrip" -> {
-      val NP = NestedDocs.OracleCte
-      s"""$NP,
-         |bad AS (SELECT doc_id, count(*) AS nbad FROM
-         |    (SELECT doc_id, unnest(seq3) AS e,
-         |            generate_subscripts(seq3, 1) AS i FROM nested)
-         |  WHERE (i % 2 = 1 AND NOT regexp_matches(e, '^k'))
-         |     OR (i % 2 = 0 AND NOT regexp_matches(e, '^v'))
-         |  GROUP BY doc_id),
-         |dec AS (SELECT n.doc_id,
-         |    len(n.seq3) % 2 = 0 AND coalesce(b.nbad, 0) = 0 AS parsed,
-         |    CAST(len(n.seq3) AS BIGINT) AS sz
-         |  FROM nested n LEFT JOIN bad b ON n.doc_id = b.doc_id)
-         |SELECT doc_id, parsed, parsed AS rt_ok,
-         |  CASE WHEN parsed THEN sz // 2 END AS n_pairs
-         |FROM dec ORDER BY doc_id""".stripMargin
-    },
-
-    "spellcheck_suggestions" -> {
-      val keys = Seq("doc_id", "html", "lang", "text", "url", "warc_ts")
-      val arr = keys.map(k => s"'$k'").mkString("[", ", ", "]")
-      val dists = keys.map(k => s"levenshtein(typo, '$k')")
-      val minD = dists.reduce((a, b) => s"least($a, $b)")
-      val cases = keys.zip(dists)
-        .map { case (k, d) => s"WHEN $d = m THEN '$k'" }.mkString(" ")
-      s"""WITH src AS (SELECT doc_id,
-         |  ($arr)[CAST(doc_id % 6 + 1 AS INT)] AS base_k
-         |  FROM documents),
-         |typos AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 2 = 0
-         |       THEN substring(base_k, 1, length(base_k) - 1)
-         |       ELSE substring(base_k, 2, 1) || substring(base_k, 1, 1)
-         |         || substring(base_k, 3, length(base_k)) END AS typo
-         |  FROM src),
-         |scored AS (SELECT doc_id, typo, $minD AS m FROM typos)
-         |SELECT doc_id, typo,
-         |  CASE WHEN m <= greatest(length(typo) // 3, 1)
-         |       THEN CASE $cases END END AS suggestion
-         |FROM scored ORDER BY doc_id""".stripMargin
-    },
-
-    // The message lookup chain end-to-end: warc_ts carries a per-path
-    // :error/message override, text/lang render the reference's SPLICED
-    // :error/fn strings, url falls through to the defaults table.
-    "violations_humanized" ->
-      s"""$P,
-         |viols AS (
-         |  SELECT doc_id, ':re' AS error_key,
-         |         'should match regex' AS message FROM pages
-         |    WHERE NOT regexp_matches(url, '^https?://[^\\s]+$$')
-         |  UNION ALL
-         |  SELECT doc_id, ':time/instant',
-         |         'capture time outside the crawl window' FROM pages
-         |    WHERE warc_ts < TIMESTAMP '2025-01-01 00:00:00'
-         |       OR warc_ts > TIMESTAMP '2026-05-01 00:00:00'
-         |  UNION ALL
-         |  SELECT doc_id, ':string',
-         |         'should be at least 1 character' FROM pages
-         |    WHERE length(text) < 1
-         |  UNION ALL
-         |  SELECT doc_id, ':enum',
-         |         'should be either "en", "de", "fr", "es" or "zh"' FROM pages
-         |    WHERE lang NOT IN ('en','de','fr','es','zh'))
-         |SELECT doc_id, error_key, message
-         |FROM viols ORDER BY doc_id, error_key""".stripMargin,
-
-    // :error/message resolves from the schema property; :error/path
-    // redirects the in-path to creds/password2 (mismatch iff doc_id%7=0).
-    "v_error_path" ->
-      """SELECT doc_id, 'creds/1' AS schema_path,
-        |  'creds/password2' AS in_redirected,
-        |  'passwords don''t match' AS message
-        |FROM documents WHERE doc_id % 7 = 0
-        |ORDER BY doc_id, schema_path""".stripMargin,
-
-    // Byte-exact :error/fn splicing (error.cljc:47-55,145-172): every
-    // branch of messageColumn's CASE, mirrored as literal strings from
-    // the same doc_id arithmetic.
-    "violations_spliced" ->
-      """WITH viols AS (
-        |  SELECT doc_id, 'n' AS schema_path, ':>' AS error_key,
-        |         'should be larger than 800' AS message
-        |  FROM documents WHERE doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'pair', 'malli.core/tuple-size',
-        |         'invalid tuple size 3, expected 2'
-        |  FROM documents WHERE doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'nums', 'malli.core/limits',
-        |         CASE WHEN doc_id % 11 = 0
-        |              THEN 'should have at least 2 elements'
-        |              ELSE 'should have at most 4 elements' END
-        |  FROM documents WHERE doc_id % 11 = 0 OR doc_id % 13 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'score', ':int',
-        |         CASE WHEN doc_id % 17 = 0 THEN 'should be at least 10'
-        |              ELSE 'should be at most 90' END
-        |  FROM documents WHERE doc_id % 17 = 0 OR doc_id % 19 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'flag', ':=', 'should be "ok"'
-        |  FROM documents WHERE doc_id % 23 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'tag', ':not',
-        |         'should not be either "en" or "de"'
-        |  FROM documents WHERE doc_id % 29 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'capped', ':not', 'should be at most 800'
-        |  FROM documents WHERE doc_id % 31 = 0)
-        |SELECT doc_id, schema_path, error_key, message
-        |FROM viols ORDER BY doc_id, schema_path, error_key""".stripMargin,
-
-    "violation_counts" ->
-      s"""$P,
-         |counts AS (
-         |  SELECT ':enum' AS error_key, CAST(count(*) AS BIGINT) AS cnt
-         |    FROM pages WHERE lang NOT IN ('en','de','fr','es','zh')
-         |  UNION ALL
-         |  SELECT ':re', CAST(count(*) AS BIGINT) FROM pages
-         |    WHERE NOT regexp_matches(url, '^https?://[^\\s]+$$')
-         |  UNION ALL
-         |  SELECT ':string', CAST(count(*) AS BIGINT) FROM pages
-         |    WHERE length(text) < 1
-         |  UNION ALL
-         |  SELECT ':time/instant', CAST(count(*) AS BIGINT) FROM pages
-         |    WHERE warc_ts < TIMESTAMP '2025-01-01 00:00:00'
-         |       OR warc_ts > TIMESTAMP '2026-05-01 00:00:00')
-         |SELECT error_key, cnt FROM counts WHERE cnt > 0
-         |ORDER BY error_key""".stripMargin,
-
-    "violations_sampled" ->
-      s"""$P,
-         |vio AS (
-         |  SELECT doc_id, 'url' AS schema_path, ':re' AS error_key
-         |    FROM pages WHERE NOT regexp_matches(url, '^https?://[^\\s]+$$')
-         |  UNION ALL
-         |  SELECT doc_id, 'warc_ts', ':time/instant' FROM pages
-         |    WHERE warc_ts < TIMESTAMP '2025-01-01 00:00:00'
-         |       OR warc_ts > TIMESTAMP '2026-05-01 00:00:00'
-         |  UNION ALL
-         |  SELECT doc_id, 'text', ':string' FROM pages WHERE length(text) < 1
-         |  UNION ALL
-         |  SELECT doc_id, 'lang', ':enum' FROM pages
-         |    WHERE lang NOT IN ('en','de','fr','es','zh'))
-         |SELECT schema_path, error_key, CAST(count(*) AS BIGINT) AS n_viol,
-         |  array_to_string(list_slice(list_sort(list(doc_id)), 1, 5), ',')
-         |    AS exemplars
-         |FROM vio GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "top_hosts" ->
-      s"""$P,
-         |byhost AS (
-         |  SELECT regexp_extract(url, '^https?://([^/]+)/', 1) AS host,
-         |    CAST(count(*) AS BIGINT) AS cnt
-         |  FROM pages
-         |  WHERE regexp_extract(url, '^https?://([^/]+)/', 1) <> ''
-         |  GROUP BY 1),
-         |ranked AS (SELECT host, cnt,
-         |  row_number() OVER (ORDER BY cnt DESC, host ASC) AS rank
-         |  FROM byhost)
-         |SELECT host, cnt, CAST(rank AS BIGINT) AS rank FROM ranked
-         |WHERE rank <= 5 ORDER BY rank""".stripMargin,
-
-    "dedup_exact" ->
-      s"""$P
-         |SELECT md5(text) AS text_hash, CAST(count(*) AS BIGINT) AS dup_cnt
-         |FROM pages GROUP BY 1 HAVING count(*) > 1 ORDER BY 1""".stripMargin,
-
-    // bounded group shape under a 10^5-copy degenerate corpus: the kept
-    // member list is exactly the 100 smallest ids (list_slice of the
-    // full sorted list — the engine side never materializes that full
-    // list; its aggregate state is a 100-capped heap)
-    "dedup_degenerate" ->
-      s"""$P,
-         |degen AS (
-         |  SELECT doc_id, text FROM pages
-         |  UNION ALL
-         |  SELECT 50000000 + CAST(i AS BIGINT), '$DegenerateText'
-         |  FROM range(100000) t(i)),
-         |grp AS (SELECT md5(text) AS text_hash,
-         |    CAST(count(*) AS BIGINT) AS dup_cnt,
-         |    list_slice(list_sort(list(doc_id)), 1, 100) AS ids
-         |  FROM degen GROUP BY 1 HAVING count(*) > 1)
-         |SELECT text_hash, dup_cnt, CAST(len(ids) AS BIGINT) AS kept,
-         |  ids[1] AS id_first, ids[len(ids)] AS id_last_kept
-         |FROM grp ORDER BY text_hash""".stripMargin,
-
-    "v_custom_violations" ->
-      """SELECT doc_id, 'n_chars' AS schema_path, ':user/even' AS error_key
-        |FROM documents WHERE n_chars % 2 = 1 ORDER BY doc_id""".stripMargin,
-
-    "v_validate_violations" ->
-      s"""$P
-         |SELECT * FROM (
-         |  SELECT doc_id, 'url' AS schema_path, 'url/scheme' AS in_path,
-         |         ':url/no-scheme' AS error_key, url AS value
-         |  FROM pages WHERE url NOT LIKE 'http%'
-         |  UNION ALL
-         |  SELECT doc_id, 'url', 'url/doc', ':url/unlucky',
-         |         regexp_extract(url, '([0-9]+)$$', 1)
-         |  FROM pages
-         |  WHERE CAST(regexp_extract(url, '([0-9]+)$$', 1) AS BIGINT) % 3 = 0)
-         |ORDER BY doc_id, in_path""".stripMargin,
-
-    "sample_stratified" ->
-      s"""SELECT lang, CAST(count(*) AS BIGINT) AS n_sampled FROM documents
-         |WHERE ${dh32("CAST(doc_id AS VARCHAR) || '|s0'")} % 10000
-         |  < CAST(CASE WHEN lang = 'de' THEN 0.25
-         |              WHEN lang = 'en' THEN 0.5
-         |              ELSE 0.1 END * 10000 AS BIGINT)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // same funnel: quality thresholds → lang whitelist → keep min doc_id
-    // per md5(text); survivor counts per predicted lang
-    "pipeline_survivors" -> {
-      val stopList = TextOps.Stopwords.map(w => s"'$w'").mkString(", ")
-      val scores = TextOps.Markers.map { case (lang, ws) =>
-        val inList = ws.map(w => s"'$w'").mkString(", ")
-        s"len(list_filter(w, t -> t IN ($inList))) AS s_$lang"
-      }.mkString(",\n    ")
-      val maxE = TextOps.Markers.map(m => s"s_${m._1}")
-        .reduce((a, b) => s"greatest($a, $b)")
-      val cases = TextOps.Markers.map { case (lang, _) =>
-        s"WHEN s_$lang = m AND m > 0 THEN '$lang'"
-      }.mkString(" ")
-      s"""WITH toks AS (SELECT doc_id, text,
-         |    regexp_split_to_array(lower(text), '\\s+') AS w FROM documents),
-         |feat AS (SELECT doc_id, text, len(w) AS n_tokens,
-         |    len(list_filter(w, t -> t IN ($stopList))) AS stop_cnt,
-         |    $scores
-         |  FROM toks),
-         |lp AS (SELECT *, CASE $cases ELSE 'und' END AS lang_pred
-         |  FROM (SELECT *, $maxE AS m FROM feat)),
-         |fil AS (SELECT doc_id, text, lang_pred FROM lp
-         |  WHERE n_tokens >= 20 AND stop_cnt >= 1
-         |    AND lang_pred IN ('en','de','es')),
-         |kept AS (SELECT md5(text) AS h, min(doc_id) AS keep_id
-         |  FROM fil GROUP BY 1),
-         |surv AS (SELECT f.lang_pred FROM kept k
-         |  JOIN fil f ON f.doc_id = k.keep_id AND md5(f.text) = k.h)
-         |SELECT lang_pred, CAST(count(*) AS BIGINT) AS n_survivors
-         |FROM surv GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    // band_key mirrors Dedup.bandKey: the Spark sequential fold
-    // ((acc*m + x%M) % M) over the 2-row slice equals the HUGEINT
-    // polynomial sum Σ (mh%M)*m^(rows-1-i) mod M; packed k1*M2+k2 < 2^62
-    // same md5+affine minima arithmetic as dedup_minhash_lsh's mins
-    // CTE, pivoted to one row per doc (k = 4 seeds)
-    "sql_kernel_minhash" ->
-      s"""$P,
-         |$shinglesCte,
-         |hs AS (SELECT doc_id, ${dh32("s")} AS h FROM sh),
-         |mins AS (
-         |  SELECT doc_id, seed,
-         |    min((h * (2 * seed + 1) + 99991 * seed)
-         |        % ${Dedup.MinhashP}) AS mh
-         |  FROM hs CROSS JOIN (SELECT unnest(range(4)) AS seed) seeds
-         |  GROUP BY doc_id, seed)
-         |SELECT doc_id,
-         |  max(CASE WHEN seed = 0 THEN mh END) AS mh0,
-         |  max(CASE WHEN seed = 1 THEN mh END) AS mh1,
-         |  max(CASE WHEN seed = 2 THEN mh END) AS mh2,
-         |  max(CASE WHEN seed = 3 THEN mh END) AS mh3
-         |FROM mins GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "dedup_minhash_lsh" ->
-      s"""$P,
-         |$shinglesCte,
-         |hs AS (SELECT doc_id, ${dh32("s")} AS h FROM sh),
-         |mins AS (
-         |  SELECT doc_id, seed,
-         |    min((h * (2 * seed + 1) + 99991 * seed)
-         |        % ${Dedup.MinhashP}) AS mh
-         |  FROM hs CROSS JOIN (SELECT unnest(range(8)) AS seed) seeds
-         |  GROUP BY doc_id, seed),
-         |sigs AS (
-         |  SELECT doc_id, seed // 2 AS band,
-         |    CAST(sum(CAST(mh % ${Dedup.BandM1} AS HUGEINT)
-         |          * CAST(round(pow(${Dedup.BandMult1}, 1 - seed % 2)) AS HUGEINT))
-         |        % ${Dedup.BandM1} AS BIGINT) * ${Dedup.BandM2}
-         |    + CAST(sum(CAST(mh % ${Dedup.BandM2} AS HUGEINT)
-         |          * CAST(round(pow(${Dedup.BandMult2}, 1 - seed % 2)) AS HUGEINT))
-         |        % ${Dedup.BandM2} AS BIGINT) AS band_key
-         |  FROM mins GROUP BY doc_id, seed // 2)
-         |SELECT band, band_key, CAST(count(*) AS BIGINT) AS dup_cnt
-         |FROM sigs GROUP BY 1, 2 HAVING count(*) > 1 ORDER BY 1, 2""".stripMargin,
-
-    "dedup_simhash" ->
-      s"""$P,
-         |toks AS (SELECT doc_id,
-         |    unnest(list_distinct(regexp_split_to_array(lower(text), '\\s+'))) AS t
-         |  FROM pages WHERE length(text) > 0),
-         |bits AS (SELECT doc_id, b.bit,
-         |   sum(CASE WHEN CAST(floor(${dh32("'hi:' || t")} / pow(2, b.bit)) AS BIGINT) % 2 = 1
-         |            THEN 1 ELSE -1 END) AS v_hi,
-         |   sum(CASE WHEN CAST(floor(${dh32("'lo:' || t")} / pow(2, b.bit)) AS BIGINT) % 2 = 1
-         |            THEN 1 ELSE -1 END) AS v_lo
-         |  FROM toks CROSS JOIN (SELECT unnest(range(32)) AS bit) b GROUP BY 1, 2),
-         |packed AS (SELECT doc_id,
-         |    CAST(sum(CASE WHEN v_hi > 0 THEN CAST(pow(2, bit) AS BIGINT) ELSE 0 END) AS BIGINT) AS hi,
-         |    CAST(sum(CASE WHEN v_lo > 0 THEN CAST(pow(2, bit) AS BIGINT) ELSE 0 END) AS BIGINT) AS lo
-         |  FROM bits GROUP BY 1),
-         |cands AS (
-         |  SELECT 'hi' AS half, hi AS half_key, CAST(count(*) AS BIGINT) AS dup_cnt
-         |    FROM packed GROUP BY 2 HAVING count(*) > 1
-         |  UNION ALL
-         |  SELECT 'lo', lo, CAST(count(*) AS BIGINT) FROM packed
-         |    GROUP BY 2 HAVING count(*) > 1)
-         |SELECT half, half_key, dup_cnt FROM cands ORDER BY half, half_key""".stripMargin,
-
-    "dedup_jaccard" ->
-      s"""$P,
-         |$shinglesCte,
-         |capped AS (SELECT sh.* FROM sh
-         |  JOIN (SELECT s FROM sh GROUP BY s HAVING count(*) <= greatest(20, (SELECT count(*) FROM toks) // 100)) ok
-         |    ON sh.s = ok.s),
-         |sizes AS (SELECT doc_id AS doc, CAST(count(*) AS BIGINT) AS sz
-         |          FROM capped GROUP BY 1),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(count(*) AS BIGINT) AS inter
-         |  FROM capped a JOIN capped b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, inter, sa.sz AS sz_a, sb.sz AS sz_b
-         |FROM pairs JOIN sizes sa ON sa.doc = id_a JOIN sizes sb ON sb.doc = id_b
-         |WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.9
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // WITH RECURSIVE transitive closure (UNION set-semantics terminates);
-    // component label = min reachable id, mirroring the propagation fixpoint
-    "dedup_clusters" ->
-      s"""${P.replaceFirst("^WITH ", "WITH RECURSIVE ")},
-         |$shinglesCte,
-         |capped AS (SELECT sh.* FROM sh
-         |  JOIN (SELECT s FROM sh GROUP BY s HAVING count(*) <= greatest(20, (SELECT count(*) FROM toks) // 100)) ok
-         |    ON sh.s = ok.s),
-         |sizes AS (SELECT doc_id AS doc, CAST(count(*) AS BIGINT) AS sz
-         |          FROM capped GROUP BY 1),
-         |jpairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(count(*) AS BIGINT) AS inter
-         |  FROM capped a JOIN capped b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |good AS (SELECT id_a, id_b FROM jpairs
-         |  JOIN sizes sa ON sa.doc = id_a JOIN sizes sb ON sb.doc = id_b
-         |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.9),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM good
-         |          UNION SELECT id_b, id_a FROM good),
-         |walk(a, l) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM edges) q
-         |  UNION
-         |  SELECT e.a, w.l FROM edges e JOIN walk w ON e.b = w.a),
-         |labels AS (SELECT a AS id, min(l) AS cluster_id FROM walk GROUP BY a)
-         |SELECT cluster_id, CAST(count(*) AS BIGINT) AS sz,
-         |  string_agg(CAST(id AS VARCHAR), ',' ORDER BY id) AS members
-         |FROM labels GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // sampleWindows mirror: stride = greatest((len-8)/2.0, 1.0) double
-    // division (Column./), offset cast truncates → floor() here (DuckDB
-    // CAST(double AS INT) rounds); blob windows sliced on the hex string
-    "multimodal_frames" ->
-      """WITH b AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN '\xFF\xD8'::BLOB || encode(text)
-        |       WHEN doc_id % 4 = 1 THEN '\x89PNG'::BLOB || encode(text)
-        |       WHEN doc_id % 4 = 2 THEN 'RIFF'::BLOB || encode(text)
-        |       ELSE encode(text) END AS bin
-        |  FROM documents),
-        |fr AS (SELECT doc_id, i,
-        |    CAST(floor(i * greatest((octet_length(bin) - 8) / 2.0, 1.0) + 1)
-        |      AS BIGINT) AS pos,
-        |    hex(bin) AS h
-        |  FROM b CROSS JOIN (SELECT unnest(range(3)) AS i) ii)
-        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
-        |  md5(substring(h, CAST((pos - 1) * 2 + 1 AS INT), 16)) AS frame_h
-        |FROM fr ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "multimodal_meta" ->
-      """WITH b AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN '\xFF\xD8'::BLOB || encode(text)
-        |       WHEN doc_id % 4 = 1 THEN '\x89PNG'::BLOB || encode(text)
-        |       WHEN doc_id % 4 = 2 THEN 'RIFF'::BLOB || encode(text)
-        |       ELSE encode(text) END AS bin
-        |  FROM documents)
-        |SELECT doc_id, CAST(octet_length(bin) AS BIGINT) AS n_bytes,
-        |  CASE WHEN substring(hex(bin), 1, 4) = 'FFD8' THEN 'jpeg'
-        |       WHEN substring(hex(bin), 1, 8) = '89504E47' THEN 'png'
-        |       WHEN substring(hex(bin), 1, 8) = '52494646' THEN 'riff'
-        |       ELSE 'unknown' END AS kind,
-        |  md5(hex(bin)) AS content_h
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    // Generation mirror: the PortableRng draw is
-    // h32("<id>:<salt>") ≡ ('0x'||substring(md5(...),1,8))::BIGINT and
-    // child ids are h32("<id>#<k>") — the oracle replays every draw of
-    // the gate schema (salts: entry i gets 1+13*(i+1); genString uses
-    // salt/salt+1; sizeIn salt+99; collection elements salt+2 on the
-    // mixed id; maybe gives the child salt+1). `ok` is expected
-    // all-true: the engine side proves the validate∘generate law.
-    "gen_roundtrip" ->
-      """WITH r AS (
-        |  SELECT i AS row_id,
-        |    ('0x'||substring(md5(CAST(i AS VARCHAR)||'#7'),1,8))::BIGINT AS rid
-        |  FROM (SELECT unnest(range(200)) AS i) b),
-        |d AS (
-        |  SELECT row_id, rid, rid_s,
-        |    ('0x'||substring(md5(rid_s||':14'),1,8))::BIGINT % 8 AS d14,
-        |    ('0x'||substring(md5(rid_s||':15'),1,8))::BIGINT % 8 AS d15,
-        |    ('0x'||substring(md5(rid_s||':27'),1,8))::BIGINT % 121 AS d27,
-        |    ('0x'||substring(md5(rid_s||':40'),1,8))::BIGINT % 1000000 AS d40,
-        |    ('0x'||substring(md5(rid_s||':53'),1,8))::BIGINT % 2 AS d53,
-        |    ('0x'||substring(md5(rid_s||':66'),1,8))::BIGINT % 3 AS d66,
-        |    ('0x'||substring(md5(rid_s||':178'),1,8))::BIGINT % 3 AS d178,
-        |    ('0x'||substring(md5(rid_s||':92'),1,8))::BIGINT % 4 AS d92,
-        |    ('0x'||substring(md5(rid_s||':93'),1,8))::BIGINT % 8 AS d93,
-        |    ('0x'||substring(md5(rid_s||':94'),1,8))::BIGINT % 5 AS d94,
-        |    ('0x'||substring(md5(CAST(('0x'||substring(md5(rid_s||'#1'),1,8))::BIGINT AS VARCHAR)||':81'),1,8))::BIGINT % 3 AS e1,
-        |    ('0x'||substring(md5(CAST(('0x'||substring(md5(rid_s||'#2'),1,8))::BIGINT AS VARCHAR)||':81'),1,8))::BIGINT % 3 AS e2,
-        |    ('0x'||substring(md5(CAST(('0x'||substring(md5(rid_s||'#3'),1,8))::BIGINT AS VARCHAR)||':81'),1,8))::BIGINT % 3 AS e3
-        |  FROM (SELECT row_id, rid, CAST(rid AS VARCHAR) AS rid_s FROM r) rr)
-        |SELECT row_id,
-        |  substring(['alpha','beta','gamma','delta','omega','kappa','sigma','theta'][CAST(d14 AS INT)+1]
-        |    || 'xxxxxxxxxx', 1, CAST(3 + d15 AS INT)) AS name,
-        |  CAST(d27 AS BIGINT) AS age,
-        |  0.0 + CAST(d40 AS DOUBLE)/1000000*(1.0-0.0) AS score,
-        |  d53 = 1 AS flag,
-        |  ['en','de','fr'][CAST(d66 AS INT)+1] AS lang,
-        |  concat_ws(',', ['a','b','c'][CAST(e1 AS INT)+1],
-        |    CASE WHEN 1 + d178 >= 2 THEN ['a','b','c'][CAST(e2 AS INT)+1] END,
-        |    CASE WHEN 1 + d178 >= 3 THEN ['a','b','c'][CAST(e3 AS INT)+1] END) AS tags_s,
-        |  CASE WHEN d92 = 0 THEN NULL
-        |       ELSE substring(['alpha','beta','gamma','delta','omega','kappa','sigma','theta'][CAST(d93 AS INT)+1]
-        |         || 'xxxxxx', 1, CAST(2 + d94 AS INT)) END AS note,
-        |  TRUE AS ok
-        |FROM d ORDER BY row_id""".stripMargin,
-
-    // :gen/... override mirror — map-entry i draws at salt 1+13*(i+1)
-    // (pick 14, tagged 27, ret none, bounded 53, nested 66, mapped 79);
-    // :gen/elements indexes the literal array with the SAME salt,
-    // :gen/schema delegates at the same salt, :gen/min-max narrows the
-    // int span (10 + d%11), and each :gen/fmap replays as its SQL twin:
-    // (partial str "v_") = 'v_'||x, (fn [x] (str x "!")) = x||'!',
-    // (fn [x] (+ (* x 2) 1)) = 2*x+1.
-    "gen_props_roundtrip" ->
-      """WITH r AS (
-        |  SELECT i AS row_id,
-        |    ('0x'||substring(md5(CAST(i AS VARCHAR)||'#7'),1,8))::BIGINT AS rid
-        |  FROM (SELECT unnest(range(200)) AS i) b),
-        |d AS (
-        |  SELECT row_id,
-        |    ('0x'||substring(md5(rid_s||':14'),1,8))::BIGINT % 3 AS d14,
-        |    ('0x'||substring(md5(rid_s||':27'),1,8))::BIGINT % 2 AS d27,
-        |    ('0x'||substring(md5(rid_s||':53'),1,8))::BIGINT % 11 AS d53,
-        |    ('0x'||substring(md5(rid_s||':66'),1,8))::BIGINT % 2 AS d66,
-        |    ('0x'||substring(md5(rid_s||':79'),1,8))::BIGINT % 10 AS d79
-        |  FROM (SELECT row_id, CAST(rid AS VARCHAR) AS rid_s FROM r) rr)
-        |SELECT row_id,
-        |  ['aa','bb','cc'][CAST(d14 AS INT)+1] AS pick,
-        |  'v_' || CAST([1,2][CAST(d27 AS INT)+1] AS VARCHAR) AS tagged,
-        |  CAST(42 AS BIGINT) AS ret,
-        |  CAST(10 + d53 AS BIGINT) AS bounded,
-        |  CAST([5,6][CAST(d66 AS INT)+1] AS VARCHAR) || '!' AS nested,
-        |  CAST(2 * d79 + 1 AS BIGINT) AS mapped,
-        |  TRUE AS ok
-        |FROM d ORDER BY row_id""".stripMargin,
-
-    // law gate (sketch-law pattern): the engine proves validate∘generate
-    // for :re (reverse AnchoredScan) and recursive :ref (unrollRefs) plus
-    // diversity/depth; the oracle pins the deterministic verdicts.
-    "gen_re_recursive_law" ->
-      """SELECT CAST(300 AS BIGINT) AS n_rows,
-        |  TRUE AS re_all_valid, TRUE AS re_distinct_ok,
-        |  TRUE AS uuid_all_valid, TRUE AS tree_all_valid,
-        |  TRUE AS tree_has_depth2""".stripMargin,
-
-    // Replays the checker's 100 portable-RNG draws (rid = h32(i||'#'||seed),
-    // a0 = 0 + h32(rid||':14') % 10001 — map-entry salt 1+13*1), takes the
-    // first law violation in generation order as the counterexample, and
-    // pins the shrinker to the law's true minimum (101 is the smallest
-    // int > 100; the step-down candidate makes the greedy fixpoint exact).
-    "fn_check_shrink" ->
-      """WITH r AS (
-        |  SELECT i,
-        |    ('0x'||substring(md5(CAST(i AS VARCHAR)||'#7'),1,8))::BIGINT AS rid
-        |  FROM (SELECT unnest(range(100)) AS i) b),
-        |d AS (
-        |  SELECT i,
-        |    ('0x'||substring(md5(CAST(rid AS VARCHAR)||':14'),1,8))::BIGINT
-        |      % 10001 AS a0
-        |  FROM r),
-        |cex AS (SELECT a0 FROM d WHERE a0 > 100 ORDER BY i LIMIT 1)
-        |SELECT
-        |  CAST((SELECT count(*) FROM d WHERE a0 > 100) AS BIGINT) AS n_fail,
-        |  EXISTS(SELECT 1 FROM cex) AS found,
-        |  (SELECT CAST(a0 AS BIGINT) FROM cex) AS cex,
-        |  CASE WHEN EXISTS(SELECT 1 FROM cex)
-        |       THEN CAST(101 AS BIGINT) END AS shrunk,
-        |  FALSE AS clamped_found""".stripMargin,
-
-    // Real-decode mirror, construction-based: the engine synthesizes a
-    // BMP/WAV binary and parses it back with the generic header-driven
-    // decoder; the oracle computes the expected stats straight from the
-    // md5 pixel/sample source (checks decode = synth⁻¹ at every byte
-    // position). The two golden rows are hand-computed from the public
-    // format specs — they pin the parser to the spec itself.
-    // Pixel byte i of pixel p channel c lives at md5-hex chars 6p+2c+1;
-    // sample j is s16le at chars 4j+1 (lo) / 4j+3 (hi).
-    "multimodal_decode" ->
-      """WITH syn AS (
-        |  SELECT doc_id, md5(text) AS m, 1 + doc_id % 3 AS w FROM documents),
-        |img AS (
-        |  SELECT doc_id, max(w) AS w,
-        |    CAST(SUM(('0x'||substring(repeat(m,2), p*6+1, 2))::BIGINT) AS BIGINT) AS sum_b,
-        |    CAST(SUM(('0x'||substring(repeat(m,2), p*6+3, 2))::BIGINT) AS BIGINT) AS sum_g,
-        |    CAST(SUM(('0x'||substring(repeat(m,2), p*6+5, 2))::BIGINT) AS BIGINT) AS sum_r
-        |  FROM syn CROSS JOIN (SELECT unnest(range(6)) AS p) pp
-        |  WHERE doc_id % 2 = 0 AND p < 2*w
-        |  GROUP BY doc_id),
-        |wav AS (
-        |  SELECT doc_id, CAST(SUM(v*v) AS BIGINT) AS sum_sq,
-        |    CAST(MAX(abs(v)) AS BIGINT) AS peak_abs
-        |  FROM (
-        |    SELECT doc_id, CASE WHEN u < 32768 THEN u ELSE u - 65536 END AS v
-        |    FROM (
-        |      SELECT doc_id,
-        |        ('0x'||substring(m, j*4+1, 2))::BIGINT
-        |          + 256*('0x'||substring(m, j*4+3, 2))::BIGINT AS u
-        |      FROM syn CROSS JOIN (SELECT unnest(range(8)) AS j) jj
-        |      WHERE doc_id % 2 = 1) uu) vv
-        |  GROUP BY doc_id)
-        |SELECT doc_id, 'bmp' AS kind, CAST(w AS BIGINT) AS width,
-        |  CAST(2 AS BIGINT) AS height, sum_b, sum_g, sum_r,
-        |  CAST(NULL AS BIGINT) AS n_samples, CAST(NULL AS BIGINT) AS sample_rate,
-        |  CAST(NULL AS BIGINT) AS sum_sq, CAST(NULL AS BIGINT) AS peak_abs
-        |FROM img
-        |UNION ALL
-        |SELECT doc_id, 'wav', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-        |  CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-        |  CAST(8 AS BIGINT), CAST(16000 AS BIGINT), sum_sq, peak_abs
-        |FROM wav
-        |UNION ALL
-        |SELECT CAST(1000000001 AS BIGINT), 'bmp', CAST(2 AS BIGINT), CAST(2 AS BIGINT),
-        |  CAST(383 AS BIGINT), CAST(319 AS BIGINT), CAST(447 AS BIGINT),
-        |  CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-        |  CAST(NULL AS BIGINT)
-        |UNION ALL
-        |SELECT CAST(1000000002 AS BIGINT), 'wav', CAST(NULL AS BIGINT),
-        |  CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-        |  CAST(NULL AS BIGINT), CAST(4 AS BIGINT), CAST(8000 AS BIGINT),
-        |  CAST(2152418113 AS BIGINT), CAST(32768 AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Batched-JVM decode mirror: features are exact integer sums divided
-    // as doubles then narrowed to float32 on BOTH engines (IEEE —
-    // bit-identical), rounded to 3 dp on the double widening. n_bytes is
-    // the container size formula; golden features hand-derived from the
-    // golden stats above.
-    "multimodal_features" ->
-      """WITH syn AS (
-        |  SELECT doc_id, md5(text) AS m, 1 + doc_id % 3 AS w FROM documents),
-        |img AS (
-        |  SELECT doc_id, max(w) AS w,
-        |    SUM(('0x'||substring(repeat(m,2), p*6+1, 2))::BIGINT) AS sum_b,
-        |    SUM(('0x'||substring(repeat(m,2), p*6+3, 2))::BIGINT) AS sum_g,
-        |    SUM(('0x'||substring(repeat(m,2), p*6+5, 2))::BIGINT) AS sum_r
-        |  FROM syn CROSS JOIN (SELECT unnest(range(6)) AS p) pp
-        |  WHERE doc_id % 2 = 0 AND p < 2*w
-        |  GROUP BY doc_id),
-        |wav AS (
-        |  SELECT doc_id, SUM(v*v) AS sum_sq, MAX(abs(v)) AS peak_abs
-        |  FROM (
-        |    SELECT doc_id, CASE WHEN u < 32768 THEN u ELSE u - 65536 END AS v
-        |    FROM (
-        |      SELECT doc_id,
-        |        ('0x'||substring(m, j*4+1, 2))::BIGINT
-        |          + 256*('0x'||substring(m, j*4+3, 2))::BIGINT AS u
-        |      FROM syn CROSS JOIN (SELECT unnest(range(8)) AS j) jj
-        |      WHERE doc_id % 2 = 1) uu) vv
-        |  GROUP BY doc_id)
-        |SELECT doc_id, 'bmp' AS kind,
-        |  CAST(54 + ((3*w+3)//4)*4*2 AS BIGINT) AS n_bytes,
-        |  round(CAST(CAST(CAST(sum_b AS DOUBLE)/(2*w) AS REAL) AS DOUBLE), 3) AS f0,
-        |  round(CAST(CAST(CAST(sum_g AS DOUBLE)/(2*w) AS REAL) AS DOUBLE), 3) AS f1,
-        |  round(CAST(CAST(CAST(sum_r AS DOUBLE)/(2*w) AS REAL) AS DOUBLE), 3) AS f2,
-        |  round(CAST(CAST(CAST(2*w AS DOUBLE) AS REAL) AS DOUBLE), 3) AS f3
-        |FROM img
-        |UNION ALL
-        |SELECT doc_id, 'wav', CAST(60 AS BIGINT),
-        |  round(CAST(CAST(sqrt(CAST(sum_sq AS DOUBLE)/8) AS REAL) AS DOUBLE), 3),
-        |  round(CAST(CAST(CAST(peak_abs AS DOUBLE)/32768 AS REAL) AS DOUBLE), 3),
-        |  8.0, 16000.0
-        |FROM wav
-        |UNION ALL
-        |SELECT CAST(1000000001 AS BIGINT), 'bmp', CAST(70 AS BIGINT),
-        |  95.75, 79.75, 111.75, 4.0
-        |UNION ALL
-        |SELECT CAST(1000000002 AS BIGINT), 'wav', CAST(52 AS BIGINT),
-        |  round(CAST(CAST(sqrt(2152418113/4.0) AS REAL) AS DOUBLE), 3),
-        |  1.0, 4.0, 8000.0
-        |UNION ALL
-        |SELECT CAST(1000000003 AS BIGINT), 'png', CAST(82 AS BIGINT),
-        |  75.0, 85.0, 95.0, 4.0
-        |ORDER BY doc_id""".stripMargin,
-
-    "ann_cosine_topk" ->
-      """WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
-        |q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-        |      WHERE vec_id < 10),
-        |scored AS (SELECT query_id, vec_id,
-        |  list_sum(list_transform(list_zip(embedding, qe),
-        |    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(embedding,
-        |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |   * sqrt(list_sum(list_transform(qe,
-        |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-        |  FROM corpus, q),
-        |ranked AS (SELECT query_id, vec_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
-        |    AS rank FROM scored)
-        |SELECT query_id, vec_id, CAST(rank AS BIGINT) AS rank FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "lang_id" -> langIdSql,
-
-    "text_quality" -> {
-      val stopList = TextOps.Stopwords.map(w => s"'$w'").mkString(", ")
-      s"""WITH toks AS (SELECT doc_id, text,
-         |    regexp_split_to_array(lower(text), '\\s+') AS w FROM documents)
-         |SELECT doc_id,
-         |  CAST(length(text) AS BIGINT) AS n_chars,
-         |  CAST(len(w) AS BIGINT) AS n_tokens,
-         |  CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT)
-         |    AS punct_cnt,
-         |  CAST(len(list_filter(w, t -> t IN ($stopList))) AS BIGINT) AS stop_cnt,
-         |  CAST(CAST(list_sum(list_transform(w, t -> length(t))) AS BIGINT)
-         |       * 1000 // len(w) AS BIGINT) AS mean_tok_len_x1000
-         |FROM toks ORDER BY doc_id""".stripMargin
-    },
-
-    "token_counts" ->
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_split_to_array(lower(text), '\\s+')) AS BIGINT)
-         |    AS ws_tokens,
-         |  CAST(len(regexp_extract_all(text, '${TextOps.BpePattern}')) AS BIGINT)
-         |    AS bpe_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "fingerprint" ->
-      s"""WITH toks AS (SELECT doc_id,
-         |    regexp_split_to_array(lower(text), '\\s+') AS w FROM documents)
-         |SELECT doc_id,
-         |  CAST(sum(o * ${dh32("t")}) AS BIGINT) AS fp
-         |FROM (SELECT doc_id, unnest(w) AS t, generate_subscripts(w, 1) AS o
-         |      FROM toks)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // mirrors Infer.infer(exact=true) heuristic-for-heuristic: uuid
-    // narrowing (all values uuid-shaped), :enum (dist<=16 AND
-    // dist/cnt<=0.1), [:maybe _] on observed nulls, :tuple on constant
-    // array length in [1,16], :map-of on distinct-keys > n^0.7
-    // (provider.cljc:58-59) — every decision COMPUTED from the data
-    "infer_schema" ->
-      s"""WITH d AS (SELECT doc_id, lang, text, n_chars,
-         |    md5(CAST(doc_id AS VARCHAR)) AS h FROM documents),
-         |src AS (SELECT doc_id, lang, text, n_chars,
-         |    substring(h,1,8) || '-' || substring(h,9,4) || '-' ||
-         |      substring(h,13,4) || '-' || substring(h,17,4) || '-' ||
-         |      substring(h,21,12) AS uid,
-         |    CASE WHEN doc_id % 7 = 0 THEN NULL
-         |         ELSE n_chars / 100.0 END AS score,
-         |    [n_chars, length(text)] AS pair,
-         |    string_split(text, ' ') AS toks
-         |  FROM d),
-         |tot AS (SELECT count(*) AS n FROM src),
-         |strs AS (
-         |  SELECT s.col, s.cnt, s.dist, s.uuidc,
-         |    CASE WHEN s.cnt > 0 AND s.uuidc = s.cnt THEN ':uuid'
-         |         WHEN s.dist <= 16
-         |              AND s.dist * 1.0 / greatest(s.cnt, 1) <= 0.1
-         |           THEN ':enum' ELSE ':string' END AS base
-         |  FROM (
-         |    SELECT 'lang' AS col, count(lang) AS cnt,
-         |      count(DISTINCT lang) AS dist,
-         |      count(CASE WHEN regexp_matches(lang, '${mallispark.infer.Infer.UuidRe}')
-         |            THEN 1 END) AS uuidc FROM src
-         |    UNION ALL
-         |    SELECT 'text', count(text), count(DISTINCT text),
-         |      count(CASE WHEN regexp_matches(text, '${mallispark.infer.Infer.UuidRe}')
-         |            THEN 1 END) FROM src
-         |    UNION ALL
-         |    SELECT 'uid', count(uid), count(DISTINCT uid),
-         |      count(CASE WHEN regexp_matches(uid, '${mallispark.infer.Infer.UuidRe}')
-         |            THEN 1 END) FROM src) s),
-         |arrs AS (
-         |  SELECT a.col, a.cnt,
-         |    CASE WHEN a.cnt > 0 AND a.mn = a.mx AND a.mn BETWEEN 1 AND 16
-         |         THEN '[:tuple ' || trim(repeat(a.elem || ' ', CAST(a.mn AS INT))) || ']'
-         |         ELSE '[:vector ' || a.elem || ']' END AS base
-         |  FROM (
-         |    SELECT 'pair' AS col, count(pair) AS cnt, min(len(pair)) AS mn,
-         |      max(len(pair)) AS mx, ':int' AS elem FROM src
-         |    UNION ALL
-         |    SELECT 'toks', count(toks), min(len(toks)), max(len(toks)),
-         |      ':string' FROM src) a),
-         |maps AS (
-         |  SELECT m.col, m.cnt,
-         |    CASE WHEN m.dk > pow(m.nocc, 0.7)
-         |         THEN '[:map-of :string :int]' ELSE ':map' END AS base
-         |  FROM (
-         |    SELECT 'meta_fixed' AS col, (SELECT n FROM tot) AS cnt,
-         |      count(*) AS nocc, count(DISTINCT k) AS dk
-         |      FROM (SELECT unnest(['len','band']) AS k FROM src) q
-         |    UNION ALL
-         |    SELECT 'meta_wide', (SELECT n FROM tot), count(*),
-         |      count(DISTINCT k)
-         |      FROM (SELECT 'k' || CAST(doc_id AS VARCHAR) AS k FROM src) q
-         |  ) m),
-         |langvals AS (SELECT string_agg(l, ',' ORDER BY l) AS vs
-         |  FROM (SELECT DISTINCT lang AS l FROM src WHERE lang IS NOT NULL) q),
-         |decided AS (
-         |  SELECT 'doc_id' AS col, count(doc_id) AS cnt, ':int' AS base,
-         |    '' AS enum_vals FROM src
-         |  UNION ALL
-         |  SELECT 'score', count(score), ':double', '' FROM src
-         |  UNION ALL
-         |  SELECT col, cnt, base,
-         |    CASE WHEN base = ':enum' AND col = 'lang'
-         |         THEN (SELECT vs FROM langvals) ELSE '' END FROM strs
-         |  UNION ALL
-         |  SELECT col, cnt, base, '' FROM arrs
-         |  UNION ALL
-         |  SELECT col, cnt, base, '' FROM maps)
-         |SELECT col,
-         |  CASE WHEN cnt < (SELECT n FROM tot)
-         |       THEN '[:maybe ' || base || ']' ELSE base END AS inferred,
-         |  cnt < (SELECT n FROM tot) AS optional, enum_vals
-         |FROM decided ORDER BY col""".stripMargin
-  )
 }

@@ -122,21 +122,32 @@ object TableChecks {
     child.join(p, Seq(childKey), "left_anti")
   }
 
+  /** The payload digest both snapshot checks compare: the raw 32-byte
+    * SHA-256 of `payload`'s bytes (`df` tells whether it is binary).
+    * BINARY payloads are digested byte-for-byte: a string round-trip
+    * would decode them as UTF-8 (invalid sequences → replacement chars)
+    * and two distinct payloads could digest equal. The raw digest, not
+    * sha2's 64-char hex, halves what a join shuffles. A null payload
+    * digests to the empty binary (a SHA-256 is always 32 bytes, so no
+    * value collides with it): bare sha2(NULL) is NULL, and a null side
+    * would drop a null↔value change from `=!=` or misclassify a
+    * present-but-null row in a full outer join. */
+  private def payloadDigest(df: DataFrame, payload: Column): Column = {
+    val isBinary = df.select(payload).schema.head.dataType == BinaryType
+    val bytes =
+      if (isBinary) payload else payload.cast(StringType).cast(BinaryType)
+    F.when(payload.isNull, F.lit(Array.emptyByteArray))
+      .otherwise(F.unhex(F.sha2(bytes, 256)))
+  }
+
   /** Byte-identity of `textCol` per `key` across two snapshots
-    * (input_hint invariant): inner join on key + sha2 mismatch.
-    * sha2 over the raw column — no charset round-trips (SURVEY §7.6);
-    * binary columns hash their bytes directly. */
+    * (input_hint invariant): inner join on key + digest mismatch
+    * (`payloadDigest`, no charset round-trips, SURVEY §7.6). */
   def byteIdentityViolations(curr: DataFrame, prev: DataFrame, key: String,
                              textCol: String): DataFrame = {
-    // null payloads digest to a sentinel (sha2 output is hex, so no
-    // collision): sha2(NULL) is NULL and `=!=` on a null side is NULL —
-    // a null↔value change would silently vanish from the violations
-    val h = (d: DataFrame, tag: String) => d.select(
-      F.col(key),
-      F.when(F.col(textCol).isNull, F.lit("__NULL__"))
-        .otherwise(F.sha2(F.col(textCol).cast(BinaryType), 256))
-        .as(s"${tag}_sha"))
-    h(curr, "curr").join(h(prev, "prev"), Seq(key), "inner")
+    val digest = payloadDigest(curr, F.col(textCol))
+    curr.select(F.col(key), digest.as("curr_sha"))
+      .join(prev.select(F.col(key), digest.as("prev_sha")), Seq(key), "inner")
       .where(F.col("curr_sha") =!= F.col("prev_sha"))
   }
 
@@ -150,18 +161,7 @@ object TableChecks {
     * (run `duplicates` first otherwise). */
   def snapshotDiff(curr: DataFrame, prev: DataFrame, key: String,
                    payload: Column): DataFrame = {
-    // BINARY payloads are digested byte-for-byte: a string round-trip
-    // would decode them as UTF-8 (invalid sequences → replacement chars)
-    // and two distinct payloads could digest equal, missing a "modified"
-    val isBinary = curr.select(payload).schema.head.dataType == BinaryType
-    val bytes =
-      if (isBinary) payload else payload.cast(StringType).cast(BinaryType)
-    // the raw 32-byte digest, not sha2's 64-char hex: half the shuffle.
-    // Null payloads digest to the empty binary (a SHA-256 is always 32
-    // bytes, so no value can collide with it) — bare sha2(NULL) is NULL
-    // and would misclassify a present-but-null row as added/removed
-    val digest = F.when(payload.isNull, F.lit(Array.emptyByteArray))
-      .otherwise(F.unhex(F.sha2(bytes, 256)))
+    val digest = payloadDigest(curr, payload)
     val c = curr.select(F.col(key), digest.as("curr_sha"))
     val p = prev.select(F.col(key), digest.as("prev_sha"))
     c.join(p, Seq(key), "full_outer")

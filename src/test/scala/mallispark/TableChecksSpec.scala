@@ -51,12 +51,18 @@ class TableChecksSpec extends SparkSuite {
   }
 
   test("byteIdentity: j perturbed texts -> j hash mismatches") {
-    val a = df((1L to 30L).map(i => Row(i, s"text$i")), kv)
+    // plus null <-> value (31, 34), null <-> "" (32, 35) and null <-> null
+    // (33): a null digests to the empty binary, so only 33 matches
+    val nulls = Seq((31L, null, "x"), (32L, null, ""), (33L, null, null),
+      (34L, "x", null), (35L, "", null))
+    val a = df((1L to 30L).map(i => Row(i, s"text$i")) ++
+      nulls.map(n => Row(n._1, n._2)), kv)
     val b = df((1L to 30L).map(i =>
-      Row(i, if (i % 11 == 0) s"text${i}X" else s"text$i")), kv)
+      Row(i, if (i % 11 == 0) s"text${i}X" else s"text$i")) ++
+      nulls.map(n => Row(n._1, n._3)), kv)
     val bad = TableChecks.byteIdentityViolations(a, b, "k", "v")
       .collect().map(_.getLong(0)).sorted
-    assert(bad.toSeq === Seq(11L, 22L))
+    assert(bad.toSeq === Seq(11L, 22L, 31L, 32L, 34L, 35L))
   }
 
   test("snapshotDiff: added/removed/modified classified; unchanged and null-null excluded") {
