@@ -10,10 +10,9 @@ import org.apache.spark.sql.types._
 /** Codegen cosine similarity between two float/double array columns —
   * BIT-IDENTICAL to the Column reference formulation
   * (`aggregate(zip_with(a, b, _*_), 0.0, _+_) / (sqrt(Σa²)·sqrt(Σb²))`,
-  * kept in [[mallispark.text.Similarity.cosineColumns]] and asserted
-  * equal in tests) and to the DuckDB `list_sum(list_transform(...))`
-  * mirror: one left-to-right double accumulation per term, same IEEE
-  * op order. The higher-order-function form never enters whole-stage
+  * kept as the specs' reference and asserted equal there) and to the
+  * DuckDB `list_sum(list_transform(...))` mirror: one left-to-right
+  * double accumulation per term, same IEEE op order. The higher-order-function form never enters whole-stage
   * codegen (interpreted lambda per element); this kernel is a tight
   * generated loop — the hot path of every similarity operator
   * (brute-force top-k, LSH/IVF refinement, embedding near-dup) runs

@@ -3,14 +3,14 @@ package mallispark.expressions
 import org.apache.spark.sql.{Column, MallisparkBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** All `tables` hyperplane-LSH buckets of an embedding in one pass —
-  * BIT-IDENTICAL to `Similarity.lshBucket` per table: the dot product
-  * accumulates left-to-right in element order (same FP operation sequence
-  * as `aggregate(zip_with(...))`), the sign is taken on
+  * BIT-IDENTICAL per table to the Column formulation the specs keep as
+  * its reference (one `aggregate(zip_with(vec, signs))` per plane): the
+  * dot product accumulates left-to-right in element order (the same FP
+  * operation sequence), the sign is taken on
   * `round(dot, 4)` with the same HALF_UP rounding Spark's `round` uses,
   * and bit p of table t's bucket is set iff the rounded dot ≥ 0. The
   * DuckDB oracle (literal sign lists in SQL) is untouched.
@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   * Replaces tables × planes interpreted `zip_with`/`aggregate` lambda
   * chains per row with one flat loop over the sign matrix. */
 case class HyperplaneBuckets(child: Expression, planes: Int, tables: Int,
-                             dims: Int) extends UnaryExpression {
+                             dims: Int)
+    extends UnaryExpression with ScalaBodyCodegen {
 
   require(planes > 0 && planes <= 62 && tables > 0 && tables <= 64 &&
     dims > 0 && dims <= 4096)
@@ -85,20 +86,6 @@ case class HyperplaneBuckets(child: Expression, planes: Int, tables: Int,
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("expr", this,
-      classOf[HyperplaneBuckets].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  $ref.nullSafeEvalPublic($c);
-       """.stripMargin
-    })
-  }
-
-  /** Public bridge for generated code. */
-  def nullSafeEvalPublic(input: Any): Any = nullSafeEval(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

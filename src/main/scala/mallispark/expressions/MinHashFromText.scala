@@ -9,7 +9,8 @@ import org.apache.spark.sql.types._
 
 /** MinHash signature straight from TEXT: tokenize (ASCII whitespace +
   * lowercase), roll an n-token ring of xxhash64 token hashes, combine into
-  * a shingle hash, and track k per-seed minima — ONE generated loop, no
+  * a shingle hash, and track k per-seed minima — ONE loop (this Scala
+  * body, called from generated code via [[ScalaBodyCodegen]]), no
   * intermediate token/shingle string arrays.
   *
   * Why: the shingle-string construction (`transform(sequence, i →
@@ -23,7 +24,7 @@ import org.apache.spark.sql.types._
   * Duplicate shingles need no dedup: the signature is a MIN, and the min
   * over a multiset equals the min over its set. */
 case class MinHashFromText(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ScalaBodyCodegen {
 
   require(n > 0 && n <= 16, s"n out of range: $n")
   require(k > 0 && k <= 512, s"k out of range: $k")
@@ -84,69 +85,6 @@ case class MinHashFromText(child: Expression, n: Int, k: Int)
 
   @inline private def lower(b: Byte): Int =
     if (b >= 'A' && b <= 'Z') (b + 32) & 0xff else b & 0xff
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val mins = ctx.freshName("mins")
-      val ring = ctx.freshName("ring")
-      val tok = ctx.freshName("tok")
-      val i = ctx.freshName("i")
-      val len = ctx.freshName("len")
-      val start = ctx.freshName("start")
-      val h = ctx.freshName("h")
-      val sh = ctx.freshName("sh")
-      val j = ctx.freshName("j")
-      val seed = ctx.freshName("seed")
-      val m = ctx.freshName("m")
-      val b = ctx.freshName("b")
-      val xxh = classOf[XXH64].getName
-      val gad = classOf[GenericArrayData].getName
-      s"""
-         |byte[] $bytes = $c.getBytes();
-         |long[] $mins = new long[$k];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |long[] $ring = new long[$n];
-         |int $tok = 0;
-         |int $i = 0;
-         |int $len = $bytes.length;
-         |while ($i < $len) {
-         |  while ($i < $len && ($bytes[$i] == ' ' || $bytes[$i] == '\\t' ||
-         |         $bytes[$i] == '\\n' || $bytes[$i] == '\\r' ||
-         |         $bytes[$i] == '\\f')) $i++;
-         |  if ($i < $len) {
-         |    int $start = $i;
-         |    long $h = -7046029254386353131L;
-         |    while ($i < $len && !($bytes[$i] == ' ' || $bytes[$i] == '\\t' ||
-         |           $bytes[$i] == '\\n' || $bytes[$i] == '\\r' ||
-         |           $bytes[$i] == '\\f')) {
-         |      int $b = ($bytes[$i] >= 'A' && $bytes[$i] <= 'Z')
-         |        ? (($bytes[$i] + 32) & 0xff) : ($bytes[$i] & 0xff);
-         |      $h = $xxh.hashInt($b, $h);
-         |      $i++;
-         |    }
-         |    if ($i > $start) {
-         |      $ring[$tok % $n] = $h;
-         |      $tok++;
-         |      if ($tok >= $n) {
-         |        long $sh = 0L;
-         |        for (int $j = 0; $j < $n; $j++) {
-         |          $sh = $xxh.hashLong($ring[($tok - $n + $j) % $n], $sh);
-         |        }
-         |        for (int $seed = 0; $seed < $k; $seed++) {
-         |          long $m = $xxh.hashLong($sh, (long) $seed);
-         |          if ($m < $mins[$seed]) $mins[$seed] = $m;
-         |        }
-         |      }
-         |    }
-         |  }
-         |}
-         |${ev.value} = new $gad($mins);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3,7 +3,6 @@ package mallispark.expressions
 import org.apache.spark.sql.{Column, MallisparkBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types._
@@ -92,10 +91,11 @@ object ShingleKernel {
   * `AffineMinHash(transform(array_distinct(shingles(text,n)), h32), k)`,
   * the specs' reference formulation (minima are multiset-invariant, so
   * distinctness is immaterial), in one
-  * pass with no intermediate strings. Non-codegen `eval` (the md5 calls
-  * dominate; codegen would only remove interpreter dispatch). */
+  * pass with no intermediate strings. Its generated code calls the Scala
+  * body ([[ScalaBodyCodegen]]): the md5 calls dominate, and a generated
+  * copy of the loop would only remove interpreter dispatch. */
 case class ShingleMinHash(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ScalaBodyCodegen {
 
   require(n > 0 && n <= 16 && k > 0 && k <= 512)
 
@@ -137,19 +137,6 @@ case class ShingleMinHash(child: Expression, n: Int, k: Int)
     new GenericArrayData(mins)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("expr", this, classOf[ShingleMinHash].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  $ref.nullSafeEvalPublic($c);
-       """.stripMargin
-    })
-  }
-
-  /** Public bridge for generated code. */
-  def nullSafeEvalPublic(input: Any): Any = nullSafeEval(input)
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -165,7 +152,8 @@ object ShingleMinHash {
   * `sort_array(array_distinct(transform(array_distinct(shingles(text,n)),
   * h60)))` (distinct-on-strings vs distinct-on-h60 agree up to 2^-60
   * collisions), with no intermediate strings. */
-case class ShingleH60Set(child: Expression, n: Int) extends UnaryExpression {
+case class ShingleH60Set(child: Expression, n: Int)
+    extends UnaryExpression with ScalaBodyCodegen {
 
   require(n > 0 && n <= 16)
 
@@ -206,19 +194,6 @@ case class ShingleH60Set(child: Expression, n: Int) extends UnaryExpression {
     new GenericArrayData(java.util.Arrays.copyOf(hs, w))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("expr", this, classOf[ShingleH60Set].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  $ref.nullSafeEvalPublic($c);
-       """.stripMargin
-    })
-  }
-
-  /** Public bridge for generated code. */
-  def nullSafeEvalPublic(input: Any): Any = nullSafeEval(input)
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -235,7 +210,8 @@ object ShingleH60Set {
   * bit i iff votes > 0), in one pass with no intermediate arrays.
   * Token distinctness is EXACT (sort by byte content, unique), matching
   * `array_distinct` on the token strings. */
-case class SimHashPortable(child: Expression) extends UnaryExpression {
+case class SimHashPortable(child: Expression)
+    extends UnaryExpression with ScalaBodyCodegen {
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -307,19 +283,6 @@ case class SimHashPortable(child: Expression) extends UnaryExpression {
     ShingleKernel.hexPrefix(digest.digest(), 8)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("expr", this, classOf[SimHashPortable].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  $ref.nullSafeEvalPublic($c);
-       """.stripMargin
-    })
-  }
-
-  /** Public bridge for generated code. */
-  def nullSafeEvalPublic(input: Any): Any = nullSafeEval(input)
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -334,7 +297,8 @@ object SimHashPortable {
   * token (identity by token hash — collision odds 2^-64-scale), 64 ±1 bit
   * votes, packed. The native dual of `SimHashPortable` (md5) — NOT
   * DuckDB-portable; rows-only checks downstream. */
-case class SimHashFromText(child: Expression) extends UnaryExpression {
+case class SimHashFromText(child: Expression)
+    extends UnaryExpression with ScalaBodyCodegen {
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -378,16 +342,6 @@ case class SimHashFromText(child: Expression) extends UnaryExpression {
     while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
     sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("expr", this, classOf[SimHashFromText].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = (Long) $ref.nullSafeEvalPublic($c);"
-    })
-  }
-
-  /** Public bridge for generated code. */
-  def nullSafeEvalPublic(input: Any): Any = nullSafeEval(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,10 +1,9 @@
 package mallispark.run
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.{functions => F}
 
 /** Minimal snapshot-log table format — the Iceberg-style operational
   * surface the north rule names (snapshot-isolated reads, time travel,

@@ -70,21 +70,20 @@ object ValidationJob {
   /** Completed part_ids for a run (empty frame when no manifest yet). */
   def completedPartitions(spark: SparkSession, dir: String,
                           runId: String): DataFrame = {
-    val p = manifestPath(dir)
-    try {
-      spark.read.parquet(p).where(F.col("run_id") === runId)
+    // ONLY a missing manifest means "first run" — a transient IO error
+    // or corrupt footer must FAIL the resume, not silently restart from
+    // zero and double-append already-committed partitions. Test for the
+    // path instead of reading it and catching PATH_NOT_FOUND: Spark
+    // reports a failed read to its query-execution listeners, and the
+    // Observation listener then logs the caught error as a stack trace
+    val p = new org.apache.hadoop.fs.Path(manifestPath(dir))
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.parquet(p.toString).where(F.col("run_id") === runId)
         .select("part_id").distinct()
-    } catch {
-      // ONLY a missing manifest means "first run" — a transient IO error
-      // or corrupt footer must FAIL the resume, not silently restart
-      // from zero and double-append already-committed partitions
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            e.getMessage.contains("Path does not exist") =>
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("part_id", LongType))))
-    }
+    else
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        StructType(Seq(StructField("part_id", LongType))))
   }
 
   /** One resumable pass: skip partitions already in the manifest, validate

@@ -3,19 +3,27 @@ package mallispark.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
-import TextOps._
+import mallispark.expressions.{BoundedCollectMin, MinHashFromText,
+  ShingleH60Set, ShingleMinHash, SimHashFromText, SimHashPortable}
+import TextOps.obsName
 
 /** Deduplication operators for web-scale corpora.
   *
   * Scale design (10^12 docs):
   *  - `exactDupGroups` shuffles only (hash, id) pairs — never text bodies.
-  *  - MinHash/SimHash signatures are computed scan-side (one pass, pure
-  *    Column codegen); candidate generation shuffles (band_key, id) pairs,
-  *    so the join fan-out is bounded by bucket sizes, not corpus size².
-  *  - n-gram Jaccard self-join is quadratic per token bucket — kept for
-  *    oracle-verifiable exact semantics at small scale and as the in-bucket
-  *    refinement step after LSH at large scale.
-  * All hashes are md5-derived (portable to the DuckDB oracle). */
+  *  - MinHash/SimHash signatures are computed scan-side by one-pass
+  *    kernels; candidate generation shuffles (band_key, id) pairs, so the
+  *    join fan-out is bounded by bucket sizes, not corpus size².
+  *  - exact n-gram Jaccard runs only on LSH candidate pairs
+  *    (`ngramJaccardWithinBuckets`), never as a corpus-wide shingle
+  *    self-join; every candidate expansion goes through the one
+  *    bucket-size gate, [[bucketPairs]].
+  * Hash families: `exactDupGroups`, `minhashLSH` and `simhashCandidates`
+  * are md5-derived and portable to the DuckDB oracle; `minhashLSHFast`,
+  * `simhashFastCandidates` and the candidate step of
+  * `ngramJaccardWithinBuckets` use engine-native xxhash64 kernels, so
+  * their buckets are engine-internal and only exact re-verification of
+  * what they produce is oracle-checked. */
 object Dedup {
 
   /** Default member-list cap for group outputs: groups larger than this
@@ -33,45 +41,32 @@ object Dedup {
     * the input's integral width) — map string/UUID ids to a numeric
     * surrogate before deduping. */
   private def memberIds(id: String, maxMembers: Int): Column =
-    mallispark.expressions.BoundedCollectMin(
-      F.col(id).cast(LongType), maxMembers)
+    BoundedCollectMin(F.col(id).cast(LongType), maxMembers)
+
+  /** Groups of `rows` sharing the `keys` values that hold more than one
+    * row: (keys…, dup_cnt, doc_ids), `dup_cnt` the full group size and
+    * `doc_ids` its `maxMembers` smallest ids. One shuffle of (keys, id). */
+  private def memberGroups(rows: DataFrame, keys: Seq[String], id: String,
+                           maxMembers: Int): DataFrame =
+    rows.groupBy(keys.map(F.col): _*)
+      .agg(F.count(F.lit(1)).as("dup_cnt"),
+        memberIds(id, maxMembers).as("doc_ids"))
+      .where(F.col("dup_cnt") > 1)
 
   /** Exact duplicate groups by md5(text): (text_hash, dup_cnt, doc_ids).
     * `doc_ids` holds the `maxMembers` smallest ids; `dup_cnt` is always
     * the full group size. */
   def exactDupGroups(df: DataFrame, id: String, text: String,
                      maxMembers: Int = DefaultMaxMembers): DataFrame =
-    df.select(F.col(id), F.md5(F.col(text)).as("text_hash"))
-      .groupBy("text_hash")
-      .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
-      .where(F.col("dup_cnt") > 1)
+    memberGroups(df.select(F.col(id), F.md5(F.col(text)).as("text_hash")),
+      Seq("text_hash"), id, maxMembers)
 
-  /** Modulus for the affine MinHash family: 2^61 - 1 (Mersenne prime).
-    * Base hashes are < 2^32 and multipliers < 2^8, so products never
-    * overflow a signed 64-bit long. */
+  /** Modulus for the affine MinHash family (h * (2s+1) + 99991 s) mod P
+    * that `ShingleMinHash` computes: 2^61 - 1 (Mersenne prime). Base
+    * hashes are < 2^32 and, at k ≤ 512, multipliers are < 2^10, so
+    * products never overflow a signed 64-bit long. */
   val MinhashP: Long = 2305843009213693951L
 
-  // The affine family (h * (2s+1) + 99991 s) mod P lives in
-  // expressions.ShingleMinHash — ONE md5 per shingle total, k per-seed
-  // integer mixes in a tight loop. Bit-parity with the Column
-  // formulation is asserted in TextOpsSpec.
-
-  /** MinHash+LSH candidate pairs: signature → `bands` bands of `k/bands`
-    * rows each → band bucket key → ids sharing a bucket.
-    * Returns (band, band_key, dup_cnt, doc_ids) for buckets with >1 doc.
-    * One shuffle of (band_key, id); text never moves. The base hashes are
-    * materialized in their own projection so Catalyst cannot inline the
-    * md5 work into each of the k seed lambdas. */
-  /** Per-doc (band, band_key) rows from the portable MinHash family —
-    * the candidate-generation substrate shared by `minhashLSH` (bucket
-    * groups) and `ngramJaccardWithinBuckets` (in-bucket refinement).
-    * The signature comes from the `ShingleMinHash` kernel: BIT-IDENTICAL
-    * md5+affine minima, one pass, no intermediate shingle strings.
-    * Docs with no shingles (under n tokens) keep the max-long sentinel
-    * and are dropped HERE so Spark and the DuckDB oracle (whose unnest
-    * drops them implicitly) agree — a sentinel signature would bucket
-    * all short docs together on one engine only. */
   /** Band-key moduli/multipliers: two independent 31-bit modular
     * polynomial folds over the signature slice, packed into one ≤2^62
     * BIGINT — `(fold31 * M2 + fold37)`. Pure BIGINT arithmetic on both
@@ -79,8 +74,6 @@ object Dedup {
     * the sequential fold as a HUGEINT weighted sum
     * `Σ (mh % M) * mult^(rows-1-i) (mod M)`, which is the same
     * polynomial. Cross-band collision odds ~2^-62 per bucket pair. */
-  import TextOps.obsName
-
   val BandM1: Long = 2147483647L // 2^31 - 1
   val BandM2: Long = 2147483629L
   val BandMult1: Long = 31L
@@ -95,11 +88,17 @@ object Dedup {
     k1 * BandM2 + k2
   }
 
+  /** Per-doc (band, band_key) rows from the portable MinHash family: the
+    * `ShingleMinHash` kernel's md5+affine minima, one pass, no
+    * intermediate shingle strings. Docs with no shingles (under n tokens)
+    * keep the max-long sentinel and are dropped in the banding, so Spark
+    * and the DuckDB oracle (whose unnest drops them implicitly) agree — a
+    * sentinel signature would bucket all short docs together on one
+    * engine only. */
   def minhashBands(df: DataFrame, id: String, text: String,
                    k: Int, bands: Int, n: Int): DataFrame =
     bandsFromSig(
-      df.select(F.col(id),
-        mallispark.expressions.ShingleMinHash(F.col(text), n, k).as("sig")),
+      df.select(F.col(id), ShingleMinHash(F.col(text), n, k).as("sig")),
       id, k, bands, shiftNonneg = false)
 
   /** Banding over an already-computed `sig` column (array<long>, length
@@ -134,14 +133,14 @@ object Dedup {
         F.col("bk.band_key").as("band_key"))
   }
 
+  /** MinHash+LSH bucket groups: (band, band_key, dup_cnt, doc_ids) for
+    * every band bucket holding more than one doc. One shuffle of
+    * (band, band_key, id); text never moves. */
   def minhashLSH(df: DataFrame, id: String, text: String,
                  k: Int = 16, bands: Int = 4, n: Int = 3,
                  maxMembers: Int = DefaultMaxMembers): DataFrame =
-    minhashBands(df, id, text, k, bands, n)
-      .groupBy("band", "band_key")
-      .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
-      .where(F.col("dup_cnt") > 1)
+    memberGroups(minhashBands(df, id, text, k, bands, n),
+      Seq("band", "band_key"), id, maxMembers)
 
   /** Scale-path MinHash+LSH using the native codegen'd
     * `MinHashFromText` expression (xxhash64 minima straight from the
@@ -152,18 +151,14 @@ object Dedup {
   def minhashLSHFast(df: DataFrame, id: String, text: String,
                      k: Int = 64, bands: Int = 16, n: Int = 3,
                      maxMembers: Int = DefaultMaxMembers): DataFrame =
-    minhashBandsFast(df, id, text, k, bands, n)
-      .groupBy("band", "band_key")
-      .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
-      .where(F.col("dup_cnt") > 1)
+    memberGroups(minhashBandsFast(df, id, text, k, bands, n),
+      Seq("band", "band_key"), id, maxMembers)
 
   /** 64-bit SimHash (two portable 32-bit halves) per document, via the
     * `SimHashPortable` kernel — bit-identical to the md5 "hi:"/"lo:"
     * token-vote formulation the DuckDB oracle computes, in one pass. */
   def simhashDF(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(F.col(id),
-        mallispark.expressions.SimHashPortable(F.col(text)).as("sig"))
+    df.select(F.col(id), SimHashPortable(F.col(text)).as("sig"))
       .select(F.col(id),
         F.element_at(F.col("sig"), 1).as("hi"),
         F.element_at(F.col("sig"), 2).as("lo"))
@@ -184,60 +179,15 @@ object Dedup {
         .as("hk"))
       .select(F.col(id), F.col("hk.half").as("half"),
         F.col("hk.half_key").as("half_key"))
-    halves.groupBy("half", "half_key")
-      .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
-      .where(F.col("dup_cnt") > 1)
-      .select("half", "half_key", "dup_cnt", "doc_ids")
+    memberGroups(halves, Seq("half", "half_key"), id, maxMembers)
   }
-
-  /** Exact n-gram (word) Jaccard similarity for candidate pairs: distinct
-    * shingles exploded, self-joined on shingle, |A∩B| counted, Jaccard =
-    * inter / (|A|+|B|-inter). Quadratic within shingle buckets — use after
-    * LSH at scale; exact and oracle-checkable at test scale.
-    * Returns pairs with jaccard ≥ threshold (id_a < id_b). */
-  /** Distinct shingles exploded per doc, optionally frequency-capped:
-    * shingles appearing in more than `maxShingleDf` docs are dropped —
-    * a ubiquitous shingle ("click here to") cannot discriminate near-dups
-    * but turns the shingle self-join into a cartesian bomb (bucket cost is
-    * O(df²)). The cap bounds per-shingle join fan-out to maxShingleDf².
-    * Jaccard is then defined over the DISCRIMINATIVE shingle space — the
-    * DuckDB oracle applies the identical cap. */
-  private def shingleSet(df: DataFrame, id: String, text: String, n: Int,
-                         maxShingleDf: Int): DataFrame = {
-    // explode_OUTER + null-filter: a plain explode lets the optimizer
-    // infer a size() Filter that re-runs the shingle HOF chain per row
-    val sh = df.select(F.col(id).as("doc"),
-        F.explode_outer(F.array_distinct(shingles(F.col(text), n)))
-          .as("shingle"))
-      .where(F.col("shingle").isNotNull)
-    if (maxShingleDf <= 0) sh
-    else {
-      // hot-shingle set is tiny by construction → broadcast anti-join
-      val hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).as("df"))
-        .where(F.col("df") > maxShingleDf).select("shingle")
-      sh.join(F.broadcast(hot), Seq("shingle"), "left_anti")
-    }
-  }
-
-  private def jaccardFilter(pairs: DataFrame, sizes: DataFrame,
-                            threshold: Double): DataFrame =
-    pairs
-      .join(sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        F.col("inter").cast(DoubleType) /
-          (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-      .where(F.col("jaccard") >= threshold)
-      .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
 
   /** Scale-path SimHash: the fused `SimHashFromText` kernel (tokenize +
     * xxhash64 + 64 vote adds in one pass, no token array). NOT
     * DuckDB-portable — use `simhashCandidates` for the oracle-checked
     * path. */
   def simhashFast(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(F.col(id),
-      mallispark.expressions.SimHashFromText(F.col(text)).as("sig"))
+    df.select(F.col(id), SimHashFromText(F.col(text)).as("sig"))
 
   /** Candidates from the native signature: exact match on any of the four
     * 16-bit bands (block permutation — pairs within hamming distance 3
@@ -251,27 +201,7 @@ object Dedup {
           .bitwiseAND(F.lit(0xFFFFL)).as("band_key"))): _*)).as("bk"))
       .select(F.col(id), F.col("bk.band").as("band"),
         F.col("bk.band_key").as("band_key"))
-    banded.groupBy("band", "band_key")
-      .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
-      .where(F.col("dup_cnt") > 1)
-  }
-
-  /** Exact n-gram (word) Jaccard for ALL pairs sharing a shingle: the
-    * self-join is O(Σ df²) over shingle buckets — ONLY safe with a
-    * frequency cap or at small scale. At 100 TB use
-    * `ngramJaccardWithinBuckets` (LSH-gated refinement) instead. */
-  def ngramJaccardPairs(df: DataFrame, id: String, text: String,
-                        n: Int = 3, threshold: Double = 0.8,
-                        maxShingleDf: Int = 0): DataFrame = {
-    val sh = shingleSet(df, id, text, n, maxShingleDf)
-    val sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).as("sz"))
-    val pairs = sh.as("a").join(sh.as("b"),
-        F.col("a.shingle") === F.col("b.shingle") &&
-          F.col("a.doc") < F.col("b.doc"))
-      .groupBy(F.col("a.doc").as("id_a"), F.col("b.doc").as("id_b"))
-      .agg(F.count(F.lit(1)).as("inter"))
-    jaccardFilter(pairs, sizes, threshold)
+    memberGroups(banded, Seq("band", "band_key"), id, maxMembers)
   }
 
   /** Native-signature (band, band_key) rows — same banding as
@@ -286,21 +216,48 @@ object Dedup {
     // native xxhash64 minima can be negative — shift to nonneg before the
     // modular band-key fold (engine-internal keys, grouping-equivalent)
     bandsFromSig(
-      df.select(F.col(id),
-        mallispark.expressions.MinHashFromText(F.col(text), n, k).as("sig")),
+      df.select(F.col(id), MinHashFromText(F.col(text), n, k).as("sig")),
       id, k, bands, shiftNonneg = true)
 
+  /** Ids must be INTEGRAL on every bucket path: the bounded member heap
+    * is a long heap, and a cast string id would turn every non-numeric id
+    * into one NULL key. Checked on the schema, before any Spark job. */
+  private def requireIntegralId(df: DataFrame, id: String): Unit = {
+    val idType = df.schema(id).dataType
+    require(Set[DataType](ByteType, ShortType, IntegerType, LongType)(idType),
+      s"id column '$id' must be integral, got ${idType.simpleString}")
+  }
 
-  /** In-bucket candidate-pair expansion shared by the text (MinHash) and
-    * embedding (hyperplane) LSH paths: each bucket row carries its
-    * ascending, k-capped member list in `idsCol`; explode it into the
-    * ordered pairs (id_a < id_b, guaranteed by the ascending order) and
-    * dedup across buckets. Outer explode + null-filter on the GENERATED
-    * column so the optimizer cannot infer a size() filter that re-runs
+  /** The one LSH candidate step, shared by the text (MinHash) and
+    * embedding (hyperplane) paths: group the bucket `rows` on `keys` and
+    * expand each bucket's members into ordered pairs (id_a < id_b),
+    * deduplicated across buckets. Returns (id_a, id_b).
+    *
+    * HOT-BUCKET GATE (standard LSH practice): a pathological bucket — an
+    * adversarial corpus of near-identical docs or embeddings — would
+    * expand |bucket|² pairs, so buckets over `maxBucket` members are
+    * SKIPPED (recall degrades, the job survives), with the skip count
+    * exposed as the `<metric>_lsh_dropped_buckets` observed metric on
+    * every action. The member collect is itself state-bounded (a
+    * (maxBucket+1)-capped heap, ascending) and the size filter rides the
+    * same aggregation, so even a skipped bucket costs O(maxBucket) state
+    * and there is one exchange of (keys, id), no pre-join of bucket
+    * sizes. The pair explode is outer + null-filtered on the GENERATED
+    * column, so the optimizer cannot infer a size() filter that re-runs
     * the pair transform per row. */
-  private[text] def bucketPairs(buckets: DataFrame,
-                                idsCol: String): DataFrame = {
-    val ids = F.col(idsCol)
+  private[text] def bucketPairs(rows: DataFrame, keys: Seq[String],
+                                id: String, maxBucket: Int,
+                                metric: String): DataFrame = {
+    requireIntegralId(rows, id)
+    val buckets = rows.groupBy(keys.map(F.col): _*)
+      .agg(BoundedCollectMin(F.col(id).cast(LongType), maxBucket + 1)
+          .as("ids"),
+        F.count(F.lit(1)).as("bsz"))
+      .observe(obsName(s"${metric}_lsh_dropped_buckets"),
+        F.coalesce(F.sum(F.when(F.col("bsz") > maxBucket, 1L)
+          .otherwise(0L)), F.lit(0L)).as("dropped"))
+      .where(F.col("bsz") > 1 && F.col("bsz") <= maxBucket)
+    val ids = F.col("ids")
     buckets.select(F.explode_outer(
         F.flatten(F.transform(ids, (x, i) =>
           F.transform(F.slice(ids, i + 2, F.size(ids) - i - 1),
@@ -312,36 +269,33 @@ object Dedup {
 
   /** Scale path: exact Jaccard REFINEMENT of MinHash-LSH candidates —
     * the quadratic pair expansion runs only inside LSH buckets (candidate
-    * pairs ≪ corpus²), then TRUE Jaccard is verified with one
-    * (doc,shingle)-keyed join per pair side. Candidates come from the
+    * pairs ≪ corpus²), then TRUE Jaccard is verified with one doc-keyed
+    * join of shingle-hash sets per pair side. Candidates come from the
     * NATIVE codegen signature (cheap); because the output keeps only
     * pairs whose exact Jaccard ≥ threshold, it equals the full self-join
     * result whenever the LSH recalls every qualifying pair — at
     * threshold t with k/bands rows per band, a qualifying pair misses
     * every band with probability (1-t^(k/bands))^bands (≈2e-6 at t=0.8,
     * k=16, bands=8), so the exact capped self-join IS the oracle.
-    * Set `portable = true` to generate candidates with the md5 family
-    * instead (bit-identical banding across engines, ~10× dearer). */
+    * Candidate pairs come from [[bucketPairs]] (buckets over `maxBucket`
+    * members are skipped, counted as `jaccard_lsh_dropped_buckets`).
+    * Ubiquitous shingles — document frequency above `maxShingleDf` —
+    * are dropped from every set before the pair sizes and intersections
+    * are taken: a shingle like "click here to" cannot discriminate
+    * near-dups, and Jaccard is then defined over the discriminative
+    * shingle space (the DuckDB oracle applies the identical cap). */
   def ngramJaccardWithinBuckets(df: DataFrame, id: String, text: String,
                                 n: Int = 3, threshold: Double = 0.8,
                                 k: Int = 16, bands: Int = 8,
                                 maxShingleDf: Int = 0,
-                                portable: Boolean = false,
                                 maxBucket: Int = 4096,
                                 maxHotBroadcast: Int = 1 << 20,
                                 materialize: Boolean = true,
                                 scaledShingleDf: Option[(Int, Long)] = None)
       : DataFrame = {
-    // candidate pairs from ONE pass over the banded signatures: group a
-    // band bucket, explode its id pairs (bucket sizes are LSH-bounded, so
-    // the per-bucket pair expansion is small by construction). HOT-BUCKET
-    // CAP (standard LSH practice): a pathological (band, band_key) bucket
-    // — e.g. an adversarial corpus of near-identical ≥n-token docs —
-    // would expand |bucket|² pairs; buckets over `maxBucket` are SKIPPED
-    // (recall degrades, the job survives), with the skip count exposed as
-    // the `lsh_dropped_buckets` observed metric on every action. The
-    // member collect is itself state-bounded (maxBucket+1-capped heap),
-    // so even the dropped bucket's aggregation state is O(maxBucket).
+    // the bucket step reads the materialized base below: check the id
+    // type now, so a bad id fails before the base scan runs
+    requireIntegralId(df, id)
     // ONE text-kernel scan for the whole pipeline: the signature (LSH
     // banding) and the 60-bit shingle set (exact refinement) are computed
     // in the same projection and materialized (localCheckpoint). The
@@ -368,12 +322,8 @@ object Dedup {
         Some(org.apache.spark.sql.Observation(obsName("jaccard_corpus_n")))
       else None
     val baseCols = Seq(F.col(id).as("doc"),
-        (if (portable)
-          mallispark.expressions.ShingleMinHash(F.col(text), n, k)
-        else
-          mallispark.expressions.MinHashFromText(F.col(text), n, k))
-          .as("sig"),
-        mallispark.expressions.ShingleH60Set(F.col(text), n).as("hs0")) ++
+        MinHashFromText(F.col(text), n, k).as("sig"),
+        ShingleH60Set(F.col(text), n).as("hs0")) ++
       (if (wantScaled) Seq((F.octet_length(F.col(text)) > 0).as("len_ok"))
        else Nil)
     val baseSel = df.select(baseCols: _*)
@@ -390,18 +340,10 @@ object Dedup {
           df.where(F.octet_length(F.col(text)) > 0).count() / div).toInt
       case None => maxShingleDf
     }
-    val bd = bandsFromSig(base.select(F.col("doc"), F.col("sig")), "doc",
-        k, bands, shiftNonneg = !portable)
-      .select(F.col("doc"), F.col("band"), F.col("band_key"))
-    val buckets = bd.groupBy("band", "band_key")
-      .agg(mallispark.expressions.BoundedCollectMin(
-          F.col("doc").cast(LongType), maxBucket + 1).as("ids"),
-        F.count(F.lit(1)).as("bsz"))
-      .observe(obsName("jaccard_lsh_dropped_buckets"),
-        F.coalesce(F.sum(F.when(F.col("bsz") > maxBucket, 1L)
-          .otherwise(0L)), F.lit(0L)).as("dropped"))
-      .where(F.col("bsz") > 1 && F.col("bsz") <= maxBucket)
-    val cand = bucketPairs(buckets, "ids")
+    val cand = bucketPairs(
+      bandsFromSig(base.select(F.col("doc"), F.col("sig")), "doc",
+        k, bands, shiftNonneg = true),
+      Seq("band", "band_key"), "doc", maxBucket, "jaccard")
     // per-doc sorted 60-bit shingle-hash sets from the ShingleH60Set
     // kernel (bit-identical to md5 of the shingle strings; collision odds
     // 2^-60-scale — the DuckDB oracle counts the strings themselves).
@@ -443,7 +385,7 @@ object Dedup {
         if (nHot == 0L)
           hs60.select(F.col("doc"), F.col("hs0").as("hs"))
         else if (nHot <= maxHotBroadcast) {
-          val hotArr = hot.agg(mallispark.expressions.BoundedCollectMin(
+          val hotArr = hot.agg(BoundedCollectMin(
             F.col("h").cast(LongType), maxHotBroadcast + 1).as("hot_arr"))
           hs60.crossJoin(F.broadcast(hotArr))
             .select(F.col("doc"),
@@ -460,18 +402,24 @@ object Dedup {
           // shingle is hot vanish, as empty sets do at the pair step
           exploded.join(hot, Seq("h"), "left_anti")
             .groupBy("doc")
-            .agg(mallispark.expressions.BoundedCollectMin(
-              F.col("h").cast(LongType), 1 << 20).as("hs"))
+            .agg(BoundedCollectMin(F.col("h").cast(LongType), 1 << 20)
+              .as("hs"))
         }
       }
+    // the intersection size is a GENERATED column: the Jaccard filter is
+    // pushed into the pair join's condition, and a projected
+    // array_intersect would be re-derived there and so run twice per
+    // candidate pair; predicate pushdown cannot see through a generator
+    // (outer explode of a one-element array: exactly one row per pair)
     val pairs = cand
       .join(docsets.select(F.col("doc").as("id_a"), F.col("hs").as("hs_a")),
         "id_a")
       .join(docsets.select(F.col("doc").as("id_b"), F.col("hs").as("hs_b")),
         "id_b")
       .select(F.col("id_a"), F.col("id_b"),
-        F.size(F.array_intersect(F.col("hs_a"), F.col("hs_b")))
-          .cast(LongType).as("inter"),
+        F.explode_outer(F.array(
+          F.size(F.array_intersect(F.col("hs_a"), F.col("hs_b")))
+            .cast(LongType))).as("inter"),
         F.size(F.col("hs_a")).cast(LongType).as("sz_a"),
         F.size(F.col("hs_b")).cast(LongType).as("sz_b"))
     // an empty side has no Jaccard (and two would divide by zero)
@@ -658,10 +606,4 @@ object Dedup {
           x => x.cast(org.apache.spark.sql.types.StringType)), ",")
           .as("members"))
   }
-
-  /** Portable 60-bit hash (15 md5 hex chars — fits signed 64-bit on both
-    * engines). Collision-free for practical shingle-set sizes. */
-  private def h60(c: Column): Column =
-    F.conv(F.substring(F.md5(c.cast(StringType)), 1, 15), 16, 10)
-      .cast(LongType)
 }

@@ -99,15 +99,14 @@ object Multimodal {
     *
     * Format per the public BITMAPFILEHEADER/BITMAPINFOHEADER layout:
     * magic 'BM', pixel-array offset at byte 11 (u32 LE), width at 19,
-    * height at 23 (i32 LE), planes at 27, bpp at 29 (u16 LE). */
-  def decodeBmp(bin: Column): Column =
-    decodeBmpHex(F.hex(bin), F.length(bin).cast(LongType))
-
-  /** Same, over a PRE-PROJECTED hex string + byte length — project
-    * `hex(bin)` ONCE in a parent select when composing decoders: the
-    * expression tree references every byte through `h`, and recomputing
-    * `hex(bin)` per byte reference makes the interpreted tree quadratic
-    * in practice (higher-order aggregates skip codegen CSE). */
+    * height at 23 (i32 LE), planes at 27, bpp at 29 (u16 LE).
+    *
+    * Reads a PRE-PROJECTED hex string `h` = `hex(bin)` + byte length `n`
+    * — project `hex(bin)` ONCE in a parent select when composing
+    * decoders: the expression tree references every byte through `h`,
+    * and recomputing `hex(bin)` per byte reference makes the interpreted
+    * tree quadratic in practice (higher-order aggregates skip codegen
+    * CSE). */
   def decodeBmpHex(h: Column, n: Column): Column = {
     val off = leU32(h, F.lit(11L)) // 0-based byte offset of pixel array
     val w = leU32(h, F.lit(19L))
@@ -159,11 +158,9 @@ object Multimodal {
     * Layout per the public RIFF spec: 'RIFF' at 1, 'WAVE' at 9, 'fmt '
     * chunk at 13 with size at 17; within fmt: audio format at +0,
     * channels at +2, sample rate at +4, bits at +14. The next chunk tag
-    * (at 21+fmtSize) must be 'data'; samples follow its u32 size. */
-  def decodeWav(bin: Column): Column =
-    decodeWavHex(F.hex(bin), F.length(bin).cast(LongType))
-
-  /** Same, over a pre-projected hex string + byte length. */
+    * (at 21+fmtSize) must be 'data'; samples follow its u32 size.
+    * Reads a pre-projected hex string + byte length, as
+    * [[decodeBmpHex]] does. */
   def decodeWavHex(h: Column, n: Column): Column = {
     val fmtSize = leU32(h, F.lit(17L))
     val audioFmt = leU16(h, F.lit(21L))
@@ -444,10 +441,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Deterministic partition balancing for heavy binary payloads: salt by
-    * content hash so hot keys (e.g. one giant host) spread evenly. */
-  def balance(df: DataFrame, binCol: String, partitions: Int): DataFrame =
-    df.repartition(partitions, F.pmod(F.xxhash64(F.col(binCol)),
-      F.lit(partitions.toLong)))
 }

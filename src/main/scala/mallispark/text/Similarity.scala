@@ -2,8 +2,8 @@ package mallispark.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import TextOps.h32
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (Array[Float]).
@@ -16,45 +16,50 @@ import TextOps.h32
   * pairs; the embedding column moves only for in-bucket refinement. */
 object Similarity {
 
-  import TextOps.obsName
-
   /** Cosine similarity between two array<float/double> columns (summed
     * in DOUBLE, left-to-right, for cross-engine determinism). Runs
     * through the codegen [[mallispark.expressions.CosineSim]] kernel —
-    * bit-identical to [[cosineColumns]] (asserted in tests) but inside
-    * whole-stage codegen instead of interpreted per-element lambdas. */
+    * bit-identical to the Column/higher-order-function formulation the
+    * specs keep as its reference, but inside whole-stage codegen instead
+    * of interpreted per-element lambdas. */
   def cosine(a: Column, b: Column): Column =
     mallispark.expressions.CosineSim(a, b)
 
-  /** The Column/higher-order-function reference formulation of
-    * [[cosine]] — kept as the executable spec the kernel is asserted
-    * bit-identical against (the pattern every native kernel follows). */
-  private[mallispark] def cosineColumns(a: Column, b: Column): Column = {
-    val dot = F.aggregate(
-      F.zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      F.lit(0.0), (acc, x) => acc + x)
-    val na = F.sqrt(F.aggregate(a, F.lit(0.0),
-      (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType)))
-    val nb = F.sqrt(F.aggregate(b, F.lit(0.0),
-      (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType)))
-    dot / (na * nb)
+  /** The top-k tail of every search: rank each query's scored rows by
+    * `cos` descending, ties to the lowest corpus id, and keep the first
+    * `k` — (queryId, corpusId, cos, rank). The window partitions by query,
+    * so only the scored rows shuffle, never the corpus. */
+  private def topK(scored: DataFrame, queryId: String, corpusId: String,
+                   k: Int): DataFrame = {
+    val w = Window.partitionBy(F.col(queryId))
+      .orderBy(F.col("cos").desc, F.col(corpusId).asc)
+    scored.withColumn("rank", F.row_number().over(w))
+      .where(F.col("rank") <= k)
+      .select(F.col(queryId), F.col(corpusId), F.col("cos"), F.col("rank"))
   }
+
+  /** Exact cosine + top-k over candidate (queryId, corpusId) `pairs`: the
+    * embeddings join back only for the candidates (the query side
+    * broadcast). Shared by the IVF and LSH searches. */
+  private def refineTopK(pairs: DataFrame,
+                         corpus: DataFrame, corpusId: String, corpusVec: String,
+                         queries: DataFrame, queryId: String, queryVec: String,
+                         k: Int): DataFrame =
+    topK(pairs
+      .join(corpus, corpusId)
+      .join(F.broadcast(queries), queryId)
+      .withColumn("cos", cosine(F.col(corpusVec), F.col(queryVec))),
+      queryId, corpusId, k)
 
   /** Exact brute-force top-k: broadcast the (small) query set against the
     * corpus, window top-k per query. One corpus scan, no corpus shuffle
     * beyond the top-k aggregation. */
   def bruteForceTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
                      queries: DataFrame, queryId: String, queryVec: String,
-                     k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val joined = corpus.crossJoin(F.broadcast(queries))
-      .withColumn("cos", cosine(F.col(corpusVec), F.col(queryVec)))
-    val w = Window.partitionBy(F.col(queryId))
-      .orderBy(F.col("cos").desc, F.col(corpusId).asc)
-    joined.withColumn("rank", F.row_number().over(w))
-      .where(F.col("rank") <= k)
-      .select(F.col(queryId), F.col(corpusId), F.col("cos"), F.col("rank"))
-  }
+                     k: Int): DataFrame =
+    topK(corpus.crossJoin(F.broadcast(queries))
+      .withColumn("cos", cosine(F.col(corpusVec), F.col(queryVec))),
+      queryId, corpusId, k)
 
   /** Portable md5-derived 32-bit hash of a STRING, computed driver-side —
     * byte-identical to `TextOps.h32` / the DuckDB formula. Used to derive
@@ -75,26 +80,13 @@ object Similarity {
     Seq.tabulate(planes)(p => Seq.tabulate(dims)(i =>
       if (h32Scala(s"${table}_${p}_${i}") % 2 == 0) 1.0 else -1.0))
 
-  /** Random-hyperplane LSH bucket for one table: `planes` sign bits of
-    * dot(v, r_p), r_p ∈ {±1}^d, packed into one BIGINT. The sign is taken
-    * on round(dot, 4): both engines sum doubles in element order with
-    * ≤1e-12 discrepancy, so the rounded comparison cannot disagree. */
-  def lshBucket(vec: Column, planes: Int, dims: Int,
-                table: Int = 0): Column = {
-    val signs = planeSigns(table, planes, dims)
-    signs.zipWithIndex.map { case (sv, p) =>
-      val arr = F.array(sv.map(F.lit): _*)
-      val dot = F.aggregate(
-        F.zip_with(vec, arr, (x, s) => x.cast(DoubleType) * s),
-        F.lit(0.0), (acc, x) => acc + x)
-      F.when(F.round(dot, 4) >= 0, F.lit(1L << p)).otherwise(F.lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** (id, tbl, bucket) rows — ONE pass through the `HyperplaneBuckets`
-    * kernel computes every table's bucket (bit-identical to per-table
-    * `lshBucket`, which remains the Column reference formulation asserted
-    * equal in tests), then explodes with positional indices. */
+    * kernel computes every table's random-hyperplane bucket (`planes`
+    * sign bits of round(dot(v, r_p), 4), r_p ∈ {±1}^d from
+    * [[planeSigns]], packed into one BIGINT), then explodes with
+    * positional indices. The sign is taken on the rounded dot: both
+    * engines sum doubles in element order with ≤1e-12 discrepancy, so the
+    * rounded comparison cannot disagree. */
   private def bucketed(df: DataFrame, idCol: String, vecCol: String,
                        planes: Int, tables: Int, dims: Int): DataFrame =
     // posexplode_OUTER: the bucket array has constant length `tables`
@@ -123,31 +115,11 @@ object Similarity {
   def nearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, planes: Int, tables: Int,
                    dims: Int, maxBucket: Int = 4096): DataFrame = {
-    // ids must be INTEGRAL: the bounded member heap is a long heap, and a
-    // cast string id would turn every non-numeric id into one NULL key
-    val idType = df.schema(idCol).dataType
-    require(Set[DataType](ByteType, ShortType, IntegerType, LongType)(idType),
-      s"nearDupPairs: id column '$idCol' must be integral, got " +
-        idType.simpleString)
-    val b = bucketed(df, idCol, vecCol, planes, tables, dims)
-    // HOT-BUCKET CAP: a pathological (tbl, bucket) cell (e.g. a corpus of
-    // near-identical embeddings collapsing into one signature) would
-    // expand |cell|² candidate pairs; cells over `maxBucket` are skipped
-    // — recall degrades, the job survives — with the skip count exposed
-    // as an observed metric. Candidate pairs come from ONE aggregation of
-    // the banded rows (k-capped member heap per cell + in-cell pair
-    // explode, the same shape as the Jaccard path) instead of a
-    // cell-size pre-join feeding a self-join — one exchange of
-    // (tbl, bucket, id), no second shuffle of the banded rows, no join.
-    val buckets = b.groupBy("tbl", "bucket")
-      .agg(mallispark.expressions.BoundedCollectMin(
-          F.col(idCol).cast(LongType), maxBucket + 1).as("ids"),
-        F.count(F.lit(1)).as("bsz"))
-      .observe(obsName("embedding_lsh_dropped_buckets"),
-        F.coalesce(F.sum(F.when(F.col("bsz") > maxBucket, 1L)
-          .otherwise(0L)), F.lit(0L)).as("dropped"))
-      .where(F.col("bsz") > 1 && F.col("bsz") <= maxBucket)
-    val cand = Dedup.bucketPairs(buckets, "ids")
+    // cells over `maxBucket` vectors are skipped and counted as
+    // `embedding_lsh_dropped_buckets`; ids must be integral
+    val cand = Dedup.bucketPairs(
+      bucketed(df, idCol, vecCol, planes, tables, dims),
+      Seq("tbl", "bucket"), idCol, maxBucket, "embedding")
     val va = df.select(F.col(idCol).as("id_a"), F.col(vecCol).as("va"))
     val vb = df.select(F.col(idCol).as("id_b"), F.col(vecCol).as("vb"))
     cand.join(va, "id_a").join(vb, "id_b")
@@ -164,18 +136,6 @@ object Similarity {
   private def qint(x: Column): Column =
     F.round(x.cast(DoubleType) * 10000).cast(LongType)
 
-  /** Seeded deterministic k-means for the IVF coarse quantizer: init =
-    * the `k` lowest-id vectors (the deterministic "seed"), then `iters`
-    * fixed Lloyd iterations. Per iteration: assign every vector to its
-    * max-cosine centroid (ties → lowest cent_id), recompute each centroid
-    * as the mean of its members — computed as exact integer sums of
-    * quantized elements divided once in double (`sum/count/10⁴`, left-
-    * assoc), so the result is bit-identical in DuckDB's unrolled-CTE
-    * mirror. Cells that lose all members keep their previous centroid.
-    * Centroids collect to the driver (k × dims values) after each
-    * iteration and re-enter the plan as literals — the plan never grows
-    * with iterations, and the assignment scan stays one broadcast join
-    * per iteration at any corpus size. */
   /** Trained-centroid memo: production IVF trains its coarse quantizer
     * ONCE and persists it; within a session the deterministic training
     * result (a k×dims literal seq) is cached so repeated index builds
@@ -207,6 +167,18 @@ object Similarity {
       s"${if (r.isNullAt(2)) 0L else r.getLong(2)}"
   }
 
+  /** Seeded deterministic k-means for the IVF coarse quantizer: init =
+    * the `k` lowest-id vectors (the deterministic "seed"), then `iters`
+    * fixed Lloyd iterations. Per iteration: assign every vector to its
+    * max-cosine centroid (ties → lowest cent_id), recompute each centroid
+    * as the mean of its members — computed as exact integer sums of
+    * quantized elements divided once in double (`sum/count/10⁴`, left-
+    * assoc), so the result is bit-identical in DuckDB's unrolled-CTE
+    * mirror. Cells that lose all members keep their previous centroid.
+    * Centroids collect to the driver (k × dims values) after each
+    * iteration and re-enter the plan as literals — the plan never grows
+    * with iterations, and the assignment scan stays one broadcast join
+    * per iteration at any corpus size. */
   def kmeansCentroids(corpus: DataFrame, id: String, vec: String,
                       k: Int, iters: Int,
                       cacheKey: Option[String] = None): DataFrame = {
@@ -272,7 +244,6 @@ object Similarity {
               k: Int, nCentroids: Int = 16, nprobe: Int = 4,
               trainIters: Int = 0,
               centroidCacheKey: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents =
       if (trainIters > 0)
         kmeansCentroids(corpus, corpusId, corpusVec, nCentroids, trainIters,
@@ -299,15 +270,8 @@ object Similarity {
       .select(F.col(queryId), F.col("cent_id").as("cell"))
     val pairs = corpusCells.join(F.broadcast(queryCells), "cell")
       .select(F.col(queryId), F.col(corpusId)).distinct()
-    val cand = pairs
-      .join(corpus, corpusId)
-      .join(F.broadcast(queries), queryId)
-      .withColumn("cos", cosine(F.col(corpusVec), F.col(queryVec)))
-    val w = Window.partitionBy(F.col(queryId))
-      .orderBy(F.col("cos").desc, F.col(corpusId).asc)
-    cand.withColumn("rank", F.row_number().over(w))
-      .where(F.col("rank") <= k)
-      .select(F.col(queryId), F.col(corpusId), F.col("cos"), F.col("rank"))
+    refineTopK(pairs, corpus, corpusId, corpusVec, queries, queryId,
+      queryVec, k)
   }
 
   /** ANN top-k via multi-table (OR-banded) hyperplane LSH: `tables`
@@ -323,20 +287,12 @@ object Similarity {
               queries: DataFrame, queryId: String, queryVec: String,
               k: Int, planes: Int = 16, tables: Int = 4,
               dims: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pairs = bucketed(corpus, corpusId, corpusVec, planes, tables, dims)
       .join(F.broadcast(
         bucketed(queries, queryId, queryVec, planes, tables, dims)),
         Seq("tbl", "bucket"))
       .select(F.col(queryId), F.col(corpusId)).distinct()
-    val cand = pairs
-      .join(corpus, corpusId)
-      .join(F.broadcast(queries), queryId)
-      .withColumn("cos", cosine(F.col(corpusVec), F.col(queryVec)))
-    val w = Window.partitionBy(F.col(queryId))
-      .orderBy(F.col("cos").desc, F.col(corpusId).asc)
-    cand.withColumn("rank", F.row_number().over(w))
-      .where(F.col("rank") <= k)
-      .select(F.col(queryId), F.col(corpusId), F.col("cos"), F.col("rank"))
+    refineTopK(pairs, corpus, corpusId, corpusVec, queries, queryId,
+      queryVec, k)
   }
 }

@@ -1,18 +1,98 @@
 package mallispark
 
-import org.apache.spark.sql.{Column, MallisparkBridge}
+import org.apache.spark.sql.{Column, DataFrame, MallisparkBridge}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import mallispark.text.{Similarity, TextOps}
 
-/** Reference formulations the portable hash kernels are checked
-  * against. None runs in the engine: `ShingleMinHash` and
-  * `SimHashPortable` compute the same values in one pass, and the specs
-  * assert the bit-parity. */
+/** Reference formulations the engine's kernels and operators are checked
+  * against. None runs in the engine: `ShingleMinHash`, `SimHashPortable`,
+  * `CosineSim` and `HyperplaneBuckets` compute the same values in one
+  * pass, `Dedup.ngramJaccardWithinBuckets` finds the same pairs through
+  * LSH buckets, and the specs assert the parity. */
 object HashRefs {
+
+  /** Cosine of two array<float/double> columns as Column higher-order
+    * functions (summed in DOUBLE, left-to-right) — the formulation the
+    * `CosineSim` kernel is asserted bit-identical to. */
+  def cosineColumns(a: Column, b: Column): Column = {
+    val dot = F.aggregate(
+      F.zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
+      F.lit(0.0), (acc, x) => acc + x)
+    val na = F.sqrt(F.aggregate(a, F.lit(0.0),
+      (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType)))
+    val nb = F.sqrt(F.aggregate(b, F.lit(0.0),
+      (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType)))
+    dot / (na * nb)
+  }
+
+  /** Random-hyperplane LSH bucket for one table: `planes` sign bits of
+    * round(dot(v, r_p), 4) ≥ 0, r_p ∈ {±1}^d from `Similarity.planeSigns`,
+    * packed into one BIGINT — the per-table formulation the
+    * `HyperplaneBuckets` kernel is asserted bit-identical to. */
+  def lshBucket(vec: Column, planes: Int, dims: Int,
+                table: Int = 0): Column = {
+    val signs = Similarity.planeSigns(table, planes, dims)
+    signs.zipWithIndex.map { case (sv, p) =>
+      val arr = F.array(sv.map(F.lit): _*)
+      val dot = F.aggregate(
+        F.zip_with(vec, arr, (x, s) => x.cast(DoubleType) * s),
+        F.lit(0.0), (acc, x) => acc + x)
+      F.when(F.round(dot, 4) >= 0, F.lit(1L << p)).otherwise(F.lit(0L))
+    }.reduce(_ + _)
+  }
+
+  /** Exact n-gram (word) Jaccard for ALL pairs sharing a shingle:
+    * distinct shingles exploded, self-joined on shingle, |A∩B| counted,
+    * Jaccard = inter / (|A|+|B|-inter). Returns pairs with
+    * jaccard ≥ threshold (id_a < id_b) as (id_a, id_b, inter, sz_a, sz_b,
+    * jaccard). The self-join is O(Σ df²) over shingle buckets — the
+    * exact answer the LSH-gated path must recall, at test scale only. */
+  def ngramJaccardPairs(df: DataFrame, id: String, text: String,
+                        n: Int = 3, threshold: Double = 0.8,
+                        maxShingleDf: Int = 0): DataFrame = {
+    val sh = shingleSet(df, id, text, n, maxShingleDf)
+    val sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).as("sz"))
+    val pairs = sh.as("a").join(sh.as("b"),
+        F.col("a.shingle") === F.col("b.shingle") &&
+          F.col("a.doc") < F.col("b.doc"))
+      .groupBy(F.col("a.doc").as("id_a"), F.col("b.doc").as("id_b"))
+      .agg(F.count(F.lit(1)).as("inter"))
+    jaccardFilter(pairs, sizes, threshold)
+  }
+
+  /** Distinct shingles exploded per doc, optionally frequency-capped:
+    * shingles appearing in more than `maxShingleDf` docs are dropped, so
+    * Jaccard is defined over the discriminative shingle space (the cap
+    * `ngramJaccardWithinBuckets` and the DuckDB oracle apply). */
+  private def shingleSet(df: DataFrame, id: String, text: String, n: Int,
+                         maxShingleDf: Int): DataFrame = {
+    val sh = df.select(F.col(id).as("doc"),
+        F.explode_outer(F.array_distinct(TextOps.shingles(F.col(text), n)))
+          .as("shingle"))
+      .where(F.col("shingle").isNotNull)
+    if (maxShingleDf <= 0) sh
+    else {
+      val hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).as("df"))
+        .where(F.col("df") > maxShingleDf).select("shingle")
+      sh.join(F.broadcast(hot), Seq("shingle"), "left_anti")
+    }
+  }
+
+  private def jaccardFilter(pairs: DataFrame, sizes: DataFrame,
+                            threshold: Double): DataFrame =
+    pairs
+      .join(sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+      .join(sizes.withColumnRenamed("doc", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+      .withColumn("jaccard",
+        F.col("inter").cast(DoubleType) /
+          (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+      .where(F.col("jaccard") >= threshold)
+      .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
 
   /** Pack per-bit votes (array of 32 longs) into a 32-bit key: bit i set
     * iff votes[i] > 0 — the Column formulation `SimHashPortable` is

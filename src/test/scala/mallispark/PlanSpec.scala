@@ -1,7 +1,8 @@
 package mallispark
 
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Length, Size}
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Attribute,
+  Expression, Length, Size}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.FileSourceScanExec
 import mallispark.ir.S
@@ -168,6 +169,19 @@ class PlanSpec extends SparkSuite {
       val bad = kernelFilters(queries(q)(spark, sf))
       assert(bad.isEmpty, s"$q: filter re-evaluates a kernel array: $bad")
     }
+  }
+
+  test("the Jaccard pair step computes one array_intersect per pair") {
+    // the Jaccard filter is pushed into the pair join's condition, so an
+    // intersection projected above the join would run there too
+    val jac = mallispark.text.Dedup.ngramJaccardWithinBuckets(
+      spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
+      threshold = 0.5, materialize = false)
+    val plan = jac.queryExecution.optimizedPlan
+    val intersects = plan.collect { case p =>
+      p.expressions.map(_.collect { case a: ArrayIntersect => a }.size).sum
+    }.sum
+    assert(intersects === 1, s"array_intersect count $intersects:\n$plan")
   }
 
   test("verdict aggregation is partial+final (map-side combine)") {

@@ -132,7 +132,7 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("ngram jaccard: dup pair = 1.0; near pair high; cross pair absent") {
-    val pairs = Dedup.ngramJaccardPairs(d, "id", "text", n = 2, threshold = 0.5)
+    val pairs = HashRefs.ngramJaccardPairs(d, "id", "text", n = 2, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(5)).toMap
     assert(pairs((1L, 2L)) === 1.0)
     assert(pairs.contains((1L, 3L)) && pairs((1L, 3L)) > 0.5)
@@ -142,7 +142,7 @@ class TextOpsSpec extends SparkSuite {
   test("LSH-gated jaccard recalls the full self-join pairs (scale path)") {
     // the within-buckets refinement must find every pair the standalone
     // quadratic join finds at a high threshold (near-dups co-bucket)
-    val full = Dedup.ngramJaccardPairs(d, "id", "text", n = 2,
+    val full = HashRefs.ngramJaccardPairs(d, "id", "text", n = 2,
         threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // rows-per-band = 1 → per-band collision prob = s; a 0.5-similar pair
@@ -245,9 +245,9 @@ class TextOpsSpec extends SparkSuite {
       Row(3L, "x x p q r"), Row(4L, "x x s t u"))
     val hot = df(rows, StructType(Seq(StructField("id", LongType),
       StructField("text", StringType))))
-    val uncapped = Dedup.ngramJaccardPairs(hot, "id", "text", n = 2,
+    val uncapped = HashRefs.ngramJaccardPairs(hot, "id", "text", n = 2,
       threshold = 0.1).count()
-    val capped = Dedup.ngramJaccardPairs(hot, "id", "text", n = 2,
+    val capped = HashRefs.ngramJaccardPairs(hot, "id", "text", n = 2,
       threshold = 0.1, maxShingleDf = 2).collect()
     assert(uncapped === 6) // all pairs share "x x" → full quadratic blowup
     // capped: only (1,2) survive — they share real content shingles
@@ -378,6 +378,21 @@ class TextOpsSpec extends SparkSuite {
     assert(e.getMessage.contains("'sid'"), e.getMessage)
   }
 
+  test("LSH-gated jaccard rejects a non-integral id before any Spark job") {
+    // the text column throws when evaluated: a job over the corpus (the
+    // base scan runs before the bucket step) would fail with that error
+    // wrapped in a SparkException, not with the id check
+    val boom = F.udf((s: String) =>
+      if (s != null) throw new IllegalStateException("text evaluated") else s)
+    val docs = spark.range(3).select(F.col("id").cast("string").as("sid"),
+      boom(F.col("id").cast("string")).as("text"))
+    val e = intercept[IllegalArgumentException] {
+      Dedup.ngramJaccardWithinBuckets(docs, "sid", "text", n = 2,
+        threshold = 0.5)
+    }
+    assert(e.getMessage.contains("'sid'"), e.getMessage)
+  }
+
   test("dupClustersStar refuses to label from a non-converged forest") {
     val pairs = df(Seq(Row(1L, 2L), Row(2L, 3L)),
       StructType(Seq(StructField("a", LongType), StructField("b", LongType))))
@@ -403,7 +418,7 @@ class TextOpsSpec extends SparkSuite {
       StructField("b", ArrayType(FloatType))))
     val mismatches = df(vecs, schema)
       .select(Similarity.cosine(F.col("a"), F.col("b")).as("k"),
-        Similarity.cosineColumns(F.col("a"), F.col("b")).as("c"))
+        HashRefs.cosineColumns(F.col("a"), F.col("b")).as("c"))
       .where(F.col("k") =!= F.col("c")).count() // exact double equality
     assert(mismatches === 0)
     // length mismatch → null (zip_with null-padding semantics)
@@ -418,7 +433,7 @@ class TextOpsSpec extends SparkSuite {
       Row(1L, Seq[Any](1f, null, 2f), Seq[Any](1f, 1f, 1f)),
       Row(2L, Seq[Any](1f, 2f, 3f), Seq[Any](1f, 1f, 1f))), nullable)
       .select(F.col("id"), Similarity.cosine(F.col("a"), F.col("b")).as("k"),
-        Similarity.cosineColumns(F.col("a"), F.col("b")).as("c"))
+        HashRefs.cosineColumns(F.col("a"), F.col("b")).as("c"))
       .orderBy("id").collect()
     assert(withNull(0).isNullAt(1) && withNull(0).isNullAt(2))
     assert(!withNull(1).isNullAt(1) &&
@@ -471,7 +486,7 @@ class TextOpsSpec extends SparkSuite {
     val emb = df(vecs, embSchema)
     val planes = 5; val tables = 4
     val colBuckets = F.array((0 until tables).map(t =>
-      Similarity.lshBucket(F.col("embedding"), planes, 16, t)): _*)
+      HashRefs.lshBucket(F.col("embedding"), planes, 16, t)): _*)
     val got = emb.select(
       colBuckets.as("a"),
       HyperplaneBuckets(F.col("embedding"), planes, tables, 16).as("b"))
