@@ -12,9 +12,10 @@ import mallispark.text.{Dedup, Similarity}
   *
   *  - `time q1 q2 ...` (no names or `all`: every query) — times each
   *    named query as min of K interleaved passes of the SAME action Bench
-  *    uses (`df.count()`), after one warm pass, so before/after evidence
-  *    is noise-immune on a shared VM. One line per query: min / median /
-  *    samples.
+  *    uses (`df.count()`), after one untimed warm pass of each query, so
+  *    every sample is warm and before/after evidence is noise-immune on a
+  *    shared VM. A query whose warm pass fails is not timed. One line per
+  *    query: min / median / samples.
   *  - `explain out_dir suffix q1 q2 ...` — writes `out_dir/<q>_<suffix>.txt`
   *    with the `.explain("formatted")` text of each named query. Nothing
   *    is executed for the plan itself, but builders that eagerly
@@ -145,22 +146,20 @@ object Diag {
   private def time(spark: SparkSession, sfDir: String,
                    names: Seq[String]): Unit = {
     val build = builder(spark, sfDir)
-    // same warm-up as Bench
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(F.sum(F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1000L))))
-      .collect()
-    spark.range(1000000).select(F.sum(F.pmod(
-      F.xxhash64(F.col("id")), F.lit(7L)))).collect()
+    def pass(q: String): Boolean =
+      try { build(q).count(); true } catch {
+        case e: Throwable =>
+          System.err.println(s"[diag] $q FAILED: ${e.getMessage}")
+          false
+      }
+    // one untimed pass of each query first: a cold first pass (JIT,
+    // codegen, file listing) would otherwise be one of the K samples
+    val warm = names.filter(pass)
     // K interleaved passes over the whole list (slow VM drifts hit
     // every query equally, not one unlucky victim)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-    for (_ <- 1 to env("SPARK_GRAFT_REPEAT", "3").toInt; q <- names) {
-      val (sec, ok) = seconds(
-        try { build(q).count(); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[diag] $q FAILED: ${e.getMessage}")
-            false
-        })
+    for (_ <- 1 to env("SPARK_GRAFT_REPEAT", "3").toInt; q <- warm) {
+      val (sec, ok) = seconds(pass(q))
       // a failed pass records NO sample — time-to-failure would read as
       // a dramatic (fake) speedup in before/after evidence
       if (ok) samples.updateWith(q)(o => Some(sec :: o.getOrElse(Nil)))

@@ -1,9 +1,10 @@
 package mallispark.run
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal snapshot-log table format — the Iceberg-style operational
   * surface the north rule names (snapshot-isolated reads, time travel,
@@ -17,7 +18,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *   data/snap-000001/part-*.parquet   files written by commit 1
   *   snap-000001.manifest              snapshot manifest (see below)
   *   snap-000002.manifest
+  *   validation/manifest/              per-partition verdicts, all runs
+  *   validation/violations/            violation rows, all runs
+  *   validation/snap-000001.record     completion record of a run
   * }}}
+  * The `validation/` entries belong to
+  * [[ValidationJob.validateSnapshot]]: within a run the violations are
+  * appended first, the manifest rows second (the commit point), and the
+  * record's `done` mark last, so a run with the mark has nothing left to
+  * validate and the next call reads its manifest alone.
   *
   * A manifest is the COMPLETE file listing visible at that snapshot plus
   * lineage (parent id, commit mode, rows added, total rows) — reading a
@@ -105,13 +114,14 @@ object SnapshotTable {
       }
       // a production commit takes row counts from write metrics
       // (BasicWriteJobStatsTracker); a footer-only read-back keeps this
-      // implementation dependency-free. An all-empty write may produce
-      // ZERO part files — the manifest's schema line keeps the snapshot
-      // readable as an empty frame.
+      // implementation dependency-free; the schema is the frame's own, so
+      // the read-back infers nothing from the footers it just wrote. An
+      // all-empty write may produce ZERO part files — the manifest's
+      // schema line keeps the snapshot readable as an empty frame.
       val rowsAdded =
         if (newFiles.isEmpty) 0L
-        else df.sparkSession.read.parquet(root.resolve(subdir).toString)
-          .count()
+        else df.sparkSession.read.schema(df.schema)
+          .parquet(root.resolve(subdir).toString).count()
       val (files, total) = mode match {
         case Append =>
           val p = parent.map(readManifest(dir, _))
@@ -124,10 +134,7 @@ object SnapshotTable {
         s"mode ${mode.name}", s"rows_added $rowsAdded", s"total_rows $total",
         s"schema ${df.schema.toDDL}",
         s"files ${files.size}") ++ files).mkString("\n")
-      val tmp = root.resolve(f"snap-$id%06d.manifest.tmp")
-      Files.writeString(tmp, manifest)
-      // publish: the manifest appears fully-formed or not at all
-      Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE)
+      publish(manifestPath, manifest)
       Files.deleteIfExists(claimPath)
       id
     } catch {
@@ -191,6 +198,14 @@ object SnapshotTable {
     }
   }
 
+  /** Write `text` to `path` so it appears fully formed or not at all:
+    * a temp file beside it, then an atomic rename. */
+  private[run] def publish(path: Path, text: String): Unit = {
+    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+  }
+
   private def readManifest(dir: String, id: Long): Snapshot = {
     val p = Paths.get(dir).resolve(f"snap-$id%06d.manifest")
     val lines = Files.readAllLines(p).asScala.toSeq
@@ -211,22 +226,20 @@ object SnapshotTable {
   }
 
   /** Snapshot-isolated read; default = current snapshot (time travel via
-    * an explicit id). The explicit file list preserves pushdown/pruning. */
+    * an explicit id). The explicit file list preserves pushdown/pruning,
+    * and the manifest's schema line is passed to the reader: a schema-less
+    * parquet read starts a Spark job to infer it from the footers, so
+    * building this frame starts none (up to 32 files; Spark lists a longer
+    * path list with a job). */
   def read(spark: SparkSession, dir: String,
            snapshotId: Option[Long] = None): DataFrame = {
     val id = snapshotId.orElse(currentSnapshotId(dir)).getOrElse(
       throw new IllegalArgumentException(s"no snapshots in $dir"))
     val m = readManifest(dir, id)
-    if (m.files.isEmpty)
-      // a logically-empty snapshot stays READABLE: the manifest carries
-      // the schema, so downstream diffs/validation see an empty frame
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
-    else {
-      val abs = m.files.map(f => Paths.get(dir).resolve(f).toString)
-      spark.read.parquet(abs: _*)
-    }
+    // a logically-empty snapshot (no files) stays READABLE: the manifest
+    // carries the schema, so downstream diffs/validation see an empty frame
+    spark.read.schema(StructType.fromDDL(m.schemaDdl))
+      .parquet(m.files.map(f => Paths.get(dir).resolve(f).toString): _*)
   }
 
   /** Lineage + metrics of every committed snapshot, oldest first —

@@ -1,5 +1,8 @@
 package mallispark.run
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
@@ -31,8 +34,14 @@ object ValidationJob {
       implicit ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()): Result =
     validateParts(withPartId(df, keyCols, nParts, None), schema, keyCols)
 
-  /** `df` plus the logical `part_id`: `partIdOf`, or by default
-    * engine-native xxhash64 of the first key column (fast). */
+  /** The logical part key: `partIdOf`, or by default engine-native
+    * xxhash64 of the first key column (fast). */
+  private def partKey(keyCols: Seq[String], nParts: Int,
+                      partIdOf: Option[Column]): Column =
+    partIdOf.getOrElse(
+      F.pmod(F.xxhash64(F.col(keyCols.head)), F.lit(nParts.toLong)))
+
+  /** `df` plus the logical `part_id` ([[partKey]]). */
   private def withPartId(df: DataFrame, keyCols: Seq[String], nParts: Int,
                          partIdOf: Option[Column]): DataFrame = {
     // part_id is this job's bookkeeping column in every output (verdicts,
@@ -42,8 +51,7 @@ object ValidationJob {
     require(!df.columns.contains("part_id"),
       "input already has a part_id column — rename it; part_id is the " +
         "validation job's partition-lineage column")
-    df.withColumn("part_id", partIdOf.getOrElse(
-      F.pmod(F.xxhash64(F.col(keyCols.head)), F.lit(nParts.toLong))))
+    df.withColumn("part_id", partKey(keyCols, nParts, partIdOf))
   }
 
   /** The shared core of `run` and `runResumable`: row verdicts, the
@@ -69,7 +77,14 @@ object ValidationJob {
 
   /** Completed part_ids for a run (empty frame when no manifest yet). */
   def completedPartitions(spark: SparkSession, dir: String,
-                          runId: String): DataFrame = {
+                          runId: String): DataFrame =
+    completed(spark, dir, runId, None)
+
+  /** [[completedPartitions]], reading the manifest with `schema` when the
+    * caller knows it: a schema-less parquet read starts a Spark job to
+    * infer the schema from the footers. */
+  private def completed(spark: SparkSession, dir: String, runId: String,
+                        schema: Option[StructType]): DataFrame = {
     // ONLY a missing manifest means "first run" — a transient IO error
     // or corrupt footer must FAIL the resume, not silently restart from
     // zero and double-append already-committed partitions. Test for the
@@ -78,8 +93,8 @@ object ValidationJob {
     // Observation listener then logs the caught error as a stack trace
     val p = new org.apache.hadoop.fs.Path(manifestPath(dir))
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(p.toString).where(F.col("run_id") === runId)
-        .select("part_id").distinct()
+      schema.fold(spark.read)(spark.read.schema).parquet(p.toString)
+        .where(F.col("run_id") === runId).select("part_id").distinct()
     else
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -99,8 +114,13 @@ object ValidationJob {
     // pass a portable md5-derived partIdOf (e.g. pmod(TextOps.h32(url), n))
     // when the manifest must be reproducible by another engine (the
     // oracle gate)
-    val todo = withPartId(df, keyCols, nParts, partIdOf).join(
-      F.broadcast(completedPartitions(spark, dir, runId)), Seq("part_id"),
+    val withPart = withPartId(df, keyCols, nParts, partIdOf)
+    // both manifest reads pass the schema this call writes (the completed
+    // read needs only its part_id and run_id columns), so neither starts
+    // a footer-inference job
+    val doneParts = completed(spark, dir, runId, Some(StructType(Seq(
+      withPart.schema("part_id"), StructField("run_id", StringType)))))
+    val todo = withPart.join(F.broadcast(doneParts), Seq("part_id"),
       "left_anti")
     val r = validateParts(todo, schema, keyCols)
     val verdicts = r.verdicts
@@ -121,8 +141,14 @@ object ValidationJob {
       violations.write.mode(SaveMode.Append).parquet(violationsPath(dir))
       verdicts.write.mode(SaveMode.Append).parquet(manifestPath(dir))
     } finally todo.unpersist(blocking = false)
-    spark.read.parquet(manifestPath(dir)).where(F.col("run_id") === runId)
+    readManifest(spark, dir, runId, verdicts.schema)
   }
+
+  /** A run's manifest rows, read with the schema they were written with. */
+  private def readManifest(spark: SparkSession, dir: String, runId: String,
+                           schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(manifestPath(dir))
+      .where(F.col("run_id") === runId)
 
   /** Resumable validation of one SNAPSHOT of a snapshot-log table
     * ([[SnapshotTable]]): the run id IS the snapshot id, so the
@@ -131,7 +157,30 @@ object ValidationJob {
     * manifest with lineage + metrics written alongside each commit").
     * Kill/rerun resumes the same snapshot's remaining partitions; a NEW
     * commit validates under a fresh run id automatically. Returns the
-    * snapshot's committed manifest rows. */
+    * snapshot's committed manifest rows.
+    *
+    * A snapshot is immutable, so its run also keeps a completion record,
+    * `validation/snap-N.record`, published like a snapshot manifest
+    * (temp file + rename):
+    * {{{
+    *   mallispark-validation v1
+    *   n_parts 256
+    *   part_key pmod(xxhash64(doc_id), 256L)
+    *   manifest_schema part_id BIGINT,rows BIGINT,...   (second write)
+    *   done                                             (second write)
+    * }}}
+    * The first write, before any validation write, holds the parameters
+    * that define the run's hash space (`part_key` is the part-key
+    * Column's text, `partIdOf` or the default); the second adds the manifest's
+    * schema and the `done` mark once the manifest append has succeeded.
+    * So the order is: violations, manifest rows, then the done mark. A
+    * crash before the done mark leaves the record without it, and the
+    * next call takes the resumable path, which appends no row for an
+    * already-committed partition. A call that finds the done mark
+    * returns the manifest read with the recorded schema: it builds no
+    * snapshot frame and starts no Spark job. A call whose `nParts` or
+    * part key differs from a record (done or not) fails fast: resuming
+    * under another hash space would skip rows never validated. */
   def validateSnapshot(spark: SparkSession, tableDir: String,
                        schema: SchemaIR, keyCols: Seq[String],
                        snapshotId: Option[Long] = None,
@@ -141,10 +190,58 @@ object ValidationJob {
     val id = snapshotId.orElse(SnapshotTable.currentSnapshotId(tableDir))
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshots committed in $tableDir"))
-    runResumable(spark, SnapshotTable.read(spark, tableDir, Some(id)),
-      schema, keyCols, s"$tableDir/validation", f"snap-$id%06d",
-      nParts, partIdOf)
+    val dir = s"$tableDir/validation"
+    val runId = f"snap-$id%06d"
+    val record = Paths.get(dir, s"$runId.record")
+    val params = Seq("n_parts" -> nParts.toString,
+      "part_key" -> partKey(keyCols, nParts, partIdOf).toString)
+    val prior = readRecord(record)
+    prior.foreach { kv =>
+      val diffs = params.collect { case (k, v) if !kv.get(k).contains(v) =>
+        s"$k: recorded ${kv.getOrElse(k, "(none)")}, requested $v" }
+      if (diffs.nonEmpty)
+        throw new IllegalArgumentException(
+          s"validation of $runId was started with other parameters " +
+            s"(${diffs.mkString("; ")}) — see $record")
+    }
+    prior.filter(_.contains("done")) match {
+      case Some(kv) =>
+        readManifest(spark, dir, runId,
+          StructType.fromDDL(kv("manifest_schema")))
+      case None =>
+        if (prior.isEmpty) {
+          Files.createDirectories(record.getParent)
+          writeRecord(record, params)
+        }
+        val m = runResumable(spark,
+          SnapshotTable.read(spark, tableDir, Some(id)), schema, keyCols,
+          dir, runId, nParts, partIdOf)
+        writeRecord(record, params ++ Seq(
+          "manifest_schema" -> m.schema.toDDL, "done" -> ""))
+        m
+    }
   }
+
+  private val RecordHeader = "mallispark-validation v1"
+
+  private def writeRecord(path: Path, kv: Seq[(String, String)]): Unit =
+    SnapshotTable.publish(path, (RecordHeader +: kv.map {
+      case (k, "") => k
+      case (k, v) => s"$k $v"
+    }).mkString("\n"))
+
+  /** The record's key-value lines (a bare key maps to ""), if it exists. */
+  private def readRecord(path: Path): Option[Map[String, String]] =
+    if (!Files.exists(path)) None
+    else {
+      val lines = Files.readAllLines(path).asScala.toSeq
+      require(lines.headOption.contains(RecordHeader),
+        s"bad validation record $path")
+      Some(lines.drop(1).map { l =>
+        val i = l.indexOf(' ')
+        if (i < 0) l -> "" else l.take(i) -> l.drop(i + 1)
+      }.toMap)
+    }
 
   /** Committed violation rows for a run: only partitions present in the
     * manifest count, and rows re-appended by a crash-retry collapse via

@@ -1,14 +1,48 @@
 package mallispark
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
-import mallispark.run.SnapshotTable
+import org.scalatest.BeforeAndAfterAll
+import mallispark.ir.S
+import mallispark.run.{SnapshotTable, ValidationJob}
 
 /** Snapshot-log table format: atomic commits, snapshot-isolated time
   * travel, append vs logical-replace, lineage, cross-snapshot diff. */
-class SnapshotTableSpec extends SparkSuite {
+class SnapshotTableSpec extends SparkSuite with BeforeAndAfterAll {
 
-  private def freshDir(): String = java.nio.file.Files
-    .createTempDirectory("snaptab_spec_").toString
+  // every table this spec writes, for the known-schema read sweep
+  private val tables = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  override def afterAll(): Unit = tables.foreach(rmTree)
+
+  private def freshDir(): String = {
+    val dir = Files.createTempDirectory("snaptab_spec_").toString
+    tables += dir
+    dir
+  }
+
+  /** The data files a snapshot's manifest lists. */
+  private def manifestFiles(dir: String, id: Long): Seq[String] =
+    Files.readAllLines(Paths.get(dir, f"snap-$id%06d.manifest")).asScala
+      .dropWhile(!_.startsWith("files ")).drop(1)
+      .map(f => Paths.get(dir, f).toString).toSeq
+
+  private val schema = S.mapE(false, S.req("id", S.int),
+    S.req("v", S.intMin(0L)))
+
+  /** (id, v) for id in [from, until); v = -1 (invalid) where id % 10 == 3. */
+  private def mk(from: Long, until: Long) = spark.range(from, until)
+    .select(F.col("id"),
+      F.when(F.col("id") % 10 === 3, F.lit(-1L))
+        .otherwise(F.col("id")).as("v"))
+
+  private def rowsOf(m: DataFrame) = m.agg(F.sum("rows")).head().getLong(0)
+
+  private def record(dir: String, id: Long) =
+    Paths.get(dir, "validation", f"snap-$id%06d.record")
 
   test("commit/append: time travel reads each snapshot's own rows") {
     val dir = freshDir()
@@ -89,15 +123,7 @@ class SnapshotTableSpec extends SparkSuite {
   }
 
   test("validateSnapshot: manifest rides the table dir, resumes per snapshot") {
-    import mallispark.ir.S
-    import mallispark.run.ValidationJob
     val dir = freshDir()
-    val schema = S.mapE(false, S.req("id", S.int),
-      S.req("v", S.intMin(0L)))
-    val mk = (from: Long, until: Long) => spark.range(from, until)
-      .select(F.col("id"),
-        F.when(F.col("id") % 10 === 3, F.lit(-1L))
-          .otherwise(F.col("id")).as("v"))
     SnapshotTable.commit(mk(0L, 100L), dir)
     val m1 = ValidationJob.validateSnapshot(spark, dir, schema,
       Seq("id"), nParts = 4)
@@ -188,5 +214,99 @@ class SnapshotTableSpec extends SparkSuite {
     val s2 = SnapshotTable.commit(spark.range(4).toDF("id"), dir)
     assert(s2 === 2L)
     assert(SnapshotTable.read(spark, dir).count() === 7L)
+  }
+
+  test("validateSnapshot: a done snapshot returns its manifest, no Spark job") {
+    val dir = freshDir()
+    SnapshotTable.commit(mk(0L, 100L), dir)
+    val m1 = ValidationJob.validateSnapshot(spark, dir, schema, Seq("id"),
+      nParts = 4)
+    assert(Files.readAllLines(record(dir, 1L)).asScala.last === "done")
+    val (jobs, again) = jobsStartedBy(ValidationJob.validateSnapshot(
+      spark, dir, schema, Seq("id"), nParts = 4))
+    assert(jobs === 0)
+    assert(again.schema === m1.schema)
+    assert(again.collect().toSet === m1.collect().toSet)
+    assert(rowsOf(again) === 100L)
+  }
+
+  test("validateSnapshot fails fast on a changed part key, done or cut short") {
+    val dir = freshDir()
+    SnapshotTable.commit(mk(0L, 100L), dir)
+    ValidationJob.validateSnapshot(spark, dir, schema, Seq("id"),
+      nParts = 4)
+    def refused(): Unit = {
+      val e = intercept[IllegalArgumentException](
+        ValidationJob.validateSnapshot(spark, dir, schema, Seq("id"),
+          nParts = 8))
+      assert(e.getMessage.contains("n_parts: recorded 4, requested 8"),
+        e.getMessage)
+      assert(e.getMessage.contains(record(dir, 2L).toString), e.getMessage)
+    }
+    // a run cut short: a part key that overflows at execution time fails
+    // the first validation write, after the parameters were recorded
+    SnapshotTable.commit(mk(100L, 200L), dir)
+    val overflow = F.pmod(F.xxhash64(F.col("id")), F.lit(4L)) +
+      F.lit(Long.MaxValue)
+    intercept[Exception](ValidationJob.validateSnapshot(spark, dir, schema,
+      Seq("id"), nParts = 4, partIdOf = Some(overflow)))
+    assert(!Files.readAllLines(record(dir, 2L)).asScala.contains("done"))
+    refused()
+    // the done snapshot 1 refuses another hash space too
+    val e = intercept[IllegalArgumentException](
+      ValidationJob.validateSnapshot(spark, dir, schema, Seq("id"),
+        snapshotId = Some(1L), nParts = 8))
+    assert(e.getMessage.contains("n_parts: recorded 4, requested 8") &&
+      e.getMessage.contains(record(dir, 1L).toString), e.getMessage)
+  }
+
+  test("validateSnapshot after a crash before the done mark: no manifest " +
+      "row twice, done mark rewritten") {
+    val dir = freshDir()
+    SnapshotTable.commit(mk(0L, 100L), dir)
+    val m1 = ValidationJob.validateSnapshot(spark, dir, schema, Seq("id"),
+      nParts = 4)
+    val nRows = m1.count()
+    // the crash window: manifest appended, done mark not yet written
+    val rec = record(dir, 1L)
+    Files.write(rec, Files.readAllLines(rec).asScala
+      .filterNot(_ == "done").asJava)
+    val (jobs, m2) = jobsStartedBy(ValidationJob.validateSnapshot(
+      spark, dir, schema, Seq("id"), nParts = 4))
+    assert(jobs > 0) // the resumable path ran
+    assert(m2.count() === nRows && rowsOf(m2) === 100L)
+    assert(Files.readAllLines(rec).asScala.last === "done")
+    val (jobs3, m3) = jobsStartedBy(ValidationJob.validateSnapshot(
+      spark, dir, schema, Seq("id"), nParts = 4))
+    assert(jobs3 === 0 && rowsOf(m3) === 100L)
+  }
+
+  test("snapshot reads pass the manifest schema: the footers' schema, no " +
+      "Spark job") {
+    // the DDL round trip over types, nesting and a name that needs quoting
+    val dir = freshDir()
+    val wide = spark.range(20).selectExpr("id",
+      "CAST(id AS INT) AS `an int`", "CAST(id AS DECIMAL(12, 3)) AS dec",
+      "TIMESTAMP '2026-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id)" +
+        " AS ts",
+      "DATE '2026-01-01' + CAST(id AS INT) AS d",
+      "CAST(CAST(id AS STRING) AS BINARY) AS bin",
+      "array(CAST(id AS STRING), NULL) AS arr",
+      "map('k', CAST(id AS DOUBLE)) AS m",
+      "named_struct('a', id, 'b `q`', array(id)) AS st")
+    SnapshotTable.commit(wide, dir)
+    SnapshotTable.commit(wide.where(F.col("id") > 15), dir)
+    SnapshotTable.commit(wide.where(F.lit(false)), dir,
+      SnapshotTable.Overwrite)
+    // every snapshot of every table this spec has written so far
+    for (t <- tables.toSeq;
+         id <- 1L to SnapshotTable.currentSnapshotId(t).getOrElse(0L)) {
+      val (jobs, df) = jobsStartedBy(SnapshotTable.read(spark, t, Some(id)))
+      assert(jobs === 0, s"snapshot $id of $t")
+      val files = manifestFiles(t, id)
+      assert(files.nonEmpty, s"snapshot $id of $t lists no file")
+      assert(df.schema === spark.read.parquet(files: _*).schema,
+        s"snapshot $id of $t")
+    }
   }
 }

@@ -21,6 +21,25 @@ object TestSpark {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** The number of Spark jobs `body` starts, and its result. */
+  def jobsStartedBy[A](body: => A): (Int, A) = {
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc) // events of earlier jobs are not counted
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      TestListenerBus.drain(sc)
+      (jobs.get, out)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Recursive temp-dir cleanup — tests writing parquet/ORC scratch data
     * must not leak directories across the suite's many runs. */
   def rmTree(path: String): Unit = {
