@@ -16,13 +16,13 @@ import mallispark.text.{Dedup, Similarity}
   *    every sample is warm and before/after evidence is noise-immune on a
   *    shared VM. A query whose warm pass fails is not timed. One line per
   *    query: min / median / samples.
-  *  - `explain out_dir suffix q1 q2 ...` — writes `out_dir/<q>_<suffix>.txt`
-  *    with the `.explain("formatted")` text of each named query. Nothing
-  *    is executed for the plan itself, but builders that eagerly
-  *    `localCheckpoint` (the dedup_jaccard base, the dupClusters fixpoint
-  *    loop, native_hash_law) run real Spark jobs while the DataFrame is
-  *    built, so explain can take as long as the query, and those plans
-  *    show the post-checkpoint lineage.
+  *  - `explain out_dir suffix q1 q2 ...` (no names or `all`: every query)
+  *    — writes `out_dir/<q>_<suffix>.txt` with the `.explain("formatted")`
+  *    text of each named query. Nothing is executed for the plan itself,
+  *    but builders that eagerly `localCheckpoint` (the dedup_jaccard base,
+  *    the dupClusters fixpoint loop, native_hash_law) run real Spark jobs
+  *    while the DataFrame is built, so explain can take as long as the
+  *    query, and those plans show the post-checkpoint lineage.
   *  - `probe` — machine ceiling: the trivial pure-codegen job
   *    (range → xxhash64 → sum) at N and 4N local cores, one JSON line with
   *    the scaling efficiency. Gates a quiet window BEFORE recording Bench
@@ -80,7 +80,7 @@ object Diag {
       throw new IllegalArgumentException(s"Diag $mode needs SPARK_GRAFT_SF_DIR"))
     mode match {
       case "time" =>
-        val names = timeNames(args.tail)
+        val names = queryNames(args.tail)
         val dir = sfDir
         withSession(cpus)(time(_, dir, names))
       case "explain" =>
@@ -88,7 +88,7 @@ object Diag {
           throw new IllegalArgumentException(
             "Diag explain needs out_dir and suffix before the query names")
         val Array(outDir, suffix) = args.slice(1, 3)
-        val names = known(args.drop(3).toSeq)
+        val names = queryNames(args.drop(3))
         val dir = sfDir
         withSession(cpus)(explain(_, dir, outDir, suffix, names))
       case "probe" => probe(env("SPARK_GRAFT_PROBE_N", "8").toInt)
@@ -111,8 +111,8 @@ object Diag {
     names
   }
 
-  /** `time`'s names: none or `all` means every query. */
-  private def timeNames(args: Array[String]): Seq[String] = {
+  /** `time`'s and `explain`'s names: none or `all` means every query. */
+  private def queryNames(args: Array[String]): Seq[String] = {
     val names = known(args.toSeq.filterNot(_ == "all"))
     if (args.isEmpty || args.contains("all")) specs.keys.toSeq.sorted
     else names

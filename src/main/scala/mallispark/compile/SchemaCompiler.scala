@@ -26,6 +26,26 @@ import mallispark.ir.SchemaIR._
   *
   * Everything is ANSI-mode safe: `get`/`try_element_at`/`try_cast` instead of
   * their throwing counterparts (Spark 4 defaults ansi=true).
+  *
+  * Each decision has one definition, which `valid`, `errors`, the depth
+  * estimate and the DataFrame entry points all call:
+  *   - wrappers (`:ref` with its unroll budget, `:schema` scopes, props,
+  *     `:merge`/`:union`/`:select-keys`) reach their node by [[peel]]
+  *     (nullability, [[acceptsNull]], mirrors RowEval's twin instead:
+  *     a budget-free `:ref`, and no present nil under the merge family);
+  *   - a `:map` entry by [[entryValid]]/[[entryErrors]], for struct fields
+  *     and map keys alike;
+  *   - `:multi` (keyword or expression dispatch) by [[multiChain]];
+  *   - any-of (`:or`/`:orn`/`:alt`/`:altn`) and all-of (`:and`/`:andn`)
+  *     through the `AnyOf`/`AllOf` views and [[branchErrors]];
+  *   - bounded arrays by [[collValid]]/[[collErrors]], the count bounds by
+  *     [[sizeBetween]]/[[limitsErrors]];
+  *   - ::invalid-type (null input or wrong physical type) by [[typedErrors]];
+  *   - the general seq-regex tier by [[generalSeq]];
+  *   - validateDF/explainDF by [[topLevel]] (direct columns, the deep-nest
+  *     hatch, or the row struct).
+  * A new wrapper node needs only a [[peel]] case; a new leaf needs its
+  * `valid` case and its error key in `errors`.
   */
 object SchemaCompiler {
 
@@ -143,7 +163,7 @@ object SchemaCompiler {
     // legal
     case SMap(entries, _, _) => StructType(entries.map(e =>
       StructField(e.key, dataTypeOf(e.child),
-        nullable = e.optional || acceptsNull(e.child, reg))))
+        nullable = e.optional || acceptsNull(e.child, Ctx(reg)))))
     case SMultiExpr(_, _, _, bs, d) =>
       (bs.map(_._2) ++ d).headOption.map(dataTypeOf).getOrElse(StringType)
     case SMapOf(k, v, _, _) => MapType(dataTypeOf(k), dataTypeOf(v))
@@ -209,7 +229,6 @@ object SchemaCompiler {
     * (malli: type errors at runtime; for us the column type is static so a
     * mismatched column fails every row — see SURVEY §7 hard-part 4). */
   private def typeOk(ir: SchemaIR, dt: DataType): Boolean = ir match {
-    case SProps(_, c) => typeOk(c, dt)
     case _: SString | SUuid | _: SRegex | _: SIdent => dt == StringType
     case _: SInt => isIntegral(dt)
     case _: SDouble => isFloating(dt)
@@ -281,6 +300,68 @@ object SchemaCompiler {
       case other => throw new IllegalArgumentException(
         s"unknown ident kind $other")
     }
+  }
+
+  // --------------------------------------------------------------------
+  // The wrapper peel and the any-of / all-of branch views
+  // --------------------------------------------------------------------
+
+  /** The wrapper peel: the node a validation-transparent wrapper stands
+    * for, with the Ctx that node compiles under; None for every other
+    * node. A `:ref` derefs through the registry, spending one unit of the
+    * shared unroll budget (SURVEY §7.1) — with the budget spent it stands
+    * for `:any`; a `:schema` scope layers its local names over the
+    * registry for the child subtree (local wins — -property-registry);
+    * props never change validation; `:merge`/`:union`/`:select-keys`
+    * expand structurally (util.cljc:394-418). */
+  private def peel(ir: SchemaIR, ctx: Ctx): Option[(SchemaIR, Ctx)] =
+    ir match {
+      case SRef(name) =>
+        Some(if (ctx.depth <= 0) (SAny, ctx)
+          else (ctx.registry(name), ctx.copy(depth = ctx.depth - 1)))
+      case SScoped(local, c, _) => Some((c, ctx.copy(registry =
+        Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth))))
+      case SProps(_, c) => Some((c, ctx))
+      case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
+        Some((mallispark.ir.SchemaOps.expand(alg, ctx.registry), ctx))
+      case _ => None
+    }
+
+  private def indexed(cs: Seq[SchemaIR]): Seq[(String, SchemaIR)] =
+    cs.zipWithIndex.map { case (c, i) => (i.toString, c) }
+
+  /** `:and`/`:andn` as (path segment, branch): every branch must hold. */
+  private object AllOf {
+    def unapply(ir: SchemaIR): Option[Seq[(String, SchemaIR)]] = ir match {
+      case SAnd(cs) => Some(indexed(cs))
+      case SAndn(bs) => Some(bs)
+      case _ => None
+    }
+  }
+
+  /** `:or`/`:orn`, and `:alt`/`:altn` over one value, as (path segment,
+    * branch): one branch must hold. */
+  private object AnyOf {
+    def unapply(ir: SchemaIR): Option[Seq[(String, SchemaIR)]] = ir match {
+      case SOr(cs) => Some(indexed(cs))
+      case SOrn(bs) => Some(bs)
+      case SAlt(cs) => Some(indexed(cs))
+      case SAltn(es) => Some(es)
+      case _ => None
+    }
+  }
+
+  /** The repetition ops as (element, min, max): `:*` unbounded, `:+` at
+    * least one, `:?` at most one, `:repeat` its own bounds. */
+  private object Rep {
+    def unapply(ir: SchemaIR): Option[(SchemaIR, Option[Int], Option[Int])] =
+      ir match {
+        case SStar(c) => Some((c, None, None))
+        case SPlus(c) => Some((c, Some(1), None))
+        case SOpt(c) => Some((c, None, Some(1)))
+        case SRepeat(c, mn, mx) => Some((c, Some(mn), Some(mx)))
+        case _ => None
+      }
   }
 
   // --------------------------------------------------------------------
@@ -483,18 +564,12 @@ object SchemaCompiler {
         safe(col)
 
       case SMaybe(c) => col.isNull || valid(c, col, dt)
-      case SAnd(cs) => cs.map(valid(_, col, dt)).reduce(_ && _)
-      case SOr(cs) => cs.map(valid(_, col, dt)).reduce(_ || _)
-      case SOrn(bs) => bs.map(b => valid(b._2, col, dt)).reduce(_ || _)
-      case SAndn(bs) => bs.map(b => valid(b._2, col, dt)).reduce(_ && _)
+      case AllOf(bs) => bs.map(b => valid(b._2, col, dt)).reduce(_ && _)
       case SNot(c) => !valid(c, col, dt)
 
-      case SMap(entries, closed, rest) =>
+      case m: SMap =>
         dt match {
-          case st: StructType =>
-            col.isNotNull &&
-              validStructFields(entries, closed, rest, st,
-                name => col.getField(name))
+          case st: StructType => col.isNotNull && structValid(m, st, col.getField)
 
           // fixed-key :map over a MapType column (malli maps ARE open
           // string-keyed maps; parquet map<string, V> is their physical
@@ -504,26 +579,17 @@ object SchemaCompiler {
           // checks skip null values exactly like the StructType branch.
           case mt: MapType if mt.keyType == StringType =>
             val vt = mt.valueType
-            val known = entries.map(_.key)
-            def knownK(kc: Column): Column =
-              if (known.isEmpty) F.lit(false) else kc.isin(known: _*)
-            val checks = entries.map { e =>
-              val vCol = F.try_element_at(col, F.lit(e.key))
-              if (e.optional) {
-                if (onlyNullCheck(e.child, vt)) F.lit(true)
-                else vCol.isNull || valid(e.child, vCol, vt)
-              } else if (acceptsNull(e.child, ctx.registry)) valid(e.child, vCol, vt)
-              else vCol.isNotNull && valid(e.child, vCol, vt)
-            }
+            val checks = m.entries.map(e =>
+              entryValid(e, Some((F.try_element_at(col, F.lit(e.key)), vt))))
             val extraOk =
-              if (!closed) F.lit(true)
+              if (!m.closed) F.lit(true)
               else F.coalesce(F.forall(F.map_entries(col), kv =>
-                knownK(kv.getField("key")) || kv.getField("value").isNull),
+                knownKey(m, kv.getField("key")) || kv.getField("value").isNull),
                 F.lit(true))
-            val restOk = rest match {
+            val restOk = m.rest match {
               case None => F.lit(true)
               case Some(r) => F.coalesce(F.forall(F.map_entries(col), kv =>
-                knownK(kv.getField("key")) || kv.getField("value").isNull ||
+                knownKey(m, kv.getField("key")) || kv.getField("value").isNull ||
                   valid(r, kv.getField("value"), vt)), F.lit(true))
             }
             col.isNotNull &&
@@ -537,19 +603,20 @@ object SchemaCompiler {
           case MapType(kt, vt, _) =>
             val keysOk = F.forall(F.map_keys(col), kc => valid(k, kc, kt))
             val valsOk = F.forall(F.map_values(col), vc => valid(v, vc, vt))
-            col.isNotNull &&
-              between(F.size(col), mn.map(_.toLong), mx.map(_.toLong)) &&
+            col.isNotNull && sizeBetween(col, mn, mx) &&
               F.coalesce(keysOk, F.lit(false)) && F.coalesce(valsOk, F.lit(false))
           case _ => F.lit(false)
         }
 
-      case SVector(c, mn, mx) => collValid(c, col, dt, mn, mx, unique = false)
+      case SVector(c, mn, mx) =>
+        collValid(col, dt, Some(sizeBetween(col, mn, mx)))(valid(c, _, _))
       // :seqable — NULL is valid ((seqable? nil) is true; it seqs to the
       // empty sequence, so the :min bound must hold against size 0)
       case SSeqable(c, mn, mx) =>
         F.when(col.isNull, mn.forall(_ <= 0))
-          .otherwise(collValid(c, col, dt, mn, mx, unique = false))
-      case SSet(c, mn, mx) => collValid(c, col, dt, mn, mx, unique = true)
+          .otherwise(collValid(col, dt, Some(sizeBetween(col, mn, mx)))(valid(c, _, _)))
+      case SSet(c, mn, mx) =>
+        collValid(col, dt, Some(sizeBetween(col, mn, mx)), unique = true)(valid(c, _, _))
 
       case SEvery(c, mn, mx, limit) =>
         dt match {
@@ -558,10 +625,9 @@ object SchemaCompiler {
             // elements (core.cljc:745-751). NULL is valid like the
             // reference's `(m/validate [:every :int] nil)` — nil is
             // seqable and seqs empty, so only a :min bound can fail it
-            val eff = effectiveEveryLimit(mn, mx, limit)
-            val bounded = F.slice(col, 1, eff)
+            val bounded = F.slice(col, 1, effectiveEveryLimit(mn, mx, limit))
             F.when(col.isNull, mn.forall(_ <= 0)).otherwise(
-              between(F.size(col), mn.map(_.toLong), mx.map(_.toLong)) &&
+              sizeBetween(col, mn, mx) &&
                 F.coalesce(F.forall(bounded, x => valid(c, x, et)),
                   F.lit(true)))
           case _ => F.lit(false)
@@ -583,123 +649,88 @@ object SchemaCompiler {
           case _ => F.lit(false)
         }
 
-      case SMulti(dk, bs, default) =>
-        dt match {
-          case st: StructType =>
-            val dv = col.getField(dk)
-            val fallback = default.map(valid(_, col, dt)).getOrElse(F.lit(false))
-            col.isNotNull && bs.foldRight(fallback) { case ((tag, c), acc) =>
-              F.when(dv === F.lit(tag), valid(c, col, dt)).otherwise(acc)
-            }
-          case _ => F.lit(false)
-        }
-
-      // :multi with an arbitrary dispatch — the dispatch builds a Column
-      // expression over the value, so the whole chain stays codegen'd
-      // (core.cljc:1876-1890 accepts any :dispatch fn)
-      case SMultiExpr(_, disp, _, bs, default) =>
-        val dv = disp(col)
-        val fallback = default.map(valid(_, col, dt)).getOrElse(F.lit(false))
-        col.isNotNull && bs.foldRight(fallback) { case ((tag, c), acc) =>
-          F.when(dv === F.lit(tag), valid(c, col, dt)).otherwise(acc)
-        }
-
-      case SRef(name) =>
-        if (ctx.depth <= 0) F.lit(true) // depth-bounded unroll (SURVEY §7.1)
-        else valid(ctx.registry(name), col, dt)(ctx.copy(depth = ctx.depth - 1))
-
-      // :schema with a local registry: layer the local names over the Ctx
-      // registry for the child subtree (local wins — -property-registry)
-      case SScoped(local, c, _) =>
-        valid(c, col, dt)(ctx.copy(registry =
-          Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
-
-      // property wrapper: validation ignores non-structural props
-      case SProps(_, c) => valid(c, col, dt)
-
-      // declarative :merge/:union/:select-keys (util.cljc:394-418):
-      // structural expansion, then compile the result
-      case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
-        valid(mallispark.ir.SchemaOps.expand(alg, ctx.registry), col, dt)
+      case m @ (_: SMulti | _: SMultiExpr) =>
+        multiChain(m, col, dt)(_ => F.lit(false))((_, c) => valid(c, col, dt))
+          .fold(F.lit(false))(col.isNotNull && _)
 
       // ---- seq-regex: general (nested) forms -> RowEval UDF (tier 3) ----
-      case r if isGeneralRegex(r) =>
-        dt match {
-          case ArrayType(StringType, _) =>
-            mallispark.compile.GeneralRegex.validStringSeq(r)(col)
-          case ArrayType(LongType, _) =>
-            mallispark.compile.GeneralRegex.validLongSeq(r)(col)
-          case other => throw new IllegalArgumentException(
-            s"general seq-regex ${SchemaIR.form(r)} needs array<string|long>, " +
-              s"got ${other.simpleString}")
-        }
+      case r @ (_: SCat | _: SCatn | Rep(_, _, _)) if isGeneralRegex(r) =>
+        generalSeq(r, dt)(GeneralRegex.validStringSeq, GeneralRegex.validLongSeq)(col)
 
       // ---- seq-regex bounded forms (SURVEY §2.9 tiers 1-2) ----
       case SCat(cs) =>
         dt match {
           case ArrayType(et, _) =>
             val elems = cs.zipWithIndex.map { case (c, i) =>
-              elemValid(c, F.get(col, F.lit(i)), et)
+              valid(c, F.get(col, F.lit(i)), et)
             }
             col.isNotNull && F.size(col) === cs.length &&
               elems.foldLeft(F.lit(true))(_ && _)
           case _ => F.lit(false)
         }
       case SCatn(es) => valid(SCat(es.map(_._2)), col, dt)
-      case SAlt(cs) => cs.map(valid(_, col, dt)).reduce(_ || _)
-      case SAltn(es) => es.map(e => valid(e._2, col, dt)).reduce(_ || _)
-      case SStar(c) =>
-        dt match {
-          case ArrayType(et, _) =>
-            col.isNotNull &&
-              F.coalesce(F.forall(col, x => elemValid(c, x, et)), F.lit(true))
-          case _ => F.lit(false)
-        }
-      case SPlus(c) =>
-        dt match {
-          case ArrayType(et, _) =>
-            col.isNotNull && F.size(col) >= 1 &&
-              F.coalesce(F.forall(col, x => elemValid(c, x, et)), F.lit(true))
-          case _ => F.lit(false)
-        }
-      case SOpt(c) =>
-        dt match {
-          case ArrayType(et, _) =>
-            col.isNotNull && F.size(col) <= 1 &&
-              F.coalesce(F.forall(col, x => elemValid(c, x, et)), F.lit(true))
-          case _ => F.lit(false)
-        }
-      case SRepeat(c, mn, mx) =>
-        dt match {
-          case ArrayType(et, _) =>
-            col.isNotNull && F.size(col).between(mn, mx) &&
-              F.coalesce(F.forall(col, x => elemValid(c, x, et)), F.lit(true))
-          case _ => F.lit(false)
-        }
+      // an :alt among plain schemas matches one value (never general:
+      // :alt is not a regex op of its own)
+      case AnyOf(bs) => bs.map(b => valid(b._2, col, dt)).reduce(_ || _)
+      // Int-literal size bounds: `size(col) >= 1` needs no cast
+      case Rep(c, mn, mx) =>
+        collValid(col, dt,
+          if (mn.isEmpty && mx.isEmpty) None else Some(between(F.size(col), mn, mx)))(
+          valid(c, _, _))
+
+      case w =>
+        val (c, inner) = peel(w, ctx).get
+        valid(c, col, dt)(inner)
     }
 
-  private def isGeneralRegex(ir: SchemaIR): Boolean =
-    SchemaIR.isGeneralRegex(ir)
-
-  /** Element check inside a regex op: an SAlt among plain schemas matches
-    * one element (bounded form); nested regex ops would need the general
-    * engine (RowEval UDF). */
-  private def elemValid(c: SchemaIR, elem: Column, et: DataType)(
-      implicit ctx: Ctx): Column = c match {
-    case SAlt(cs) => cs.map(valid(_, elem, et)).reduce(_ || _)
-    case SAltn(es) => es.map(e => valid(e._2, elem, et)).reduce(_ || _)
-    case other => valid(other, elem, et)
+  /** The general seq-regex tier for an array of strings or longs. */
+  private def generalSeq(r: SchemaIR, dt: DataType)(
+      strings: SchemaIR => Column => Column,
+      longs: SchemaIR => Column => Column): Column => Column = dt match {
+    case ArrayType(StringType, _) => strings(r)
+    case ArrayType(LongType, _) => longs(r)
+    case other => throw new IllegalArgumentException(
+      s"general seq-regex ${SchemaIR.form(r)} needs array<string|long>, " +
+        s"got ${other.simpleString}")
   }
 
-  private def collValid(c: SchemaIR, col: Column, dt: DataType,
-                        mn: Option[Int], mx: Option[Int], unique: Boolean)(
-      implicit ctx: Ctx): Column = dt match {
+  /** The collection check (malli's -validate-limits, core.cljc:743): a
+    * size within the :min/:max count bounds, compared as Long. */
+  private def sizeBetween(col: Column, mn: Option[Int], mx: Option[Int]): Column =
+    between(F.size(col), mn.map(_.toLong), mx.map(_.toLong))
+
+  /** A bounded array's validity — :vector, :set, :seqable and the
+    * repetition ops: non-null, `sizeOk` when there is a size bound, every
+    * element passes `elem`, and (`unique`) no duplicates. */
+  private def collValid(col: Column, dt: DataType, sizeOk: Option[Column],
+                        unique: Boolean = false)(
+      elem: (Column, DataType) => Column): Column = dt match {
     case ArrayType(et, _) =>
-      val base = col.isNotNull &&
-        between(F.size(col), mn.map(_.toLong), mx.map(_.toLong)) &&
-        F.coalesce(F.forall(col, x => valid(c, x, et)), F.lit(true))
-      if (unique) base && F.size(F.array_distinct(col)) === F.size(col) else base
+      (Seq(col.isNotNull) ++ sizeOk ++
+        Seq(F.coalesce(F.forall(col, x => elem(x, et)), F.lit(true))) ++
+        (if (unique) Seq(F.size(F.array_distinct(col)) === F.size(col)) else Nil))
+        .reduce(_ && _)
     case _ => F.lit(false)
+  }
+
+  /** The `:multi` dispatch chain: one CASE branch per tag, then the
+    * `::m/default` branch or `noMatch(dispatch value)`. The keyword form
+    * dispatches on a struct field (None over any other type); the
+    * expression form on its dispatch Column, so the chain stays codegen'd
+    * (core.cljc:1876-1890 accepts any :dispatch fn). */
+  private def multiChain(ir: SchemaIR, col: Column, dt: DataType)(
+      noMatch: Column => Column)(branch: (String, SchemaIR) => Column)
+      : Option[Column] = {
+    val dispatch = (ir, dt) match {
+      case (SMulti(dk, bs, d), _: StructType) => Some((col.getField(dk), bs, d))
+      case (SMultiExpr(_, disp, _, bs, d), _) => Some((disp(col), bs, d))
+      case _ => None
+    }
+    dispatch.map { case (dv, bs, default) =>
+      bs.foldRight(default.fold(noMatch(dv))(branch("malli.core/default", _))) {
+        case ((tag, c), acc) => F.when(dv === F.lit(tag), branch(tag, c)).otherwise(acc)
+      }
+    }
   }
 
   /** malli's :every bounded-check window: max(min, max+1, limit)
@@ -708,37 +739,84 @@ object SchemaCompiler {
                                   limit: Int): Int =
     Seq(Some(limit), mn, mx.map(_ + 1)).flatten.max
 
-  /** Struct-shaped `:map` explain over a FIELD ACCESSOR — the errors()
-    * twin of [[validStructFields]], same O(width²) rationale. */
-  private def errorStructFields(entries: Seq[Entry], closed: Boolean,
-                                rest: Option[SchemaIR], st: StructType,
-                                fieldOf: String => Column,
-                                path: String, in: Column)(
+  private def knownKey(m: SMap, k: Column): Column =
+    if (m.entries.isEmpty) F.lit(false) else k.isin(m.entries.map(_.key): _*)
+
+  /** The `:map` entry rule, valid side: `field` is the entry's value and
+    * its type, None when a struct has no such field (missing). Optional:
+    * null passes. Required whose child accepts nil (:maybe/:nil/:any):
+    * null is a VALUE, the child decides. Otherwise null is a missing key. */
+  private def entryValid(e: Entry, field: Option[(Column, DataType)])(
+      implicit ctx: Ctx): Column = field match {
+    case None => F.lit(e.optional)
+    case Some((v, vt)) =>
+      if (e.optional) {
+        // peephole: a boundless leaf only asserts non-null, so
+        // `isNull || isNotNull` is a tautology — elide it
+        // (malli's no-op elision spirit, core.cljc:35-37)
+        if (onlyNullCheck(e.child, vt)) F.lit(true)
+        else v.isNull || valid(e.child, v, vt)
+      } else if (acceptsNull(e.child, ctx)) valid(e.child, v, vt)
+      else v.isNotNull && valid(e.child, v, vt)
+  }
+
+  /** The `:map` entry rule, errors side — [[entryValid]]'s twin. Parquet
+    * conflates missing-key and null value (SURVEY §7.4): a null required
+    * field reports ::missing-key. */
+  private def entryErrors(e: Entry, field: Option[(Column, DataType)],
+                          path: String, in: Column)(implicit ctx: Ctx): Column = {
+    val (p, i2) = (j(path, e.key), jin(in, e.key))
+    val missing = one(p, i2, ErrorKeys.MissingKey, F.lit(null).cast(StringType))
+    field match {
+      case None => if (e.optional) emptyViols else missing
+      case Some((v, vt)) =>
+        val childErrs = errors(e.child, v, vt, p, i2)
+        if (e.optional) F.when(v.isNull, emptyViols).otherwise(childErrs)
+        else if (acceptsNull(e.child, ctx)) childErrs
+        else F.when(v.isNull, missing).otherwise(childErrs)
+    }
+  }
+
+  /** Struct-shaped `:map` validity over a FIELD ACCESSOR — shared by the
+    * nested-struct branch (accessor = `col.getField`) and the top-level
+    * DataFrame entry points (accessor = `F.col`). The top level must NOT
+    * route through one rebuilt row-struct: every check embedding a copy
+    * of a width-N CreateStruct makes the pre-optimization tree O(N²),
+    * which costs SECONDS of driver planning per action on wide tables
+    * (measured ~8 s at 250 columns) even though the optimizer collapses
+    * it before execution. */
+  private def structValid(m: SMap, st: StructType, fieldOf: String => Column)(
       implicit ctx: Ctx): Column = {
-    val perEntry = entries.map { e =>
-      val p = j(path, e.key)
-      val i2 = jin(in, e.key)
-      st.find(_.name == e.key) match {
-        case None =>
-          if (e.optional) emptyViols
-          else one(p, i2, ErrorKeys.MissingKey, F.lit(null).cast(StringType))
-        case Some(f) =>
-          val fc = fieldOf(e.key)
-          val childErrs = errors(e.child, fc, f.dataType, p, i2)
-          if (e.optional) F.when(fc.isNull, emptyViols).otherwise(childErrs)
-          // required key whose child accepts nil: null is a value
-          else if (acceptsNull(e.child, ctx.registry)) childErrs
-          // Parquet conflates missing-key and null value (SURVEY §7.4):
-          // a null required field reports ::missing-key.
-          else F.when(fc.isNull,
-            one(p, i2, ErrorKeys.MissingKey, F.lit(null).cast(StringType)))
-            .otherwise(childErrs)
+    val checks = m.entries.map(e => entryValid(e,
+      st.find(_.name == e.key).map(f => (fieldOf(e.key), f.dataType))))
+    val undeclared = undeclaredFields(m, st)
+    // closed map: any extra PHYSICAL field must be absent (null) —
+    // the non-null case is ::m/extra-key (core.cljc:1315-1322)
+    val closedChecks =
+      if (!m.closed) Seq.empty
+      else undeclared.map(f => fieldOf(f.name).isNull)
+    // ::m/default rest-entry (core.cljc:586-587, 1237): every
+    // PRESENT undeclared field must satisfy the rest schema
+    val restChecks = m.rest match {
+      case None => Seq.empty
+      case Some(r) => undeclared.map { f =>
+        val fc = fieldOf(f.name)
+        fc.isNull || valid(r, fc, f.dataType)
       }
     }
-    val known = entries.map(_.key).toSet
-    val undeclared = st.fields.filterNot(f => known(f.name)).toSeq
+    (checks ++ closedChecks ++ restChecks)
+      .foldLeft(F.lit(true))(_ && _)
+  }
+
+  /** Struct-shaped `:map` explain over a FIELD ACCESSOR — the errors()
+    * twin of [[structValid]], same O(width²) rationale. */
+  private def structErrors(m: SMap, st: StructType, fieldOf: String => Column,
+                           path: String, in: Column)(implicit ctx: Ctx): Column = {
+    val perEntry = m.entries.map(e => entryErrors(e,
+      st.find(_.name == e.key).map(f => (fieldOf(e.key), f.dataType)), path, in))
+    val undeclared = undeclaredFields(m, st)
     val extras: Seq[Column] =
-      if (!closed) Seq.empty
+      if (!m.closed) Seq.empty
       else undeclared.map { f =>
         // ::m/extra-key fires only when the stray field is present
         F.when(fieldOf(f.name).isNotNull,
@@ -749,7 +827,7 @@ object SchemaCompiler {
     // ::m/default rest-entry errors: undeclared PRESENT fields
     // validate against the rest schema, path segment ::m/default
     // (mirror of the reference's default-branch explain)
-    val restErrs: Seq[Column] = rest match {
+    val restErrs: Seq[Column] = m.rest match {
       case None => Seq.empty
       case Some(r) => undeclared.map { f =>
         val fc = fieldOf(f.name)
@@ -762,59 +840,13 @@ object SchemaCompiler {
     concatViols(perEntry ++ extras ++ restErrs)
   }
 
-  /** Struct-shaped `:map` validity over a FIELD ACCESSOR — shared by the
-    * nested-struct branch (accessor = `col.getField`) and the top-level
-    * DataFrame entry points (accessor = `F.col`). The top level must NOT
-    * route through one rebuilt row-struct: every check embedding a copy
-    * of a width-N CreateStruct makes the pre-optimization tree O(N²),
-    * which costs SECONDS of driver planning per action on wide tables
-    * (measured ~8 s at 250 columns) even though the optimizer collapses
-    * it before execution. */
-  private def validStructFields(entries: Seq[Entry], closed: Boolean,
-                                rest: Option[SchemaIR], st: StructType,
-                                fieldOf: String => Column)(
-      implicit ctx: Ctx): Column = {
-    val checks = entries.map { e =>
-      st.find(_.name == e.key) match {
-        case None =>
-          if (e.optional) F.lit(true) else F.lit(false) // static missing
-        case Some(f) =>
-          val fc = fieldOf(e.key)
-          if (e.optional) {
-            // peephole: a boundless leaf only asserts non-null, so
-            // `isNull || isNotNull` is a tautology — elide it
-            // (malli's no-op elision spirit, core.cljc:35-37)
-            if (onlyNullCheck(e.child, f.dataType)) F.lit(true)
-            else fc.isNull || valid(e.child, fc, f.dataType)
-          } else if (acceptsNull(e.child, ctx.registry))
-            // required key whose child accepts nil (:maybe/:nil/:any)
-            // — null is a VALUE here, not a missing key
-            valid(e.child, fc, f.dataType)
-          else fc.isNotNull && valid(e.child, fc, f.dataType)
-      }
-    }
-    val known = entries.map(_.key).toSet
-    val undeclared = st.fields.filterNot(f => known(f.name)).toSeq
-    // closed map: any extra PHYSICAL field must be absent (null) —
-    // the non-null case is ::m/extra-key (core.cljc:1315-1322)
-    val closedChecks =
-      if (!closed) Seq.empty
-      else undeclared.map(f => fieldOf(f.name).isNull)
-    // ::m/default rest-entry (core.cljc:586-587, 1237): every
-    // PRESENT undeclared field must satisfy the rest schema
-    val restChecks = rest match {
-      case None => Seq.empty
-      case Some(r) => undeclared.map { f =>
-        val fc = fieldOf(f.name)
-        fc.isNull || valid(r, fc, f.dataType)
-      }
-    }
-    (checks ++ closedChecks ++ restChecks)
-      .foldLeft(F.lit(true))(_ && _)
+  private def undeclaredFields(m: SMap, st: StructType): Seq[StructField] = {
+    val known = m.entries.map(_.key).toSet
+    st.fields.filterNot(f => known(f.name)).toSeq
   }
 
   /** Does the schema accept a null VALUE (vs null meaning missing-key)? */
-  private def acceptsNull(ir: SchemaIR, reg: Registry,
+  private def acceptsNull(ir: SchemaIR, ctx: Ctx,
                           seen: Set[(String, SchemaIR)] = Set.empty)
       : Boolean = ir match {
     case SAny | SNil | _: SMaybe => true
@@ -822,21 +854,22 @@ object SchemaCompiler {
     // reads as present-nil, never missing-key; the child itself reports
     // ::limits when a :min bound needs size
     case _: SSeqable | _: SEvery => true
-    case SOr(cs) => cs.exists(acceptsNull(_, reg, seen))
-    case SOrn(bs) => bs.exists(b => acceptsNull(b._2, reg, seen))
-    case SAnd(cs) => cs.forall(acceptsNull(_, reg, seen))
-    case SAndn(bs) => bs.forall(b => acceptsNull(b._2, reg, seen))
-    // props/scopes never change nullability — peel (mirrors the
+    // :or/:orn, not :alt — as in the row-level twin
+    case SOr(cs) => cs.exists(acceptsNull(_, ctx, seen))
+    case SOrn(bs) => bs.exists(b => acceptsNull(b._2, ctx, seen))
+    case AllOf(bs) => bs.forall(b => acceptsNull(b._2, ctx, seen))
+    // nullability does not depend on the unroll budget: a ref derefs (a
+    // [:ref ...→ :maybe] under a required key accepts a present-nil)
+    // cycle-guarded on the RESOLVED (name, target) like simpleParser, so
+    // shadowed same-name refs are not false cycles (mirrors the
     // row-level twin)
-    case SProps(_, c) => acceptsNull(c, reg, seen)
-    case SScoped(local, c, _) =>
-      acceptsNull(c, Registry(reg.schemas ++ local, reg.maxDepth), seen)
-    // a ref derefs (a [:ref ...→ :maybe] under a required key accepts a
-    // present-nil); cycle-guarded on the RESOLVED (name, target) like
-    // simpleParser, so shadowed same-name refs are not false cycles
-    case SRef(n) => reg.schemas.get(n).exists(t =>
-      !seen((n, t)) && acceptsNull(t, reg, seen + ((n, t))))
-    case _ => false
+    case SRef(n) => ctx.registry.schemas.get(n).exists(t =>
+      !seen((n, t)) && acceptsNull(t, ctx, seen + ((n, t))))
+    // the merge family never accepts a present-nil, whatever it expands
+    // to (as in the row-level twin, which keeps the two tiers' verdicts
+    // equal for a null required field)
+    case _: SMergeOf | _: SUnionOf | _: SSelectKeysOf => false
+    case w => peel(w, ctx).exists { case (c, inner) => acceptsNull(c, inner, seen) }
   }
 
   /** True iff the schema's only possible failure on this physical type is
@@ -909,6 +942,8 @@ object SchemaCompiler {
     def leaf(key: String): Column =
       F.when(valid(ir, col, dt), emptyViols)
         .otherwise(one(path, in, key, valueStr(col, dt)))
+    def typed(body: PartialFunction[DataType, Column]): Column =
+      typedErrors(col, dt, path, in)(body.lift(dt))
 
     ir match {
       case SAny => emptyViols
@@ -960,223 +995,109 @@ object SchemaCompiler {
         F.when(col.isNull, emptyViols)
           .otherwise(errors(c, col, dt, j(path, "0"), in))
 
-      case SAnd(cs) =>
-        // every failing child reports, at its branch index
-        // (core_test.cljc:239-250)
-        concatViols(cs.zipWithIndex.map { case (c, i) =>
-          errors(c, col, dt, j(path, i.toString), in)
-        })
-
-      case SOr(cs) =>
-        // errors from ALL branches only when none match
-        F.when(valid(ir, col, dt), emptyViols).otherwise(
-          concatViols(cs.zipWithIndex.map { case (c, i) =>
-            errors(c, col, dt, j(path, i.toString), in)
-          }))
-
-      case SOrn(bs) =>
-        F.when(valid(ir, col, dt), emptyViols).otherwise(
-          concatViols(bs.map { case (tag, c) =>
-            errors(c, col, dt, j(path, tag), in)
-          }))
-
-      // :andn explains EVERY failing branch under its tag, like :and with
-      // tag segments instead of indices (core.cljc:951-954)
-      case SAndn(bs) =>
-        concatViols(bs.map { case (tag, c) =>
-          errors(c, col, dt, j(path, tag), in)
-        })
+      // every failing child reports, at its branch index or tag
+      // (core_test.cljc:239-250; :andn core.cljc:951-954)
+      case AllOf(bs) => branchErrors(bs, col, dt, path, in)
 
       case SNot(c) =>
         F.when(valid(c, col, dt), one(path, in, ":not", valueStr(col, dt)))
           .otherwise(emptyViols)
 
-      case SMap(entries, closed, rest) =>
-        dt match {
-          case st: StructType =>
-            val nullErr = one(path, in, ErrorKeys.InvalidType,
-              F.lit(null).cast(StringType))
-            F.when(col.isNull, nullErr)
-              .otherwise(errorStructFields(entries, closed, rest, st,
-                name => col.getField(name), path, in))
+      case m: SMap => typed {
+        case st: StructType => structErrors(m, st, col.getField, path, in)
 
-          // fixed-key :map over MapType — mirror of the valid() branch;
-          // stray keys carry the RUNTIME key in the schema path (RowEval
-          // parity: path :+ k), via oneD/jD/prependPath
-          case mt: MapType if mt.keyType == StringType =>
-            val vt = mt.valueType
-            val known = entries.map(_.key)
-            def knownK(kc: Column): Column =
-              if (known.isEmpty) F.lit(false) else kc.isin(known: _*)
-            val nullErr = one(path, in, ErrorKeys.InvalidType,
-              F.lit(null).cast(StringType))
-            val perEntry = entries.map { e =>
-              val p = j(path, e.key)
-              val i2 = jin(in, e.key)
-              val vCol = F.try_element_at(col, F.lit(e.key))
-              val childErrs = errors(e.child, vCol, vt, p, i2)
-              if (e.optional) F.when(vCol.isNull, emptyViols).otherwise(childErrs)
-              else if (acceptsNull(e.child, ctx.registry)) childErrs
-              else F.when(vCol.isNull,
-                one(p, i2, ErrorKeys.MissingKey, F.lit(null).cast(StringType)))
-                .otherwise(childErrs)
-            }
-            val extras: Seq[Column] =
-              if (!closed) Seq.empty
-              else Seq(F.flatten(F.transform(F.map_entries(col), kv =>
-                F.when(!knownK(kv.getField("key")) &&
-                    kv.getField("value").isNotNull,
-                  oneD(jD(path, kv.getField("key")),
-                    jin(in, kv.getField("key")), ErrorKeys.ExtraKey,
-                    valueStr(kv.getField("value"), vt)))
-                  .otherwise(emptyViols))))
-            val restErrs: Seq[Column] = rest match {
-              case None => Seq.empty
-              case Some(r) => Seq(F.flatten(F.transform(F.map_entries(col), kv =>
-                F.when(!knownK(kv.getField("key")) &&
-                    kv.getField("value").isNotNull,
-                  prependPath(
-                    errors(r, kv.getField("value"), vt, "",
-                      jin(in, kv.getField("key"))),
-                    jD(j(path, "malli.core/default"), kv.getField("key"))))
-                  .otherwise(emptyViols))))
-            }
-            F.when(col.isNull, nullErr)
-              .otherwise(concatViols(perEntry ++ extras ++ restErrs))
+        // fixed-key :map over MapType — mirror of the valid() branch;
+        // stray keys carry the RUNTIME key in the schema path (RowEval
+        // parity: path :+ k), via oneD/jD/prependPath
+        case mt: MapType if mt.keyType == StringType =>
+          val vt = mt.valueType
+          val perEntry = m.entries.map(e => entryErrors(e,
+            Some((F.try_element_at(col, F.lit(e.key)), vt)), path, in))
+          val extras: Seq[Column] =
+            if (!m.closed) Seq.empty
+            else Seq(F.flatten(F.transform(F.map_entries(col), kv =>
+              F.when(!knownKey(m, kv.getField("key")) &&
+                  kv.getField("value").isNotNull,
+                oneD(jD(path, kv.getField("key")),
+                  jin(in, kv.getField("key")), ErrorKeys.ExtraKey,
+                  valueStr(kv.getField("value"), vt)))
+                .otherwise(emptyViols))))
+          val restErrs: Seq[Column] = m.rest match {
+            case None => Seq.empty
+            case Some(r) => Seq(F.flatten(F.transform(F.map_entries(col), kv =>
+              F.when(!knownKey(m, kv.getField("key")) &&
+                  kv.getField("value").isNotNull,
+                prependPath(
+                  errors(r, kv.getField("value"), vt, "",
+                    jin(in, kv.getField("key"))),
+                  jD(j(path, "malli.core/default"), kv.getField("key"))))
+                .otherwise(emptyViols))))
+          }
+          concatViols(perEntry ++ extras ++ restErrs)
+      }
 
-          case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-        }
+      case SMapOf(k, v, mn, mx) => typed {
+        case MapType(kt, vt, _) =>
+          val entryErrs = F.flatten(F.transform(F.map_entries(col), kv => {
+            val keyE = errors(k, kv.getField("key"), kt, j(path, "0"),
+              jin(in, kv.getField("key").cast(StringType)))
+            val valE = errors(v, kv.getField("value"), vt, j(path, "1"),
+              jin(in, kv.getField("key").cast(StringType)))
+            F.concat(keyE, valE)
+          }))
+          concatViols(Seq(limitsErrors(col, mn, mx, path, in), entryErrs))
+      }
 
-      case SMapOf(k, v, mn, mx) =>
-        dt match {
-          case MapType(kt, vt, _) =>
-            val limitsOk = between(F.size(col), mn.map(_.toLong), mx.map(_.toLong))
-            val limitsErr = F.when(limitsOk, emptyViols)
-              .otherwise(one(path, in, ErrorKeys.Limits, F.size(col).cast(StringType)))
-            val entryErrs = F.flatten(F.transform(F.map_entries(col), kv => {
-              val keyE = errors(k, kv.getField("key"), kt, j(path, "0"),
-                jin(in, kv.getField("key").cast(StringType)))
-              val valE = errors(v, kv.getField("value"), vt, j(path, "1"),
-                jin(in, kv.getField("key").cast(StringType)))
-              F.concat(keyE, valE)
-            }))
-            F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-              F.lit(null).cast(StringType)))
-              .otherwise(concatViols(Seq(limitsErr, entryErrs)))
-          case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-        }
-
-      case SVector(c, mn, mx) => collErrors(c, col, dt, mn, mx, path, in, unique = false)
+      case SVector(c, mn, mx) =>
+        collErrors(col, dt, path, in, mn, mx, Some(emptyViols))(errors(c, _, _, _, _))
       // :seqable — NULL seqs empty: no error unless a :min bound fails
       case SSeqable(c, mn, mx) =>
-        F.when(col.isNull,
-          if (mn.exists(_ > 0))
-            one(path, in, ErrorKeys.Limits, F.lit("0"))
-          else emptyViols)
-          .otherwise(collErrors(c, col, dt, mn, mx, path, in, unique = false))
-      case SSet(c, mn, mx) => collErrors(c, col, dt, mn, mx, path, in, unique = true)
+        F.when(col.isNull, nilSeqErrors(mn, path, in))
+          .otherwise(collErrors(col, dt, path, in, mn, mx, Some(emptyViols))(
+            errors(c, _, _, _, _)))
+      case SSet(c, mn, mx) =>
+        val dup = F.when(F.size(F.array_distinct(col)) === F.size(col), emptyViols)
+          .otherwise(one(path, in, ErrorKeys.DuplicateKey, valueStr(col, dt)))
+        collErrors(col, dt, path, in, mn, mx, Some(dup))(errors(c, _, _, _, _))
 
+      // NULL is a valid empty seqable — only :min > 0 reports
       case SEvery(c, mn, mx, limit) =>
-        dt match {
-          case ArrayType(et, _) =>
-            val limitsOk = between(F.size(col), mn.map(_.toLong), mx.map(_.toLong))
-            val limitsErr = F.when(limitsOk, emptyViols)
-              .otherwise(one(path, in, ErrorKeys.Limits, F.size(col).cast(StringType)))
-            val bounded = F.slice(col, 1, effectiveEveryLimit(mn, mx, limit))
-            val elemErrs = F.flatten(F.transform(bounded, (x, i) =>
-              errors(c, x, et, j(path, "0"), jin(in, i))))
-            // NULL is a valid empty seqable — only :min > 0 reports
-            F.when(col.isNull,
-              if (mn.exists(_ > 0))
-                one(path, in, ErrorKeys.Limits, F.lit("0"))
-              else emptyViols)
-              .otherwise(concatViols(Seq(limitsErr, elemErrs)))
-          case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-        }
+        typedErrors(col, dt, path, in, Some(nilSeqErrors(mn, path, in)))(
+          PartialFunction.condOpt(dt) { case ArrayType(et, _) =>
+            concatViols(Seq(limitsErrors(col, mn, mx, path, in),
+              eachErrors(F.slice(col, 1, effectiveEveryLimit(mn, mx, limit)),
+                et, path, in)(errors(c, _, _, _, _))))
+          })
 
-      case STuple(cs) =>
-        dt match {
-          case ArrayType(et, _) =>
-            val sizeErr = F.when(F.size(col) === cs.length, emptyViols)
-              .otherwise(one(path, in, ErrorKeys.TupleSize, F.size(col).cast(StringType)))
-            val elemErrs = cs.zipWithIndex.map { case (c, i) =>
-              F.when(F.size(col) === cs.length,
-                errors(c, F.get(col, F.lit(i)), et, j(path, i.toString), jin(in, i.toString)))
-                .otherwise(emptyViols)
-            }
-            F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-              F.lit(null).cast(StringType)))
-              .otherwise(concatViols(sizeErr +: elemErrs))
-          case st: StructType if st.fields.length == cs.length =>
-            val elemErrs = cs.zip(st.fields).zipWithIndex.map { case ((c, f), i) =>
-              errors(c, col.getField(f.name), f.dataType,
-                j(path, i.toString), jin(in, i.toString))
-            }
-            F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-              F.lit(null).cast(StringType)))
-              .otherwise(concatViols(elemErrs))
-          case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-        }
+      case STuple(cs) => typed {
+        case ArrayType(et, _) =>
+          val sizeErr = F.when(F.size(col) === cs.length, emptyViols)
+            .otherwise(one(path, in, ErrorKeys.TupleSize, F.size(col).cast(StringType)))
+          val elemErrs = cs.zipWithIndex.map { case (c, i) =>
+            F.when(F.size(col) === cs.length,
+              errors(c, F.get(col, F.lit(i)), et, j(path, i.toString), jin(in, i.toString)))
+              .otherwise(emptyViols)
+          }
+          concatViols(sizeErr +: elemErrs)
+        case st: StructType if st.fields.length == cs.length =>
+          concatViols(cs.zip(st.fields).zipWithIndex.map { case ((c, f), i) =>
+            errors(c, col.getField(f.name), f.dataType,
+              j(path, i.toString), jin(in, i.toString))
+          })
+      }
 
-      case SMulti(dk, bs, default) =>
-        dt match {
-          case st: StructType =>
-            val dv = col.getField(dk)
-            val fallback = default
-              .map(d => errors(d, col, dt, j(path, "malli.core/default"), in))
-              .getOrElse(one(path, in, ErrorKeys.InvalidDispatch,
-                dv.cast(StringType)))
-            val chain = bs.foldRight(fallback) { case ((tag, c), acc) =>
-              F.when(dv === F.lit(tag), errors(c, col, dt, j(path, tag), in))
-                .otherwise(acc)
-            }
-            F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-              F.lit(null).cast(StringType))).otherwise(chain)
-          case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-        }
-
-      case SMultiExpr(_, disp, _, bs, default) =>
-        val dv = disp(col)
-        val fallback = default
-          .map(d => errors(d, col, dt, j(path, "malli.core/default"), in))
-          .getOrElse(one(path, in, ErrorKeys.InvalidDispatch,
-            dv.cast(StringType)))
-        val chain = bs.foldRight(fallback) { case ((tag, c), acc) =>
-          F.when(dv === F.lit(tag), errors(c, col, dt, j(path, tag), in))
-            .otherwise(acc)
-        }
-        F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-          F.lit(null).cast(StringType))).otherwise(chain)
-
-      case SRef(name) =>
-        if (ctx.depth <= 0) emptyViols
-        else errors(ctx.registry(name), col, dt, path, in)(
-          ctx.copy(depth = ctx.depth - 1))
-
-      case SScoped(local, c, _) =>
-        errors(c, col, dt, path, in)(ctx.copy(registry =
-          Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
-
-      case SProps(_, c) => errors(c, col, dt, path, in)
-
-      case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
-        errors(mallispark.ir.SchemaOps.expand(alg, ctx.registry),
-          col, dt, path, in)
+      case m @ (_: SMulti | _: SMultiExpr) =>
+        typedErrors(col, dt, path, in)(multiChain(m, col, dt)(dv =>
+          one(path, in, ErrorKeys.InvalidDispatch, dv.cast(StringType)))(
+          (tag, c) => errors(c, col, dt, j(path, tag), in)))
 
       // general (nested) seq-regex: positional error attribution from the
       // RowEval backtracking explainer (impl/regex.cljc:585-628 analogue) —
       // the UDF reports RELATIVE path/in; prefix the static schema path
       // and the runtime in path here
-      case r if isGeneralRegex(r) =>
-        val rel = dt match {
-          case ArrayType(StringType, _) =>
-            mallispark.compile.GeneralRegex.explainStringSeq(r)(col)
-          case ArrayType(LongType, _) =>
-            mallispark.compile.GeneralRegex.explainLongSeq(r)(col)
-          case other => throw new IllegalArgumentException(
-            s"general seq-regex ${SchemaIR.form(r)} needs array<string|long>, " +
-              s"got ${other.simpleString}")
-        }
+      case r @ (_: SCat | _: SCatn | Rep(_, _, _)) if isGeneralRegex(r) =>
+        val rel = generalSeq(r, dt)(GeneralRegex.explainStringSeq,
+          GeneralRegex.explainLongSeq)(col)
         F.transform(rel, e => {
           val rp = e.getField("path")
           val ri = e.getField("in")
@@ -1195,33 +1116,73 @@ object SchemaCompiler {
         }).cast(violArrType)
 
       // seq-regex bounded errors — ::end-of-input / ::input-remaining parity
-      case SCat(cs) => catErrors(cs.zipWithIndex.map { case (c, i) => (i.toString, c) },
-        col, dt, path, in)
+      case SCat(cs) => catErrors(indexed(cs), col, dt, path, in)
       case SCatn(es) => catErrors(es, col, dt, path, in)
 
-      case SAlt(cs) =>
-        F.when(valid(ir, col, dt), emptyViols).otherwise(
-          concatViols(cs.zipWithIndex.map { case (c, i) =>
-            errors(c, col, dt, j(path, i.toString), in)
-          }))
+      // errors from ALL branches only when none match
+      case AnyOf(bs) =>
+        F.when(valid(ir, col, dt), emptyViols)
+          .otherwise(branchErrors(bs, col, dt, path, in))
 
-      case SAltn(es) =>
-        F.when(valid(ir, col, dt), emptyViols).otherwise(
-          concatViols(es.map { case (tag, c) =>
-            errors(c, col, dt, j(path, tag), in)
-          }))
+      case Rep(c, mn, mx) =>
+        collErrors(col, dt, path, in, mn, mx, None)(errors(c, _, _, _, _))
 
-      case SStar(c) => regexCollErrors(c, col, dt, path, in, None, None)
-      case SPlus(c) => regexCollErrors(c, col, dt, path, in, Some(1), None)
-      case SOpt(c) => regexCollErrors(c, col, dt, path, in, None, Some(1))
-      case SRepeat(c, mn, mx) =>
-        regexCollErrors(c, col, dt, path, in, Some(mn), Some(mx))
+      case w =>
+        val (c, inner) = peel(w, ctx).get
+        errors(c, col, dt, path, in)(inner)
     }
   }
 
+  /** Each branch's errors under its path segment, concatenated. */
+  private def branchErrors(bs: Seq[(String, SchemaIR)], col: Column,
+                           dt: DataType, path: String, in: Column)(
+      implicit ctx: Ctx): Column =
+    concatViols(bs.map { case (tag, c) => errors(c, col, dt, j(path, tag), in) })
+
+  /** A container's explain: when `body` handles the physical type, its
+    * errors behind `onNull` (default ::invalid-type) for a null input;
+    * otherwise ::invalid-type with the value. */
+  private def typedErrors(col: Column, dt: DataType, path: String, in: Column,
+                          onNull: Option[Column] = None)(
+      body: Option[Column]): Column = body match {
+    case Some(errs) =>
+      F.when(col.isNull, onNull.getOrElse(
+        one(path, in, ErrorKeys.InvalidType, F.lit(null).cast(StringType))))
+        .otherwise(errs)
+    case None => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
+  }
+
+  /** ::limits when the size is outside [[sizeBetween]]'s bounds. */
+  private def limitsErrors(col: Column, mn: Option[Int], mx: Option[Int],
+                           path: String, in: Column): Column =
+    F.when(sizeBetween(col, mn, mx), emptyViols)
+      .otherwise(one(path, in, ErrorKeys.Limits, F.size(col).cast(StringType)))
+
+  /** A null seqable seqs empty: ::limits only when :min needs elements. */
+  private def nilSeqErrors(mn: Option[Int], path: String, in: Column): Column =
+    if (mn.exists(_ > 0)) one(path, in, ErrorKeys.Limits, F.lit("0"))
+    else emptyViols
+
+  /** Every element's errors at path segment "0" and its runtime index. */
+  private def eachErrors(arr: Column, et: DataType, path: String, in: Column)(
+      elem: (Column, DataType, String, Column) => Column): Column =
+    F.flatten(F.transform(arr, (x, i) => elem(x, et, j(path, "0"), jin(in, i))))
+
+  /** A bounded array's explain — [[collValid]]'s twin: ::limits, then
+    * `dup` (the caller's duplicate check, if it has one), then each
+    * element's errors. */
+  private def collErrors(col: Column, dt: DataType, path: String, in: Column,
+                         mn: Option[Int], mx: Option[Int], dup: Option[Column])(
+      elem: (Column, DataType, String, Column) => Column): Column =
+    typedErrors(col, dt, path, in)(PartialFunction.condOpt(dt) {
+      case ArrayType(et, _) =>
+        concatViols(limitsErrors(col, mn, mx, path, in) +: dup.toSeq :+
+          eachErrors(col, et, path, in)(elem))
+    })
+
   private def catErrors(es: Seq[(String, SchemaIR)], col: Column, dt: DataType,
                         path: String, in: Column)(implicit ctx: Ctx): Column =
-    dt match {
+    typedErrors(col, dt, path, in)(PartialFunction.condOpt(dt) {
       case ArrayType(et, _) =>
         val n = es.length
         val sizeErr =
@@ -1232,65 +1193,11 @@ object SchemaCompiler {
             .otherwise(emptyViols)
         val elemErrs = es.zipWithIndex.map { case ((tag, c), i) =>
           F.when(F.size(col) === n,
-            elemErrors(c, F.get(col, F.lit(i)), et, j(path, tag), jin(in, i.toString)))
+            errors(c, F.get(col, F.lit(i)), et, j(path, tag), jin(in, i.toString)))
             .otherwise(emptyViols)
         }
-        F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-          F.lit(null).cast(StringType)))
-          .otherwise(concatViols(sizeErr +: elemErrs))
-      case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-    }
-
-  private def elemErrors(c: SchemaIR, elem: Column, et: DataType, path: String,
-                         in: Column)(implicit ctx: Ctx): Column = c match {
-    case SAlt(cs) =>
-      F.when(cs.map(valid(_, elem, et)).reduce(_ || _), emptyViols).otherwise(
-        concatViols(cs.zipWithIndex.map { case (cc, i) =>
-          errors(cc, elem, et, j(path, i.toString), in)
-        }))
-    case SAltn(es) =>
-      F.when(es.map(e => valid(e._2, elem, et)).reduce(_ || _), emptyViols)
-        .otherwise(concatViols(es.map { case (tag, cc) =>
-          errors(cc, elem, et, j(path, tag), in)
-        }))
-    case other => errors(other, elem, et, path, in)
-  }
-
-  private def regexCollErrors(c: SchemaIR, col: Column, dt: DataType,
-                              path: String, in: Column, mn: Option[Int],
-                              mx: Option[Int])(implicit ctx: Ctx): Column =
-    dt match {
-      case ArrayType(et, _) =>
-        val limitsOk = between(F.size(col), mn.map(_.toLong), mx.map(_.toLong))
-        val limitsErr = F.when(limitsOk, emptyViols)
-          .otherwise(one(path, in, ErrorKeys.Limits, F.size(col).cast(StringType)))
-        val elemErrs = F.flatten(F.transform(col, (x, i) =>
-          elemErrors(c, x, et, j(path, "0"), jin(in, i))))
-        F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-          F.lit(null).cast(StringType)))
-          .otherwise(concatViols(Seq(limitsErr, elemErrs)))
-      case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-    }
-
-  private def collErrors(c: SchemaIR, col: Column, dt: DataType,
-                         mn: Option[Int], mx: Option[Int], path: String,
-                         in: Column, unique: Boolean)(implicit ctx: Ctx): Column =
-    dt match {
-      case ArrayType(et, _) =>
-        val limitsOk = between(F.size(col), mn.map(_.toLong), mx.map(_.toLong))
-        val limitsErr = F.when(limitsOk, emptyViols)
-          .otherwise(one(path, in, ErrorKeys.Limits, F.size(col).cast(StringType)))
-        val dupErr =
-          if (!unique) emptyViols
-          else F.when(F.size(F.array_distinct(col)) === F.size(col), emptyViols)
-            .otherwise(one(path, in, ErrorKeys.DuplicateKey, valueStr(col, dt)))
-        val elemErrs = F.flatten(F.transform(col, (x, i) =>
-          errors(c, x, et, j(path, "0"), jin(in, i))))
-        F.when(col.isNull, one(path, in, ErrorKeys.InvalidType,
-          F.lit(null).cast(StringType)))
-          .otherwise(concatViols(Seq(limitsErr, dupErr, elemErrs)))
-      case _ => one(path, in, ErrorKeys.InvalidType, valueStr(col, dt))
-    }
+        concatViols(sizeErr +: elemErrs)
+    })
 
   private def concatViols(cols: Seq[Column]): Column = {
     val nonTrivial = cols.filter(_ != null)
@@ -1303,100 +1210,76 @@ object SchemaCompiler {
   // DataFrame-level entry points (top-level :map schema over columns)
   // --------------------------------------------------------------------
 
-  /** Whole-row struct so a top-level `:map` schema addresses columns
-    * uniformly; Catalyst's SimplifyExtractValueOps collapses
-    * GetStructField(CreateStruct(...)) back to the raw column, so this
-    * costs nothing in the physical plan. */
-  private def rowStruct(df: DataFrame,
-                        exclude: Set[String]): (Column, StructType) = {
-    val fields = df.schema.fields.filterNot(f => exclude(f.name))
-    val cols = fields.map(f => F.col(f.name).as(f.name))
-    (F.struct(cols.toIndexedSeq: _*), StructType(fields))
-  }
-
   /** `m/validate` over a DataFrame: adds a boolean `valid` column.
     * `exclude` names engine-added bookkeeping columns (e.g. part_id) that
     * a closed map must not see as extra keys. */
   def validateDF(ir: SchemaIR, df: DataFrame, outCol: String = "valid",
                  exclude: Set[String] = Set.empty)(
       implicit ctx: Ctx = Ctx()): DataFrame =
-    topMap(ir, ctx) match {
-      // top-level :map validates the DataFrame's COLUMNS directly — no
-      // rebuilt row-struct, so planning stays O(width) on wide tables
-      // (a DataFrame row itself is never null)
-      case Some((m, ctx2)) =>
-        val st = StructType(df.schema.fields
-          .filterNot(f => (exclude + outCol)(f.name)))
-        if (structMapDepth(m, st)(ctx2) > DeepNestThreshold)
-          df.withColumn(outCol, deepValidUdf(m, st, ctx2))
-        else
-          df.withColumn(outCol,
-            validStructFields(m.entries, m.closed, m.rest, st, F.col)(ctx2))
-      case None =>
-        val (row, st) = rowStruct(df, exclude + outCol)
-        df.withColumn(outCol, valid(ir, row, st))
-    }
-
-  /** Deep-nesting escape hatch: Spark's whole-stage codegen duplicates
-    * subexpression-elimination state per conditional branch, which is
-    * EXPONENTIAL in nested-conditional depth — a 30-level struct-map
-    * chain OOMs the driver building >2 GB of generated source (measured:
-    * fine to ~depth 18, ~2× codegen wall per +4 levels after). Past the
-    * threshold, validation drops to the engine's row-level interpreter
-    * as a scalar UDF over the row struct — the same escape-hatch tier
-    * the general seq-regex uses (SURVEY §2.9): linear in schema size,
-    * no codegen, row-local. */
-  private def deepValidUdf(m: SMap, st: StructType, ctx: Ctx): Column = {
-    val (reg, d) = (ctx.registry, ctx.depth)
-    val f = F.udf(new org.apache.spark.sql.api.java.UDF1[
-        org.apache.spark.sql.Row, Boolean] {
-      override def call(r: org.apache.spark.sql.Row): Boolean =
-        mallispark.eval.RowEval.validate(m, r)(reg, d)
-    }, BooleanType)
-    f(rowStructCol(st))
-  }
-
-  /** explainDF twin of [[deepValidUdf]] — row-level explain emitting the
-    * violStruct rows directly (absolute paths; values via the shared
-    * deterministic stringifier that mirrors the Column tier's valueStr
-    * shape — base64 binaries, compact-JSON containers). */
-  private def deepErrorsUdf(m: SMap, st: StructType, ctx: Ctx): Column = {
-    val (reg, d) = (ctx.registry, ctx.depth)
-    val f = F.udf(new org.apache.spark.sql.api.java.UDF1[
-        org.apache.spark.sql.Row, Seq[org.apache.spark.sql.Row]] {
-      override def call(r: org.apache.spark.sql.Row)
-          : Seq[org.apache.spark.sql.Row] =
-        mallispark.eval.RowEval
-          .explain(m, r, Vector.empty, Vector.empty)(reg, d)
-          .map(e => org.apache.spark.sql.Row(
-            e.path.mkString("/"), e.in.mkString("/"), e.key,
-            mallispark.eval.RowEval.errValueString(e.value)))
-    }, violArrType)
-    f(rowStructCol(st))
-  }
-
-  private def rowStructCol(st: StructType): Column =
-    F.struct(st.fieldNames.toIndexedSeq.map(F.col): _*)
+    df.withColumn(outCol, topLevel(ir, df, exclude + outCol,
+      DeepNestThreshold, BooleanType)(
+      (m, st, c) => structValid(m, st, F.col)(c),
+      _ => { val (reg, d) = (ctx.registry, ctx.depth)
+        r => mallispark.eval.RowEval.validate(ir, r)(reg, d) },
+      valid(ir, _, _)))
 
   /** `m/explain` over a DataFrame: adds an `errors` array column
     * (empty ⇔ valid). */
   def explainDF(ir: SchemaIR, df: DataFrame, outCol: String = "errors",
                 exclude: Set[String] = Set.empty)(
       implicit ctx: Ctx = Ctx()): DataFrame =
-    topMap(ir, ctx) match {
-      case Some((m, ctx2)) =>
-        val st = StructType(df.schema.fields
-          .filterNot(f => (exclude + outCol)(f.name)))
-        if (structMapDepth(m, st)(ctx2) > DeepNestErrorsThreshold) {
-          requireUtcForHatch(df, st)
-          df.withColumn(outCol, deepErrorsUdf(m, st, ctx2))
-        } else
-          df.withColumn(outCol, errorStructFields(m.entries, m.closed,
-            m.rest, st, F.col, "", F.lit(""))(ctx2))
+    df.withColumn(outCol, topLevel(ir, df, exclude + outCol,
+      DeepNestErrorsThreshold, violArrType)(
+      (m, st, c) => structErrors(m, st, F.col, "", F.lit(""))(c),
+      st => {
+        requireUtcForHatch(df, st)
+        val (reg, d) = (ctx.registry, ctx.depth)
+        // absolute paths; values via the shared deterministic stringifier
+        // that mirrors valueStr's shape (base64 binaries, compact JSON)
+        r => mallispark.eval.RowEval
+          .explain(ir, r, Vector.empty, Vector.empty)(reg, d)
+          .map(e => org.apache.spark.sql.Row(
+            e.path.mkString("/"), e.in.mkString("/"), e.key,
+            mallispark.eval.RowEval.errValueString(e.value)))
+      },
+      errors(ir, _, _, "", F.lit(""))))
+
+  /** The top-level entry of validateDF/explainDF over the columns not in
+    * `hidden`. A schema nested deeper than `deep` takes the escape hatch:
+    * Spark's whole-stage codegen duplicates subexpression-elimination
+    * state per conditional branch, which is EXPONENTIAL in
+    * nested-conditional depth — a 30-level struct-map chain OOMs the
+    * driver building >2 GB of generated source (measured: fine to ~depth
+    * 18, ~2× codegen wall per +4 levels after) — so the row is checked by
+    * the engine's row-level interpreter (`interpret`) as a scalar UDF of
+    * result type `rt` over the row struct: the same escape-hatch tier the
+    * general seq-regex uses (SURVEY §2.9), linear in schema size, no
+    * codegen, row-local. Otherwise a schema that peels to a `:map` checks
+    * the DataFrame's COLUMNS directly (`fields`, accessor `F.col`; a
+    * DataFrame row itself is never null) — no rebuilt row-struct, so
+    * planning stays O(width) on wide tables — and any other schema
+    * compiles (`whole`) against one row struct, which Catalyst's
+    * SimplifyExtractValueOps collapses back to the raw columns
+    * (GetStructField(CreateStruct(...))). */
+  private def topLevel(ir: SchemaIR, df: DataFrame, hidden: Set[String],
+                       deep: Int, rt: DataType)(
+      fields: (SMap, StructType, Ctx) => Column,
+      interpret: StructType => org.apache.spark.sql.Row => Any,
+      whole: (Column, StructType) => Column)(implicit ctx: Ctx): Column = {
+    val st = StructType(df.schema.fields.filterNot(f => hidden(f.name)))
+    if (structMapDepth(ir, st) > deep) {
+      val f = interpret(st)
+      val udf = F.udf(new org.apache.spark.sql.api.java.UDF1[
+          org.apache.spark.sql.Row, Any] {
+        override def call(r: org.apache.spark.sql.Row): Any = f(r)
+      }, rt)
+      udf(F.struct(st.fieldNames.toIndexedSeq.map(F.col): _*))
+    } else topMap(ir, ctx) match {
+      case Some((m, inner)) => fields(m, st, inner)
       case None =>
-        val (row, st) = rowStruct(df, exclude + outCol)
-        df.withColumn(outCol, errors(ir, row, st, "", F.lit("")))
+        whole(F.struct(st.fieldNames.toIndexedSeq.map(n => F.col(n).as(n)): _*), st)
     }
+  }
 
   /** The hatch renders timestamp values in UTC (`RowEval.JsonTsFmt`),
     * while the Column tier's `to_json` follows the session zone: under
@@ -1418,91 +1301,63 @@ object SchemaCompiler {
         s"set $conf=UTC (it is '$tz')")
   }
 
-  /** Peel validation-transparent wrappers down to a top-level `:map`,
-    * threading registry scopes into the ctx — the shapes eligible for
-    * the direct-column fast path above. */
+  /** The top-level `:map` a schema peels to, with the Ctx it compiles
+    * under — the shapes eligible for the direct-column fast path. */
   private def topMap(ir: SchemaIR, ctx: Ctx): Option[(SMap, Ctx)] =
     ir match {
       case m: SMap => Some((m, ctx))
-      case SProps(_, c) => topMap(c, ctx)
-      case SScoped(local, c, _) => topMap(c, ctx.copy(registry =
-        Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
-      case _ => None
+      case w => peel(w, ctx).flatMap { case (c, inner) => topMap(c, inner) }
     }
 
-  /** A child that is itself a struct-shaped `:map` (through props
-    * wrappers only — scoped children keep their inline compile because
-    * they carry their own registries). */
   /** Depth of the nested-conditional chain the compiled expression will
     * have — codegen's subexpression-elimination state is exponential in
     * it (fine to ~18 for valid, ~10 for errors; OOM at 30). Counts every
-    * `:map`-over-struct level, DESCENDING through props/scoped/maybe
-    * wrappers, and/or/orn/andn/multi branches, collections, tuples and
-    * map-of values — a deep chain is a deep chain however it is wrapped.
-    * Refs DEREFERENCE through the registry consuming the SAME shared
-    * unroll budget valid()/errors() consume (one ctx.depth unit per
-    * deref, whichever ref it is — see the SRef case of valid()), so the
-    * estimate models the compiled conditional chain EXACTLY for direct
-    * AND mutual recursion alike; counting a ref as a flat 1 let the
-    * exponential-codegen OOM the hatch exists to prevent sneak past the
-    * heuristic through one [:ref] to a deep chain, and a
-    * self-reference-only multiply would still miss A→B→A cycles. The
-    * budget also makes the traversal terminate without a seen-set —
-    * the physical DataType bottoming out ends it sooner in practice. */
+    * `:map`-over-struct level, DESCENDING through :maybe, and/or/alt
+    * and :multi branches, collections, tuples and map-of values, and
+    * through every wrapper by the shared peel — a deep chain is a deep
+    * chain however it is wrapped. Refs spend the SAME shared unroll
+    * budget valid()/errors() spend (one ctx.depth unit per deref,
+    * whichever ref it is), so the estimate models the compiled
+    * conditional chain EXACTLY for direct AND mutual recursion alike;
+    * counting a ref as a flat 1 let the exponential-codegen OOM the hatch
+    * exists to prevent sneak past the heuristic through one [:ref] to a
+    * deep chain. The budget also makes the traversal terminate without a
+    * seen-set — the physical DataType bottoming out ends it sooner in
+    * practice. */
   private def structMapDepth(ir: SchemaIR, dt: DataType)(
-      implicit ctx: Ctx): Int = ir match {
-    case m: SMap => dt match {
-      case st: StructType =>
-        val kids = m.entries.flatMap(e => st.find(_.name == e.key)
-          .map(f => structMapDepth(e.child, f.dataType)))
-        1 + (if (kids.isEmpty) 0 else kids.max)
-      case _ => 1
-    }
-    case SProps(_, c) => structMapDepth(c, dt)
-    case SScoped(local, c, _) =>
-      structMapDepth(c, dt)(ctx.copy(registry =
-        Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
-    case SMaybe(c) => structMapDepth(c, dt)
-    case SAnd(cs) => (0 +: cs.map(structMapDepth(_, dt))).max
-    case SOr(cs) => (0 +: cs.map(structMapDepth(_, dt))).max
-    case SOrn(bs) => (0 +: bs.map(b => structMapDepth(b._2, dt))).max
-    case SAndn(bs) => (0 +: bs.map(b => structMapDepth(b._2, dt))).max
-    case SMulti(_, bs, d) =>
-      (0 +: (bs.map(_._2) ++ d).map(structMapDepth(_, dt))).max
-    case SMultiExpr(_, _, _, bs, d) =>
-      (0 +: (bs.map(_._2) ++ d).map(structMapDepth(_, dt))).max
-    case SVector(c, _, _) => elemDepth(c, dt)
-    case SSeqable(c, _, _) => elemDepth(c, dt)
-    case SSet(c, _, _) => elemDepth(c, dt)
-    case SEvery(c, _, _, _) => elemDepth(c, dt)
-    case STuple(cs) => dt match {
-      case st: StructType =>
-        (0 +: cs.zip(st.fields).map { case (c, f) =>
-          structMapDepth(c, f.dataType) }).max
-      case ArrayType(et, _) =>
-        (0 +: cs.map(structMapDepth(_, et))).max
+      implicit ctx: Ctx): Int = {
+    def deepest(cs: Seq[(SchemaIR, DataType)]): Int =
+      (0 +: cs.map { case (c, t) => structMapDepth(c, t) }).max
+    def elems(c: SchemaIR): Int = dt match {
+      case ArrayType(et, _) => structMapDepth(c, et)
       case _ => 0
     }
-    case SMapOf(_, v, _, _) => dt match {
-      case mt: MapType => structMapDepth(v, mt.valueType)
-      case _ => 0
-    }
-    case SRef(name) =>
-      // mirror valid()'s unroll: one shared budget unit per deref; at
-      // exhaustion the compile emits lit(true) — depth 0
-      if (ctx.depth <= 0) 0
-      else ctx.registry.schemas.get(name) match {
-        case Some(target) =>
-          structMapDepth(target, dt)(ctx.copy(depth = ctx.depth - 1))
-        case None => 1 // unresolvable ref compiles to a leaf check
+    ir match {
+      case m: SMap => dt match {
+        case st: StructType => 1 + deepest(m.entries.flatMap(e =>
+          st.find(_.name == e.key).map(f => (e.child, f.dataType))))
+        case _ => 1
       }
-    case _ => 0
-  }
-
-  private def elemDepth(c: SchemaIR, dt: DataType)(
-      implicit ctx: Ctx): Int = dt match {
-    case ArrayType(et, _) => structMapDepth(c, et)
-    case _ => 0
+      case SMaybe(c) => structMapDepth(c, dt)
+      case AllOf(bs) => deepest(bs.map(b => (b._2, dt)))
+      case AnyOf(bs) => deepest(bs.map(b => (b._2, dt)))
+      case SMulti(_, bs, d) => deepest((bs.map(_._2) ++ d).map((_, dt)))
+      case SMultiExpr(_, _, _, bs, d) => deepest((bs.map(_._2) ++ d).map((_, dt)))
+      case SVector(c, _, _) => elems(c)
+      case SSeqable(c, _, _) => elems(c)
+      case SSet(c, _, _) => elems(c)
+      case SEvery(c, _, _, _) => elems(c)
+      case STuple(cs) => dt match {
+        case st: StructType => deepest(cs.zip(st.fields.map(_.dataType)))
+        case ArrayType(et, _) => deepest(cs.map((_, et)))
+        case _ => 0
+      }
+      case SMapOf(_, v, _, _) => dt match {
+        case mt: MapType => structMapDepth(v, mt.valueType)
+        case _ => 0
+      }
+      case w => peel(w, ctx).fold(0) { case (c, inner) => structMapDepth(c, dt)(inner) }
+    }
   }
 
   /** Nesting thresholds for the row-level-interpreter escape hatch in
@@ -1518,12 +1373,11 @@ object SchemaCompiler {
     * (the explode/"UDTF" shape of SURVEY §2.12). `keyCols` select the
     * OUTPUT identity columns; they are still validated like any other
     * column (declare them in the schema or list them in `exclude` when a
-    * closed map must not see them). */
-  /** `maskValue`: replace the violation's captured value with a mask
-    * string — the engine-side dual of error.cljc's value masking
-    * (232-244): at web scale, violation sinks must not replicate document
-    * payloads (PII / storage blowup); keys + paths + error keys are
-    * enough to triage. */
+    * closed map must not see them). `maskValue` replaces the violation's
+    * captured value with a mask string — the engine-side dual of
+    * error.cljc's value masking (232-244): at web scale, violation sinks
+    * must not replicate document payloads (PII / storage blowup); keys +
+    * paths + error keys are enough to triage. */
   def violationsDF(ir: SchemaIR, df: DataFrame, keyCols: Seq[String],
                    exclude: Set[String] = Set.empty,
                    maskValue: Option[String] = None)(

@@ -925,7 +925,7 @@ object RowEval {
           else Vector.empty
         else collExplain(c, v, mn, mx, path, in, unique = false)
       case SSet(c, mn, mx) => collExplain(c, v, mn, mx, path, in, unique = true)
-      case SEvery(c, mn, mx, limit) if v == null =>
+      case SEvery(_, mn, _, _) if v == null =>
         if (mn.exists(_ > 0)) Vector(Err(path, in, ErrorKeys.Limits, 0))
         else Vector.empty
       case SEvery(c, mn, mx, limit) => asSeq(v) match {

@@ -315,7 +315,7 @@ object Generate {
         F.struct(cs.zipWithIndex.map { case (c, i) =>
           gen(c, id, salt + i + 1).as(s"_${i + 1}")
         }: _*)
-    case SMulti(dk, bs, _) =>
+    case SMulti(_, bs, _) =>
       // generate per branch, pick one; branches must share physical type
       val n = bs.size
       bs.zipWithIndex.tail.foldLeft(gen(bs.head._2, id, salt)) {

@@ -443,8 +443,8 @@ object SchemaOps {
         SOrn(bs.map { case (t, x) => t -> (if (t == seg) c else x) })
       case SAndn(bs) if bs.exists(_._1 == seg) =>
         SAndn(bs.map { case (t, x) => t -> (if (t == seg) c else x) })
-      case SMapOf(k, v, mn, mx) if seg == "0" => SMapOf(c, v, mn, mx)
-      case SMapOf(k, v, mn, mx) if seg == "1" => SMapOf(k, c, mn, mx)
+      case SMapOf(_, v, mn, mx) if seg == "0" => SMapOf(c, v, mn, mx)
+      case SMapOf(k, _, mn, mx) if seg == "1" => SMapOf(k, c, mn, mx)
       case SVector(_, mn, mx) if seg == "0" => SVector(c, mn, mx)
       case SSet(_, mn, mx) if seg == "0" => SSet(c, mn, mx)
       case SEvery(_, mn, mx, l) if seg == "0" => SEvery(c, mn, mx, l)

@@ -77,6 +77,70 @@ class DeepNestSpec extends SparkSuite {
 
   }
 
+  // a 20-level chain behind a :merge is as deep as the chain itself: the
+  // depth estimate and the top-level entry see through the merge, so the
+  // plan carries the hatch UDF instead of the exponential inline compile.
+  // The plan is checked ANALYZED, before anything runs: an inline compile
+  // of this chain would spend minutes or exhaust the driver in codegen
+  private def mergeChain(D: Int): (SchemaIR, DataFrame) = {
+    import scala.jdk.CollectionConverters._
+    def sch(d: Int): SchemaIR =
+      if (d == 0) S.int(0L, 100L)
+      else S.mapE(false, S.req("leaf", S.int(0L, 100L)),
+        S.req("kid", sch(d - 1)))
+    def dt(d: Int): DataType =
+      if (d == 0) LongType
+      else StructType(Seq(StructField("leaf", LongType),
+        StructField("kid", dt(d - 1))))
+    def v(d: Int, x: Long): Any = if (d == 0) x else Row(x, v(d - 1, x))
+    val st = StructType(Seq(StructField("root", dt(D))))
+    val rows = (0 until 40).map(i => Row(v(D, (i * 7) % 130)))
+    (sch(D), spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava), st))
+  }
+
+  /** `merged` must take the hatch and agree with `plain`; each of
+    * `plain`'s error paths stands for the paths `paths` maps it to. */
+  private def hatchVerdicts(merged: SchemaIR, plain: SchemaIR, df: DataFrame,
+                            paths: String => Seq[String] = Seq(_)): Unit = {
+    def analyzedUdf(out: DataFrame) =
+      out.queryExecution.analyzed.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]))
+    val valid = SchemaCompiler.validateDF(merged, df, "ok")
+    assert(analyzedUdf(valid), "merged deep chain compiled inline (valid)")
+    val explained = SchemaCompiler.explainDF(merged, df, "e")
+    assert(analyzedUdf(explained), "merged deep chain compiled inline (errors)")
+    def verdicts(out: DataFrame) = out.select("ok").collect().map(_.getBoolean(0)).toSeq
+    def errs(out: DataFrame) = out.select("e").collect().map(_.getSeq[Row](0)
+      .map(e => (e.getString(0), e.getString(1), e.getString(2), e.getString(3)))
+      .toSet).toSeq
+    val plainValid = SchemaCompiler.validateDF(plain, df, "ok")
+    assert(verdicts(valid) === verdicts(plainValid))
+    assert(verdicts(valid).count(!_) === (0 until 40).count(i => (i * 7) % 130 > 100))
+    assert(errs(explained) === errs(SchemaCompiler.explainDF(plain, df, "e"))
+      .map(_.flatMap { case (p, i, k, v) => paths(p).map((_, i, k, v)) }))
+  }
+
+  test("a deep chain nested behind :merge rides the hatch") {
+    val (chain, df) = mergeChain(20)
+    val extra = S.mapE(false, S.opt("note", S.string))
+    hatchVerdicts(
+      S.mapE(false, S.req("root", S.mergeOf(chain, extra))),
+      S.mapE(false, S.req("root", chain)), df)
+  }
+
+  test("a deep chain under a top-level :merge rides the hatch") {
+    val (chain, df) = mergeChain(20)
+    val top = S.mapE(false, S.req("root", chain))
+    hatchVerdicts(S.mergeOf(top, S.mapE(false, S.opt("note", S.string))), top, df)
+  }
+
+  // a top-level schema that peels to no :map at all is measured too
+  test("a deep chain under a top-level [:and m m] rides the hatch") {
+    val (chain, df) = mergeChain(20)
+    val top = S.mapE(false, S.req("root", chain))
+    hatchVerdicts(S.and(top, top), top, df, p => Seq(s"0/$p", s"1/$p"))
+  }
+
   // the hatch must be INVISIBLE semantically: just past each threshold
   // the interpreter UDF's output equals the Column tier's
   // single-expression output on the same data

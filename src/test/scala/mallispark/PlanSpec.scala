@@ -3,7 +3,7 @@ package mallispark
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Attribute,
   Expression, Length, Size}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Project}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import mallispark.ir.S
 import mallispark.compile.SchemaCompiler
@@ -130,6 +130,20 @@ class PlanSpec extends SparkSuite {
     val bounded = SchemaCompiler.validateDF(S.map("text" -> S.string(3, 5)),
       pages.select("text"), "valid")
     assert(lengths(bounded).nonEmpty, "bounded :string lost its length()")
+  }
+
+  test("the flagship's compiled size is pinned: expression nodes per projection") {
+    val pages = WebPages.derive(spark.read.parquet(s"$sf/documents.parquet"))
+    // every expression node in the optimized plan's projections and
+    // generators: a compile change that grows the hot path moves these
+    def nodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case p: Project => p.projectList
+        case g: Generate => Seq(g.generator)
+      }.flatten.map(_.collect { case e => e }.size).sum
+    val valid = SchemaCompiler.validateDF(WebPages.schema, pages, "valid")
+    val viols = SchemaCompiler.violationsDF(WebPages.schema, pages, Seq("doc_id"))
+    assert((nodes(valid), nodes(viols)) === ((228, 431)))
   }
 
   /** Filter conditions that re-evaluate a computed array: a size() of a

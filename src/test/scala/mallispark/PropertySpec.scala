@@ -299,6 +299,48 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  // a :merge-family child may EXPAND to a nil-accepting node ([:union :nil
+  // :int] → [:or :nil :int]; a merge with a non-map last returns it), yet
+  // a null required field under it is ::missing-key on both tiers, and
+  // the field's Spark type stays non-nullable
+  test("duality: a null required :merge-family field is ::missing-key on both tiers") {
+    val children = Seq(S.unionOf(S.nil, S.int), S.mergeOf(S.int, S.maybe(S.int)),
+      S.unionOf(S.int, S.maybe(S.int)))
+    val sdt = StructType(Seq(StructField("x", LongType)))
+    val mdt = MapType(StringType, LongType)
+    children.foreach { child =>
+      val sch = S.mapE(false, S.req("x", child))
+      assert(!SchemaCompiler.dataTypeOf(sch).asInstanceOf[StructType]("x").nullable)
+      Seq[(DataType, Seq[Any])](
+        sdt -> Seq(Row(null), Row(5L)),
+        mdt -> Seq(Map("x" -> null), Map("x" -> 5L))).foreach { case (vdt, vs) =>
+        val df = spark.createDataFrame(
+          new java.util.ArrayList[Row](vs.map(v => Row(v)).asJava),
+          StructType(Seq(StructField("v", vdt))))
+        val catalyst = df.select(
+          SchemaCompiler.valid(sch, F.col("v"), vdt).as("ok"),
+          SchemaCompiler.errors(sch, F.col("v"), vdt, "", F.lit("")).as("e"))
+          .collect().toSeq.map { r =>
+            (r.getBoolean(0), r.getSeq[Row](1).map(e =>
+              (e.getString(0), e.getString(1), e.getString(2))).toSet)
+          }
+        vs.zip(catalyst).foreach { case (v, (ok, errs)) =>
+          val value = v match {
+            case r: Row => new org.apache.spark.sql.catalyst.expressions
+              .GenericRowWithSchema(r.toSeq.toArray, sdt)
+            case m => m
+          }
+          assert(RowEval.validate(sch, value) === ok, s"valid mismatch on $v under $child")
+          val re = RowEval.explain(sch, value).map(e =>
+            (e.path.mkString("/"), e.in.mkString("/"), e.key)).toSet
+          assert(re === errs, s"errors mismatch on $v under $child")
+        }
+        assert(catalyst.map(_._2) === Seq(
+          Set(("x", "x", SchemaIR.ErrorKeys.MissingKey)), Set.empty), s"under $child")
+      }
+    }
+  }
+
   test("duality: Catalyst and RowEval agree on random (possibly invalid) rows") {
     val genAny: Gen[Row] = for {
       a <- Gen.oneOf(Gen.chooseNum(-100L, 2000L), Gen.const(null))

@@ -32,40 +32,65 @@ class ValidationJobSpec extends SparkSuite {
 
   test("resume: partial manifest -> second pass completes; equals single run") {
     val dir = java.nio.file.Files.createTempDirectory("msresume").toString
-    val runId = "r1"
-    // simulate a killed run: validate only partitions 0-7 of 16 and commit
-    // their manifest rows
-    val withPart = pages.withColumn("part_id",
-      F.pmod(F.xxhash64(F.col("url")), F.lit(16L)))
-    val firstHalf = withPart.where(F.col("part_id") < 8).drop("part_id")
-    ValidationJob.runResumable(spark, firstHalf, WebPages.schema,
-      Seq("url"), dir, runId, nParts = 16)
-    val afterPartial = ValidationJob.completedPartitions(spark, dir, runId)
-      .collect().map(_.getLong(0)).toSet
-    assert(afterPartial === (0L to 7L).toSet)
+    try {
+      val runId = "r1"
+      // simulate a killed run: validate only partitions 0-7 of 16 and commit
+      // their manifest rows
+      val withPart = pages.withColumn("part_id",
+        F.pmod(F.xxhash64(F.col("url")), F.lit(16L)))
+      val firstHalf = withPart.where(F.col("part_id") < 8).drop("part_id")
+      ValidationJob.runResumable(spark, firstHalf, WebPages.schema,
+        Seq("url"), dir, runId, nParts = 16)
+      val afterPartial = ValidationJob.completedPartitions(spark, dir, runId)
+        .collect().map(_.getLong(0)).toSet
+      assert(afterPartial === (0L to 7L).toSet)
 
-    // resume over the FULL input: only partitions 8-15 get validated
-    val manifest = ValidationJob.runResumable(spark, pages, WebPages.schema,
-      Seq("url"), dir, runId, nParts = 16)
-    val byPart = manifest.collect()
-      .map(r => r.getLong(r.fieldIndex("part_id")) ->
-        r.getLong(r.fieldIndex("rows"))).toMap
-    assert(byPart.keySet === (0L to 15L).toSet)
+      // resume over the FULL input: only partitions 8-15 get validated
+      val manifest = ValidationJob.runResumable(spark, pages, WebPages.schema,
+        Seq("url"), dir, runId, nParts = 16)
+      val byPart = manifest.collect()
+        .map(r => r.getLong(r.fieldIndex("part_id")) ->
+          r.getLong(r.fieldIndex("rows"))).toMap
+      assert(byPart.keySet === (0L to 15L).toSet)
 
-    // identical to a single, non-resumed run
-    val single = ValidationJob.run(pages, WebPages.schema, Seq("url"),
-      nParts = 16).verdicts.collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val resumed = manifest.collect().map(r =>
-      r.getLong(r.fieldIndex("part_id")) ->
-        (r.getLong(r.fieldIndex("rows")),
-          r.getLong(r.fieldIndex("valid_rows")))).toMap
-    assert(resumed === single)
+      // identical to a single, non-resumed run
+      val single = ValidationJob.run(pages, WebPages.schema, Seq("url"),
+        nParts = 16).verdicts.collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val resumed = manifest.collect().map(r =>
+        r.getLong(r.fieldIndex("part_id")) ->
+          (r.getLong(r.fieldIndex("rows")),
+            r.getLong(r.fieldIndex("valid_rows")))).toMap
+      assert(resumed === single)
 
-    // idempotent: a third pass finds nothing to do (no new manifest rows)
-    val again = ValidationJob.runResumable(spark, pages, WebPages.schema,
-      Seq("url"), dir, runId, nParts = 16)
-    assert(again.count() === 16)
+      // idempotent: a third pass finds nothing to do (no new manifest rows)
+      val again = ValidationJob.runResumable(spark, pages, WebPages.schema,
+        Seq("url"), dir, runId, nParts = 16)
+      assert(again.count() === 16)
+    } finally rmTree(dir)
+  }
+
+  test("readViolations: uncommitted rows dropped, a re-appended partition once") {
+    val dir = java.nio.file.Files.createTempDirectory("msviols").toString
+    try {
+      val runId = "r1"
+      ValidationJob.runResumable(spark, pages, WebPages.schema, Seq("url"),
+        dir, runId, nParts = 16)
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      val committed = rows(ValidationJob.readViolations(spark, dir, runId))
+      assert(committed.nonEmpty)
+      // a crash between the two writes: violation rows of a partition
+      // with no manifest row, and a retry re-appending one committed
+      // partition's rows
+      val raw = spark.read.parquet(s"$dir/violations")
+      val part = raw.agg(F.min("part_id")).head().getLong(0)
+      raw.withColumn("part_id", F.lit(99L))
+        .union(raw.where(F.col("part_id") === part))
+        .write.mode("append").parquet(s"$dir/violations")
+      assert(spark.read.parquet(s"$dir/violations").count() > committed.length)
+      assert(rows(ValidationJob.readViolations(spark, dir, runId)) === committed)
+    } finally rmTree(dir)
   }
 
   test("saltedCounts matches plain counts on skewed keys") {
