@@ -266,8 +266,11 @@ object RowEval {
     var pos: Int = -1
     var leaf: SchemaIR = _
     var path: Vector[String] = Vector.empty
-    def record(i: Int, s: SchemaIR, p: Vector[String]): Unit =
-      if (i > pos) { pos = i; leaf = s; path = p }
+    // the registry the leaf was matched under (a scope inside the regex
+    // binds names the leaf may reference)
+    var reg: Registry = _
+    def record(i: Int, s: SchemaIR, p: Vector[String], r: Registry): Unit =
+      if (i > pos) { pos = i; leaf = s; path = p; reg = r }
   }
 
   /** Positional explain for GENERAL (tier-3) sequence-regex forms: run the
@@ -292,7 +295,8 @@ object RowEval {
         Vector(Err(path, in, ErrorKeys.EndOfInput, xs.length))
       else if (df.pos >= 0 && df.pos >= maxEnd)
         // a leaf failed at the frontier: attribute positionally
-        explain(df.leaf, xs(df.pos), path ++ df.path, in :+ df.pos.toString)
+        explain(df.leaf, xs(df.pos), path ++ df.path, in :+ df.pos.toString)(
+          df.reg, depth)
       else if (ends.nonEmpty)
         // a prefix parses but input remains past the furthest end
         Vector(Err(path, in, ErrorKeys.InputRemaining, xs.length - maxEnd))
@@ -351,7 +355,7 @@ object RowEval {
       compulsories(i, 0)
     case plain =>
       if (i < xs.length && validate(plain, xs(i))) LazyList(i + 1)
-      else { df.record(i, plain, path); LazyList.empty }
+      else { df.record(i, plain, path, reg); LazyList.empty }
   }
 
   /** General sequence-regex PARSER (impl/regex.cljc:630-648 semantics):
@@ -718,22 +722,20 @@ object RowEval {
     case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
       reUnparse(c, tree)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
     case SCat(cs) =>
-      cs.zip(tree.asInstanceOf[Seq[Any]]).flatMap { case (c, t) =>
-        reUnparse(c, t) }
+      cs.zip(seqTree(tree, cs.size)).flatMap { case (c, t) => reUnparse(c, t) }
     case SCatn(es) =>
       // only a Tags record unparses (re/catn-unparser's tags? check,
       // core.cljc:3015) — a plain map is a different value universe
       val m = tree match { case RTags(values) => values }
       es.flatMap { case (tag, c) => reUnparse(c, m(tag)) }
-    case SStar(c) => tree.asInstanceOf[Seq[Any]].flatMap(reUnparse(c, _))
-    case SPlus(c) => tree.asInstanceOf[Seq[Any]].flatMap(reUnparse(c, _))
-    case SRepeat(c, _, _) =>
-      tree.asInstanceOf[Seq[Any]].flatMap(reUnparse(c, _))
+    case SStar(c) => seqTree(tree).flatMap(reUnparse(c, _))
+    case SPlus(c) => seqTree(tree).flatMap(reUnparse(c, _))
+    case SRepeat(c, _, _) => seqTree(tree).flatMap(reUnparse(c, _))
     case SOpt(c) => if (tree == null) Seq.empty else reUnparse(c, tree)
     case SAlt(cs) =>
       def attempt(c: SchemaIR): Option[Seq[Any]] =
         try {
-          if (SchemaIR.isRegexOp(c)) {
+          if (spliced(c)) {
             val out = reUnparse(c, tree)
             // the branch must ACCEPT what it produced — a tree from a
             // different branch typically survives the cast but fails
@@ -742,7 +744,8 @@ object RowEval {
             else None
           } else unparseValue(c, tree).map(Seq(_))
         } catch {
-          case _: ClassCastException | _: MatchError => None
+          case _: ClassCastException | _: MatchError |
+               _: NoSuchElementException => None
         }
       cs.iterator.flatMap(attempt(_).iterator).nextOption()
         .getOrElse(Seq(tree))
@@ -750,7 +753,7 @@ object RowEval {
       // the RTag names the branch to unparse through (tags 164-183)
       case RTag(tag, t) =>
         es.find(_._1 == tag) match {
-          case Some((_, c)) if SchemaIR.isRegexOp(c) => reUnparse(c, t)
+          case Some((_, c)) if spliced(c) => reUnparse(c, t)
           case Some((_, c)) => Seq(unparseValue(c, t).getOrElse(t))
           case None => Seq(t)
         }
@@ -760,6 +763,18 @@ object RowEval {
     // plain child's tree unparses back to its element
     case plain => Seq(unparseValue(plain, tree).getOrElse(tree))
   }
+
+  /** A repetition's (or, with its arity, a `:cat`'s) parse tree; any
+    * other shape came from a different branch and is a MatchError. */
+  private def seqTree(tree: Any, arity: Int = -1): Seq[Any] = tree match {
+    case ts: scala.collection.Seq[_] if arity < 0 || ts.size == arity => ts.toSeq
+    case _ => throw new MatchError(tree)
+  }
+
+  /** A branch the matcher splices into the sequence (a nested `:alt`
+    * too), as opposed to one it matches against a single element. */
+  private def spliced(c: SchemaIR): Boolean =
+    SchemaIR.isRegexOp(c) || c.isInstanceOf[SAlt] || c.isInstanceOf[SAltn]
 
   /** Backtracking sequence-regex matcher (semantics of impl/regex.cljc; the
     * reference uses CPS+packrat — row-local inputs here are small, so plain

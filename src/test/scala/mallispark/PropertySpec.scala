@@ -644,4 +644,89 @@ class PropertySpec extends SparkSuite {
       }
     }
   }
+
+  // the four sequence-regex drivers (validate, explain, parse, unparse)
+  // share one set of combinators in the reference (impl/regex.cljc
+  // validator/explainer/parser/unparser): over random nested seq-regex
+  // schemas and short sequences they must agree on every verdict, and
+  // unparse must invert parse
+  test("seq-regex drivers agree: validate ⇔ parse ⇔ explain, unparse∘parse = id") {
+    val props = NodeProps(extra = Seq(":user/tag" -> 1L))
+    val leafGen: Gen[SchemaIR] = Gen.oneOf(
+      S.int(0L, 5L), S.int(3L, 9L), S.enum_("a", "b"), S.string(max = 1),
+      // transforming leaf: parses to a tag inside the sequence
+      S.orn("lo" -> S.int(0L, 4L), "hi" -> S.int(5L, 9L)),
+      SProps(props, S.int(0L, 9L)))
+    def opGen(d: Int): Gen[SchemaIR] = {
+      val sub = Gen.lzy(nodeGen(d - 1))
+      Gen.oneOf(
+        Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, sub)).map(cs => S.cat(cs: _*)),
+        Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, sub)).map(cs =>
+          S.catn(cs.zipWithIndex.map { case (c, i) => s"k$i" -> c }: _*)),
+        sub.map(S.star), sub.map(S.plus), sub.map(S.optional),
+        for { c <- sub; mn <- Gen.chooseNum(0, 2); ex <- Gen.chooseNum(0, 2) }
+          yield S.repeat(c, mn, mn + ex),
+        // :repeat with a :min over a nullable child (epsilon iterations)
+        sub.map(c => S.repeat(S.optional(c), 2, 3)),
+        // props and registry-prop scopes splice around a regex op
+        Gen.lzy(opGen(d - 1)).map(c => SProps(props, c)),
+        Gen.lzy(opGen(d - 1)).map(c => SScoped(Map("t" -> S.int(0L, 9L)),
+          S.cat(S.ref("t"), c), boundary = false)))
+    }
+    def nodeGen(d: Int): Gen[SchemaIR] =
+      if (d <= 0) leafGen
+      else Gen.frequency(
+        3 -> leafGen,
+        3 -> opGen(d),
+        1 -> Gen.chooseNum(2, 3).flatMap(Gen.listOfN(_, Gen.lzy(nodeGen(d - 1))))
+          .map(cs => S.alt(cs: _*)),
+        1 -> Gen.chooseNum(2, 3).flatMap(Gen.listOfN(_, Gen.lzy(nodeGen(d - 1))))
+          .map(cs => S.altn(cs.zipWithIndex.map { case (c, i) => s"b$i" -> c }: _*)))
+    // a sequence the schema accepts (the generator's regex semantics)
+    def sample(ir: SchemaIR)(implicit reg: Registry): Gen[Vector[Any]] = ir match {
+      case SProps(_, c) if SchemaIR.isRegexOp(c) => sample(c)
+      case SScoped(l, c, false) => sample(c)(Registry(reg.schemas ++ l))
+      case SCat(cs) => Gen.sequence[Vector[Vector[Any]], Vector[Any]](cs.map(sample))
+        .map(_.flatten)
+      case SCatn(es) => sample(SCat(es.map(_._2)))
+      case SAlt(cs) => Gen.oneOf(cs).flatMap(sample)
+      case SAltn(es) => Gen.oneOf(es.map(_._2)).flatMap(sample)
+      case SStar(c) => Gen.chooseNum(0, 2).flatMap(n => sample(SRepeat(c, n, n)))
+      case SPlus(c) => Gen.chooseNum(1, 2).flatMap(n => sample(SRepeat(c, n, n)))
+      case SOpt(c) => Gen.oneOf(Gen.const(Vector.empty[Any]), sample(c))
+      case SRepeat(c, mn, mx) => Gen.chooseNum(mn, mx).flatMap(n =>
+        Gen.listOfN(n, sample(c)).map(_.toVector.flatten))
+      case leaf => Gen.oneOf(Seq[Any](0L, 2L, 4L, 5L, 7L, 9L, "a", "b")
+        .filter(RowEval.validate(leaf, _)(reg, 8))).map(Vector(_))
+    }
+    val elem: Gen[Any] = Gen.oneOf[Any](0L, 2L, 4L, 5L, 7L, 9L, "a", "b", "ab", true)
+    val topGen = opGen(3).filter(r => SchemaIR.isRegexOp(r))
+    val schemas = seeded(Gen.listOfN(150, topGen), 20261020L)
+    var valid, invalid = 0
+    schemas.zipWithIndex.foreach { case (sch, i) =>
+      val f = SchemaIR.form(sch)
+      val seqs = seeded(Gen.listOfN(6, sample(sch)(Registry.empty)), 7000L + i) ++
+        seeded(Gen.listOfN(10, Gen.chooseNum(0, 5).flatMap(
+          Gen.listOfN(_, elem)).map(_.toVector)), 9000L + i)
+      seqs.foreach { xs =>
+        val ok = RowEval.validate(sch, xs)
+        val parsed = RowEval.reParse(sch, xs)
+        val errs = RowEval.reExplain(sch, xs)
+        assert(parsed.isDefined === ok, s"parse/validate disagree on $f at $xs")
+        assert(errs.isEmpty === ok, s"explain/validate disagree on $f at $xs: $errs")
+        parsed.foreach { t =>
+          assert(RowEval.reUnparse(sch, t) === xs,
+            s"unparse∘parse drift on $f at $xs (tree $t)")
+        }
+        errs.foreach { e =>
+          assert(e.key == SchemaIR.ErrorKeys.EndOfInput ||
+            e.key == SchemaIR.ErrorKeys.InputRemaining ||
+            e.in.head.toInt < xs.length, s"explain position out of range on $f at $xs: $e")
+        }
+        if (ok) valid += 1 else invalid += 1
+      }
+    }
+    // both verdicts are well represented
+    assert(valid > 500 && invalid > 500, s"valid $valid, invalid $invalid")
+  }
 }
