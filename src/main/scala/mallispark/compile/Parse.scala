@@ -69,7 +69,6 @@ object Parse {
       case SProps(p, a: SAnd) =>
         andTransformingIdx(a.children, p, reg)
           .map(i => parseType(a.children(i), dt)).getOrElse(dt)
-      case SProps(_, c) => parseType(c, dt)
       case SAnd(cs) =>
         andTransformingIdx(cs, NodeProps.empty, reg)
           .map(i => parseType(cs(i), dt)).getOrElse(dt)
@@ -113,13 +112,10 @@ object Parse {
           })
         case other => other
       }
-      case SRef(name) =>
-        if (ctx.depth <= 0) dt
-        else parseType(ctx.registry(name), dt)(ctx.copy(depth = ctx.depth - 1))
-      case SScoped(local, c, _) =>
-        parseType(c, dt)(ctx.copy(registry =
-          Registry(reg.schemas ++ local, reg.maxDepth)))
-      case _ => dt // untagged seq-regex at this tier parses element-identical
+      // a wrapper parses as the node it stands for; an untagged seq-regex
+      // at this tier parses element-identical
+      case w => SchemaCompiler.peel(w, ctx)
+        .fold(dt) { case (c, inner) => parseType(c, dt)(inner) }
     }
 
   private def arrayOf(c: SchemaIR, dt: DataType)(
@@ -223,7 +219,6 @@ object Parse {
       // :and — every child validates; the transforming child's parser
       // shapes the result (core.cljc:879-891)
       case SProps(p, a: SAnd) => parseAnd(a.children, p, col, dt)
-      case SProps(_, c) => parse(c, col, dt)
       case SAnd(cs) => parseAnd(cs, NodeProps.empty, col, dt)
 
       // containers parse elements in place (only reached when a child
@@ -269,20 +264,14 @@ object Parse {
         case _ => F.lit(null)
       }
 
-      case SRef(name) =>
-        if (ctx.depth <= 0)
-          F.when(SchemaCompiler.valid(ir, col, dt), col)
-            .otherwise(F.lit(null).cast(dt))
-        else parse(ctx.registry(name), col, dt)(ctx.copy(depth = ctx.depth - 1))
-      case SScoped(local, c, _) =>
-        parse(c, col, dt)(ctx.copy(registry =
-          Registry(reg.schemas ++ local, reg.maxDepth)))
-
-      // untagged seq-regex over a typed array: every element parse is the
-      // element itself at this tier → identity-on-valid
-      case _ =>
-        F.when(SchemaCompiler.valid(ir, col, dt), col)
+      // a wrapper parses as the node it stands for; an untagged seq-regex
+      // over a typed array: every element parse is the element itself at
+      // this tier → identity-on-valid
+      case w => SchemaCompiler.peel(w, ctx) match {
+        case Some((c, inner)) => parse(c, col, dt)(inner)
+        case None => F.when(SchemaCompiler.valid(ir, col, dt), col)
           .otherwise(F.lit(null).cast(dt))
+      }
     }
 
   private def parseAnd(children: Seq[SchemaIR], props: NodeProps,
@@ -374,7 +363,6 @@ object Parse {
       case SProps(p, a: SAnd) =>
         andTransformingIdx(a.children, p, reg)
           .map(i => unparse(a.children(i), parsed, dt)).getOrElse(parsed)
-      case SProps(_, c) => unparse(c, parsed, dt)
       case SAnd(cs) =>
         andTransformingIdx(cs, NodeProps.empty, reg)
           .map(i => unparse(cs(i), parsed, dt)).getOrElse(parsed)
@@ -410,13 +398,8 @@ object Parse {
                 unparse(v, e.getField("value"), vt).as("value")))))
         case _ => parsed
       }
-      case SRef(name) =>
-        if (ctx.depth <= 0) parsed
-        else unparse(ctx.registry(name), parsed, dt)(ctx.copy(depth = ctx.depth - 1))
-      case SScoped(local, c, _) =>
-        unparse(c, parsed, dt)(ctx.copy(registry =
-          Registry(reg.schemas ++ local, reg.maxDepth)))
-      case _ => parsed
+      case w => SchemaCompiler.peel(w, ctx)
+        .fold(parsed) { case (c, inner) => unparse(c, parsed, dt)(inner) }
     }
 
   private def unparseElems(c: SchemaIR, parsed: Column, dt: DataType)(

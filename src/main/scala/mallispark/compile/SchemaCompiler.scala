@@ -314,7 +314,7 @@ object SchemaCompiler {
     * registry for the child subtree (local wins — -property-registry);
     * props never change validation; `:merge`/`:union`/`:select-keys`
     * expand structurally (util.cljc:394-418). */
-  private def peel(ir: SchemaIR, ctx: Ctx): Option[(SchemaIR, Ctx)] =
+  private[compile] def peel(ir: SchemaIR, ctx: Ctx): Option[(SchemaIR, Ctx)] =
     ir match {
       case SRef(name) =>
         Some(if (ctx.depth <= 0) (SAny, ctx)

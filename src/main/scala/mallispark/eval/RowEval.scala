@@ -5,9 +5,8 @@ import mallispark.ir.SchemaIR._
 
 /** Row-at-a-time reference interpreter over plain Scala values.
   *
-  * This is the malli-shaped evaluator (closure-per-node, like
-  * /root/reference/src/malli/core.cljc `-validator`/`-explainer`) kept for
-  * three purposes only:
+  * This is the malli-shaped evaluator (closure-per-node, like malli's
+  * core.cljc `-validator`/`-explainer`) kept for three purposes only:
   *   1. duality tests — the Catalyst compilation and this interpreter must
   *      agree on every fixture (SURVEY §5.3);
   *   2. the general sequence-regex escape hatch (nested/backtracking forms
@@ -17,6 +16,32 @@ import mallispark.ir.SchemaIR._
   *
   * It is NOT the engine: production validation runs through
   * mallispark.compile.SchemaCompiler (whole-stage codegen).
+  *
+  * Each decision has one definition, which validate, explain, explain-data,
+  * parse and unparse all call:
+  *   - wrappers (`:ref` with its unroll budget, `:schema` scopes, props,
+  *     `:merge`/`:union`/`:select-keys`) reach their node by [[Peel]]; a
+  *     props or registry-prop scope around a regex op splices into its
+  *     sequence by [[Splice]] (nullability, [[acceptsNull]], mirrors the
+  *     compiler's twin instead: a budget-free `:ref`, and no present nil
+  *     under the merge family);
+  *   - every sequence-regex op by the one backtracking matcher
+  *     [[matchAt]]: validate, [[reExplain]] (with the deepest-failure
+  *     tracker) and unparse's re-check run it with `validate` at the
+  *     leaves, [[reParse]] with `parseValue`; [[reUnparse]] flattens a tree
+  *     through the same splices;
+  *   - `:multi` (keyword or expression dispatch) by [[dispatch]];
+  *   - any-of (`:or`/`:orn`, and `:alt`/`:altn` over one value) and all-of
+  *     (`:and`/`:andn`) through the [[AnyOf]]/[[AllOf]] views;
+  *   - the bounded collections (`:vector`/`:seqable`/`:set`/`:every`)
+  *     through the [[Coll]] view — nil as the empty seqable by
+  *     [[Bounded.nilVerdict]], the count bounds by [[within]], their
+  *     errors (and the bounded-form repetitions') by [[collExplain]];
+  *   - container parse and unparse by one child-wise [[walk]], which
+  *     takes the direction's function (parse checks the whole container
+  *     before the walk, unparse after it — [[wholeOk]]).
+  * A new wrapper node needs only a [[Peel]] case; a new regex op a
+  * [[matchAt]] case and its flattening in [[reUnparse]].
   */
 object RowEval {
 
@@ -165,10 +190,10 @@ object RowEval {
         case _: Throwable => false
       }
     case SMaybe(c) => v == null || validate(c, v)
-    case SAnd(cs) => cs.forall(validate(_, v))
-    case SOr(cs) => cs.exists(validate(_, v))
-    case SOrn(bs) => bs.exists(b => validate(b._2, v))
-    case SAndn(bs) => bs.forall(b => validate(b._2, v))
+    case AllOf(bs) => bs.forall(b => validate(b._2, v))
+    // a standalone :alt over a single value behaves like :or (bounded-form
+    // deviation, same as the Catalyst compilation — SURVEY §2.9)
+    case AnyOf(bs) => bs.exists(b => validate(b._2, v))
     case SNot(c) => !validate(c, v)
     case SMap(entries, closed, rest) => asMap(v) match {
       case None => false
@@ -196,78 +221,154 @@ object RowEval {
     }
     case SMapOf(k, vv, mn, mx) => v match {
       case m: scala.collection.Map[_, _] =>
-        mn.forall(m.size >= _) && mx.forall(m.size <= _) &&
+        within(m.size, mn, mx) &&
           m.forall { case (mk, mv) => validate(k, mk) && validate(vv, mv) }
       case _ => false
     }
-    case SVector(c, mn, mx) => asSeq(v).exists(xs =>
-      mn.forall(xs.size >= _) && mx.forall(xs.size <= _) &&
-        xs.forall(validate(c, _)))
-    // :seqable — nil is seqable and seqs empty (count 0)
-    case SSeqable(c, mn, mx) =>
-      if (v == null) mn.forall(_ <= 0)
-      else asSeq(v).exists(xs =>
-        mn.forall(xs.size >= _) && mx.forall(xs.size <= _) &&
-          xs.forall(validate(c, _)))
-    case SSet(c, mn, mx) => asSeq(v).exists(xs =>
-      mn.forall(xs.size >= _) && mx.forall(xs.size <= _) &&
-        xs.distinct.size == xs.size && xs.forall(validate(c, _)))
-    case SEvery(c, mn, mx, limit) =>
-      if (v == null) mn.forall(_ <= 0) // nil is a valid empty seqable
-      else asSeq(v).exists(xs =>
-        mn.forall(xs.size >= _) && mx.forall(xs.size <= _) &&
-          xs.take(everyLimit(mn, mx, limit)).forall(validate(c, _)))
+    case Coll(b) => b.nilVerdict(v).getOrElse(asSeq(v).exists(xs =>
+      within(xs.size, b.mn, b.mx) && b.distinctOk(xs) &&
+        b.checked(xs).forall(validate(b.elem, _))))
     case STuple(cs) => asTupleSeq(v).exists(xs =>
       xs.size == cs.size && cs.zip(xs).forall { case (c, x) => validate(c, x) })
-    case SMulti(dk, bs, default) => asMap(v) match {
-      case None => false
-      case Some(m) =>
-        // a present-but-null dispatch value routes to the DEFAULT branch
-        // like the compiled twin (dv === lit(tag) is null there) — never
-        // to a branch literally tagged "null"
-        val dv = m.get(dk).flatMap(Option(_)).map(String.valueOf).orNull
-        bs.find(_._1 == dv) match {
-          case Some((_, c)) => validate(c, v)
-          case None => default.exists(validate(_, v))
-        }
-    }
-    case SMultiExpr(_, _, dispRow, bs, default) =>
-      if (v == null) false
-      else {
-        val dv = try dispRow(v) catch { case _: Throwable => null }
-        bs.find(_._1 == dv) match {
-          case Some((_, c)) => validate(c, v)
-          case None => default.exists(validate(_, v))
-        }
+    case m @ (_: SMulti | _: SMultiExpr) =>
+      dispatch(m, v).exists(_.exists { case (_, c) => validate(c, v) })
+    case re @ (_: SCat | _: SCatn | _: SStar | _: SPlus | _: SOpt |
+               _: SRepeat) => asSeq(v).exists(matches(re, _))
+    case w => Peel.unapply(w).exists { case (c, r, d) => validate(c, v)(r, d) }
+  }
+
+  /** The wrapper peel: the node a validation-transparent wrapper stands
+    * for, with the registry and `:ref` budget it evaluates under; None
+    * for every other node. A `:ref` derefs through the registry, spending
+    * one unit of the unroll budget — with the budget spent it stands for
+    * `:any`; a `:schema` scope layers its local names over the registry
+    * (local wins — -property-registry); props never change validation;
+    * `:merge`/`:union`/`:select-keys` expand structurally
+    * (util.cljc:394-418). */
+  private object Peel {
+    def unapply(ir: SchemaIR)(implicit reg: Registry,
+                              depth: Int): Option[(SchemaIR, Registry, Int)] =
+      ir match {
+        case SRef(name) => Some(
+          if (depth <= 0) (SAny, reg, depth) else (reg(name), reg, depth - 1))
+        case SScoped(local, c, _) =>
+          Some((c, Registry(reg.schemas ++ local, reg.maxDepth), depth))
+        case SProps(_, c) => Some((c, reg, depth))
+        case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
+          Some((mallispark.ir.SchemaOps.expand(alg, reg), reg, depth))
+        case _ => None
       }
-    case SRef(name) =>
-      if (depth <= 0) true
-      else validate(reg(name), v)(reg, depth - 1)
-    case SScoped(local, c, _) =>
-      validate(c, v)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
-    case SProps(_, c) => validate(c, v)
-    case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
-      validate(mallispark.ir.SchemaOps.expand(alg, reg), v)
-    // standalone :alt over a single value behaves like :or (bounded-form
-    // deviation, same as the Catalyst compilation — SURVEY §2.9)
-    case SAlt(cs) => cs.exists(validate(_, v))
-    case SAltn(es) => es.exists(e => validate(e._2, v))
-    case r @ (_: SCat | _: SCatn | _: SStar | _: SPlus | _: SOpt |
-              _: SRepeat) =>
-      asSeq(v).exists(xs => reMatch(r, xs, 0).contains(xs.length))
+  }
+
+  /** Props or a registry-prop scope around a regex op never break its
+    * splice into the enclosing sequence: the op, under the scope's
+    * registry (an explicit `[:schema ..]` stays one element). */
+  private object Splice {
+    def unapply(ir: SchemaIR)(implicit reg: Registry,
+                              depth: Int): Option[(SchemaIR, Registry, Int)] =
+      ir match {
+        case _: SProps | _: SScoped if SchemaIR.isRegexOp(ir) => Peel.unapply(ir)
+        case _ => None
+      }
+  }
+
+  private def indexed(cs: Seq[SchemaIR]): Seq[(String, SchemaIR)] =
+    cs.zipWithIndex.map { case (c, i) => (i.toString, c) }
+
+  /** `:and`/`:andn` as (path segment, branch): every branch must hold. */
+  private object AllOf {
+    def unapply(ir: SchemaIR): Option[Seq[(String, SchemaIR)]] = ir match {
+      case SAnd(cs) => Some(indexed(cs))
+      case SAndn(bs) => Some(bs)
+      case _ => None
+    }
+  }
+
+  /** `:or`/`:orn`, and `:alt`/`:altn` over one value, as (path segment,
+    * branch): one branch must hold. */
+  private object AnyOf {
+    def unapply(ir: SchemaIR): Option[Seq[(String, SchemaIR)]] = ir match {
+      case SOr(cs) => Some(indexed(cs))
+      case SOrn(bs) => Some(bs)
+      case SAlt(cs) => Some(indexed(cs))
+      case SAltn(es) => Some(es)
+      case _ => None
+    }
+  }
+
+  /** `:multi` dispatch, keyword or expression: None when the value cannot
+    * dispatch (::invalid-type), Left(dispatch value) when neither a branch
+    * nor a default takes it, else Right((tag, branch)) — the default
+    * branch under the `malli.core/default` tag. A present-but-null
+    * dispatch value routes to the DEFAULT like the compiled twin
+    * (dv === lit(tag) is null there), never to a branch literally tagged
+    * "null". */
+  private def dispatch(ir: SchemaIR,
+                       v: Any): Option[Either[String, (String, SchemaIR)]] = {
+    val (dv, bs, default) = (ir: @unchecked) match {
+      case SMulti(dk, bs, d) => (asMap(v).map(
+        _.get(dk).flatMap(Option(_)).map(String.valueOf).orNull), bs, d)
+      case SMultiExpr(_, _, dispRow, bs, d) => (Option(v).map(x =>
+        try dispRow(x) catch { case _: Throwable => null }), bs, d)
+    }
+    dv.map(d => bs.find(_._1 == d)
+      .orElse(default.map("malli.core/default" -> _)).toRight(d))
+  }
+
+  /** `mn <= n <= mx` for the bounds that are set. */
+  private def within(n: Int, mn: Option[Int], mx: Option[Int]): Boolean =
+    mn.forall(n >= _) && mx.forall(n <= _)
+
+  /** A bounded collection: element schema, count bounds, nil as the empty
+    * collection (`:seqable`, `:every`), distinct elements (`:set`) and the
+    * window of elements checked (`:every`). */
+  private final case class Bounded(elem: SchemaIR, mn: Option[Int],
+                                   mx: Option[Int], nilEmpty: Boolean = false,
+                                   distinct: Boolean = false,
+                                   window: Option[Int] = None) {
+    /** nil is a seqable VALUE that seqs empty (count 0): Some(verdict) for
+      * a nil this collection takes as empty — only a :min bound rejects
+      * it. */
+    def nilVerdict(v: Any): Option[Boolean] =
+      if (v == null && nilEmpty) Some(within(0, mn, None)) else None
+    def distinctOk(xs: Seq[Any]): Boolean =
+      !distinct || xs.distinct.size == xs.size
+    def checked(xs: Seq[Any]): Seq[Any] = window.fold(xs)(xs.take)
+  }
+
+  /** The bounded collections as [[Bounded]]. */
+  private object Coll {
+    def unapply(ir: SchemaIR): Option[Bounded] = ir match {
+      case SVector(c, mn, mx) => Some(Bounded(c, mn, mx))
+      case SSeqable(c, mn, mx) => Some(Bounded(c, mn, mx, nilEmpty = true))
+      case SSet(c, mn, mx) => Some(Bounded(c, mn, mx, distinct = true))
+      case SEvery(c, mn, mx, limit) => Some(Bounded(c, mn, mx,
+        nilEmpty = true, window = Some(everyLimit(mn, mx, limit))))
+      case _ => None
+    }
+  }
+
+  /** The repetition ops as [[Bounded]]: `:*` unbounded, `:+` at least
+    * one, `:?` at most one, `:repeat` its own bounds. */
+  private object Rep {
+    def unapply(ir: SchemaIR): Option[Bounded] = ir match {
+      case SStar(c) => Some(Bounded(c, None, None))
+      case SPlus(c) => Some(Bounded(c, Some(1), None))
+      case SOpt(c) => Some(Bounded(c, None, Some(1)))
+      case SRepeat(c, mn, mx) => Some(Bounded(c, Some(mn), Some(mx)))
+      case _ => None
+    }
   }
 
   /** Deepest-failure tracker for the regex EXPLAINER (the analogue of the
     * reference's per-position error attribution, impl/regex.cljc:585-628):
     * across all backtracking attempts, remember the furthest input
     * position where a leaf check failed, and which leaf (with its schema
-    * path) failed there. */
+    * path and the registry it was matched under) failed there. */
   private final class DeepestFail {
     var pos: Int = -1
     var leaf: SchemaIR = _
     var path: Vector[String] = Vector.empty
-    // the registry the leaf was matched under (a scope inside the regex
-    // binds names the leaf may reference)
     var reg: Registry = _
     def record(i: Int, s: SchemaIR, p: Vector[String], r: Registry): Unit =
       if (i > pos) { pos = i; leaf = s; path = p; reg = r }
@@ -287,7 +388,8 @@ object RowEval {
     case None => Vector(Err(path, in, ErrorKeys.InvalidType, v))
     case Some(xs) =>
       val df = new DeepestFail
-      val ends = reMatchT(ir, xs, 0, Vector.empty, df).toList
+      val ends = matchAt(ir, xs, 0, Vector.empty, parse = false, Some(df))
+        .map(_._2).toList
       val maxEnd = if (ends.isEmpty) -1 else ends.max
       if (ends.contains(xs.length)) Vector.empty
       else if (df.pos >= xs.length)
@@ -303,61 +405,6 @@ object RowEval {
       else Vector(Err(path, in, ErrorKeys.EndOfInput, xs.length))
   }
 
-  /** reMatch with schema-path + deepest-failure tracking. */
-  private def reMatchT(ir: SchemaIR, xs: Seq[Any], i: Int,
-                       path: Vector[String], df: DeepestFail)(
-      implicit reg: Registry, depth: Int): LazyList[Int] = ir match {
-    // props never break a regex op's SPLICE (path stays prop-transparent)
-    case SProps(_, c) if SchemaIR.isRegexOp(c) => reMatchT(c, xs, i, path, df)
-    // registry-prop scope: extend the registry, keep splicing
-    case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      reMatchT(c, xs, i, path, df)(
-        Registry(reg.schemas ++ local, reg.maxDepth), depth)
-    case SCat(cs) =>
-      cs.zipWithIndex.foldLeft(LazyList(i)) { case (ps, (c, idx)) =>
-        ps.flatMap(p => reMatchT(c, xs, p, path :+ idx.toString, df))
-      }
-    case SCatn(es) =>
-      es.foldLeft(LazyList(i)) { case (ps, (tag, c)) =>
-        ps.flatMap(p => reMatchT(c, xs, p, path :+ tag, df))
-      }
-    case SAlt(cs) => cs.zipWithIndex.to(LazyList).flatMap { case (c, idx) =>
-      reMatchT(c, xs, i, path :+ idx.toString, df)
-    }
-    case SAltn(es) => es.to(LazyList).flatMap { case (tag, c) =>
-      reMatchT(c, xs, i, path :+ tag, df)
-    }
-    case SStar(c) =>
-      i #:: reMatchT(c, xs, i, path :+ "0", df).filter(_ > i)
-        .flatMap(p => reMatchT(SStar(c), xs, p, path, df))
-    case SPlus(c) =>
-      // the SStar continuation appends its own "/0" per element — passing
-      // `path` unmodified here (like the SStar case) keeps 2nd+ iteration
-      // failures from reporting a duplicated "/0" segment
-      reMatchT(c, xs, i, path :+ "0", df)
-        .flatMap(p => reMatchT(SStar(c), xs, p, path, df))
-    case SOpt(c) => i #:: reMatchT(c, xs, i, path :+ "0", df)
-    case SRepeat(c, mn, mx) =>
-      // reference repeat phases: epsilon iterations COUNT toward :min
-      // (no progress requirement in compulsories); optionals need
-      // remaining input + progress (impl/regex.cljc:348-420)
-      def optionals(pos: Int, n: Int): LazyList[Int] = {
-        val more =
-          if (n >= mx || pos >= xs.length) LazyList.empty
-          else reMatchT(c, xs, pos, path :+ "0", df).filter(_ > pos)
-            .flatMap(p => optionals(p, n + 1))
-        pos #:: more
-      }
-      def compulsories(pos: Int, n: Int): LazyList[Int] =
-        if (n >= mn) optionals(pos, n)
-        else reMatchT(c, xs, pos, path :+ "0", df)
-          .flatMap(p => compulsories(p, n + 1))
-      compulsories(i, 0)
-    case plain =>
-      if (i < xs.length && validate(plain, xs(i))) LazyList(i + 1)
-      else { df.record(i, plain, path, reg); LazyList.empty }
-  }
-
   /** General sequence-regex PARSER (impl/regex.cljc:630-648 semantics):
     * the first full backtracking match builds the parse tree —
     * `:cat` → Vector of child parses, `:catn` → RTags(tag → parse),
@@ -367,74 +414,97 @@ object RowEval {
   def reParse(ir: SchemaIR, v: Any)(
       implicit reg: Registry = Registry.empty,
       depth: Int = 8): Option[Any] =
-    asSeq(v).flatMap(xs =>
-      parseAt(ir, xs, 0).collectFirst { case (t, e) if e == xs.length => t })
+    asSeq(v).flatMap(xs => matchAt(ir, xs, 0, Vector.empty, parse = true, None)
+      .collectFirst { case (t, e) if e == xs.length => t })
 
-  private def parseAt(ir: SchemaIR, xs: Seq[Any], i: Int)(
-      implicit reg: Registry, depth: Int): LazyList[(Any, Int)] = ir match {
-    case SProps(_, c) if SchemaIR.isRegexOp(c) => parseAt(c, xs, i)
-    case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      parseAt(c, xs, i)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
-    case SCat(cs) =>
-      cs.foldLeft(LazyList((Vector.empty[Any]: Any, i))) { (ps, c) =>
-        ps.flatMap { case (acc, p) => parseAt(c, xs, p).map { case (t, p2) =>
-          (acc.asInstanceOf[Vector[Any]] :+ t, p2) } }
+  /** Does the sequence-regex `ir` match all of `xs`? */
+  private def matches(ir: SchemaIR, xs: Seq[Any])(
+      implicit reg: Registry, depth: Int): Boolean =
+    matchAt(ir, xs, 0, Vector.empty, parse = false, None)
+      .exists(_._2 == xs.length)
+
+  /** The backtracking sequence-regex matcher (semantics of impl/regex.cljc;
+    * the reference uses CPS+packrat — row-local inputs here are small, so
+    * plain lazy backtracking suffices): every (parse tree, end position)
+    * at which `ir` matches `xs` from `i`.
+    *  - `parse` picks the leaf step and the order of a repetition's two
+    *    ways on. Parsing runs `parseValue` on each element (parsers
+    *    COMPOSE: a transforming leaf, e.g. an :orn inside a :cat, parses
+    *    to its own tree) and tries one more item BEFORE stopping — the
+    *    reference's ?- and *-parsers try the item parser first and park
+    *    epsilon as the fallback (impl/regex.cljc:278-321), so the first
+    *    full match IS the reference parse tree for ambiguous schemas like
+    *    [:cat [:* :int] [:* :int]]. Matching runs `validate` (an element
+    *    is its own tree) and tries stopping first: validate and unparse
+    *    only ask whether some match ends at the input's end, and the
+    *    explainer's deepest failure takes the first leaf that failed at
+    *    the deepest position, so this order fixes the leaf it names.
+    *  - `df`, when given, records the deepest failing leaf; `path` is that
+    *    leaf's schema path, kept only then. */
+  private def matchAt(ir: SchemaIR, xs: Seq[Any], i: Int,
+                      path: Vector[String], parse: Boolean,
+                      df: Option[DeepestFail])(
+      implicit reg: Registry, depth: Int): LazyList[(Any, Int)] = {
+    def sub(c: SchemaIR, at: Int, seg: String): LazyList[(Any, Int)] =
+      matchAt(c, xs, at, if (df.isDefined) path :+ seg else path, parse, df)
+    def either(more: => LazyList[(Any, Int)],
+               stop: (Any, Int)): LazyList[(Any, Int)] =
+      if (parse) more #::: LazyList(stop) else stop #:: more
+    def cat(es: Seq[(String, SchemaIR)]): LazyList[(Vector[Any], Int)] =
+      es.foldLeft(LazyList((Vector.empty[Any], i))) { case (ps, (seg, c)) =>
+        ps.flatMap { case (ts, p) =>
+          sub(c, p, seg).map { case (t, e) => (ts :+ t, e) } }
       }
-    case SCatn(es) =>
-      es.foldLeft(LazyList((Map.empty[String, Any]: Any, i))) {
-        case (ps, (tag, c)) =>
-          ps.flatMap { case (acc, p) => parseAt(c, xs, p).map { case (t, p2) =>
-            (acc.asInstanceOf[Map[String, Any]] + (tag -> t), p2) } }
-      }.map { case (acc, p) =>
-        (RTags(acc.asInstanceOf[Map[String, Any]]): Any, p) }
-    case SAlt(cs) => cs.to(LazyList).flatMap(parseAt(_, xs, i))
-    case SAltn(es) => es.to(LazyList).flatMap { case (tag, c) =>
-      parseAt(c, xs, i).map { case (t, p) => (RTag(tag, t): Any, p) }
+    // the `:*` after one item; it matches its own items at `path` + "0",
+    // so a `:+`'s 2nd+ iteration failures report no duplicated "0"
+    def star(c: SchemaIR)(item: (Any, Int)): LazyList[(Any, Int)] =
+      matchAt(SStar(c), xs, item._2, path, parse, df).map { case (ts, e) =>
+        (item._1 +: ts.asInstanceOf[Vector[Any]], e) }
+    ir match {
+      case Splice(c, r, d) => matchAt(c, xs, i, path, parse, df)(r, d)
+      case SCat(cs) => cat(indexed(cs))
+      case SCatn(es) =>
+        cat(es).map { case (ts, e) => (RTags(es.map(_._1).zip(ts).toMap), e) }
+      case SAlt(cs) =>
+        indexed(cs).to(LazyList).flatMap { case (seg, c) => sub(c, i, seg) }
+      case SAltn(es) => es.to(LazyList).flatMap { case (tag, c) =>
+        sub(c, i, tag).map { case (t, e) => (RTag(tag, t), e) }
+      }
+      case SStar(c) =>
+        either(sub(c, i, "0").filter(_._2 > i).flatMap(star(c)),
+          (Vector.empty, i))
+      case SPlus(c) => sub(c, i, "0").flatMap(star(c))
+      case SOpt(c) => either(sub(c, i, "0"), (null, i))
+      case SRepeat(c, mn, mx) =>
+        // reference repeat phases (impl/regex.cljc:348-420): compulsories
+        // run the child WITHOUT a progress requirement (an epsilon match
+        // still counts an iteration — [:repeat {:min 2} [:? :int]]
+        // accepts []); optionals require remaining input AND progress
+        // ("child consumes no elements → bail")
+        def optionals(pos: Int, n: Int,
+                      ts: Vector[Any]): LazyList[(Any, Int)] = {
+          val more =
+            if (n >= mx || pos >= xs.length) LazyList.empty
+            else sub(c, pos, "0").filter(_._2 > pos)
+              .flatMap { case (t, e) => optionals(e, n + 1, ts :+ t) }
+          either(more, (ts, pos))
+        }
+        def compulsories(pos: Int, n: Int,
+                         ts: Vector[Any]): LazyList[(Any, Int)] =
+          if (n >= mn) optionals(pos, n, ts)
+          else sub(c, pos, "0")
+            .flatMap { case (t, e) => compulsories(e, n + 1, ts :+ t) }
+        compulsories(i, 0, Vector.empty)
+      case leaf =>
+        val tree =
+          if (i >= xs.length) None
+          else if (parse) parseValue(leaf, xs(i))
+          else Some(xs(i)).filter(validate(leaf, _))
+        tree match {
+          case Some(t) => LazyList((t, i + 1))
+          case None => df.foreach(_.record(i, leaf, path, reg)); LazyList.empty
+        }
     }
-    // GREEDY ordering throughout (the reference's ?- and *-parsers try
-    // the item parser FIRST and park epsilon as the fallback,
-    // impl/regex.cljc:278-321) — the first full match IS the reference
-    // parse tree for ambiguous schemas like [:cat [:* :int] [:* :int]]
-    case SStar(c) =>
-      parseAt(c, xs, i).filter(_._2 > i)
-        .flatMap { case (t, p) => parseAt(SStar(c), xs, p).map { case (ts, p2) =>
-          ((t +: ts.asInstanceOf[Vector[Any]]): Any, p2) } } #:::
-        LazyList((Vector.empty[Any]: Any, i))
-    case SPlus(c) =>
-      parseAt(c, xs, i).flatMap { case (t, p) =>
-        parseAt(SStar(c), xs, p).map { case (ts, p2) =>
-          ((t +: ts.asInstanceOf[Vector[Any]]): Any, p2) } }
-    case SOpt(c) =>
-      parseAt(c, xs, i) #::: LazyList((null: Any, i))
-    case SRepeat(c, mn, mx) =>
-      // reference repeat phases (impl/regex.cljc:348-420): compulsories
-      // run the child WITHOUT a progress requirement (an epsilon match
-      // still counts an iteration — [:repeat {:min 2} [:? :int]] accepts
-      // []); optionals require remaining input AND progress ("child
-      // consumes no elements → bail"), child-first = greedy
-      def optionals(pos: Int, cnt: Int,
-                    acc: Vector[Any]): LazyList[(Any, Int)] = {
-        val more =
-          if (cnt >= mx || pos >= xs.length) LazyList.empty
-          else parseAt(c, xs, pos).filter(_._2 > pos)
-            .flatMap { case (t, p) => optionals(p, cnt + 1, acc :+ t) }
-        more #::: LazyList((acc: Any, pos))
-      }
-      def compulsories(pos: Int, cnt: Int,
-                       acc: Vector[Any]): LazyList[(Any, Int)] =
-        if (cnt >= mn) optionals(pos, cnt, acc)
-        else parseAt(c, xs, pos)
-          .flatMap { case (t, p) => compulsories(p, cnt + 1, acc :+ t) }
-      compulsories(i, 0, Vector.empty)
-    case plain =>
-      // parsers COMPOSE (reference -parser chains): a transforming plain
-      // element (e.g. an :orn inside a :cat) parses to its own tree; a
-      // simple one parses to itself, keeping the old behavior
-      if (i < xs.length) parseValue(plain, xs(i)) match {
-        case Some(t) => LazyList((t, i + 1))
-        case None => LazyList.empty
-      }
-      else LazyList.empty
   }
 
   /** m/parse over the VALUE universe (core.cljc 2684-2714): the
@@ -464,76 +534,17 @@ object RowEval {
         // reduce) — children may transform (an :orn branch tags), so this
         // is not the validate-identity fast path
         cs.iterator.flatMap(c => parseValue(c, v)).nextOption()
-      case SMulti(dk, bs, default) => asMap(v).flatMap { m =>
-        val dv = m.get(dk).flatMap(Option(_)).map(String.valueOf).orNull
-        bs.find(_._1 == dv) match {
-          case Some((tag, c)) => parseValue(c, v).map(RTag(tag, _))
-          case None => default.flatMap(d =>
-            parseValue(d, v).map(RTag("malli.core/default", _)))
-        }
-      }
-      case SMultiExpr(_, _, dispRow, bs, default) =>
-        if (v == null) None
-        else {
-          val dv = try dispRow(v) catch { case _: Throwable => null }
-          bs.find(_._1 == dv) match {
-            case Some((tag, c)) => parseValue(c, v).map(RTag(tag, _))
-            case None => default.flatMap(d =>
-              parseValue(d, v).map(RTag("malli.core/default", _)))
-          }
-        }
+      case m @ (_: SMulti | _: SMultiExpr) =>
+        dispatch(m, v).flatMap(_.toOption).flatMap { case (tag, c) =>
+          parseValue(c, v).map(RTag(tag, _)) }
       case SProps(p, a: SAnd) => parseAndValue(a.children, p, v)
-      case SProps(_, c) => parseValue(c, v)
       case SAnd(cs) => parseAndValue(cs, NodeProps.empty, v)
       case SMaybe(c) => if (v == null) Some(null) else parseValue(c, v)
-      case SVector(c, mn, mx) => asSeq(v).filter(xs =>
-          mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-        .flatMap(parseEach(c, _))
-      case SSeqable(c, mn, mx) =>
-        if (v == null) { if (mn.forall(_ <= 0)) Some(null) else None }
-        else asSeq(v).filter(xs =>
-            mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-          .flatMap(parseEach(c, _))
-      case SSet(c, mn, mx) => asSeq(v).filter(xs =>
-          mn.forall(xs.size >= _) && mx.forall(xs.size <= _) &&
-            xs.distinct.size == xs.size)
-        .flatMap(parseEach(c, _))
-      case STuple(cs) => asTupleSeq(v).filter(_.size == cs.size)
-        .flatMap { xs =>
-          val ts = cs.zip(xs).map { case (c, x) => parseValue(c, x) }
-          if (ts.forall(_.isDefined)) Some(ts.flatten) else None
-        }
-      case SMap(entries, _, _) =>
-        if (!validate(ir, v)) None
-        else asMap(v).flatMap { m =>
-          entries.foldLeft(Option(m)) { (acc, e) =>
-            acc.flatMap { mm =>
-              mm.get(e.key) match {
-                case None | Some(null) => Some(mm) // optional/null-valid
-                case Some(x) => parseValue(e.child, x)
-                  .map(t => mm + (e.key -> t))
-              }
-            }
-          }
-        }
-      case SMapOf(k, vv, mn, mx) => v match {
-        case m: scala.collection.Map[_, _]
-            if mn.forall(m.size >= _) && mx.forall(m.size <= _) =>
-          m.foldLeft(Option(Map.empty[Any, Any])) { case (acc, (mk, mv)) =>
-            acc.flatMap(out => for {
-              pk <- parseValue(k, mk)
-              pv <- parseValue(vv, mv)
-            } yield out + (pk -> pv))
-          }
-        case _ => None
-      }
+      case c @ (Coll(_) | _: STuple | _: SMap | _: SMapOf) =>
+        Some(v).filter(wholeOk(c, _)).flatMap(walk(c, _, parseValue(_, _)))
       case _: SCat | _: SCatn | _: SAlt | _: SAltn |
            _: SStar | _: SPlus | _: SOpt | _: SRepeat => reParse(ir, v)
-      case SRef(name) =>
-        if (depth <= 0) { if (validate(ir, v)) Some(v) else None }
-        else parseValue(reg(name), v)(reg, depth - 1)
-      case SScoped(local, c, _) =>
-        parseValue(c, v)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+      case Peel(c, r, d) => parseValue(c, v)(r, d)
       case other => if (validate(other, v)) Some(v) else None
     }
 
@@ -546,10 +557,54 @@ object RowEval {
       case Some(i) => parseValue(children(i), v)
     }
 
-  private def parseEach(c: SchemaIR, xs: Seq[Any])(
-      implicit reg: Registry, depth: Int): Option[Seq[Any]] = {
-    val ts = xs.map(parseValue(c, _))
-    if (ts.forall(_.isDefined)) Some(ts.flatten) else None
+  /** Container parse and unparse, child-wise: `f` (the direction's
+    * function) takes each child value to its image, keeping the
+    * container's shape. None when `v` is not that container, breaks its
+    * count bounds, or a child fails. */
+  private def walk(ir: SchemaIR, v: Any,
+                   f: (SchemaIR, Any) => Option[Any]): Option[Any] = {
+    def all(ts: Seq[Option[Any]]): Option[Seq[Any]] =
+      if (ts.forall(_.isDefined)) Some(ts.flatten) else None
+    ir match {
+      case Coll(b) => b.nilVerdict(v) match {
+        case Some(ok) => if (ok) Some(null) else None
+        case None => asSeq(v).filter(xs => within(xs.size, b.mn, b.mx))
+          .flatMap(xs => all(xs.map(f(b.elem, _))))
+      }
+      case STuple(cs) => asTupleSeq(v).filter(_.size == cs.size)
+        .flatMap(xs => all(cs.zip(xs).map(f.tupled)))
+      case SMap(entries, _, _) => asMap(v).flatMap { m =>
+        entries.foldLeft(Option(m)) { (acc, e) =>
+          acc.flatMap { mm =>
+            mm.get(e.key) match {
+              case None | Some(null) => Some(mm) // optional/null-valid
+              case Some(x) => f(e.child, x).map(t => mm + (e.key -> t))
+            }
+          }
+        }
+      }
+      case SMapOf(k, vv, mn, mx) => v match {
+        case m: scala.collection.Map[_, _] if within(m.size, mn, mx) =>
+          m.foldLeft(Option(Map.empty[Any, Any])) { case (acc, (mk, mv)) =>
+            acc.flatMap(out => for {
+              fk <- f(k, mk)
+              fv <- f(vv, mv)
+            } yield out + (fk -> fv))
+          }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** The check a container makes on itself beyond its count bounds and
+    * children — a `:set`'s distinct elements, a `:map`'s whole-map rules
+    * — on the input when parsing, on the output when unparsing. */
+  private def wholeOk(ir: SchemaIR, v: Any)(
+      implicit reg: Registry, depth: Int): Boolean = ir match {
+    case Coll(b) if b.distinct => asSeq(v).exists(b.distinctOk)
+    case _: SMap => validate(ir, v)
+    case _ => true
   }
 
   /** `m/old-parse-format` (core.cljc:185-196): rewrite a parse tree to
@@ -604,86 +659,26 @@ object RowEval {
       case SOr(cs) =>
         // first child whose UNPARSER succeeds (same ->parser reduce as
         // parse); a tree shaped by a different branch fails cleanly
-        cs.iterator.flatMap { c =>
-          try unparseValue(c, tree)
-          catch { case _: ClassCastException | _: MatchError => None }
-        }.nextOption()
-      case SMulti(_, bs, default) => tree match {
-        case RTag("malli.core/default", t) =>
-          default.flatMap(unparseValue(_, t))
-        case RTag(tag, t) =>
-          bs.find(_._1 == tag).flatMap { case (_, c) => unparseValue(c, t) }
-        case _ => None
-      }
-      case SMultiExpr(_, _, _, bs, default) => tree match {
-        case RTag("malli.core/default", t) =>
-          default.flatMap(unparseValue(_, t))
-        case RTag(tag, t) =>
-          bs.find(_._1 == tag).flatMap { case (_, c) => unparseValue(c, t) }
+        cs.iterator.flatMap(c => misfit(unparseValue(c, tree))).nextOption()
+      // the tag names the branch (the default's is malli.core/default)
+      case m @ (_: SMulti | _: SMultiExpr) => tree match {
+        case RTag(tag, t) => SchemaIR.childrenWithPath(m).find(_._1 == tag)
+          .flatMap { case (_, c) => unparseValue(c, t) }
         case _ => None
       }
       case SProps(p, a: SAnd) => unparseAndValue(a.children, p, tree)
-      case SProps(_, c) => unparseValue(c, tree)
       case SAnd(cs) => unparseAndValue(cs, NodeProps.empty, tree)
       case SMaybe(c) =>
         if (tree == null) Some(null) else unparseValue(c, tree)
-      case SVector(c, mn, mx) => asSeq(tree).filter(xs =>
-          mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-        .flatMap(unparseEach(c, _))
-      case SSeqable(c, mn, mx) =>
-        if (tree == null) { if (mn.forall(_ <= 0)) Some(null) else None }
-        else asSeq(tree).filter(xs =>
-            mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-          .flatMap(unparseEach(c, _))
-      case SSet(c, mn, mx) => asSeq(tree).filter(xs =>
-          mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-        .flatMap(unparseEach(c, _))
-        .filter(xs => xs.distinct.size == xs.size)
-      case STuple(cs) => asTupleSeq(tree).filter(_.size == cs.size)
-        .flatMap { xs =>
-          val ts = cs.zip(xs).map { case (c, x) => unparseValue(c, x) }
-          if (ts.forall(_.isDefined)) Some(ts.flatten) else None
-        }
-      case SMap(entries, _, _) => asMap(tree).flatMap { m =>
-        entries.foldLeft(Option(m)) { (acc, e) =>
-          acc.flatMap { mm =>
-            mm.get(e.key) match {
-              case None | Some(null) => Some(mm)
-              case Some(x) => unparseValue(e.child, x)
-                .map(t => mm + (e.key -> t))
-            }
-          }
-        }.filter(validate(ir, _))
-      }
-      case SMapOf(k, vv, mn, mx) => tree match {
-        case m: scala.collection.Map[_, _]
-            if mn.forall(m.size >= _) && mx.forall(m.size <= _) =>
-          m.foldLeft(Option(Map.empty[Any, Any])) { case (acc, (mk, mv)) =>
-            acc.flatMap(out => for {
-              uk <- unparseValue(k, mk)
-              uv <- unparseValue(vv, mv)
-            } yield out + (uk -> uv))
-          }
-        case _ => None
-      }
+      case c @ (Coll(_) | _: STuple | _: SMap | _: SMapOf) =>
+        walk(c, tree, unparseValue(_, _)).filter(wholeOk(c, _))
       case _: SCat | _: SCatn | _: SAlt | _: SAltn |
            _: SStar | _: SPlus | _: SOpt | _: SRepeat =>
         // flatten, then the regex must accept its own output; a tree of
         // the wrong shape (e.g. a plain value fed to :cat) is ::m/invalid,
         // not a crash
-        try {
-          val out = reUnparse(ir, tree)
-          if (reMatch(ir, out, 0).contains(out.length)) Some(out) else None
-        } catch {
-          case _: ClassCastException | _: MatchError |
-               _: NoSuchElementException => None
-        }
-      case SRef(name) =>
-        if (depth <= 0) { if (validate(ir, tree)) Some(tree) else None }
-        else unparseValue(reg(name), tree)(reg, depth - 1)
-      case SScoped(local, c, _) =>
-        unparseValue(c, tree)(
-          Registry(reg.schemas ++ local, reg.maxDepth), depth)
+        misfit(Some(reUnparse(ir, tree)).filter(matches(ir, _)))
+      case Peel(c, r, d) => unparseValue(c, tree)(r, d)
       case other => if (validate(other, tree)) Some(tree) else None
     }
 
@@ -702,11 +697,13 @@ object RowEval {
             .forall(j => validate(children(j), x)))
     }
 
-  private def unparseEach(c: SchemaIR, xs: Seq[Any])(
-      implicit reg: Registry, depth: Int): Option[Seq[Any]] = {
-    val ts = xs.map(unparseValue(c, _))
-    if (ts.forall(_.isDefined)) Some(ts.flatten) else None
-  }
+  /** A tree shaped by a different branch fails that branch's unparse
+    * with one of these — ::m/invalid for that branch, not a crash. */
+  private def misfit[A](unparse: => Option[A]): Option[A] =
+    try unparse catch {
+      case _: ClassCastException | _: MatchError |
+           _: NoSuchElementException => None
+    }
 
   /** Inverse of `reParse` (impl/regex.cljc unparser): flattens the parse
     * tree back to the element sequence. `:alt` branches of PLAIN schemas
@@ -718,9 +715,7 @@ object RowEval {
   def reUnparse(ir: SchemaIR, tree: Any)(
       implicit reg: Registry = Registry.empty,
       depth: Int = 8): Seq[Any] = ir match {
-    case SProps(_, c) if SchemaIR.isRegexOp(c) => reUnparse(c, tree)
-    case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      reUnparse(c, tree)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+    case Splice(c, r, d) => reUnparse(c, tree)(r, d)
     case SCat(cs) =>
       cs.zip(seqTree(tree, cs.size)).flatMap { case (c, t) => reUnparse(c, t) }
     case SCatn(es) =>
@@ -728,25 +723,15 @@ object RowEval {
       // core.cljc:3015) — a plain map is a different value universe
       val m = tree match { case RTags(values) => values }
       es.flatMap { case (tag, c) => reUnparse(c, m(tag)) }
-    case SStar(c) => seqTree(tree).flatMap(reUnparse(c, _))
-    case SPlus(c) => seqTree(tree).flatMap(reUnparse(c, _))
-    case SRepeat(c, _, _) => seqTree(tree).flatMap(reUnparse(c, _))
     case SOpt(c) => if (tree == null) Seq.empty else reUnparse(c, tree)
+    case Rep(b) => seqTree(tree).flatMap(reUnparse(b.elem, _))
     case SAlt(cs) =>
-      def attempt(c: SchemaIR): Option[Seq[Any]] =
-        try {
-          if (spliced(c)) {
-            val out = reUnparse(c, tree)
-            // the branch must ACCEPT what it produced — a tree from a
-            // different branch typically survives the cast but fails
-            // the re-match (e.g. a plain element fed to a :* branch)
-            if (reMatch(c, out, 0).contains(out.length)) Some(out)
-            else None
-          } else unparseValue(c, tree).map(Seq(_))
-        } catch {
-          case _: ClassCastException | _: MatchError |
-               _: NoSuchElementException => None
-        }
+      // a spliced branch must ACCEPT what it produced — a tree from a
+      // different branch typically survives the cast but fails the
+      // re-match (e.g. a plain element fed to a :* branch)
+      def attempt(c: SchemaIR): Option[Seq[Any]] = misfit(
+        if (spliced(c)) Some(reUnparse(c, tree)).filter(matches(c, _))
+        else unparseValue(c, tree).map(Seq(_)))
       cs.iterator.flatMap(attempt(_).iterator).nextOption()
         .getOrElse(Seq(tree))
     case SAltn(es) => tree match {
@@ -775,42 +760,6 @@ object RowEval {
     * too), as opposed to one it matches against a single element. */
   private def spliced(c: SchemaIR): Boolean =
     SchemaIR.isRegexOp(c) || c.isInstanceOf[SAlt] || c.isInstanceOf[SAltn]
-
-  /** Backtracking sequence-regex matcher (semantics of impl/regex.cljc; the
-    * reference uses CPS+packrat — row-local inputs here are small, so plain
-    * lazy backtracking suffices). Returns reachable end positions. */
-  private def reMatch(ir: SchemaIR, xs: Seq[Any], i: Int)(
-      implicit reg: Registry, depth: Int): LazyList[Int] = ir match {
-    case SProps(_, c) if SchemaIR.isRegexOp(c) => reMatch(c, xs, i)
-    case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      reMatch(c, xs, i)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
-    case SCat(cs) =>
-      cs.foldLeft(LazyList(i)) { (ps, c) => ps.flatMap(p => reMatch(c, xs, p)) }
-    case SCatn(es) =>
-      es.foldLeft(LazyList(i)) { (ps, e) => ps.flatMap(p => reMatch(e._2, xs, p)) }
-    case SAlt(cs) => cs.to(LazyList).flatMap(c => reMatch(c, xs, i))
-    case SAltn(es) => es.to(LazyList).flatMap(e => reMatch(e._2, xs, i))
-    case SStar(c) =>
-      i #:: reMatch(c, xs, i).filter(_ > i).flatMap(p => reMatch(SStar(c), xs, p))
-    case SPlus(c) => reMatch(c, xs, i).flatMap(p => reMatch(SStar(c), xs, p))
-    case SOpt(c) => i #:: reMatch(c, xs, i)
-    case SRepeat(c, mn, mx) =>
-      // reference repeat phases — see reMatchT's SRepeat
-      def optionals(pos: Int, n: Int): LazyList[Int] = {
-        val more =
-          if (n >= mx || pos >= xs.length) LazyList.empty
-          else reMatch(c, xs, pos).filter(_ > pos)
-            .flatMap(p => optionals(p, n + 1))
-        pos #:: more
-      }
-      def compulsories(pos: Int, n: Int): LazyList[Int] =
-        if (n >= mn) optionals(pos, n)
-        else reMatch(c, xs, pos).flatMap(p => compulsories(p, n + 1))
-      compulsories(i, 0)
-    case plain =>
-      if (i < xs.length && validate(plain, xs(i))) LazyList(i + 1)
-      else LazyList.empty
-  }
 
   /** One `mu/explain-data` error (util.cljc:224-233): the [[Err]] fields
     * plus the failing sub-schema rendered as its FORM — pure data, so the
@@ -843,39 +792,27 @@ object RowEval {
         else e.path
       val errType =
         if (e.key.startsWith("malli.core/")) Some(":" + e.key) else None
-      DataErr(e.path, e.in, SchemaIR.form(resolveAt(ir, schemaPath)),
+      DataErr(e.path, e.in, SchemaIR.form(resolveAt(ir, schemaPath.toList)),
         e.value, errType)
     }))
   }
 
-  /** Walk `root` along explain's schema-path addressing. Derefs (`:ref` /
-    * `:schema` scopes) and declarative proxies (`:merge`/`:union`/
-    * `:select-keys`) resolve WITHOUT consuming a segment — mirroring how
-    * [[explain]] emits paths against the expanded structure. A segment
+  /** Walk `root` along explain's schema-path addressing. Wrappers other
+    * than props ([[Peel]]: `:ref`s, `:schema` scopes and the declarative
+    * proxies `:merge`/`:union`/`:select-keys`) resolve WITHOUT consuming a
+    * segment — mirroring how [[explain]] emits paths against the
+    * expanded structure; props stay, so the form keeps them. A segment
     * with no static child is RUNTIME data (a MapType stray key under the
     * `::m/default` rest) and is skipped: the governing schema is already
     * in hand. */
-  private def resolveAt(root: SchemaIR, path: Seq[String])(
-      implicit reg: Registry): SchemaIR = {
-    def step(cur: SchemaIR, segs: List[String], reg: Registry,
-             fuel: Int): SchemaIR = cur match {
-      case SRef(n) if fuel > 0 && reg.schemas.contains(n) =>
-        step(reg(n), segs, reg, fuel - 1)
-      case SScoped(local, c, _) =>
-        step(c, segs, Registry(reg.schemas ++ local, reg.maxDepth), fuel)
-      case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
-        step(mallispark.ir.SchemaOps.expand(alg, reg), segs, reg, fuel)
-      case _ => segs match {
-        case Nil => cur
-        case s :: rest =>
-          SchemaIR.childrenWithPath(cur)
-            .collectFirst { case (p, c) if p == s => c } match {
-            case Some(c) => step(c, rest, reg, fuel)
-            case None => step(cur, rest, reg, fuel)
-          }
-      }
+  private def resolveAt(cur: SchemaIR, path: List[String])(
+      implicit reg: Registry, depth: Int): SchemaIR = cur match {
+    case Peel(c, r, d) if !cur.isInstanceOf[SProps] => resolveAt(c, path)(r, d)
+    case _ => path match {
+      case Nil => cur
+      case s :: rest => resolveAt(SchemaIR.childrenWithPath(cur)
+        .collectFirst { case (p, c) if p == s => c }.getOrElse(cur), rest)
     }
-    step(root, path.toList, reg, 64)
   }
 
   /** Explain: same error shape the Catalyst side produces
@@ -883,24 +820,16 @@ object RowEval {
   def explain(ir: SchemaIR, v: Any,
               path: Vector[String] = Vector.empty,
               in: Vector[String] = Vector.empty)(
-      implicit reg: Registry = Registry.empty, depth: Int = 8): Vector[Err] =
+      implicit reg: Registry = Registry.empty, depth: Int = 8): Vector[Err] = {
+    def branches(bs: Seq[(String, SchemaIR)]): Vector[Err] =
+      bs.toVector.flatMap { case (seg, c) => explain(c, v, path :+ seg, in) }
     ir match {
       case SAny => Vector.empty
       case SMaybe(c) =>
         if (v == null) Vector.empty else explain(c, v, path :+ "0", in)
-      case SAnd(cs) => cs.zipWithIndex.toVector.flatMap { case (c, i) =>
-        explain(c, v, path :+ i.toString, in)
-      }
-      case SOr(cs) =>
-        if (validate(ir, v)) Vector.empty
-        else cs.zipWithIndex.toVector.flatMap { case (c, i) =>
-          explain(c, v, path :+ i.toString, in)
-        }
-      case SOrn(bs) =>
-        if (validate(ir, v)) Vector.empty
-        else bs.toVector.flatMap { case (t, c) => explain(c, v, path :+ t, in) }
-      case SAndn(bs) =>
-        bs.toVector.flatMap { case (t, c) => explain(c, v, path :+ t, in) }
+      case AllOf(bs) => branches(bs)
+      case AnyOf(bs) =>
+        if (bs.exists(b => validate(b._2, v))) Vector.empty else branches(bs)
       case SNot(c) =>
         if (validate(c, v)) Vector(Err(path, in, ":not", v)) else Vector.empty
       case SMap(entries, closed, rest) => asMap(v) match {
@@ -932,27 +861,9 @@ object RowEval {
           }
           entryErrs ++ extraErrs ++ restErrs
       }
-      case SVector(c, mn, mx) => collExplain(c, v, mn, mx, path, in, unique = false)
-      // nil is a valid EMPTY seqable: only a :min bound reports
-      case SSeqable(c, mn, mx) =>
-        if (v == null)
-          if (mn.exists(_ > 0)) Vector(Err(path, in, ErrorKeys.Limits, 0))
-          else Vector.empty
-        else collExplain(c, v, mn, mx, path, in, unique = false)
-      case SSet(c, mn, mx) => collExplain(c, v, mn, mx, path, in, unique = true)
-      case SEvery(_, mn, _, _) if v == null =>
-        if (mn.exists(_ > 0)) Vector(Err(path, in, ErrorKeys.Limits, 0))
-        else Vector.empty
-      case SEvery(c, mn, mx, limit) => asSeq(v) match {
-        case None => Vector(Err(path, in, ErrorKeys.InvalidType, v))
-        case Some(xs) =>
-          val lim = if (mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-            Vector.empty
-          else Vector(Err(path, in, ErrorKeys.Limits, xs.size))
-          lim ++ xs.take(everyLimit(mn, mx, limit)).zipWithIndex.toVector
-            .flatMap { case (x, i) =>
-              explain(c, x, path :+ "0", in :+ i.toString)
-            }
+      case Coll(b) => b.nilVerdict(v) match {
+        case Some(_) => limits(0, b.mn, None, path, in)
+        case None => collExplain(b, v, path, in)
       }
       case STuple(cs) => asTupleSeq(v) match {
         case None => Vector(Err(path, in, ErrorKeys.InvalidType, v))
@@ -963,69 +874,29 @@ object RowEval {
             explain(c, x, path :+ i.toString, in :+ i.toString)
           }
       }
-      case SMulti(dk, bs, default) => asMap(v) match {
+      case m @ (_: SMulti | _: SMultiExpr) => dispatch(m, v) match {
         case None => Vector(Err(path, in, ErrorKeys.InvalidType, v))
-        case Some(m) =>
-          // null dispatch → default branch, like validate (and Catalyst)
-          val dv = m.get(dk).flatMap(Option(_)).map(String.valueOf).orNull
-          bs.find(_._1 == dv) match {
-            case Some((tag, c)) => explain(c, v, path :+ tag, in)
-            case None => default match {
-              case Some(d) => explain(d, v, path :+ "malli.core/default", in)
-              case None => Vector(Err(path, in, ErrorKeys.InvalidDispatch, dv))
-            }
-          }
+        case Some(Left(dv)) =>
+          Vector(Err(path, in, ErrorKeys.InvalidDispatch, dv))
+        case Some(Right((tag, c))) => explain(c, v, path :+ tag, in)
       }
-      case SMultiExpr(_, _, dispRow, bs, default) =>
-        if (v == null) Vector(Err(path, in, ErrorKeys.InvalidType, v))
-        else {
-          val dv = try dispRow(v) catch { case _: Throwable => null }
-          bs.find(_._1 == dv) match {
-            case Some((tag, c)) => explain(c, v, path :+ tag, in)
-            case None => default match {
-              case Some(d) => explain(d, v, path :+ "malli.core/default", in)
-              case None => Vector(Err(path, in, ErrorKeys.InvalidDispatch, dv))
-            }
-          }
-        }
       case SMapOf(k, vv, mn, mx) => v match {
         case m: scala.collection.Map[_, _] =>
-          val lim = if (mn.forall(m.size >= _) && mx.forall(m.size <= _))
-            Vector.empty
-          else Vector(Err(path, in, ErrorKeys.Limits, m.size))
-          lim ++ m.toVector.flatMap { case (mk, mv) =>
-            explain(k, mk, path :+ "0", in :+ String.valueOf(mk)) ++
-              explain(vv, mv, path :+ "1", in :+ String.valueOf(mk))
+          limits(m.size, mn, mx, path, in) ++ m.toVector.flatMap {
+            case (mk, mv) =>
+              explain(k, mk, path :+ "0", in :+ String.valueOf(mk)) ++
+                explain(vv, mv, path :+ "1", in :+ String.valueOf(mk))
           }
         case _ => Vector(Err(path, in, ErrorKeys.InvalidType, v))
       }
-      case SRef(name) =>
-        if (depth <= 0) Vector.empty
-        else explain(reg(name), v, path, in)(reg, depth - 1)
-      case SScoped(local, c, _) =>
-        explain(c, v, path, in)(Registry(reg.schemas ++ local, reg.maxDepth),
-          depth)
-      case SProps(_, c) => explain(c, v, path, in)
-      case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
-        explain(mallispark.ir.SchemaOps.expand(alg, reg), v, path, in)
+      case Peel(c, r, d) => explain(c, v, path, in)(r, d)
       // general (tier-3) forms: positional backtracking explainer —
       // mirrors the compiled UDF path exactly (same code)
-      case r if SchemaIR.isGeneralRegex(r) => reExplain(r, v, path, in)
+      case re if SchemaIR.isGeneralRegex(re) => reExplain(re, v, path, in)
       // bounded-form regex explains — mirror the Catalyst compilation
-      case SCat(cs) =>
-        catExplain(cs.zipWithIndex.map { case (c, i) => (i.toString, c) },
-          v, path, in)
+      case SCat(cs) => catExplain(indexed(cs), v, path, in)
       case SCatn(es) => catExplain(es, v, path, in)
-      case SAlt(cs) =>
-        if (validate(ir, v)) Vector.empty
-        else cs.zipWithIndex.toVector.flatMap { case (c, i) =>
-          explain(c, v, path :+ i.toString, in)
-        }
-      case SStar(c) => regexCollExplain(c, v, None, None, path, in)
-      case SPlus(c) => regexCollExplain(c, v, Some(1), None, path, in)
-      case SOpt(c) => regexCollExplain(c, v, None, Some(1), path, in)
-      case SRepeat(c, mn, mx) =>
-        regexCollExplain(c, v, Some(mn), Some(mx), path, in)
+      case Rep(b) => collExplain(b, v, path, in)
       // :validate splices each fn-returned error (type + in-suffix);
       // exception → one ":validate/error" row (validate.cljc:31-37)
       case SValidate(_, f) =>
@@ -1040,22 +911,26 @@ object RowEval {
         if (validate(leaf, v)) Vector.empty
         else Vector(Err(path, in, leafKey(leaf), v))
     }
+  }
 
-  private def collExplain(c: SchemaIR, v: Any, mn: Option[Int], mx: Option[Int],
-                          path: Vector[String], in: Vector[String],
-                          unique: Boolean)(
+  /** ::limits when `n` breaks the count bounds. */
+  private def limits(n: Int, mn: Option[Int], mx: Option[Int],
+                     path: Vector[String], in: Vector[String]): Vector[Err] =
+    if (within(n, mn, mx)) Vector.empty
+    else Vector(Err(path, in, ErrorKeys.Limits, n))
+
+  private def collExplain(b: Bounded, v: Any, path: Vector[String],
+                          in: Vector[String])(
       implicit reg: Registry, depth: Int): Vector[Err] = asSeq(v) match {
     case None => Vector(Err(path, in, ErrorKeys.InvalidType, v))
     case Some(xs) =>
-      val lim = if (mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-        Vector.empty
-      else Vector(Err(path, in, ErrorKeys.Limits, xs.size))
-      val dup = if (unique && xs.distinct.size != xs.size)
-        Vector(Err(path, in, ErrorKeys.DuplicateKey, v))
-      else Vector.empty
-      lim ++ dup ++ xs.zipWithIndex.toVector.flatMap { case (x, i) =>
-        explain(c, x, path :+ "0", in :+ i.toString)
-      }
+      val dup =
+        if (b.distinctOk(xs)) Vector.empty
+        else Vector(Err(path, in, ErrorKeys.DuplicateKey, v))
+      limits(xs.size, b.mn, b.mx, path, in) ++ dup ++
+        b.checked(xs).zipWithIndex.toVector.flatMap { case (x, i) =>
+          explain(b.elem, x, path :+ "0", in :+ i.toString)
+        }
   }
 
   private def catExplain(es: Seq[(String, SchemaIR)], v: Any,
@@ -1067,40 +942,9 @@ object RowEval {
       else if (xs.size > es.size)
         Vector(Err(path, in, ErrorKeys.InputRemaining, xs.size))
       else es.zip(xs).zipWithIndex.toVector.flatMap { case (((tag, c), x), i) =>
-        elemExplain(c, x, path :+ tag, in :+ i.toString)
+        explain(c, x, path :+ tag, in :+ i.toString)
       }
   }
-
-  private def regexCollExplain(c: SchemaIR, v: Any, mn: Option[Int],
-                               mx: Option[Int], path: Vector[String],
-                               in: Vector[String])(
-      implicit reg: Registry, depth: Int): Vector[Err] = asSeq(v) match {
-    case None => Vector(Err(path, in, ErrorKeys.InvalidType, v))
-    case Some(xs) =>
-      val lim = if (mn.forall(xs.size >= _) && mx.forall(xs.size <= _))
-        Vector.empty
-      else Vector(Err(path, in, ErrorKeys.Limits, xs.size))
-      lim ++ xs.zipWithIndex.toVector.flatMap { case (x, i) =>
-        elemExplain(c, x, path :+ "0", in :+ i.toString)
-      }
-  }
-
-  private def elemExplain(c: SchemaIR, x: Any, path: Vector[String],
-                          in: Vector[String])(
-      implicit reg: Registry, depth: Int): Vector[Err] = c match {
-    case SAlt(cs) =>
-      if (cs.exists(validate(_, x))) Vector.empty
-      else cs.zipWithIndex.toVector.flatMap { case (cc, i) =>
-        explain(cc, x, path :+ i.toString, in)
-      }
-    case SAltn(es) =>
-      if (es.exists(e => validate(e._2, x))) Vector.empty
-      else es.toVector.flatMap { case (tag, cc) =>
-        explain(cc, x, path :+ tag, in)
-      }
-    case other => explain(other, x, path, in)
-  }
-
   private[mallispark] def leafKey(ir: SchemaIR): String = ir match {
     case SProps(_, c) => leafKey(c)
     case SNil => ":nil"

@@ -363,23 +363,23 @@ object Generate {
 
   /** ISO local date-time of `epoch + offset` seconds plus the offset
     * label — "yyyy-MM-ddTHH:mm:ss±HH:MM" (and "[Zone]" when zoned).
-    * Pure integer arithmetic + a DateType cast: no session-timezone
-    * dependence anywhere. */
+    * The local date-time is a TimestampNTZ (1970-01-01T00:00 plus a
+    * day-time interval), cast to a string once: no session-timezone
+    * dependence anywhere. Each draw appears once in the expression — a composite
+    * rebuilt per part multiplies through every reference to the column
+    * once predicate pushdown inlines it (64 KB codegen methods). */
   private def fmtInstantAtOffset(epoch: Column, offIdx: Column,
                                  zoned: Boolean): Column = {
-    def pick(f: ((String, Long, String)) => Column): Column =
-      offsetTable.zipWithIndex.tail.foldLeft(f(offsetTable.head)) {
-        case (acc, (row, i)) => F.when(offIdx === i, f(row)).otherwise(acc)
-      }
-    val local = epoch + pick(r => F.lit(r._2))
-    // floor division keeps time-of-day non-negative for negative offsets
-    val day = F.floor(local / F.lit(86400)).cast(LongType)
-    val date = F.date_add(F.lit(java.sql.Date.valueOf("1970-01-01")),
-      day.cast(IntegerType)).cast(StringType)
-    val parts = Seq(date, F.lit("T"), fmtTimeOfDay(local - day * 86400),
-      pick(r => F.lit(r._1))) ++
-      (if (zoned) Seq(pick(r => F.lit(r._3))) else Nil)
-    F.concat(parts: _*)
+    def pick(f: ((String, Long, String)) => Any): Column =
+      F.element_at(F.array(offsetTable.map(r => F.lit(f(r))): _*),
+        (offIdx + 1).cast(IntegerType))
+    val local = F.lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)) +
+      F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0),
+        (epoch + pick(_._2)).cast(DecimalType(18, 6)))
+    // an NTZ casts to "yyyy-MM-dd HH:mm:ss" with no zone conversion
+    // (date_format would go through the session zone, shifting DST gaps)
+    F.concat(Seq(F.translate(local.cast(StringType), " ", "T"), pick(_._1)) ++
+      (if (zoned) Seq(pick(_._3)) else Nil): _*)
   }
 
   /** `:ref` unroll depth for generation — the reference's `-ref-gen`

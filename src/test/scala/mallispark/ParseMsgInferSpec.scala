@@ -271,6 +271,54 @@ class ParseMsgInferSpec extends SparkSuite {
       RowEval.RTags(Map("t1" -> -4L, "t2" -> -4L))) === None)
   }
 
+  // :merge/:union/:select-keys stand for their expansion (util.cljc:394-418)
+  // in parse and unparse too, not only in validate/explain
+  test("parseValue/unparseValue see through :merge, :union and :select-keys") {
+    import RowEval.{parseValue, unparseValue, RTag}
+    import mallispark.ir.SchemaOps
+    val tagged = S.mapE(false, S.req("x", S.orn("i" -> S.int, "s" -> S.string)))
+    val other = S.mapE(false, S.req("y", S.int))
+    val schemas = Seq(S.mergeOf(tagged, other), S.unionOf(tagged, other),
+      S.selectKeysOf(S.mergeOf(tagged, other), "x"))
+    val values = Seq(Map("x" -> 1L, "y" -> 2L), Map("x" -> "a", "y" -> 2L),
+      Map("x" -> true, "y" -> 2L), Map("y" -> 2L))
+    schemas.foreach { sch =>
+      val expanded = SchemaOps.expand(sch, Registry.empty)
+      values.foreach { v =>
+        val p = parseValue(sch, v)
+        assert(p === parseValue(expanded, v), s"parse of $v under ${SchemaIR.form(sch)}")
+        p.foreach(t => assert(unparseValue(sch, t) === unparseValue(expanded, t),
+          s"unparse of $t under ${SchemaIR.form(sch)}"))
+      }
+    }
+    assert(parseValue(S.mergeOf(tagged, other), Map("x" -> 1L, "y" -> 2L)) ===
+      Some(Map("x" -> RTag("i", 1L), "y" -> 2L)))
+    assert(unparseValue(S.unionOf(tagged, other),
+      Map("x" -> RTag("s", "a"), "y" -> 2L)) === Some(Map("x" -> "a", "y" -> 2L)))
+  }
+
+  test("Column-tier parse sees through the merge family") {
+    import mallispark.ir.SchemaOps
+    val tagged = S.mapE(false,
+      S.req("x", S.orn("lo" -> S.int(0L, 9L), "hi" -> S.int(10L, 99L))))
+    val other = S.mapE(false, S.req("y", S.int))
+    val dt = StructType(Seq(StructField("x", LongType), StructField("y", LongType)))
+    val d = df(Seq(Row(Row(3L, 1L)), Row(Row(42L, 2L)), Row(Row(500L, 3L))),
+      StructType(Seq(StructField("v", dt))))
+    Seq(S.mergeOf(tagged, other), S.unionOf(tagged, other),
+        S.selectKeysOf(S.mergeOf(tagged, other), "x", "y")).foreach { sch =>
+      val expanded = SchemaOps.expand(sch, ctx.registry)
+      assert(Parse.parseType(sch, dt) === Parse.parseType(expanded, dt))
+      val got = d.select(Parse.parse(sch, F.col("v"), dt).as("p"),
+        Parse.parse(expanded, F.col("v"), dt).as("e")).collect()
+      got.foreach(r => assert(r.get(0) === r.get(1), SchemaIR.form(sch)))
+      assert(got(0).getStruct(0).getStruct(0) === Row("lo", 3L))
+      val rt = d.select(F.col("v"), Parse.unparse(sch,
+        Parse.parse(sch, F.col("v"), dt), dt).as("u")).collect()
+      assert(rt.take(2).forall(r => r.get(0) === r.get(1)), SchemaIR.form(sch))
+    }
+  }
+
   // m/old-parse-format (core.cljc:185-196; core_test.cljc:1240-1245)
   test("old-parse-format rewrites Tag trees to the pre-0.18 shape") {
     import RowEval.{parseValue, oldParseFormat, RTag}

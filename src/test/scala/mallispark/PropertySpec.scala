@@ -341,6 +341,40 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  // :altn over one value is an any-of like :or/:orn/:alt on both tiers:
+  // a failure explains every branch under its tag
+  test("duality: a standalone :altn and one under a :map key explain per branch") {
+    val altn = S.altn("a" -> S.int(0L, 5L), "b" -> S.int(10L, 15L))
+    val mdt = StructType(Seq(StructField("x", LongType)))
+    Seq[(SchemaIR, DataType, Seq[Any])](
+      (altn, LongType, Seq(3L, 7L, 12L, 20L)),
+      (S.mapE(false, S.req("x", altn)), mdt,
+        Seq(3L, 7L, 12L, 20L).map(x => Row(x)))).foreach { case (sch, vdt, vs) =>
+      val catalyst = spark.createDataFrame(
+        new java.util.ArrayList[Row](vs.map(v => Row(v)).asJava),
+        StructType(Seq(StructField("v", vdt)))).select(
+        SchemaCompiler.valid(sch, F.col("v"), vdt).as("ok"),
+        SchemaCompiler.errors(sch, F.col("v"), vdt, "", F.lit("")).as("e"))
+        .collect().toSeq.map { r =>
+          (r.getBoolean(0), r.getSeq[Row](1).map(e =>
+            (e.getString(0), e.getString(1), e.getString(2))).toSet)
+        }
+      vs.zip(catalyst).foreach { case (v, (ok, errs)) =>
+        val value = v match {
+          case r: Row => new org.apache.spark.sql.catalyst.expressions
+            .GenericRowWithSchema(r.toSeq.toArray, mdt)
+          case x => x
+        }
+        assert(RowEval.validate(sch, value) === ok, s"valid mismatch on $v")
+        val re = RowEval.explain(sch, value).map(e =>
+          (e.path.mkString("/"), e.in.mkString("/"), e.key)).toSet
+        assert(re === errs, s"errors mismatch on $v: roweval $re vs $errs")
+      }
+      assert(catalyst.map(_._1) === Seq(true, false, true, false))
+      assert(catalyst(1)._2.map(_._1).toSet.size === 2, SchemaIR.form(sch))
+    }
+  }
+
   test("duality: Catalyst and RowEval agree on random (possibly invalid) rows") {
     val genAny: Gen[Row] = for {
       a <- Gen.oneOf(Gen.chooseNum(-100L, 2000L), Gen.const(null))

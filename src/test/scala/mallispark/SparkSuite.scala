@@ -12,6 +12,9 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a plan whose generated code does not compile fails its test
+      // instead of running silently on the interpreted fallback
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
