@@ -797,22 +797,22 @@ object RowEval {
     }))
   }
 
-  /** Walk `root` along explain's schema-path addressing. Wrappers other
-    * than props ([[Peel]]: `:ref`s, `:schema` scopes and the declarative
+  /** Walk `cur` along explain's schema-path addressing. Wrappers
+    * ([[Peel]]: `:ref`s, `:schema` scopes, props and the declarative
     * proxies `:merge`/`:union`/`:select-keys`) resolve WITHOUT consuming a
-    * segment — mirroring how [[explain]] emits paths against the
-    * expanded structure; props stay, so the form keeps them. A segment
+    * segment, under the scope and `:ref` budget explain saw — mirroring
+    * how [[explain]] emits paths against the expanded structure — except
+    * that props the path ends at stay, so the form keeps them. A segment
     * with no static child is RUNTIME data (a MapType stray key under the
     * `::m/default` rest) and is skipped: the governing schema is already
     * in hand. */
   private def resolveAt(cur: SchemaIR, path: List[String])(
-      implicit reg: Registry, depth: Int): SchemaIR = cur match {
-    case Peel(c, r, d) if !cur.isInstanceOf[SProps] => resolveAt(c, path)(r, d)
-    case _ => path match {
-      case Nil => cur
-      case s :: rest => resolveAt(SchemaIR.childrenWithPath(cur)
-        .collectFirst { case (p, c) if p == s => c }.getOrElse(cur), rest)
-    }
+      implicit reg: Registry, depth: Int): SchemaIR = (cur, path) match {
+    case (_: SProps, Nil) => cur
+    case (Peel(c, r, d), _) => resolveAt(c, path)(r, d)
+    case (_, Nil) => cur
+    case (_, s :: rest) => resolveAt(SchemaIR.childrenWithPath(cur)
+      .collectFirst { case (p, c) if p == s => c }.getOrElse(cur), rest)
   }
 
   /** Explain: same error shape the Catalyst side produces

@@ -363,11 +363,12 @@ object Generate {
 
   /** ISO local date-time of `epoch + offset` seconds plus the offset
     * label — "yyyy-MM-ddTHH:mm:ss±HH:MM" (and "[Zone]" when zoned).
-    * The local date-time is a TimestampNTZ (1970-01-01T00:00 plus a
-    * day-time interval), cast to a string once: no session-timezone
-    * dependence anywhere. Each draw appears once in the expression — a composite
-    * rebuilt per part multiplies through every reference to the column
-    * once predicate pushdown inlines it (64 KB codegen methods). */
+    * The local date-time is one TimestampNTZ (1970-01-01T00:00 plus a
+    * day-time interval) cast to a string: no session-timezone dependence
+    * anywhere. Building it once keeps the column small — rebuilt for the
+    * date and each time-of-day part, it multiplied through every
+    * reference once predicate pushdown inlined the column, and a
+    * generate-then-validate plan outgrew the 64 KB codegen method. */
   private def fmtInstantAtOffset(epoch: Column, offIdx: Column,
                                  zoned: Boolean): Column = {
     def pick(f: ((String, Long, String)) => Any): Column =

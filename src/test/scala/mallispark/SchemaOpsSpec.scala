@@ -443,6 +443,17 @@ class SchemaOpsSpec extends SparkSuite {
     val e2 = RowEval.explainData(scoped, Map("v" -> -1L)).get.errors
     assert(e2 === Vector(DataErr(Vector("v"), Vector("v"),
       "[:int {:min 0}]", -1L, None)))
+    // ... and through props around a :ref, or around a scope whose names
+    // the path's refs use (a regex op splices through both)
+    val tag = SchemaIR.NodeProps(extra = Seq(":user/tag" -> 1L))
+    val viaProps = SchemaIR.SScoped(Map("item" -> S.mapE(false, S.req("n", S.int))),
+      S.mapE(false, S.req("x", SchemaIR.SProps(tag, S.ref("item")))), boundary = true)
+    assert(RowEval.explainData(viaProps, Map("x" -> Map("n" -> "a"))).get.errors ===
+      Vector(DataErr(Vector("x", "n"), Vector("x", "n"), ":int", "a", None)))
+    val seqScope = SchemaIR.SProps(tag, SchemaIR.SScoped(Map("t" -> S.int(0L, 9L)),
+      S.cat(S.ref("t"), S.star(S.int)), boundary = false))
+    assert(RowEval.explainData(seqScope, Seq("b")).get.errors ===
+      Vector(DataErr(Vector("0"), Vector("0"), "[:int {:min 0 :max 9}]", "b", None)))
   }
 
   // m/explicit-keys + m/default-schema (core.cljc:2817-2833)
