@@ -679,12 +679,12 @@ class PropertySpec extends SparkSuite {
     }
   }
 
-  // the four sequence-regex drivers (validate, explain, parse, unparse)
-  // share one set of combinators in the reference (impl/regex.cljc
-  // validator/explainer/parser/unparser): over random nested seq-regex
-  // schemas and short sequences they must agree on every verdict, and
-  // unparse must invert parse
-  test("seq-regex drivers agree: validate ⇔ parse ⇔ explain, unparse∘parse = id") {
+  // the four sequence-regex entry points (validate, explain, parse,
+  // unparse) share one set of combinators in the reference
+  // (impl/regex.cljc validator/explainer/parser/unparser): over random
+  // nested seq-regex schemas and short sequences they must agree on every
+  // verdict, and unparse must invert parse
+  test("seq-regex validate ⇔ parse ⇔ explain, unparse∘parse = id") {
     val props = NodeProps(extra = Seq(":user/tag" -> 1L))
     val leafGen: Gen[SchemaIR] = Gen.oneOf(
       S.int(0L, 5L), S.int(3L, 9L), S.enum_("a", "b"), S.string(max = 1),
