@@ -1381,9 +1381,18 @@ object SchemaCompiler {
   def violationsDF(ir: SchemaIR, df: DataFrame, keyCols: Seq[String],
                    exclude: Set[String] = Set.empty,
                    maskValue: Option[String] = None)(
-      implicit ctx: Ctx = Ctx()): DataFrame = {
-    val withErrs = explainDF(ir, df, "__errs", exclude)
-    // explode_OUTER + null-filter, NOT a size(__errs) > 0 pre-filter and
+      implicit ctx: Ctx = Ctx()): DataFrame =
+    violationRows(explainDF(ir, df, "__errs", exclude), "__errs", keyCols,
+      maskValue)
+
+  /** [[violationsDF]]'s rows from a frame that already carries each row's
+    * explain array in `errsCol` — for a caller that keeps that array
+    * beside other per-row results of the same scan. */
+  private[mallispark] def violationRows(withErrs: DataFrame, errsCol: String,
+                                        keyCols: Seq[String],
+                                        maskValue: Option[String] = None)
+      : DataFrame = {
+    // explode_OUTER + null-filter, NOT a size(errors) > 0 pre-filter and
     // NOT a plain explode: both of those end with a size(<full errors
     // expression>) Filter below the projection — the explicit filter by
     // predicate pushdown, the plain explode by InferFiltersFromGenerate
@@ -1395,7 +1404,7 @@ object SchemaCompiler {
     // ran once.
     val exploded = withErrs
       .select(keyCols.map(F.col) :+
-        F.explode_outer(F.col("__errs")).as("e"): _*)
+        F.explode_outer(F.col(errsCol)).as("e"): _*)
       .where(F.col("e").isNotNull)
     val valueCol = maskValue match {
       case Some(m) => F.when(F.col("e.value").isNotNull, F.lit(m))

@@ -260,14 +260,15 @@ object RowEval {
       }
   }
 
-  /** Props or a registry-prop scope around a regex op never break its
-    * splice into the enclosing sequence: the op, under the scope's
-    * registry (an explicit `[:schema ..]` stays one element). */
+  /** Props or a registry-prop scope around a regex op (`:alt`/`:altn`
+    * included) never break its splice into the enclosing sequence: the
+    * op, under the scope's registry (an explicit `[:schema ..]` stays one
+    * element). */
   private object Splice {
     def unapply(ir: SchemaIR)(implicit reg: Registry,
                               depth: Int): Option[(SchemaIR, Registry, Int)] =
       ir match {
-        case _: SProps | _: SScoped if SchemaIR.isRegexOp(ir) => Peel.unapply(ir)
+        case _: SProps | _: SScoped if spliced(ir) => Peel.unapply(ir)
         case _ => None
       }
   }
@@ -757,9 +758,14 @@ object RowEval {
   }
 
   /** A branch the matcher splices into the sequence (a nested `:alt`
-    * too), as opposed to one it matches against a single element. */
-  private def spliced(c: SchemaIR): Boolean =
-    SchemaIR.isRegexOp(c) || c.isInstanceOf[SAlt] || c.isInstanceOf[SAltn]
+    * too, through props and registry-prop scopes), as opposed to one it
+    * matches against a single element. */
+  private def spliced(c: SchemaIR): Boolean = c match {
+    case SProps(_, x) => spliced(x)
+    case SScoped(_, x, false) => spliced(x)
+    case _: SAlt | _: SAltn => true
+    case _ => SchemaIR.isRegexOp(c)
+  }
 
   /** One `mu/explain-data` error (util.cljc:224-233): the [[Err]] fields
     * plus the failing sub-schema rendered as its FORM — pure data, so the

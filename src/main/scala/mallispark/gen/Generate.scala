@@ -171,8 +171,7 @@ object Generate {
           .toEpochSecond(java.time.ZoneOffset.UTC)
         val lo = mn.map(sec).getOrElse(1704067200L)
         val hi = mx.map(sec).getOrElse(lo + 31536000L)
-        F.timestamp_seconds(F.lit(lo) + rnd(id, salt, hi - lo + 1))
-          .cast(TimestampNTZType)
+        localAt(F.lit(lo) + rnd(id, salt, hi - lo + 1))
       case "local-time" =>
         // bounds are fixed-width HH:mm:ss — generate within [lo, hi] secs
         def sec(s: String) = java.time.LocalTime.parse(s).toSecondOfDay.toLong
@@ -361,22 +360,28 @@ object Generate {
     ("+05:30", 19800L, "[Asia/Kolkata]"),
     ("-07:00", -25200L, "[America/Phoenix]"))
 
+  /** The local date-time `secs` seconds after 1970-01-01T00:00, as an
+    * NTZ built zone-free: no step goes through the session zone, so a
+    * draw never shifts across a DST gap. */
+  private def localAt(secs: Column): Column =
+    F.lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)) +
+      F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0),
+        secs.cast(DecimalType(18, 6)))
+
   /** ISO local date-time of `epoch + offset` seconds plus the offset
     * label — "yyyy-MM-ddTHH:mm:ss±HH:MM" (and "[Zone]" when zoned).
-    * The local date-time is one TimestampNTZ (1970-01-01T00:00 plus a
-    * day-time interval) cast to a string: no session-timezone dependence
-    * anywhere. Building it once keeps the column small — rebuilt for the
-    * date and each time-of-day part, it multiplied through every
-    * reference once predicate pushdown inlined the column, and a
-    * generate-then-validate plan outgrew the 64 KB codegen method. */
+    * The local date-time is one [[localAt]] cast to a string: no
+    * session-timezone dependence anywhere. Building it once keeps the
+    * column small — rebuilt for the date and each time-of-day part, it
+    * multiplied through every reference once predicate pushdown inlined
+    * the column, and a generate-then-validate plan outgrew the 64 KB
+    * codegen method. */
   private def fmtInstantAtOffset(epoch: Column, offIdx: Column,
                                  zoned: Boolean): Column = {
     def pick(f: ((String, Long, String)) => Any): Column =
       F.element_at(F.array(offsetTable.map(r => F.lit(f(r))): _*),
         (offIdx + 1).cast(IntegerType))
-    val local = F.lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)) +
-      F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0),
-        (epoch + pick(_._2)).cast(DecimalType(18, 6)))
+    val local = localAt(epoch + pick(_._2))
     // an NTZ casts to "yyyy-MM-dd HH:mm:ss" with no zone conversion
     // (date_format would go through the session zone, shifting DST gaps)
     F.concat(Seq(F.translate(local.cast(StringType), " ", "T"), pick(_._1)) ++
@@ -408,7 +413,7 @@ object Generate {
       else terminate(reg(n), reg)
     case SScoped(l, c, _) =>
       unrollRefs(c, Registry(reg.schemas ++ l, reg.maxDepth), depth)
-    case other => mapChildrenIr(other)(unrollRefs(_, reg, depth))
+    case other => SchemaIR.mapChildren(other)(unrollRefs(_, reg, depth))
   }
 
   private[gen] def terminate(ir: SchemaIR, reg: Registry): SchemaIR = ir match {
@@ -460,7 +465,7 @@ object Generate {
       else SMulti(d, bs.map { case (t, c) => t -> terminate(c, reg) },
         df.map(terminate(_, reg)))
     case other if containsRef(other) =>
-      mapChildrenIr(other)(terminate(_, reg))
+      SchemaIR.mapChildren(other)(terminate(_, reg))
     case other => other
   }
 
@@ -473,11 +478,6 @@ object Generate {
       case (_, c) => containsRef(c)
     }
   }
-
-  /** Structural one-level map over a node's children — delegates to the
-    * shared [[SchemaIR.mapChildren]]. */
-  private def mapChildrenIr(s: SchemaIR)(f: SchemaIR => SchemaIR): SchemaIR =
-    SchemaIR.mapChildren(s)(f)
 
   /** A `:gen/return`/`:gen/elements` literal as a Column; nil takes the
     * CHILD's physical type so CASE branches unify. */

@@ -636,10 +636,10 @@ object SchemaIR {
   /** Children of a node paired with their schema-path segment (malli `:path`
     * uses entry keys for maps and branch indices for and/or — see
     * core_test.cljc:239-250 where `[:and int? [:or ...]]` errors at [1 0]). */
-  /** Structural one-level map over a node's children (leaves and the
-    * function-carrying nodes pass through untouched; `SScoped` maps the
-    * BODY only — callers that must walk the local registry handle it
-    * themselves, like SchemaOps.mapMaps does). */
+  /** Structural one-level map over a node's children — every node kind
+    * [[childrenWithPath]] lists children of (leaves pass through
+    * untouched; `SScoped` maps the BODY only — callers that must walk the
+    * local registry handle it themselves, like SchemaOps.mapMaps does). */
   def mapChildren(s: SchemaIR)(f: SchemaIR => SchemaIR): SchemaIR =
     s match {
       case SMaybe(c) => SMaybe(f(c))
@@ -659,6 +659,13 @@ object SchemaIR {
       case STuple(cs) => STuple(cs.map(f))
       case SMulti(d, bs, df) =>
         SMulti(d, bs.map { case (t, c) => t -> f(c) }, df.map(f))
+      case m: SMultiExpr => m.copy(
+        branches = m.branches.map { case (t, c) => t -> f(c) },
+        default = m.default.map(f))
+      case SMergeOf(cs) => SMergeOf(cs.map(f))
+      case SUnionOf(cs) => SUnionOf(cs.map(f))
+      case SSelectKeysOf(c, ks) => SSelectKeysOf(f(c), ks)
+      case SScoped(r, c, boundary) => SScoped(r, f(c), boundary)
       case SCat(cs) => SCat(cs.map(f))
       case SCatn(es) => SCatn(es.map { case (t, c) => t -> f(c) })
       case SAlt(cs) => SAlt(cs.map(f))

@@ -3,7 +3,8 @@ package mallispark.run
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal snapshot-log table format — the Iceberg-style operational
@@ -104,7 +105,14 @@ object SnapshotTable {
     }
     try {
       val subdir = f"data/snap-$id%06d"
-      df.write.mode("overwrite").parquet(root.resolve(subdir).toString)
+      // the row count rides the write as an observed metric (Observations
+      // complete on a write too), so no job reads the new files back
+      val written = Observation()
+      df.observe(written, F.count(F.lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(root.resolve(subdir).toString)
+      val rowsAdded = written.get("rows").asInstanceOf[Long]
+      // an all-empty write may produce ZERO part files — the manifest's
+      // schema line keeps the snapshot readable as an empty frame
       val newFiles = {
         val st = Files.list(root.resolve(subdir))
         try st.iterator().asScala
@@ -112,16 +120,6 @@ object SnapshotTable {
           .map(p => s"$subdir/${p.getFileName}").toSeq.sorted
         finally st.close()
       }
-      // a production commit takes row counts from write metrics
-      // (BasicWriteJobStatsTracker); a footer-only read-back keeps this
-      // implementation dependency-free; the schema is the frame's own, so
-      // the read-back infers nothing from the footers it just wrote. An
-      // all-empty write may produce ZERO part files — the manifest's
-      // schema line keeps the snapshot readable as an empty frame.
-      val rowsAdded =
-        if (newFiles.isEmpty) 0L
-        else df.sparkSession.read.schema(df.schema)
-          .parquet(root.resolve(subdir).toString).count()
       val (files, total) = mode match {
         case Append =>
           val p = parent.map(readManifest(dir, _))

@@ -31,8 +31,15 @@ object ValidationJob {
     * violation sink. */
   def run(df: DataFrame, schema: SchemaIR, keyCols: Seq[String],
           nParts: Int = 256)(
-      implicit ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()): Result =
-    validateParts(withPartId(df, keyCols, nParts, None), schema, keyCols)
+      implicit ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()): Result = {
+    val withPart = withPartId(df, keyCols, nParts, None)
+    val flagged = SchemaCompiler.validateDF(schema, withPart, "valid",
+      exclude = Set("part_id"))
+    val violations = SchemaCompiler
+      .violationsDF(schema, withPart, keyCols :+ "part_id",
+        exclude = Set("part_id"))
+    Result(flagged, verdictsOf(flagged), violations)
+  }
 
   /** The logical part key: `partIdOf`, or by default engine-native
     * xxhash64 of the first key column (fast). */
@@ -54,23 +61,13 @@ object ValidationJob {
     df.withColumn("part_id", partKey(keyCols, nParts, partIdOf))
   }
 
-  /** The shared core of `run` and `runResumable`: row verdicts, the
-    * per-`part_id` verdict aggregation and the violation rows of an
-    * input that already carries `part_id`. */
-  private def validateParts(withPart: DataFrame, schema: SchemaIR,
-                            keyCols: Seq[String])(
-      implicit ctx: SchemaCompiler.Ctx): Result = {
-    val flagged = SchemaCompiler.validateDF(schema, withPart, "valid",
-      exclude = Set("part_id"))
-    val verdicts = flagged.groupBy("part_id").agg(
+  /** The per-`part_id` verdicts of a frame with a boolean `valid`
+    * column: row count, valid rows and pass/fail. */
+  private def verdictsOf(flagged: DataFrame): DataFrame =
+    flagged.groupBy("part_id").agg(
       F.count(F.lit(1)).as("rows"),
       F.sum(F.when(F.col("valid"), 1L).otherwise(0L)).as("valid_rows"),
       F.min(F.col("valid")).as("pass"))
-    val violations = SchemaCompiler
-      .violationsDF(schema, withPart, keyCols :+ "part_id",
-        exclude = Set("part_id"))
-    Result(flagged, verdicts, violations)
-  }
 
   private def manifestPath(dir: String) = s"$dir/manifest"
   private def violationsPath(dir: String) = s"$dir/violations"
@@ -105,7 +102,9 @@ object ValidationJob {
     * the rest, append per-partition verdicts (lineage + metrics) and
     * violation rows. Restart-safe: rerunning after a partial failure
     * validates only the remaining partitions; union of manifest rows over
-    * all attempts equals the single-run result. */
+    * all attempts equals the single-run result. The remaining rows are
+    * validated and written by [[commitParts]] from one narrow cached
+    * frame. */
   def runResumable(spark: SparkSession, df: DataFrame, schema: SchemaIR,
                    keyCols: Seq[String], dir: String, runId: String,
                    nParts: Int = 256,
@@ -115,32 +114,50 @@ object ValidationJob {
     // when the manifest must be reproducible by another engine (the
     // oracle gate)
     val withPart = withPartId(df, keyCols, nParts, partIdOf)
-    // both manifest reads pass the schema this call writes (the completed
-    // read needs only its part_id and run_id columns), so neither starts
-    // a footer-inference job
+    // the completed read passes the schema this call writes (it needs
+    // only its part_id and run_id columns), so it starts no
+    // footer-inference job
     val doneParts = completed(spark, dir, runId, Some(StructType(Seq(
       withPart.schema("part_id"), StructField("run_id", StringType)))))
-    val todo = withPart.join(F.broadcast(doneParts), Seq("part_id"),
-      "left_anti")
-    val r = validateParts(todo, schema, keyCols)
-    val verdicts = r.verdicts
+    commitParts(spark, withPart.join(F.broadcast(doneParts), Seq("part_id"),
+      "left_anti"), schema, keyCols, dir, runId)
+  }
+
+  /** Validate `todo` (the input rows, with `part_id`, of partitions not
+    * yet committed) and append its violation rows and manifest rows;
+    * returns the run's manifest rows.
+    *
+    * Both writes derive from ONE narrow frame, (keyCols, part_id, valid,
+    * errors), persisted so the scan and both compiled checks run once:
+    * the violation rows explode its errors, the manifest rows aggregate
+    * its verdicts. It holds no payload column, so the cache stays small
+    * however wide the input is.
+    *
+    * Violations first, manifest second: the manifest row is the COMMIT
+    * point. A crash between the two leaves orphaned violation rows for
+    * uncommitted partitions; `readViolations` filters them out by joining
+    * against the manifest, and the retry re-appends them under a now-
+    * committed partition — exactly-once as observed through the reader. */
+  private def commitParts(spark: SparkSession, todo: DataFrame,
+                          schema: SchemaIR, keyCols: Seq[String],
+                          dir: String, runId: String)(
+      implicit ctx: SchemaCompiler.Ctx): DataFrame = {
+    val checked = SchemaCompiler.explainDF(schema,
+        SchemaCompiler.validateDF(schema, todo, "valid",
+          exclude = Set("part_id")),
+        "__errs", exclude = Set("part_id", "valid"))
+      .select((keyCols ++ Seq("part_id", "valid", "__errs")).map(F.col): _*)
+    val violations = SchemaCompiler
+      .violationRows(checked, "__errs", keyCols :+ "part_id")
+      .withColumn("run_id", F.lit(runId))
+    val verdicts = verdictsOf(checked)
       .withColumn("run_id", F.lit(runId))
       .withColumn("committed_at", F.current_timestamp())
-    val violations = r.violations.withColumn("run_id", F.lit(runId))
-
-    // violations first, manifest second: the manifest row is the COMMIT
-    // point. A crash between the two leaves orphaned violation rows for
-    // uncommitted partitions; `readViolations` filters them out by joining
-    // against the manifest, and the retry re-appends them under a now-
-    // committed partition — exactly-once as observed through the reader.
-    // `todo` feeds BOTH writes — persist it so the scan + anti-join +
-    // compiled validation run once, not once per lineage (at the scale
-    // this module targets that halves the pass).
-    todo.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    checked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       violations.write.mode(SaveMode.Append).parquet(violationsPath(dir))
       verdicts.write.mode(SaveMode.Append).parquet(manifestPath(dir))
-    } finally todo.unpersist(blocking = false)
+    } finally checked.unpersist(blocking = false)
     readManifest(spark, dir, runId, verdicts.schema)
   }
 
@@ -180,7 +197,15 @@ object ValidationJob {
     * returns the manifest read with the recorded schema: it builds no
     * snapshot frame and starts no Spark job. A call whose `nParts` or
     * part key differs from a record (done or not) fails fast: resuming
-    * under another hash space would skip rows never validated. */
+    * under another hash space would skip rows never validated.
+    *
+    * A call that finds no record is the run's first: the record is
+    * written before any validation write, so no partition of the run
+    * can be committed yet, and the whole snapshot is validated without
+    * reading the manifest (no anti-join against the completed
+    * partitions of every earlier run). Manifest rows of a snapshot
+    * validated before completion records existed are therefore not
+    * consulted. */
   def validateSnapshot(spark: SparkSession, tableDir: String,
                        schema: SchemaIR, keyCols: Seq[String],
                        snapshotId: Option[Long] = None,
@@ -209,13 +234,15 @@ object ValidationJob {
         readManifest(spark, dir, runId,
           StructType.fromDDL(kv("manifest_schema")))
       case None =>
-        if (prior.isEmpty) {
-          Files.createDirectories(record.getParent)
-          writeRecord(record, params)
-        }
-        val m = runResumable(spark,
-          SnapshotTable.read(spark, tableDir, Some(id)), schema, keyCols,
-          dir, runId, nParts, partIdOf)
+        val snap = SnapshotTable.read(spark, tableDir, Some(id))
+        val m =
+          if (prior.isEmpty) {
+            Files.createDirectories(record.getParent)
+            writeRecord(record, params)
+            commitParts(spark, withPartId(snap, keyCols, nParts, partIdOf),
+              schema, keyCols, dir, runId)
+          } else runResumable(spark, snap, schema, keyCols, dir, runId,
+            nParts, partIdOf)
         writeRecord(record, params ++ Seq(
           "manifest_schema" -> m.schema.toDDL, "done" -> ""))
         m
@@ -264,38 +291,54 @@ object ValidationJob {
     * categorical frequency table drift feeds on — emitted as a tiny
     * (metric, value) frame a scheduler appends per commit.
     *
-    * Scale: verdict + violation aggregation are map-side-combined scans of
-    * the new snapshot; the diff joins (key, digest) projections only; the
-    * frequency table is one partial+final agg. Nothing here shuffles
-    * payloads, and every output is integer-exact (oracle-portable). */
+    * Scale: one scan of the new snapshot computes each row's verdict,
+    * error keys and frequency bucket, aggregated map-side into one row
+    * per (bucket, verdict, error keys) — a handful of groups however
+    * large the snapshot. `rows_total`, `rows_valid`, every `viol:*` and
+    * every `freq:*` expand from those groups. The diff joins (key,
+    * digest) projections only, so the snapshot is scanned twice and the
+    * previous one once. Nothing here shuffles payloads, and every output
+    * is integer-exact (oracle-portable). */
   def snapshotReport(curr: DataFrame, prev: DataFrame, schema: SchemaIR,
                      keyCol: String, payload: Column, freqCol: String)(
       implicit ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()): DataFrame = {
-    val flagged = SchemaCompiler.validateDF(schema, curr, "valid")
-    val verdicts = flagged.agg(
-      F.count(F.lit(1)).as("rows"),
-      F.sum(F.when(F.col("valid"), 1L).otherwise(0L)).as("valid_rows"))
-      .select(F.explode(F.map(
-        F.lit("rows_total"), F.col("rows"),
-        F.lit("rows_valid"), F.col("valid_rows"))).as(Seq("metric", "value")))
-    val viols = SchemaCompiler.violationsDF(schema, curr, Seq(keyCol))
-      .groupBy(F.concat(F.lit("viol:"), F.col("error_key")).as("metric"))
-      .agg(F.count(F.lit(1)).as("value"))
-    val diff = mallispark.checks.TableChecks
-      .snapshotDiff(curr, prev, keyCol, payload)
-      .groupBy(F.concat(F.lit("diff:"), F.col("change")).as("metric"))
-      .agg(F.count(F.lit(1)).as("value"))
     // null frequency values render as a literal bucket: concat
     // null-propagates and a NULL metric key breaks the ORDER-BY-
     // non-null-keys determinism rule (Spark sorts nulls first,
     // DuckDB last)
-    val freqs = curr.groupBy(
-        F.concat(F.lit(s"freq:$freqCol:"),
-          F.coalesce(F.col(freqCol).cast(StringType), F.lit("__NULL__")))
-          .as("metric"))
-      .agg(F.count(F.lit(1)).as("value"))
-    verdicts.unionByName(viols).unionByName(diff).unionByName(freqs)
-      .select(F.col("metric"), F.col("value").cast(LongType).as("value"))
+    val groups = SchemaCompiler.explainDF(schema,
+        SchemaCompiler.validateDF(schema, curr, "valid"), "__errs",
+        exclude = Set("valid"))
+      .groupBy(
+        F.coalesce(F.col(freqCol).cast(StringType), F.lit("__NULL__"))
+          .as("bucket"),
+        F.col("valid"), F.col("__errs.error_key").as("error_keys"))
+      .agg(F.count(F.lit(1)).as("n"))
+    def metric(name: Column, value: Column): Column =
+      F.struct(name.as("metric"), value.as("value"))
+    val n = F.col("n")
+    val fromGroups = groups.select(F.explode_outer(F.concat(
+        F.array(
+          metric(F.lit("rows_total"), n),
+          metric(F.lit("rows_valid"),
+            F.when(F.col("valid"), n).otherwise(0L)),
+          metric(F.concat(F.lit(s"freq:$freqCol:"), F.col("bucket")), n)),
+        F.transform(F.col("error_keys"),
+          k => metric(F.concat(F.lit("viol:"), k), n)))).as("m"))
+      .select("m.metric", "m.value")
+    // an empty snapshot has no group: these rows keep its rows_total a
+    // count (0) and its rows_valid a sum over no row (NULL)
+    val totals = curr.sparkSession.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row("rows_total", 0L),
+        org.apache.spark.sql.Row("rows_valid", null)),
+      StructType(Seq(StructField("metric", StringType),
+        StructField("value", LongType))))
+    val diff = mallispark.checks.TableChecks
+      .snapshotDiff(curr, prev, keyCol, payload)
+      .select(F.concat(F.lit("diff:"), F.col("change")).as("metric"),
+        F.lit(1L).as("value"))
+    fromGroups.unionByName(totals).unionByName(diff)
+      .groupBy("metric").agg(F.sum("value").as("value"))
   }
 
   /** `m/assert`'s job-level analogue (core.cljc:2590-2596 throws on an

@@ -63,4 +63,41 @@ class GenerateTimeSpec extends SparkSuite {
       }
     } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
+
+  test("local date-time draws stay inside the schema's bounds in any session zone") {
+    val rng = Generate.XxRng
+    val id = F.col("id")
+    val salt = 3
+    def sec(s: String) = java.time.LocalDateTime.parse(s)
+      .toEpochSecond(java.time.ZoneOffset.UTC)
+    val cases = Seq(
+      // default window: 2024-01-01T00:00:00 plus a year
+      (S.localDateTime(), 1704067200L, 1704067200L + 31536000L),
+      // a window around New York's spring-forward gap and at its edges
+      (S.localDateTime(Some("2024-03-10T01:00:00"),
+        Some("2024-03-10T04:00:00")),
+        sec("2024-03-10T01:00:00"), sec("2024-03-10T04:00:00")))
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    try Seq("UTC", "America/New_York", "Asia/Tokyo").foreach { tz =>
+      spark.conf.set("spark.sql.session.timeZone", tz)
+      cases.foreach { case (sch, lo, hi) =>
+        // the draw's wall-clock text, by integer arithmetic
+        val x = F.lit(lo) + rng.rnd(id, salt, hi - lo + 1)
+        val day = F.floor(x / F.lit(86400)).cast(LongType)
+        val ref = F.concat(F.date_add(
+          F.lit(java.sql.Date.valueOf("1970-01-01")),
+          day.cast(IntegerType)).cast(StringType), F.lit(" "),
+          fmtTimeOfDay(x - day * 86400))
+        val out = spark.range(20000).select(
+          Generate.gen(sch, id, salt).as("g"), ref.as("r"))
+        assert(out.schema("g").dataType === TimestampNTZType)
+        assert(out.where(!(F.col("g").cast(StringType) <=> F.col("r")))
+          .count() === 0L, s"$sch under $tz")
+        val validated = mallispark.compile.SchemaCompiler.validateDF(
+          S.map("g" -> sch), out.select("g"), "valid")
+        assert(validated.where(!F.col("valid")).count() === 0L,
+          s"$sch under $tz")
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
 }

@@ -647,6 +647,24 @@ class ParseMsgInferSpec extends SparkSuite {
       errs.forall(e => e.path.mkString("/").matches("0/(num|word)")))
   }
 
+  test("props around :alt/:altn in a sequence position splice like the bare op") {
+    val props = NodeProps(extra = Seq(":user/tag" -> 1L))
+    val alt = S.cat(SProps(props, S.alt(S.int, S.string)))
+    assert(RowEval.validate(alt, Seq(1L)) && RowEval.reExplain(alt, Seq(1L)).isEmpty)
+    assert(RowEval.reParse(alt, Seq(1L)) === Some(Vector(1L)))
+    assert(RowEval.reUnparse(alt, Vector(1L)) === Seq(1L))
+    val altn = S.cat(SProps(props, S.altn("n" -> S.int, "s" -> S.string)))
+    assert(RowEval.reParse(altn, Seq("x")) ===
+      Some(Vector(RowEval.RTag("s", "x"))))
+    // a regex branch splices through the props too: two elements, one :cat
+    val nested = S.cat(SProps(props, S.alt(S.cat(S.int, S.int), S.string)))
+    assert(RowEval.validate(nested, Seq(1L, 2L)))
+    assert(RowEval.reParse(nested, Seq(1L, 2L)) === Some(Vector(Vector(1L, 2L))))
+    assert(!RowEval.validate(nested, Seq(1L)) &&
+      RowEval.reExplain(nested, Seq(1L)).nonEmpty &&
+      RowEval.reParse(nested, Seq(1L)).isEmpty)
+  }
+
   test("regex reference semantics: greedy parse, epsilon repeat, mixed alt") {
     import mallispark.eval.RowEval
     // GREEDY: the first :* consumes first (impl/regex.cljc:278-321 —

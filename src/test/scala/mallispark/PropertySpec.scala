@@ -707,18 +707,22 @@ class PropertySpec extends SparkSuite {
         Gen.lzy(opGen(d - 1)).map(c => SScoped(Map("t" -> S.int(0L, 9L)),
           S.cat(S.ref("t"), c), boundary = false)))
     }
+    def altGen(d: Int): Gen[SchemaIR] = {
+      val bs = Gen.chooseNum(2, 3).flatMap(Gen.listOfN(_, Gen.lzy(nodeGen(d - 1))))
+      Gen.oneOf(bs.map(cs => S.alt(cs: _*)), bs.map(cs =>
+        S.altn(cs.zipWithIndex.map { case (c, i) => s"b$i" -> c }: _*)))
+    }
     def nodeGen(d: Int): Gen[SchemaIR] =
       if (d <= 0) leafGen
       else Gen.frequency(
         3 -> leafGen,
         3 -> opGen(d),
-        1 -> Gen.chooseNum(2, 3).flatMap(Gen.listOfN(_, Gen.lzy(nodeGen(d - 1))))
-          .map(cs => S.alt(cs: _*)),
-        1 -> Gen.chooseNum(2, 3).flatMap(Gen.listOfN(_, Gen.lzy(nodeGen(d - 1))))
-          .map(cs => S.altn(cs.zipWithIndex.map { case (c, i) => s"b$i" -> c }: _*)))
+        2 -> altGen(d),
+        // props around :alt/:altn splice like props around any regex op
+        1 -> altGen(d).map(SProps(props, _)))
     // a sequence the schema accepts (the generator's regex semantics)
     def sample(ir: SchemaIR)(implicit reg: Registry): Gen[Vector[Any]] = ir match {
-      case SProps(_, c) if SchemaIR.isRegexOp(c) => sample(c)
+      case SProps(_, c) => sample(c)
       case SScoped(l, c, false) => sample(c)(Registry(reg.schemas ++ l))
       case SCat(cs) => Gen.sequence[Vector[Vector[Any]], Vector[Any]](cs.map(sample))
         .map(_.flatten)

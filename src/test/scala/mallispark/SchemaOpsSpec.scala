@@ -124,6 +124,21 @@ class SchemaOpsSpec extends SparkSuite {
     assert(SchemaIR.form(merged) === "[:map [:x :int] [:y :int]]")
   }
 
+  test("derefRecursive reaches every node kind's children") {
+    // a non-recursive ref under an expression-dispatch :multi, the merge
+    // family and a scope body inlines like anywhere else
+    val reg = Map("a" -> S.int)
+    val multi = S.multiExpr("m", c => c, x => String.valueOf(x),
+      default = Some(S.ref("a")))("x" -> S.vector(S.ref("a")))
+    val d = SchemaOps.derefRecursive(S.scoped(reg.toSeq: _*)(multi))
+      .asInstanceOf[SMultiExpr]
+    assert(d.branches === Seq("x" -> S.vector(S.int)) && d.default === Some(S.int))
+    for (node <- Seq(SMergeOf(Seq(S.ref("a"))), SUnionOf(Seq(S.ref("a"))),
+        SSelectKeysOf(S.ref("a"), Seq("k")),
+        SScoped(Map("b" -> S.string), S.ref("a"), boundary = true)))
+      assert(SchemaIR.mapChildren(node)(_ => S.int) !== node, node)
+  }
+
   test("union: colliding entries become :or (util.cljc:103-112)") {
     val u = SchemaOps.union(A, B).asInstanceOf[SMap]
     assert(u.entries.find(_.key == "y").get.child ===
